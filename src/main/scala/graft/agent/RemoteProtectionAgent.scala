@@ -37,7 +37,7 @@ import graft.service.JsonEnvelope.{DecryptResponse, EncryptResponse, ProtectRequ
   *  - request/response **field-match validation**: encrypt responses must
   *    echo the request compression (`ValidateEncryptFieldMatch`,
   *    `dbpa_remote.cpp:286-296`); decrypt responses must echo datatype and
-  *    compression (`dbpa_remote.cpp:345-361`);
+  *    the page compression the request sent (`dbpa_remote.cpp:345-361`);
   *  - auth: token fetch/cache/expiry-skew/retry-once-on-401 lives in
   *    [[ProtectionServiceClient]] (`http_client_base.cpp:39-199`).
   *
@@ -289,7 +289,7 @@ final class RemoteProtectionAgent(
       case Right(r) => r
     }
     fieldMatch(resp.datatype, physicalType, "datatype", "Decrypt")
-    fieldMatch(resp.compression, Compression, "compression", "Decrypt")
+    fieldMatch(resp.compression, pageCompression, "compression", "Decrypt")
     resp
   }
 

@@ -20,9 +20,13 @@ import graft.agent.ProtectionTransport
   * Routing is a straight delegation: the service half stays
   * [[ProtectionService]]; this class only moves bytes between the socket
   * and the transport interface, exactly like Crow's role in the reference.
+  *
+  * Replies go out with `TCP_NODELAY` (see the companion object): without it
+  * every small reply waits ~40 ms for the client's delayed ACK.
   */
 final class HttpProtectionServer(transport: ProtectionTransport, port: Int = 0) {
 
+  HttpProtectionServer.enableNoDelay()
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 64)
   private val pool = Executors.newFixedThreadPool(8)
   server.setExecutor(pool)
@@ -60,4 +64,20 @@ final class HttpProtectionServer(transport: ProtectionTransport, port: Int = 0) 
     server.stop(0)
     pool.shutdownNow(): Unit
   }
+}
+
+object HttpProtectionServer {
+  private val NoDelayProperty = "sun.net.httpserver.nodelay"
+
+  /** The JDK server sets `TCP_NODELAY` on accepted sockets only when
+    * `sun.net.httpserver.nodelay` is `true` (default `false`). Without it,
+    * `sendResponseHeaders` flushes the headers as their own segment and
+    * Nagle holds the body back until the client ACKs them, which the
+    * client delays by ~40 ms, so every small reply stalls that long.
+    * `sun.net.httpserver.ServerConfig` reads the property once per JVM, when
+    * the first server is created, so it must be set before any
+    * `HttpServer.create`; a value the user already set is left alone.
+    */
+  private def enableNoDelay(): Unit =
+    if (System.getProperty(NoDelayProperty) == null) System.setProperty(NoDelayProperty, "true"): Unit
 }

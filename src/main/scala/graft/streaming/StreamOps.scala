@@ -38,21 +38,32 @@ object StreamOps {
     * metadata I/O, zero rows decoded (the [[graft.ops.Layout]] footer-stats
     * discipline, guide §6). Streaming query sites use it to size the state
     * width from the fixture they just wrote without an extra Spark job.
+    * Recurses into partition directories (`partitionBy` output); files or
+    * directories whose name starts with `_` or `.` are skipped, as Spark's
+    * file index skips them.
     */
   def parquetRowCount(spark: SparkSession, dir: String): Long = {
     import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.Path
     val conf = spark.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(conf)
-    fs.listStatus(path).filter(st => st.isFile && {
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }).map { st =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-      try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally reader.close()
-    }.sum
+    val fs = new Path(dir).getFileSystem(conf)
+    val root = fs.makeQualified(new Path(dir))
+    def hidden(p: Path): Boolean = p != root && p.getParent != null && {
+      val n = p.getName
+      n.startsWith("_") || n.startsWith(".") || hidden(p.getParent)
+    }
+    val files = fs.listFiles(root, true)
+    var rows = 0L
+    while (files.hasNext) {
+      val st = files.next()
+      if (!hidden(st.getPath)) {
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try rows += reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+        finally reader.close()
+      }
+    }
+    rows
   }
 
   /** State-store width sized from EXPECTED STATE VOLUME (VERDICT r16 #2 —

@@ -68,6 +68,20 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$root/out").count() === 2)
   }
 
+  test("parquetRowCount counts every partition of a partitionBy directory") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-rowcount").toString
+    (1L to 7L).map(i => (i, s"t$i", i % 3)).toDF("doc_id", "text", "bucket")
+      .write.partitionBy("bucket").parquet(s"$root/src")
+    // a leftover under a hidden directory is not part of the table
+    val part = Files.list(Paths.get(s"$root/src/bucket=0")).filter(
+      _.getFileName.toString.endsWith(".parquet")).findFirst().get()
+    val stray = Files.createDirectories(Paths.get(s"$root/src/_temporary/0"))
+    Files.copy(part, stray.resolve(part.getFileName))
+    assert(StreamOps.parquetRowCount(spark, s"$root/src") === 7L)
+    assert(spark.read.parquet(s"$root/src").count() === 7L)
+  }
+
   test("stateful dedup survives a checkpoint restart: no dropped, no duplicated survivors") {
     import org.apache.spark.sql.types._
     import spark.implicits._

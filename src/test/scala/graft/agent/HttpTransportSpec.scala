@@ -121,6 +121,25 @@ class HttpTransportSpec extends AnyFunSuite {
     }
   }
 
+  test("small replies are not held back by Nagle waiting for the delayed ACK") {
+    withServer(service()) { server =>
+      val transport = new HttpPooledTransport("127.0.0.1", server.boundPort)
+      try {
+        val agent = new RemoteProtectionAgent(transport, Creds)
+        agent.init("email", AppCtx, "k1", StringType)
+        agent.encrypt(Seq("warm-up")) // token fetch + first connection
+        val millis = (1 to 40).map { i =>
+          val start = System.nanoTime()
+          agent.encrypt(Seq(s"v$i"))
+          (System.nanoTime() - start) / 1e6
+        }.sorted
+        // a stalled reply waits for the client's ~40 ms delayed-ACK timer
+        val median = millis(millis.size / 2)
+        assert(median < 10.0, f"median small round trip $median%.1f ms")
+      } finally transport.shutdown()
+    }
+  }
+
   test("pool exhaustion: borrow times out with the pool-size error") {
     withServer(new SlowTransport(service(), delayMs = 400)) { server =>
       val transport = new HttpPooledTransport("127.0.0.1", server.boundPort,

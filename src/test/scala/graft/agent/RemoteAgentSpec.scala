@@ -21,6 +21,7 @@ final class FaultInjectingTransport(inner: ProtectionTransport) extends Protecti
   /** Force the next N authenticated calls to 401 regardless of token. */
   var force401 = 0
   var tamperDecryptDatatype: Option[String] = None
+  var tamperDecryptCompression: Option[String] = None
   var tamperEncryptCompression: Option[String] = None
   // AtomicInteger: concurrent callers hit the wrapper in the single-flight test
   private val fetches = new java.util.concurrent.atomic.AtomicInteger
@@ -60,11 +61,13 @@ final class FaultInjectingTransport(inner: ProtectionTransport) extends Protecti
   private def tamper(endpoint: String, resp: TransportResponse): TransportResponse = {
     if (resp.status != 200) return resp
     val patched: Option[String] = endpoint match {
-      case "/decrypt" => tamperDecryptDatatype.map { v =>
+      case "/decrypt" if tamperDecryptDatatype.nonEmpty || tamperDecryptCompression.nonEmpty =>
         val root = mapper.readTree(resp.body).asInstanceOf[ObjectNode]
-        root.withObject("/data_batch/datatype_info").put("datatype", v)
-        mapper.writeValueAsString(root)
-      }
+        tamperDecryptDatatype.foreach(
+          root.withObject("/data_batch/datatype_info").put("datatype", _))
+        tamperDecryptCompression.foreach(
+          root.withObject("/data_batch/value_format").put("compression", _))
+        Some(mapper.writeValueAsString(root))
       case "/encrypt" => tamperEncryptCompression.map { v =>
         val root = mapper.readTree(resp.body).asInstanceOf[ObjectNode]
         root.withObject("/data_batch_encrypted/value_format").put("compression", v)
@@ -226,6 +229,29 @@ class RemoteAgentSpec extends AnyFunSuite {
     assert(local.encryptPage(payload, attrs).payload.sameElements(batch.payload))
   }
 
+  test("page mode round-trips SNAPPY pages like the local page agent") {
+    val (_, agent, _) = mk()
+    agent.initPage("email", AppCtx, "k1", "BYTE_ARRAY", compression = PageCodec.Snappy)
+    val local = LocalProtectionAgent.initPage("k1", "email", "BYTE_ARRAY",
+      compression = PageCodec.Snappy, userId = "user-7", appContext = AppCtx)
+    val payload = PageCodec.compress(PageCodec.joinValueBytes(
+      Seq("alpha", "bb", "", "delta").map(_.getBytes("UTF-8")), "BYTE_ARRAY", None),
+      PageCodec.Snappy)
+    val dictionary = Map("page_type" -> "DICTIONARY_PAGE",
+      "dict_page_num_values" -> "4", "page_encoding" -> "PLAIN")
+    val v2 = Map("page_type" -> "DATA_PAGE_V2", "data_page_num_values" -> "4",
+      "data_page_max_definition_level" -> "0", "data_page_max_repetition_level" -> "0",
+      "page_v2_definition_levels_byte_length" -> "0",
+      "page_v2_repetition_levels_byte_length" -> "0",
+      "page_v2_num_nulls" -> "0", "page_v2_is_compressed" -> "true",
+      "page_encoding" -> "PLAIN")
+    for (attrs <- Seq(dictionary, v2)) {
+      val batch = agent.encryptPage(payload, attrs)
+      assert(agent.decryptPage(batch, attrs).sameElements(payload), attrs("page_type"))
+      assert(local.encryptPage(payload, attrs).payload.sameElements(batch.payload))
+    }
+  }
+
   test("token is fetched once and cached across calls") {
     val (server, agent, _) = mk()
     agent.init("email", AppCtx, "k1", StringType)
@@ -309,6 +335,19 @@ class RemoteAgentSpec extends AnyFunSuite {
     server.tamperDecryptDatatype = Some("INT32")
     val e = intercept[GraftInvalidInputException] { agent.decrypt(batch) }
     assert(e.getMessage.contains("Decrypt response datatype mismatch"))
+  }
+
+  test("decrypt response compression mismatch is rejected") {
+    val (server, agent, _) = mk()
+    agent.initPage("email", AppCtx, "k1", "BYTE_ARRAY", compression = PageCodec.Snappy)
+    val payload = PageCodec.compress(PageCodec.joinValueBytes(
+      Seq("alpha", "bb").map(_.getBytes("UTF-8")), "BYTE_ARRAY", None), PageCodec.Snappy)
+    val attrs = Map("page_type" -> "DICTIONARY_PAGE",
+      "dict_page_num_values" -> "2", "page_encoding" -> "PLAIN")
+    val batch = agent.encryptPage(payload, attrs)
+    server.tamperDecryptCompression = Some(PageCodec.Uncompressed)
+    val e = intercept[GraftInvalidInputException] { agent.decryptPage(batch, attrs) }
+    assert(e.getMessage.contains("Decrypt response compression mismatch"))
   }
 
   test("encrypt response compression mismatch is rejected") {
