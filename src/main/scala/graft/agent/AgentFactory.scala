@@ -30,8 +30,8 @@ trait ProtectionAgentProvider {
   /** Construct a ready (initialized) agent from string config. Common keys:
     * `key_id`, `column_name`, `data_type` (Spark DDL, default "string"),
     * `codec` (default xor), `app_context`, `user_id`. Remote adds `host`,
-    * `port` (required), `client_id`/`api_key` credentials and `transport`
-    * ("pooled" default | "simple").
+    * `port` (required) and `client_id`/`api_key` credentials; it talks to
+    * the service over an [[HttpPooledTransport]].
     */
   def create(config: Map[String, String]): ProtectionAgent
 }
@@ -57,11 +57,7 @@ final class RemoteAgentProvider extends ProtectionAgentProvider {
   override def create(config: Map[String, String]): ProtectionAgent = {
     val host = config.getOrElse("host", "127.0.0.1")
     val port = config("port").toInt
-    val transport: ProtectionTransport =
-      config.getOrElse("transport", "pooled") match {
-        case "simple" => new HttpSimpleTransport(host, port)
-        case _ => new HttpPooledTransport(host, port)
-      }
+    val transport = new HttpPooledTransport(host, port)
     val creds = Map("client_id" -> config.getOrElse("client_id", "graft")) ++
       config.get("api_key").map("api_key" -> _)
     val agent = new RemoteProtectionAgent(transport, creds)

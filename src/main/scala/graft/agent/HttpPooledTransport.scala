@@ -32,22 +32,18 @@ final case class PoolConfig(
   *    ONCE with a fresh one (`WorkerLoop`'s retry,
   *    `httplib_pooled_client.cpp:160-204`), then reports the error.
   *
-  * Two execution modes, matching the reference's client split:
-  *  - `workerThreads = 0` (default): requests execute on the CALLER's
-  *    thread. Semantically equivalent for blocking callers, zero overhead.
-  *  - `workerThreads > 0`: requests hop through a bounded worker-thread
-  *    queue and the caller blocks on the future — the reference's pooled
-  *    async client (`httplib_pooled_client.cpp:44-135`: fixed worker pool,
-  *    FIFO task queue, promise/future completion). In-flight concurrency is
-  *    capped at `workerThreads` no matter how many callers submit.
+  * Requests execute on the CALLER's thread: for blocking callers that is
+  * what the reference's worker queue (`httplib_pooled_client.cpp:44-135`)
+  * amounts to, without the hop; concurrency is bounded by the pool size.
+  * Connect, I/O and timeout failures come back as a status-0 response with
+  * a message, not as a throw.
   *
   * The wire protocol is minimal HTTP/1.1 with Content-Length framing on
   * both sides — enough for [[graft.service.HttpProtectionServer]] and
   * deliberately not a general-purpose client.
   */
 final class HttpPooledTransport(host: String, port: Int,
-    config: PoolConfig = PoolConfig(),
-    workerThreads: Int = 0) extends ProtectionTransport {
+    config: PoolConfig = PoolConfig()) extends ProtectionTransport {
 
   import HttpPooledTransport._
 
@@ -56,19 +52,6 @@ final class HttpPooledTransport(host: String, port: Int,
   private val lock = new Object
   private var created = 0
   private var closed = false
-
-  /** A6 worker mode: fixed pool + unbounded FIFO queue, like the reference's
-    * `std::queue<Task>` drained by `worker_count_` threads.
-    */
-  private val workers: Option[java.util.concurrent.ExecutorService] =
-    if (workerThreads > 0) {
-      val tf: java.util.concurrent.ThreadFactory = r => {
-        val t = new Thread(r, "graft-http-worker")
-        t.setDaemon(true)
-        t
-      }
-      Some(java.util.concurrent.Executors.newFixedThreadPool(workerThreads, tf))
-    } else None
 
   /** Connections opened over this transport's lifetime (spec observability). */
   def connectionsCreated: Int = lock.synchronized(created)
@@ -81,20 +64,6 @@ final class HttpPooledTransport(host: String, port: Int,
     request("POST", endpoint, body, headers)
 
   private def request(method: String, endpoint: String, body: String,
-      headers: Map[String, String]): TransportResponse =
-    workers match {
-      case Some(ex) =>
-        try ex.submit({ () => execute(method, endpoint, body, headers)
-        }: java.util.concurrent.Callable[TransportResponse]).get()
-        catch {
-          case _: java.util.concurrent.RejectedExecutionException =>
-            TransportResponse(0, "", "transport is shut down")
-          case e: java.util.concurrent.ExecutionException => throw e.getCause
-        }
-      case None => execute(method, endpoint, body, headers)
-    }
-
-  private def execute(method: String, endpoint: String, body: String,
       headers: Map[String, String]): TransportResponse = {
     if (lock.synchronized(closed))
       return TransportResponse(0, "", "transport is shut down")
@@ -192,7 +161,6 @@ final class HttpPooledTransport(host: String, port: Int,
       totalConnections = 0
       lock.notifyAll() // wake borrow() waiters so they fail fast
     }
-    workers.foreach(_.shutdown())
   }
 }
 
@@ -202,7 +170,7 @@ object HttpPooledTransport {
     * use so pool bookkeeping (which counts connections, not sockets) matches
     * the reference's create-outside-the-lock behavior.
     */
-  private[agent] final class PooledConnection(host: String, port: Int, config: PoolConfig) {
+  private final class PooledConnection(host: String, port: Int, config: PoolConfig) {
     private var socket: Socket = _
     private var in: BufferedInputStream = _
     private var out: BufferedOutputStream = _

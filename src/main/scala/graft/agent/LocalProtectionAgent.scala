@@ -3,84 +3,23 @@ package graft.agent
 import org.apache.spark.sql.types.DataType
 
 import graft.core._
-import graft.pipeline.ProtectionPipeline
 
 /** Library-call protection agent — the Spark-engine parity surface for the
   * reference's local agent (`/root/reference/src/common/dbpa_local.cpp:112-262`):
   * `init` binds the column context once; `encrypt`/`decrypt` process one
-  * column batch per call using the exact §1.5 value-list wire format
-  * (`encryptor_utils.h:29-45`), and responses carry the same metadata keys
-  * the REST surface stamps (`encryption_sequencer.cpp:38-44`).
+  * column batch per call. Each batch is one uncompressed page through the
+  * in-process page sequencer ([[CellBatch]] over [[PageProtectionAgent]]),
+  * the same path the protection service runs for [[RemoteProtectionAgent]],
+  * so local- and remote-encrypted batches are interchangeable (and
+  * byte-identical under a deterministic codec).
   *
   * This is the non-DataFrame entry point: a caller who today builds batches
   * for DBPS can hand the same batches to this agent. Inside Spark jobs the
   * per-cell expressions are the hot path; this agent is the drop-in API.
   */
-final class LocalProtectionAgent private (
-    ctx: ProtectionContext,
-    codecName: String,
-    dataType: DataType) extends ProtectionAgent {
-
-  private val codec: CryptoCodec = CryptoCodec(codecName, ctx)
-  private val fixedWidth: Option[Int] = ValueSerde.fixedWidth(dataType)
-
-  /** Encrypt one column batch (external values, e.g. Int/Long/String/bytes).
-    * Nulls are encoded in a presence mask carried as the "level bytes"
-    * analog, block-encrypted like the reference does with its level bytes
-    * (`encryption_sequencer.cpp:148-150`).
-    */
-  def encrypt(values: Seq[Any]): EncryptedBatch = {
-    val presence = values.map(v => if (v == null) 0.toByte else 1.toByte).toArray
-    val present = values.filter(_ != null)
-      .map(v => ValueSerde.serialize(dataType, ExternalSerde.toCatalyst(dataType, v)))
-    val valueBytes = WireFormat.encryptValueList(codec, present, fixedWidth)
-    val levelBytes = codec.encrypt(presence)
-    val payload = WireFormat.joinWithLengthPrefix(levelBytes, valueBytes)
-    EncryptedBatch(payload, Map(
-      ProtectionPipeline.KeyVersion -> ProtectionPipeline.AgentVersion,
-      ProtectionPipeline.KeyMode ->
-        (if (fixedWidth.isDefined) "per_value_fixed" else "per_value_variable"),
-      ProtectionPipeline.KeyCodec -> codecName,
-      ProtectionPipeline.KeyKeyId -> ctx.keyId,
-      ProtectionPipeline.KeyOrigType -> dataType.json,
-      ProtectionPipeline.KeyRows -> values.size.toString,
-      ProtectionPipeline.KeyNulls -> presence.count(_ == 0).toString))
-  }
-
-  /** Inverse of [[encrypt]] with the reference's decrypt-side checks:
-    * version prefix match (`encryption_sequencer.cpp:335-346`) and
-    * request/response field-match (`dbpa_remote.cpp:286-296`).
-    */
-  def decrypt(batch: EncryptedBatch): Seq[Any] = {
-    val version = batch.metadata.getOrElse(ProtectionPipeline.KeyVersion,
-      throw new GraftInvalidInputException("missing agent version metadata"))
-    if (!version.startsWith(ProtectionPipeline.RequiredVersionPrefix))
-      throw new GraftInvalidInputException(s"unsupported agent version '$version'")
-    val declaredType = batch.metadata.get(ProtectionPipeline.KeyOrigType)
-      .map(DataType.fromJson)
-      .getOrElse(throw new GraftInvalidInputException("missing original_type metadata"))
-    if (declaredType != dataType)
-      throw new GraftInvalidInputException(
-        s"datatype mismatch: batch has ${declaredType.catalogString}, " +
-          s"agent bound to ${dataType.catalogString}") // A8 field-match
-    // RemoteProtectionAgent resolves empty batches client-side (no server
-    // ciphertext, zero-byte payload) — accept them here so the agents stay
-    // interchangeable in both directions.
-    if (batch.payload.isEmpty) return Seq.empty
-    val (levelBytes, valueBytes) = WireFormat.splitWithLengthPrefix(batch.payload)
-    val presence = codec.decrypt(levelBytes)
-    val values = WireFormat.decryptValueList(codec, valueBytes)
-    val nPresent = presence.count(_ != 0)
-    if (nPresent != values.size)
-      throw new GraftInvalidInputException(
-        s"presence mask claims $nPresent values but payload holds ${values.size}")
-    val decrypted = values.iterator
-    presence.map { p =>
-      if (p == 0) null
-      else ExternalSerde.fromCatalyst(dataType,
-        ValueSerde.deserialize(dataType, decrypted.next()))
-    }.toSeq
-  }
+final class LocalProtectionAgent private (cells: CellBatch) extends ProtectionAgent {
+  def encrypt(values: Seq[Any]): EncryptedBatch = cells.encrypt(values)
+  def decrypt(batch: EncryptedBatch): Seq[Any] = cells.decrypt(batch)
 }
 
 /** Result of a batch encryption: payload + self-describing metadata
@@ -93,9 +32,10 @@ object LocalProtectionAgent {
   def init(keyId: String, columnName: String, dataType: DataType,
       codec: String = CryptoCodec.Xor, userId: String = "",
       appContext: String = ""): LocalProtectionAgent = {
-    require(keyId.nonEmpty, "key_id must be non-empty") // P7
-    new LocalProtectionAgent(
-      ProtectionContext(keyId, columnName, userId, appContext), codec, dataType)
+    val (physicalType, typeLength) = CellBatch.physicalMapping(dataType)
+    val pages = initPage(keyId, columnName, physicalType, typeLength,
+      PageCodec.Uncompressed, codec, userId, appContext)
+    new LocalProtectionAgent(new CellBatch(pages, dataType, codec, keyId))
   }
 
   /** Page-mode `init` — the reference agent's actual signature
@@ -106,11 +46,11 @@ object LocalProtectionAgent {
     */
   def initPage(keyId: String, columnName: String, physicalType: String,
       typeLength: Option[Int] = None,
-      compression: String = graft.core.PageCodec.Uncompressed,
+      compression: String = PageCodec.Uncompressed,
       codec: String = CryptoCodec.Xor, userId: String = "",
       appContext: String = ""): PageProtectionAgent = {
     require(keyId.nonEmpty, "key_id must be non-empty") // P7
-    if (!graft.core.PageCodec.PhysicalTypes.contains(physicalType))
+    if (!PageCodec.PhysicalTypes.contains(physicalType))
       throw new GraftInvalidInputException(s"Invalid datatype: $physicalType")
     new PageProtectionAgent(
       ProtectionContext(keyId, columnName, userId, appContext),
@@ -129,7 +69,7 @@ final class PageProtectionAgent private[agent] (
     codecName: String,
     physicalType: String,
     typeLength: Option[Int],
-    compression: String) {
+    compression: String) extends PageCipher {
 
   private val sequencer = new graft.pipeline.PageSequencer(
     CryptoCodec(codecName, ctx), physicalType, typeLength, compression)
@@ -148,23 +88,6 @@ final class PageProtectionAgent private[agent] (
   def decryptPage(batch: EncryptedBatch,
       encodingAttributes: Map[String, String]): Array[Byte] =
     sequencer.decrypt(batch.payload, encodingAttributes, batch.metadata)
-}
 
-/** External (JVM) value ⇄ Catalyst internal value, for the agent surface. */
-private[agent] object ExternalSerde {
-  import org.apache.spark.sql.types._
-  import org.apache.spark.unsafe.types.UTF8String
-
-  def toCatalyst(dt: DataType, v: Any): Any = (dt, v) match {
-    case (StringType, s: String) => UTF8String.fromString(s)
-    case (_: DecimalType, d: java.math.BigDecimal) => Decimal(d)
-    case (_: DecimalType, d: BigDecimal) => Decimal(d)
-    case _ => v
-  }
-
-  def fromCatalyst(dt: DataType, v: Any): Any = (dt, v) match {
-    case (StringType, s: UTF8String) => s.toString
-    case (_: DecimalType, d: Decimal) => d.toJavaBigDecimal
-    case _ => v
-  }
+  override def emptyBatchPayload: Array[Byte] = sequencer.encryptEmpty()
 }

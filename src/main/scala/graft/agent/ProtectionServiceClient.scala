@@ -7,8 +7,10 @@ import graft.core.GraftInvalidInputException
 /** Transport abstraction standing in for the reference's `HttpClientBase`
   * (`/root/reference/src/client/http_client_base.h`). Implementations are
   * injected exactly like the reference injects its HTTP client into
-  * `RemoteDataBatchProtectionAgent` for tests (`dbpa_remote.cpp:164-168`);
-  * in this zero-egress engine the production transport is in-process.
+  * `RemoteDataBatchProtectionAgent` for tests (`dbpa_remote.cpp:164-168`).
+  * Two implementations: [[HttpPooledTransport]] over loopback sockets to
+  * [[graft.service.HttpProtectionServer]], and the in-process
+  * [[graft.service.ProtectionService]] itself.
   */
 trait ProtectionTransport {
   def get(endpoint: String, headers: Map[String, String]): TransportResponse
@@ -63,10 +65,12 @@ private[graft] object FlatJson {
   * (`:141-170`); here a plain `synchronized` around the whole
   * ensure-valid-token path gives the same "one fetch, others wait" behavior.
   * Known divergence: the reference releases its mutex DURING the fetch so a
-  * slow `/token` doesn't serialize unrelated encrypt/decrypt callers; with
-  * the in-process transport a fetch is microseconds, so the simpler
-  * hold-across-fetch lock is fine — replicate the condvar single-flight if a
-  * real networked transport is ever added.
+  * slow `/token` doesn't serialize unrelated encrypt/decrypt callers. Here
+  * the lock is held across the fetch, a loopback `/token` round trip over
+  * [[HttpPooledTransport]]. That is fine while each agent owns its own
+  * client, so the only callers it serializes are that agent's; replicate the
+  * condvar single-flight if one client is ever shared by concurrent agents
+  * or the token service moves off the local host.
   */
 final class ProtectionServiceClient(
     transport: ProtectionTransport,

@@ -1,9 +1,8 @@
 package graft.agent
 
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.DataType
 
 import graft.core._
-import graft.pipeline.{PageSequencer, ProtectionPipeline}
 import graft.service.JsonEnvelope
 import graft.service.JsonEnvelope.{DecryptResponse, EncryptResponse, ProtectRequest}
 
@@ -19,13 +18,11 @@ import graft.service.JsonEnvelope.{DecryptResponse, EncryptResponse, ProtectRequ
   *    reference agent's own signature — a raw Parquet page payload plus
   *    `encoding_attributes` per call (`dbpa_remote.cpp:246-365`);
   *  - **cell mode** ([[init]] → [[encrypt]]/[[decrypt]]) is this engine's
-  *    Spark-typed batch surface, expressed over the SAME protocol by
-  *    encoding each batch as an uncompressed DATA_PAGE_V2 page: the
-  *    presence mask is the definition-level section (opaque bytes, length
-  *    in the attributes) and the present values are PLAIN-encoded in the
-  *    mapped Parquet physical type. The resulting ciphertext is
-  *    byte-identical to [[LocalProtectionAgent.encrypt]]'s, so local- and
-  *    remote-encrypted batches stay interchangeable.
+  *    Spark-typed batch surface: [[CellBatch]] encodes each batch as an
+  *    uncompressed DATA_PAGE_V2 page and sends it through page mode — the
+  *    same adapter [[LocalProtectionAgent]] runs in process, so local- and
+  *    remote-encrypted batches are interchangeable (and byte-identical
+  *    under a deterministic codec).
   *
   * Reference semantics reproduced:
   *  - construct-then-`init` lifecycle; `encrypt`/`decrypt` before a
@@ -40,19 +37,12 @@ import graft.service.JsonEnvelope.{DecryptResponse, EncryptResponse, ProtectRequ
   *    the page compression the request sent (`dbpa_remote.cpp:345-361`);
   *  - auth: token fetch/cache/expiry-skew/retry-once-on-401 lives in
   *    [[ProtectionServiceClient]] (`http_client_base.cpp:39-199`).
-  *
-  * @param codecName the cipher the TARGET SERVICE is configured with
-  *                  ([[graft.service.ProtectionService]]'s `codecName`) —
-  *                  stamped into cell-batch metadata so remote-encrypted
-  *                  batches interoperate with local agents; the service, not
-  *                  the client, owns the actual cipher choice (the
-  *                  reference's server-side encryptor factory).
   */
 final class RemoteProtectionAgent(
     transport: ProtectionTransport,
     credentials: Map[String, String] = Map("client_id" -> "graft"),
     clock: () => Long = () => System.currentTimeMillis() / 1000L)
-    extends ProtectionAgent {
+    extends ProtectionAgent with PageCipher {
 
   import RemoteProtectionAgent._
 
@@ -65,27 +55,27 @@ final class RemoteProtectionAgent(
   private var keyId: String = _
   private var appContext: String = _
   private var userId: String = _
-  private var codecName: String = CryptoCodec.Xor
-  // cell mode
-  private var dataType: DataType = _
-  // page mode
   private var physicalType: String = _
   private var typeLength: Option[Int] = None
   private var pageCompression: String = PageCodec.Uncompressed
+  // set by the Spark-typed init only
+  private var cells: Option[CellBatch] = None
 
   /** Bind a Spark-typed column context and verify server connectivity
     * (`RemoteDataBatchProtectionAgent::init`, `dbpa_remote.cpp:170-244`).
+    *
+    * @param codec the cipher the TARGET SERVICE is configured with
+    *              ([[graft.service.ProtectionService]]'s `codecName`) —
+    *              stamped into cell-batch metadata so remote-encrypted
+    *              batches interoperate with local agents; the service, not
+    *              the client, owns the actual cipher choice (the
+    *              reference's server-side encryptor factory).
     */
   def init(columnName: String, appContext: String, keyId: String,
       dataType: DataType, codec: String = CryptoCodec.Xor): Unit = {
-    initCommon(columnName, appContext, keyId)
-    this.dataType = dataType
-    this.codecName = codec
-    val (pt, len) = physicalMapping(dataType)
-    this.physicalType = pt
-    this.typeLength = len
-    this.pageCompression = PageCodec.Uncompressed
-    initError = None
+    val (physicalType, typeLength) = CellBatch.physicalMapping(dataType)
+    initPage(columnName, appContext, keyId, physicalType, typeLength)
+    cells = Some(new CellBatch(this, dataType, codec, keyId))
   }
 
   /** Bind a raw-page column context — the reference agent's actual `init`
@@ -95,10 +85,10 @@ final class RemoteProtectionAgent(
   def initPage(columnName: String, appContext: String, keyId: String,
       physicalType: String, typeLength: Option[Int] = None,
       compression: String = PageCodec.Uncompressed): Unit = {
+    cells = None
     initCommon(columnName, appContext, keyId)
     if (!PageCodec.PhysicalTypes.contains(physicalType))
       throw new GraftInvalidInputException(s"Invalid datatype: $physicalType")
-    this.dataType = null
     this.physicalType = physicalType
     this.typeLength = typeLength
     this.pageCompression = compression
@@ -154,112 +144,19 @@ final class RemoteProtectionAgent(
 
   // ---------------------------------------------------------------- cell mode --
 
-  /** Encrypt one Spark-typed column batch. Same contract as
-    * [[LocalProtectionAgent.encrypt]] — remote and local agents are
-    * interchangeable for a caller holding value batches.
+  /** Encrypt one Spark-typed column batch — same contract as
+    * [[LocalProtectionAgent.encrypt]].
     */
-  def encrypt(values: Seq[Any]): EncryptedBatch = {
+  def encrypt(values: Seq[Any]): EncryptedBatch = cellBatch.encrypt(values)
+
+  /** Inverse of [[encrypt]]; the version check is the server's. */
+  def decrypt(batch: EncryptedBatch): Seq[Any] = cellBatch.decrypt(batch)
+
+  private def cellBatch: CellBatch = {
     initError.foreach(e => throw new GraftInvalidInputException(e))
-    requireCellMode()
-    // Empty batch: the zero-byte page would trip the server's empty-plaintext
-    // 400, but LocalProtectionAgent.encrypt round-trips empty batches — keep
-    // the agents interchangeable by resolving it client-side.
-    if (values.isEmpty)
-      return EncryptedBatch(Array.emptyByteArray, Map(
-        ProtectionPipeline.KeyVersion -> ProtectionPipeline.AgentVersion,
-        ProtectionPipeline.KeyMode ->
-          (if (ValueSerde.fixedWidth(dataType).isDefined) "per_value_fixed"
-           else "per_value_variable"),
-        ProtectionPipeline.KeyCodec -> codecName,
-        ProtectionPipeline.KeyKeyId -> keyId,
-        ProtectionPipeline.KeyOrigType -> dataType.json,
-        ProtectionPipeline.KeyRows -> "0",
-        ProtectionPipeline.KeyNulls -> "0"))
-    val presence = values.map(v => if (v == null) 0.toByte else 1.toByte).toArray
-    val present = values.filter(_ != null)
-      .map(v => ValueSerde.serialize(dataType, ExternalSerde.toCatalyst(dataType, v)))
-    // DATA_PAGE_V2 layout: [def-level bytes = presence][PLAIN values]
-    val page = presence ++ PageCodec.joinValueBytes(present, physicalType, typeLength)
-    val nNulls = presence.count(_ == 0)
-    val resp = callEncrypt(page, cellAttributes(values.size, nNulls))
-    EncryptedBatch(resp.encryptedValue, resp.encryptionMetadata ++ Map(
-      ProtectionPipeline.KeyMode ->
-        (if (ValueSerde.fixedWidth(dataType).isDefined) "per_value_fixed"
-         else "per_value_variable"),
-      ProtectionPipeline.KeyCodec -> codecName,
-      ProtectionPipeline.KeyKeyId -> keyId,
-      ProtectionPipeline.KeyOrigType -> dataType.json,
-      ProtectionPipeline.KeyRows -> values.size.toString,
-      ProtectionPipeline.KeyNulls -> nNulls.toString))
+    cells.getOrElse(throw new GraftInvalidInputException(
+      "agent is bound to page mode; use encryptPage/decryptPage"))
   }
-
-  /** Inverse of [[encrypt]], with the decrypt-side field-match checks
-    * (`dbpa_remote.cpp:345-361`).
-    */
-  def decrypt(batch: EncryptedBatch): Seq[Any] = {
-    initError.foreach(e => throw new GraftInvalidInputException(e))
-    requireCellMode()
-    val declaredType = batch.metadata.get(ProtectionPipeline.KeyOrigType)
-    declaredType.map(DataType.fromJson).foreach { dt =>
-      if (dt != dataType)
-        throw new GraftInvalidInputException(
-          s"datatype mismatch: batch has ${dt.catalogString}, " +
-            s"agent bound to ${dataType.catalogString}") // A8 field-match
-    }
-    val rows = cellCount(batch, ProtectionPipeline.KeyRows)
-    val nulls = cellCount(batch, ProtectionPipeline.KeyNulls)
-    if (rows == 0) return Seq.empty // client-side inverse of the empty encrypt
-    // server-side sequencer metadata: version passthrough (its prefix check
-    // must fire on tampered batches) + the page-mode encryption mode.
-    val serverMeta = Map(
-      ProtectionPipeline.KeyVersion ->
-        batch.metadata.getOrElse(ProtectionPipeline.KeyVersion,
-          throw new GraftInvalidInputException("missing agent version metadata")),
-      PageSequencer.ModeKeyDataPage ->
-        batch.metadata.getOrElse(PageSequencer.ModeKeyDataPage,
-          PageSequencer.ModePerValue))
-    val resp = callDecrypt(batch.payload, cellAttributes(rows, nulls), serverMeta)
-    val page = resp.value
-    if (page.length < rows)
-      throw new GraftInvalidInputException(
-        s"decrypted page has ${page.length} bytes, shorter than the $rows-byte presence mask")
-    val presence = java.util.Arrays.copyOfRange(page, 0, rows)
-    val valueBytes = java.util.Arrays.copyOfRange(page, rows, page.length)
-    val typed = PageCodec.splitValueBytes(
-      valueBytes, rows - nulls, physicalType, typeLength, "PLAIN")
-    if (presence.count(_ != 0) != typed.size)
-      throw new GraftInvalidInputException(
-        s"presence mask claims ${presence.count(_ != 0)} values but payload holds ${typed.size}")
-    val it = typed.iterator
-    presence.map { p =>
-      if (p == 0) null
-      else ExternalSerde.fromCatalyst(dataType, ValueSerde.deserialize(dataType, it.next()))
-    }.toSeq
-  }
-
-  private def requireCellMode(): Unit =
-    if (dataType == null)
-      throw new GraftInvalidInputException(
-        "agent is bound to page mode; use encryptPage/decryptPage")
-
-  private def cellCount(batch: EncryptedBatch, key: String): Int =
-    batch.metadata.get(key).flatMap(s => s.toIntOption).getOrElse(
-      throw new GraftInvalidInputException(
-        s"cell batch metadata missing row-count key '$key'"))
-
-  /** The V2 attribute set describing a cell batch as a page: presence bytes
-    * are the (opaque) definition-level section, values are PLAIN.
-    */
-  private def cellAttributes(rows: Int, nulls: Int): Map[String, String] = Map(
-    "page_type" -> "DATA_PAGE_V2",
-    "data_page_num_values" -> rows.toString,
-    "data_page_max_definition_level" -> "1",
-    "data_page_max_repetition_level" -> "0",
-    "page_v2_definition_levels_byte_length" -> rows.toString,
-    "page_v2_repetition_levels_byte_length" -> "0",
-    "page_v2_num_nulls" -> nulls.toString,
-    "page_v2_is_compressed" -> "false",
-    "page_encoding" -> "PLAIN")
 
   // --------------------------------------------------------------- transport --
 
@@ -344,26 +241,6 @@ object RemoteProtectionAgent {
     * the Parquet writer's job in this architecture — SURVEY §1.3).
     */
   final val Compression = "UNCOMPRESSED"
-
-  /** Spark type → Parquet physical type, chosen so the per-value byte layout
-    * (and the §1.5 fixed/variable classification) matches
-    * [[graft.core.ValueSerde]] exactly — that is what keeps remote- and
-    * local-encrypted cell batches byte-interchangeable. Types with no
-    * same-width physical analog ride FIXED_LEN_BYTE_ARRAY (1- and 2-byte
-    * scalars) or BYTE_ARRAY (variable).
-    */
-  def physicalMapping(dt: DataType): (String, Option[Int]) = dt match {
-    case BooleanType | ByteType => ("FIXED_LEN_BYTE_ARRAY", Some(1))
-    case ShortType => ("FIXED_LEN_BYTE_ARRAY", Some(2))
-    case IntegerType | DateType => ("INT32", None)
-    case FloatType => ("FLOAT", None)
-    case LongType | TimestampType | TimestampNTZType => ("INT64", None)
-    case DoubleType => ("DOUBLE", None)
-    case StringType | BinaryType => ("BYTE_ARRAY", None)
-    case _: DecimalType => ("BYTE_ARRAY", None)
-    case other =>
-      throw new GraftInvalidInputException(s"unsupported type for protection: $other")
-  }
 
   /** `ExtractUserId` (`dbpa_utils.h:43-56`): app_context is JSON with a
     * non-empty string `user_id`.

@@ -60,32 +60,23 @@ final case class CellCryptor(
     * `dbpa_remote.cpp:286-296`).
     */
   def decryptCell(cell: Array[Byte]): Any = {
-    xorSeed match {
+    val (mode, plen) = WireFormat.validateCellHeader(cell)
+    if (mode != modeByte)
+      throw new GraftInvalidInputException(
+        f"mode mismatch: cell has 0x$mode%02x, column policy expects 0x$modeByte%02x")
+    val plain = xorSeed match {
       case Some(seed) =>
-        // fused path: validate the header in place and XOR straight out of
-        // the cell buffer — no ciphertext copy, no intermediate array
-        val (mode, plen, _) = WireFormat.validateCellHeader(cell)
-        if (mode != modeByte)
-          throw new GraftInvalidInputException(
-            f"mode mismatch: cell has 0x$mode%02x, column policy expects 0x$modeByte%02x")
-        val ctLen = cell.length - WireFormat.CellHeaderLen
-        if (ctLen != plen)
-          throw new GraftInvalidInputException(
-            s"plaintext length mismatch: got $ctLen, header says $plen")
-        val plain = new Array[Byte](ctLen)
-        StableHash.xorKeystreamFrom(seed, cell, WireFormat.CellHeaderLen, plain)
-        ValueSerde.deserialize(dataType, plain)
+        // fused path: XOR straight out of the cell buffer, no ciphertext copy
+        val out = new Array[Byte](cell.length - WireFormat.CellHeaderLen)
+        StableHash.xorKeystreamFrom(seed, cell, WireFormat.CellHeaderLen, out)
+        out
       case None =>
-        val (mode, plen, ct) = WireFormat.unframeCell(cell)
-        if (mode != modeByte)
-          throw new GraftInvalidInputException(
-            f"mode mismatch: cell has 0x$mode%02x, column policy expects 0x$modeByte%02x")
-        val plain = codec.decrypt(ct)
-        if (plain.length != plen)
-          throw new GraftInvalidInputException(
-            s"plaintext length mismatch: got ${plain.length}, header says $plen")
-        ValueSerde.deserialize(dataType, plain)
+        codec.decrypt(java.util.Arrays.copyOfRange(cell, WireFormat.CellHeaderLen, cell.length))
     }
+    if (plain.length != plen)
+      throw new GraftInvalidInputException(
+        s"plaintext length mismatch: got ${plain.length}, header says $plen")
+    ValueSerde.deserialize(dataType, plain)
   }
 
   /** Raw block encrypt — reference `EncryptBlock` parity (no framing,

@@ -389,8 +389,13 @@ object PageCodec {
         (0 until numElements).map(i =>
           java.util.Arrays.copyOfRange(valueBytes, i * w, (i + 1) * w))
       case None => // BYTE_ARRAY: [u32 LE len][bytes] per value
+        // numElements comes from the request's attributes: bound it by the
+        // 4-byte length prefixes the bytes can hold before allocating
+        if (numElements > valueBytes.length / 4)
+          throw new GraftInvalidInputException(
+            s"BYTE_ARRAY element count $numElements exceeds the ${valueBytes.length} value bytes")
         val buf = ByteBuffer.wrap(valueBytes).order(ByteOrder.LITTLE_ENDIAN)
-        val out = new ArrayBuffer[Array[Byte]](numElements)
+        val out = new ArrayBuffer[Array[Byte]]
         var i = 0
         while (i < numElements) {
           if (buf.remaining() < 4)

@@ -85,9 +85,15 @@ object ValueSerde {
       case StringType  => UTF8String.fromBytes(b)
       case BinaryType  => b
       case dt: DecimalType =>
-        org.apache.spark.sql.types.Decimal(
-          new java.math.BigDecimal(new java.math.BigInteger(b), dt.scale),
-          dt.precision, dt.scale)
+        // decrypted bytes are untrusted: an empty or over-long unscaled value
+        // would otherwise fail inside BigInteger / Decimal with untyped errors
+        if (b.isEmpty)
+          throw new GraftInvalidInputException(s"decrypted payload for $dt is empty")
+        val d = new java.math.BigDecimal(new java.math.BigInteger(b), dt.scale)
+        if (d.precision > dt.precision)
+          throw new GraftInvalidInputException(
+            s"decrypted value for $dt has ${d.precision} digits")
+        org.apache.spark.sql.types.Decimal(d, dt.precision, dt.scale)
       case other =>
         throw new GraftInvalidInputException(s"unsupported type for protection: $other")
     }

@@ -51,18 +51,17 @@ object WireFormat {
 
   /** Frame one encrypted cell. */
   def frameCell(mode: Byte, plaintextLen: Int, ciphertext: Array[Byte]): Array[Byte] = {
-    val out = ByteBuffer.allocate(CellHeaderLen + ciphertext.length)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    out.put(CellMagic).put(CellVersion).put(mode)
-    u32(out, plaintextLen)
-    out.put(ciphertext)
-    out.array()
+    val out = new Array[Byte](CellHeaderLen + ciphertext.length)
+    writeCellHeader(out, mode, plaintextLen)
+    System.arraycopy(ciphertext, 0, out, CellHeaderLen, ciphertext.length)
+    out
   }
 
-  /** Validate a framed cell header in place → (mode, plaintextLen, headerLen)
-    * without copying the ciphertext (fused decrypt path).
+  /** Validate a framed cell header in place → (mode, plaintextLen); the
+    * ciphertext is `cell(CellHeaderLen ..)`, never copied here. Fails cleanly
+    * on malformed input (FIXTURES.md §2 discipline).
     */
-  def validateCellHeader(cell: Array[Byte]): (Byte, Int, Int) = {
+  def validateCellHeader(cell: Array[Byte]): (Byte, Int) = {
     if (cell.length < CellHeaderLen)
       throw new GraftInvalidInputException(
         s"ciphertext too short: ${cell.length} < header $CellHeaderLen")
@@ -77,30 +76,7 @@ object WireFormat {
       ((cell(5) & 0xff) << 16) | ((cell(6) & 0xff) << 24)
     if (plen < 0)
       throw new GraftInvalidInputException(s"negative plaintext length $plen")
-    (mode, plen, CellHeaderLen)
-  }
-
-  /** Parse + validate a framed cell → (mode, plaintextLen, ciphertext).
-    * Fails cleanly on malformed input (FIXTURES.md §2 discipline).
-    */
-  def unframeCell(cell: Array[Byte]): (Byte, Int, Array[Byte]) = {
-    if (cell.length < CellHeaderLen)
-      throw new GraftInvalidInputException(
-        s"ciphertext too short: ${cell.length} < header $CellHeaderLen")
-    val buf = ByteBuffer.wrap(cell).order(ByteOrder.LITTLE_ENDIAN)
-    val magic = buf.get()
-    val version = buf.get()
-    val mode = buf.get()
-    if (magic != CellMagic)
-      throw new GraftInvalidInputException(f"bad magic 0x$magic%02x, expected 0xd8")
-    if (version != CellVersion)
-      throw new GraftInvalidInputException(s"unsupported cell version $version")
-    if (mode != ModePerValueFixed && mode != ModePerValueVariable && mode != ModePerBlock)
-      throw new GraftInvalidInputException(f"unknown mode byte 0x$mode%02x")
-    val plen = buf.getInt()
-    if (plen < 0)
-      throw new GraftInvalidInputException(s"negative plaintext length $plen")
-    (mode, plen, java.util.Arrays.copyOfRange(cell, CellHeaderLen, cell.length))
+    (mode, plen)
   }
 
   // ------------------------------------------------- batch value list ----
@@ -161,6 +137,8 @@ object WireFormat {
         val elemSize = buf.getInt()
         if (elemSize < 0)
           throw new GraftInvalidInputException(s"negative element size $elemSize")
+        if (count > 0 && elemSize == 0)
+          throw new GraftInvalidInputException(s"zero element size for $count elements")
         if (buf.remaining() != count.toLong * elemSize)
           throw new GraftInvalidInputException(
             s"fixed value-list length mismatch: ${buf.remaining()} != $count*$elemSize")
@@ -170,7 +148,12 @@ object WireFormat {
           codec.decrypt(e)
         }
       case VariableTag =>
-        val out = new ArrayBuffer[Array[Byte]](count)
+        // every element carries a 4-byte length prefix: bound the untrusted
+        // count by the bytes present before any allocation depends on it
+        if (count > buf.remaining() / 4)
+          throw new GraftInvalidInputException(
+            s"element count $count exceeds the ${buf.remaining()} bytes present")
+        val out = new ArrayBuffer[Array[Byte]]
         var i = 0
         while (i < count) {
           if (buf.remaining() < 4)

@@ -384,28 +384,19 @@ object Dedup {
   def editNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
       maxDist: Int, minInter: Long = 2, minOverlapPct: Int = 25,
       maxDocFreq: Long = DefaultMaxDocFreq,
-      scope: CacheScope = CacheScope.unmanaged,
-      sizeVerifyFromCandidates: Boolean = false): DataFrame = {
-    // sizeVerifyFromCandidates trades one extra action (cache + count of
-    // the candidate set) for a verify width derived from the MEASURED
-    // candidate count — the auto/corpus-scale forms take it (the count is
-    // noise against a 100 TB candidate pipeline and the width then rides
-    // candidate volume); the fixed registry forms keep the fused
-    // single-action plan, which the r17 sweep measured distinctly faster
-    // at bench SFs (d17 cold in-sweep 3.35 s counted vs 2.55 s fused,
-    // normalized — the split action + cache materialization cost more
-    // than the width tuning saved).
-    val cands0 = overlapPairs(shingleSet(docs, idCol, textCol),
+      scope: CacheScope = CacheScope.unmanaged): DataFrame = {
+    // the verify runs on the session shuffle width, in the same action as
+    // the candidate set: counting the candidates first to size the width
+    // (as editNearDupPairsLsh does with verifyWidth) costs a cache and an
+    // extra job, which the r17 sweep measured slower at bench SFs (d17 cold
+    // in-sweep 3.35 s counted vs 2.55 s fused, normalized)
+    val cands = overlapPairs(shingleSet(docs, idCol, textCol),
         idCol, maxDocFreq, scope)
       .filter(col("inter") >= minInter &&
         col("inter") * 100 >= lit(minOverlapPct.toLong) *
           least(col("n1"), col("n2")))
       .select("d1", "d2", "inter")
-    val cands =
-      if (sizeVerifyFromCandidates) scope.cached(cands0) else cands0
-    val width =
-      if (sizeVerifyFromCandidates) verifyWidth(docs.sparkSession, cands.count())
-      else docs.sparkSession.sessionState.conf.numShufflePartitions
+    val width = docs.sparkSession.sessionState.conf.numShufflePartitions
     val t = docs.select(col(idCol), col(textCol))
     cands
       .join(t.select(col(idCol).as("d1"), col(textCol).as("_t1")), "d1")
@@ -461,8 +452,8 @@ object Dedup {
     cands
       .join(t.select(col(idCol).as("d1"), col(textCol).as("_t1")), "d1")
       .join(t.select(col(idCol).as("d2"), col(textCol).as("_t2")), "d2")
-      // same round-robin + candidate-count width discipline as
-      // editNearDupPairs (see there)
+      // same round-robin exchange as editNearDupPairs (see there), on a
+      // width sized from the candidate count
       .repartition(verifyWidth(docs.sparkSession, nCands))
       .withColumn("edit_dist",
         levenshtein(col("_t1"), col("_t2"), maxDist).cast("long"))

@@ -68,11 +68,7 @@ final class PageSequencer(
       val lvb = PageCodec.decompressAndSplit(plaintext, compression, attrs)
       val typed = PageCodec.splitValueBytes(
         lvb.valueBytes, lvb.numElements, physicalType, typeLength, attrs.pageEncoding)
-      val encryptedValueBytes = WireFormat.encryptValueList(
-        codec, typed, PageCodec.fixedWidth(physicalType, typeLength))
-      val encryptedLevelBytes = codec.encrypt(lvb.levelBytes)
-      PageEncryptResult(
-        WireFormat.joinWithLengthPrefix(encryptedLevelBytes, encryptedValueBytes),
+      PageEncryptResult(encryptPerValue(lvb.levelBytes, typed),
         Map(mk -> ModePerValue,
           ProtectionPipeline.KeyVersion -> ProtectionPipeline.AgentVersion))
     } catch {
@@ -90,6 +86,18 @@ final class PageSequencer(
             ProtectionPipeline.KeyVersion -> ProtectionPipeline.AgentVersion))
     }
   }
+
+  /** Per-value ciphertext: `[u32 len][encrypted level bytes][§1.5 value list]`. */
+  private def encryptPerValue(levelBytes: Array[Byte], typed: Seq[Array[Byte]]): Array[Byte] = {
+    val encryptedValueBytes = WireFormat.encryptValueList(
+      codec, typed, PageCodec.fixedWidth(physicalType, typeLength))
+    WireFormat.joinWithLengthPrefix(codec.encrypt(levelBytes), encryptedValueBytes)
+  }
+
+  /** The per-value ciphertext of a page with no levels and no values: the
+    * payload of an empty cell batch, which [[encrypt]] rejects as an empty page.
+    */
+  def encryptEmpty(): Array[Byte] = encryptPerValue(Array.emptyByteArray, Nil)
 
   /** `DecryptAndEncode` (`encryption_sequencer.cpp:199-256`): version
     * prefix-match, mode dispatch from metadata, then the inverse pipeline

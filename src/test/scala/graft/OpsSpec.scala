@@ -1375,5 +1375,25 @@ class OpsSpec extends SparkSpec {
     assert(simSql.toSeq == simApi.toSeq)
   }
 
+  test("verifyWidth: 64 candidates per task, conf override, 8x shuffle-width cap, floor of 1") {
+    val perTaskKey = "spark.graft.dedup.verifyCandsPerTask"
+    val shuffleKey = "spark.sql.shuffle.partitions"
+    val shuffle = spark.conf.get(shuffleKey)
+    spark.conf.set(shuffleKey, "4") // cap = 32
+    try {
+      def width(n: Long) = Dedup.verifyWidth(spark, n)
+      assert(width(0) == 1 && width(1) == 1 && width(64) == 1)
+      assert(width(65) == 2 && width(640) == 10)
+      assert(width(64L * 32) == 32 && width(64L * 32 + 1) == 32 && width(1L << 40) == 32)
+      spark.conf.set(perTaskKey, "10")
+      assert(width(25) == 3 && width(320) == 32 && width(321) == 32)
+      spark.conf.set(perTaskKey, "0") // a non-positive override keeps the default
+      assert(width(65) == 2)
+    } finally {
+      spark.conf.unset(perTaskKey)
+      spark.conf.set(shuffleKey, shuffle)
+    }
+  }
+
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 }

@@ -40,42 +40,16 @@ class HttpTransportSpec extends AnyFunSuite {
     }
   }
 
-  /** Counts concurrent in-flight POST handlers — observes, server-side,
-    * whether the client's worker queue actually bounds concurrency.
-    */
-  private final class TrackingTransport(inner: ProtectionTransport, delayMs: Long)
-      extends ProtectionTransport {
-    val calls = new java.util.concurrent.atomic.AtomicInteger
-    private val inFlight = new java.util.concurrent.atomic.AtomicInteger
-    val maxInFlight = new java.util.concurrent.atomic.AtomicInteger
-    override def get(e: String, h: Map[String, String]): TransportResponse = inner.get(e, h)
-    override def post(e: String, b: String, h: Map[String, String]): TransportResponse = {
-      val n = inFlight.incrementAndGet()
-      maxInFlight.getAndAccumulate(n, Math.max(_, _))
-      try { Thread.sleep(delayMs); calls.incrementAndGet(); inner.post(e, b, h) }
-      finally inFlight.decrementAndGet(): Unit
-    }
-  }
-
-  test("A6 worker mode caps in-flight concurrency while queued callers all complete") {
-    val tracking = new TrackingTransport(service(), delayMs = 150)
-    withServer(tracking) { server =>
-      val transport = new HttpPooledTransport("127.0.0.1", server.boundPort,
-        PoolConfig(), workerThreads = 2)
-      try {
-        // 6 callers submit at once; the reference's pooled client executes on
-        // worker_count_ threads and callers block on the future — so the
-        // server must never see more than 2 concurrent requests
-        val threads = (1 to 6).map(_ => new Thread(() => {
-          transport.post("/encrypt", "{}", Map.empty): Unit
-        }))
-        threads.foreach(_.start())
-        threads.foreach(_.join(30000))
-        assert(tracking.calls.get() == 6, s"only ${tracking.calls.get()}/6 completed")
-        assert(tracking.maxInFlight.get() <= 2,
-          s"worker queue leaked: ${tracking.maxInFlight.get()} concurrent > 2 workers")
-      } finally transport.shutdown()
-    }
+  test("dead port: status-0 error response, never a throw") {
+    // bind-then-close to get a port with nothing listening
+    val ss = new java.net.ServerSocket(0)
+    val deadPort = ss.getLocalPort
+    ss.close()
+    val t = new HttpPooledTransport("127.0.0.1", deadPort, PoolConfig(connectTimeoutMs = 500))
+    try {
+      val r = t.get("/healthz", Map.empty)
+      assert(r.status == 0 && r.error.nonEmpty, r)
+    } finally t.shutdown()
   }
 
   test("shutdown refuses new requests instead of opening fresh sockets") {

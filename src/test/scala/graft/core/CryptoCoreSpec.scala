@@ -154,14 +154,15 @@ class CryptoCoreSpec extends AnyFunSuite {
 
   test("cell framing: header fields + malformed rejections") {
     val cell = WireFormat.frameCell(WireFormat.ModePerValueFixed, 4, Array[Byte](9, 9, 9, 9))
-    val (mode, plen, ct) = WireFormat.unframeCell(cell)
-    assert(mode == WireFormat.ModePerValueFixed && plen == 4 && ct.length == 4)
-    intercept[GraftInvalidInputException](WireFormat.unframeCell(Array[Byte](1)))
+    val (mode, plen) = WireFormat.validateCellHeader(cell)
+    assert(mode == WireFormat.ModePerValueFixed && plen == 4)
+    assert(cell.drop(WireFormat.CellHeaderLen).sameElements(Array[Byte](9, 9, 9, 9)))
+    intercept[GraftInvalidInputException](WireFormat.validateCellHeader(Array[Byte](1)))
     val badMagic = cell.clone(); badMagic(0) = 0x00
-    intercept[GraftInvalidInputException](WireFormat.unframeCell(badMagic))
+    intercept[GraftInvalidInputException](WireFormat.validateCellHeader(badMagic))
     val badVersion = cell.clone(); badVersion(1) = 0x7f
-    intercept[GraftInvalidInputException](WireFormat.unframeCell(badVersion))
+    intercept[GraftInvalidInputException](WireFormat.validateCellHeader(badVersion))
     val badMode = cell.clone(); badMode(2) = 0x55
-    intercept[GraftInvalidInputException](WireFormat.unframeCell(badMode))
+    intercept[GraftInvalidInputException](WireFormat.validateCellHeader(badMode))
   }
 }
