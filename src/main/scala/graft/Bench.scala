@@ -298,8 +298,8 @@ object Bench {
     // 8 GB heap can leave uncollected for a whole section) and the next
     // query starts against an empty heap. Without this the heaviest query
     // ran 5× slow with the GC debt distributed into its tasks (d07
-    // measured 33-50 s in-sweep vs 6.6 s with the pre-collect; BenchProbe
-    // reproduces both). ~0.3 s/query is cheap next to a 5× lie.
+    // measured 33-50 s in-sweep vs 6.6 s with the pre-collect).
+    // ~0.3 s/query is cheap next to a 5× lie.
     System.gc()
     Thread.sleep(200)
     val load = loadavgStr()
@@ -497,7 +497,7 @@ object Bench {
     // ---- 8 GB-heap smoke (VERDICT r7 #8): a big heap MASKS the
     // ContextCleaner-debt class of bug (it can run a whole sweep without a
     // major GC), so one forked child JVM re-measures d07 at -Xmx8g — the
-    // BenchProbe configuration that reproduced the r6 56× inflation. Runs
+    // configuration that reproduced the r6 56× inflation. Runs
     // BEFORE the isolation pass because its number feeds the cross-check.
     // The 8 GB child replays the sweep's 5 SLOWEST queries (VERDICT r9 #2:
     // the d07-only check was structurally blind to d06, this round's actual
@@ -1133,8 +1133,7 @@ object Bench {
   private final case class ScaleRun(sec: Double, n: Long, maxTask: Long,
       maxIn: Long, maxShuf: Long, load: String, gcS: Double, taskS: Double,
       taskGcS: Double, stealPct: String, ccRounds: Int, calMrows: Double,
-      stBatches: Long, stStateRows: Long, autoPoint: (Int, Int),
-      minhashPoint: (Int, Int, Boolean))
+      stBatches: Long, stStateRows: Long)
 
   private def measureScaleRun(spark: SparkSession,
       listener: TaskStatsListener, fn: (SparkSession, String) => DataFrame,
@@ -1151,13 +1150,10 @@ object Bench {
     // is expected behavior, ambient noise is not). Reset before the run so
     // a row that never runs CC reports -1 and the field is omitted.
     graft.ops.ConnectedComponents.lastRunRounds = -1
-    // streaming micro-batch/state + ANN operating-point telemetry reset the
-    // same way (VERDICT r13 #2/#3): rows that never stream / never choose
-    // an auto point report -1 and the fields are omitted
+    // streaming micro-batch/state telemetry reset the same way (VERDICT
+    // r13 #2): rows that never stream report -1 and the fields are omitted
     graft.streaming.StreamOps.lastRunBatches = -1
     graft.streaming.StreamOps.lastRunStateRows = -1
-    graft.ops.Similarity.lastAutoPoint = (-1, -1)
-    graft.ops.Dedup.lastAutoPoint = (-1, -1, false)
     // machine-speed probe immediately before the run (VERDICT r12 #1):
     // attributes a slow run to a slow machine window, per run — the
     // per-row steal sampling alone missed sub-window spikes in r12
@@ -1170,9 +1166,7 @@ object Bench {
       listener.taskMs.get() / 1e3, listener.taskGcMs.get() / 1e3,
       stealPctSince(steal0), graft.ops.ConnectedComponents.lastRunRounds, cal,
       graft.streaming.StreamOps.lastRunBatches,
-      graft.streaming.StreamOps.lastRunStateRows,
-      graft.ops.Similarity.lastAutoPoint,
-      graft.ops.Dedup.lastAutoPoint)
+      graft.streaming.StreamOps.lastRunStateRows)
   }
 
   /** Free bytes on the scale corpus/spill filesystem, in GB — recorded
@@ -1300,15 +1294,6 @@ object Bench {
           s""","st_batches":${runs.map(_.stBatches).mkString("[", ",", "]")}""" +
             s""","st_state_rows":${runs.map(_.stStateRows).mkString("[", ",", "]")}"""
         else ""
-      // Auto operating point, reproducible from the artifact alone: s07's
-      // hyperplane point (VERDICT r13 #3) or d03auto's MinHash point with
-      // its cache-layout branch (VERDICT r14 #2) — a row runs at most one
-      val opPoint = runs.map(_.autoPoint).find(_._1 >= 0)
-        .map { case (p, t) => s""","op_point":"planes=$p,tables=$t"""" }
-        .orElse(runs.map(_.minhashPoint).find(_._1 >= 0)
-          .map { case (kk, b, pin) =>
-            s""","op_point":"k=$kk,bands=$b,pin=$pin"""" })
-        .getOrElse("")
       // Task-second accounting (VERDICT r11 #2): `core_floor_s` is the wall
       // a perfectly-scheduled run would take on this session's cores
       // (task-seconds / cores); `wall_over_core` near 1 proves the wall is
@@ -1323,7 +1308,7 @@ object Bench {
       val extraJson = try extraFields() catch { case e: Throwable =>
         s""","extra_error":"${e.getClass.getSimpleName}"""" }
       val json =
-        f""""$key":{"sec":$pubSec%.3f,"pub":"warm_median","form":"$name","runs_s":$allRuns,"retries":$extra$err$ccRounds$calRuns$taskRuns$maxTaskRuns$stRuns$opPoint$extraJson,"rows":${r.n},"max_task_ms":$maxTaskMin,"max_task_input_mb":${r.maxIn / 1048576.0}%.1f,"max_task_shuffle_mb":${r.maxShuf / 1048576.0}%.1f,"load":"${r.load}","steal_pct":"${r.stealPct}","gc_s":${r.gcS}%.2f,"task_s":${r.taskS}%.1f,"task_gc_s":${r.taskGcS}%.1f,"cores":$cores,"core_floor_s":$floorS%.1f,"wall_over_core":$wallOverCore%.2f,"disk_avail_gb":${diskAvailGb(dir)}%.1f}"""
+        f""""$key":{"sec":$pubSec%.3f,"pub":"warm_median","form":"$name","runs_s":$allRuns,"retries":$extra$err$ccRounds$calRuns$taskRuns$maxTaskRuns$stRuns$extraJson,"rows":${r.n},"max_task_ms":$maxTaskMin,"max_task_input_mb":${r.maxIn / 1048576.0}%.1f,"max_task_shuffle_mb":${r.maxShuf / 1048576.0}%.1f,"load":"${r.load}","steal_pct":"${r.stealPct}","gc_s":${r.gcS}%.2f,"task_s":${r.taskS}%.1f,"task_gc_s":${r.taskGcS}%.1f,"cores":$cores,"core_floor_s":$floorS%.1f,"wall_over_core":$wallOverCore%.2f,"disk_avail_gb":${diskAvailGb(dir)}%.1f}"""
       (json, Some(key -> pubSec))
     }
   }
@@ -1357,26 +1342,39 @@ object Bench {
   // verify join ENOSPC'd an 80 GB disk — planes must track log₂(n) and
   // tables the miss bound, together.
   private def s07Production(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Similarity.cosineNearDupAuto(
+    graft.ops.Similarity.cosineNearDupBucketed(
       s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
-      threshold = 0.9)
+      threshold = 0.9, point = graft.ops.FromCorpus)
 
-  /** Untimed candidate-pair attribution for the s07 scale rows (VERDICT
-    * r15 #5: the 15.3× decade factor needed pair counts to prove the LSH
-    * stays sub-quadratic — tables ∝ n^0.22 makes the EXPECTED mass
-    * ∝ n^1.22, ~16.6×/decade, and only a measured mass can separate that
-    * from a quadratic blow-up). Runs AFTER the timed runs, once per row;
-    * identity for every non-s07 row.
+  /** Untimed fields for the corpus-sized rows, computed AFTER the timed
+    * runs, once per row; identity for every other row:
+    *  - the operating point the row's `FromCorpus` run resolved, from the
+    *    corpus count through the operator's own resolver, so the row is
+    *    reproducible from the artifact alone: s07's hyperplane point
+    *    (VERDICT r13 #3), d03auto's MinHash point with its cache-layout
+    *    branch (VERDICT r14 #2);
+    *  - s07's candidate-pair attribution (VERDICT r15 #5: the 15.3× decade
+    *    factor needed pair counts to prove the LSH stays sub-quadratic —
+    *    tables ∝ n^0.22 makes the EXPECTED mass ∝ n^1.22, ~16.6×/decade,
+    *    and only a measured mass can separate that from a quadratic
+    *    blow-up).
     */
-  private def s07CandMassExtra(key: String, spark: SparkSession,
+  private def corpusPointExtra(key: String, spark: SparkSession,
       dir: String): () => String =
-    if (!key.startsWith("s07")) () => ""
-    else { () =>
+    if (key.startsWith("s07")) { () =>
       val (mass, maxB, n) = graft.ops.Similarity.lshCandidateMass(
         spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
         threshold = 0.9)
-      s""","cand_pair_mass":$mass,"max_bucket":$maxB,"corpus_n":$n"""
+      val (p, t) = graft.ops.Similarity.lshOperatingPoint(n, 0.9)
+      s""","op_point":"planes=$p,tables=$t","cand_pair_mass":$mass,"max_bucket":$maxB,"corpus_n":$n"""
     }
+    else if (key.startsWith("d03auto")) { () =>
+      val n = spark.read.parquet(s"$dir/documents.parquet").count()
+      val (k, bands) = graft.ops.Dedup.minhashOperatingPoint(n, 0.8)
+      val pin = n >= graft.ops.Dedup.PinLayoutMinDocs
+      s""","op_point":"k=$k,bands=$bands,pin=$pin""""
+    }
+    else () => ""
 
   // d03's scale twin at the jointly-scaled MinHash operating point
   // (Dedup.minhashOperatingPoint, r11 — the s07 auto-point treatment for
@@ -1384,9 +1382,9 @@ object Bench {
   // form wherever both are recall-complete (OpsSpec pins the fixture),
   // but band width tracks log n instead of leaning on the bucket cap.
   private def d03Auto(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Dedup.minhashLshPairsAuto(
+    graft.ops.Dedup.minhashLshPairs(
       s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
-      threshold = 0.8)
+      threshold = 0.8, point = graft.ops.FromCorpus)
 
   // The registry 64/16 operating point with the result-invariant cache-
   // layout pin (Dedup.pinCacheLayout) forced on — what a production caller
@@ -1540,7 +1538,7 @@ object Bench {
       waitForQuiet(2.5, 240) // synth is our own load; let the 1-min avg decay
       val out = targets.map { case (name, fn) =>
         scaleRow(spark, listener, name.take(3) + "_10x", name, fn, workDir,
-          extraFields = s07CandMassExtra(name, spark, workDir))
+          extraFields = corpusPointExtra(name, spark, workDir))
       }
       (out.map(_._1).mkString("{", ",", "}"), out.flatMap(_._2))
     } catch { case e: Throwable => (scaleErr(e), Seq.empty) }
@@ -1836,16 +1834,17 @@ object Bench {
         // via repartition-on-join-keys was tried first and measured 2×
         // worse: the explicit exchanges are not elided under
         // AQE/broadcast planning.) Compute-dense SCAN stragglers stay
-        // handled at the operator: cosineNearDupAuto spreads signature
-        // compute with n·tables·planes (the r10 9.7 s s07 task was one
-        // default input split computing a quarter of all signatures).
+        // handled at the operator: a FromCorpus cosineNearDupBucketed
+        // spreads signature compute with n·tables·planes (the r10 9.7 s
+        // s07 task was one default input split computing a quarter of all
+        // signatures).
         val fresh = freshSession(cpus)
         spark = fresh._1; listener = fresh._2
         rowConfs.getOrElse(key, Nil).foreach { case (k, v) =>
           spark.conf.set(k, v) }
         val row = scaleRow(spark, listener, key, name, fn, workDir,
           measuredRuns = 2, gateEveryRun = true,
-          extraFields = s07CandMassExtra(key, spark, workDir))
+          extraFields = corpusPointExtra(key, spark, workDir))
         // Per-row persistence hook (ADVICE r11): Scale100x merges each row
         // into the artifact as it completes, so a parent timeout or a later
         // row's crash keeps every row already measured.

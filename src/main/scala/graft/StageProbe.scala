@@ -71,8 +71,8 @@ object StageProbe {
       def run() =
         if (query == "s07auto") {
           val emb = spark.read.parquet(s"$workDir/embeddings.parquet")
-          graft.ops.Similarity
-            .cosineNearDupAuto(emb, "vec_id", "embedding", 0.9).count()
+          graft.ops.Similarity.cosineNearDupBucketed(emb, "vec_id",
+            "embedding", 0.9, point = graft.ops.FromCorpus).count()
         } else SparkEntry.queries(query)(spark, workDir).count()
       run() // warm
       spark.catalog.clearCache()

@@ -1,7 +1,5 @@
 package graft.agent
 
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -72,7 +70,7 @@ private[agent] final class CellBatch(cipher: PageCipher, dataType: DataType,
     * (A8 field-match); the version check is the sequencer's.
     */
   def decrypt(batch: EncryptedBatch): Seq[Any] = {
-    val declared = batch.metadata.get(KeyOrigType).map(parseType)
+    val declared = batch.metadata.get(KeyOrigType).map(parseType(_))
       .getOrElse(throw new GraftInvalidInputException("missing original_type metadata"))
     if (declared != dataType)
       throw new GraftInvalidInputException(
@@ -150,11 +148,4 @@ private[agent] object CellBatch {
     batch.metadata.get(key).flatMap(_.toIntOption).filter(_ >= 0).getOrElse(
       throw new GraftInvalidInputException(
         s"cell batch metadata missing row-count key '$key'"))
-
-  private def parseType(json: String): DataType =
-    try DataType.fromJson(json)
-    catch {
-      case NonFatal(e) =>
-        throw new GraftInvalidInputException(s"invalid original_type metadata: ${e.getMessage}")
-    }
 }

@@ -163,6 +163,7 @@ object CryptoCodec {
   final val Xor = "xor"
   final val AesDet = "aes_det"
   final val AesRnd = "aes_rnd"
+  final val Names = Set(Xor, AesDet, AesRnd)
 
   def apply(name: String, ctx: ProtectionContext): CryptoCodec = name match {
     case Xor    => XorCodec(ctx)

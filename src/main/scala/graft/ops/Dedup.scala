@@ -174,12 +174,12 @@ object Dedup {
     * Byte-driven coalescing is exactly the condition under which AQE stops
     * guarding parallelism, so it is exactly when the operator must.
     *
-    * `force` is the *Auto forms' corpus-size override (they know n from
-    * their operating-point count): at [[PinLayoutMinDocs]]+ docs the
-    * shingle cache is 100+ MB deserialized even at default sessions, and
-    * aligning it on the groupBy key saves the signature/size exchanges —
-    * measured at 100× (500 k docs, default session) as 26.2→21.9 s on
-    * d03's auto form.
+    * `force` is the corpus-size override a [[FromCorpus]] operator applies
+    * (it knows n from its operating-point count): at [[PinLayoutMinDocs]]+
+    * docs the shingle cache is 100+ MB deserialized even at default
+    * sessions, and aligning it on the groupBy key saves the signature/size
+    * exchanges — measured at 100× (500 k docs, default session) as
+    * 26.2→21.9 s on d03's corpus-sized form.
     */
   private def pinCacheLayout(df: DataFrame, key: Column,
       force: Boolean = false): DataFrame = {
@@ -191,13 +191,33 @@ object Dedup {
     else df
   }
 
-  /** Corpus size above which the *Auto forms pin their shingle-cache layout
-    * even at default sessions (see [[pinCacheLayout]]): ~100 k docs ≈ 10 M
-    * hashed shingles ≈ 160 MB+ deserialized — the fat-partition regime.
+  /** Corpus size above which a [[FromCorpus]] operator pins its
+    * shingle-cache layout even at default sessions (see [[pinCacheLayout]]):
+    * ~100 k docs ≈ 10 M hashed shingles ≈ 160 MB+ deserialized — the
+    * fat-partition regime.
     * Below it, per-task fixed costs dominate and AQE's byte-sized choice
     * is the better layout.
     */
   final val PinLayoutMinDocs = 100000L
+
+  /** The registry's fixed MinHash point (d03/d13/d17): the oracle contract. */
+  final val RegistryMinHashPoint: OperatingPoint[MinHashBands] =
+    Fixed(MinHashBands(k = 64, bands = 16))
+
+  /** The (k, bands) and cache-layout pin `point` resolves to on `df`:
+    * [[FromCorpus]] counts `df` once, sizes (k, bands) with
+    * [[minhashOperatingPoint]] and pins the layout at [[PinLayoutMinDocs]]+
+    * docs (or when the caller asks).
+    */
+  private def resolve(point: OperatingPoint[MinHashBands], df: DataFrame,
+      threshold: Double, pinLayout: Boolean): (MinHashBands, Boolean) =
+    point match {
+      case Fixed(p) => (p, pinLayout)
+      case FromCorpus =>
+        val n = df.count()
+        val (k, bands) = minhashOperatingPoint(n, threshold)
+        (MinHashBands(k, bands), pinLayout || n >= PinLayoutMinDocs)
+    }
 
   /** Drop shingle hashes whose document frequency exceeds `maxDf`. The hot
     * set is tiny by construction (≤ total_occurrences / maxDf keys), so it
@@ -363,40 +383,34 @@ object Dedup {
     * candidate set 267× (112k → 419 pairs), the difference between the
     * verify being free and being the slowest stage in the plan.
     */
-  /** Width for the Levenshtein verify exchange, sized from the CANDIDATE
-    * COUNT instead of the session shuffle width (VERDICT r16 #5 — the
-    * session width is a CPU-count constant: at 100 TB a multi-million-pair
-    * candidate stream on width 32 puts ~n/32 O(len·maxDist) verifies in
-    * one task, an unbounded straggler). ~candsPerTask banded-Levenshtein
-    * rows per task keeps tasks in the O(100 ms) range so no task runs
-    * >2× the median on candidate-count grounds; the cap (8× session width)
-    * bounds tiny-task scheduling overhead the other way. Both knobs
-    * conf-overridable (`spark.graft.dedup.verifyCandsPerTask`).
-    */
-  private[graft] def verifyWidth(ss: org.apache.spark.sql.SparkSession,
-      nCands: Long): Int = {
-    val perTask = ss.conf.getOption("spark.graft.dedup.verifyCandsPerTask")
-      .map(_.toLong).filter(_ > 0).getOrElse(64L)
-    val cap = 8L * ss.sessionState.conf.numShufflePartitions
-    math.max(1L, math.min((nCands + perTask - 1) / perTask, cap)).toInt
-  }
-
   def editNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
       maxDist: Int, minInter: Long = 2, minOverlapPct: Int = 25,
       maxDocFreq: Long = DefaultMaxDocFreq,
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    // the verify runs on the session shuffle width, in the same action as
-    // the candidate set: counting the candidates first to size the width
-    // (as editNearDupPairsLsh does with verifyWidth) costs a cache and an
-    // extra job, which the r17 sweep measured slower at bench SFs (d17 cold
-    // in-sweep 3.35 s counted vs 2.55 s fused, normalized)
     val cands = overlapPairs(shingleSet(docs, idCol, textCol),
         idCol, maxDocFreq, scope)
       .filter(col("inter") >= minInter &&
         col("inter") * 100 >= lit(minOverlapPct.toLong) *
           least(col("n1"), col("n2")))
       .select("d1", "d2", "inter")
-    val width = docs.sparkSession.sessionState.conf.numShufflePartitions
+    levenshteinVerify(cands, docs, idCol, textCol, maxDist,
+      docs.sparkSession.sessionState.conf.numShufflePartitions)
+      .select("d1", "d2", "inter", "edit_dist")
+  }
+
+  /** Join both texts onto candidate pairs (d1, d2, …) and keep the pairs
+    * whose banded Levenshtein distance is ≤ `maxDist`, verified on `width`
+    * partitions; adds `edit_dist`.
+    *
+    * The fixed-point callers verify on the session shuffle width, in the
+    * same action as the candidate set: counting the candidates first to
+    * size the width (as a [[FromCorpus]] [[editNearDupPairsLsh]] does with
+    * [[verifyWidth]]) costs a cache and an extra job, which the r17 sweep
+    * measured slower at bench SFs (d17 cold in-sweep 3.35 s counted vs
+    * 2.55 s fused, normalized).
+    */
+  private def levenshteinVerify(cands: DataFrame, docs: DataFrame,
+      idCol: String, textCol: String, maxDist: Int, width: Int): DataFrame = {
     val t = docs.select(col(idCol), col(textCol))
     cands
       .join(t.select(col(idCol).as("d1"), col(textCol).as("_t1")), "d1")
@@ -418,7 +432,24 @@ object Dedup {
       .withColumn("edit_dist",
         levenshtein(col("_t1"), col("_t2"), maxDist).cast("long"))
       .filter(col("edit_dist") >= 0 && col("edit_dist") <= maxDist)
-      .select("d1", "d2", "inter", "edit_dist")
+  }
+
+  /** Width for a [[FromCorpus]] Levenshtein verify exchange, sized from
+    * the CANDIDATE COUNT instead of the session shuffle width (VERDICT r16
+    * #5 — the session width is a CPU-count constant: at 100 TB a
+    * multi-million-pair candidate stream on width 32 puts ~n/32
+    * O(len·maxDist) verifies in one task, an unbounded straggler). ~candsPerTask banded-Levenshtein
+    * rows per task keeps tasks in the O(100 ms) range so no task runs
+    * >2× the median on candidate-count grounds; the cap (8× session width)
+    * bounds tiny-task scheduling overhead the other way. Both knobs
+    * conf-overridable (`spark.graft.dedup.verifyCandsPerTask`).
+    */
+  private[graft] def verifyWidth(ss: org.apache.spark.sql.SparkSession,
+      nCands: Long): Int = {
+    val perTask = ss.conf.getOption("spark.graft.dedup.verifyCandsPerTask")
+      .map(_.toLong).filter(_ > 0).getOrElse(64L)
+    val cap = 8L * ss.sessionState.conf.numShufflePartitions
+    math.max(1L, math.min((nCands + perTask - 1) / perTask, cap)).toInt
   }
 
   /** LSH-bounded fuzzy-dedup verify — the 100 TB form of
@@ -435,29 +466,30 @@ object Dedup {
     * shingles), so the candidate bound loses nothing the verify would keep.
     * Returns (d1, d2, edit_dist).
     *
-    * ORACLE/REGISTRY form: fixed (k, bands) is the oracle contract;
-    * production callers at corpus scale use [[editNearDupPairsLshAuto]].
+    * `point` defaults to the registry's fixed 64/16 point (the oracle
+    * contract), whose verify is the fused session-width plan of
+    * [[editNearDupPairs]]. [[FromCorpus]] sizes (k, bands) from the corpus
+    * as [[minhashLshPairs]] does, so the verify stage's input mass stays
+    * O(n) as the corpus grows, and sizes the verify width from a count of
+    * the cached candidates ([[verifyWidth]]).
     */
   def editNearDupPairsLsh(docs: DataFrame, idCol: String, textCol: String,
-      maxDist: Int, threshold: Double = 0.8, k: Int = 64, bands: Int = 16,
+      maxDist: Int, threshold: Double = 0.8,
+      point: OperatingPoint[MinHashBands] = RegistryMinHashPoint,
       maxDocFreq: Long = DefaultMaxDocFreq,
       scope: CacheScope = CacheScope.unmanaged,
       pinLayout: Boolean = false): DataFrame = {
-    val cands = scope.cached(
-      minhashLshPairs(docs, idCol, textCol, threshold, k, bands,
-        maxDocFreq, scope, pinLayout)
-      .select("d1", "d2"))
-    val nCands = cands.count()
-    val t = docs.select(col(idCol), col(textCol))
-    cands
-      .join(t.select(col(idCol).as("d1"), col(textCol).as("_t1")), "d1")
-      .join(t.select(col(idCol).as("d2"), col(textCol).as("_t2")), "d2")
-      // same round-robin exchange as editNearDupPairs (see there), on a
-      // width sized from the candidate count
-      .repartition(verifyWidth(docs.sparkSession, nCands))
-      .withColumn("edit_dist",
-        levenshtein(col("_t1"), col("_t2"), maxDist).cast("long"))
-      .filter(col("edit_dist") >= 0 && col("edit_dist") <= maxDist)
+    val (mh, pin) = resolve(point, docs, threshold, pinLayout)
+    val lsh = minhashLshPairs(docs, idCol, textCol, threshold, Fixed(mh),
+      maxDocFreq, scope, pin).select("d1", "d2")
+    val (cands, width) = point match {
+      case Fixed(_) =>
+        (lsh, docs.sparkSession.sessionState.conf.numShufflePartitions)
+      case FromCorpus =>
+        val cached = scope.cached(lsh)
+        (cached, verifyWidth(docs.sparkSession, cached.count()))
+    }
+    levenshteinVerify(cands, docs, idCol, textCol, maxDist, width)
       .select("d1", "d2", "edit_dist")
   }
 
@@ -525,18 +557,20 @@ object Dedup {
     * [[jaccardPairs]] whenever LSH recall holds at the threshold
     * (P(miss | j≥0.9) < 1e-7 at k=64, bands=16).
     *
-    * ORACLE/REGISTRY form (VERDICT r11 #6): the fixed (k, bands) point IS
-    * the DuckDB-oracle contract and stays the registry query. Production
-    * callers at corpus scale should use [[minhashLshPairsAuto]], which
-    * sizes (k, bands) jointly from (n, threshold) with a logged miss bound
-    * — the fixed point's recall/candidate-mass balance only holds near the
-    * demo corpus size.
+    * `point` defaults to the registry's fixed 64/16 point (VERDICT r11 #6):
+    * it IS the DuckDB-oracle contract of d03. Callers at corpus scale pass
+    * [[FromCorpus]] (d25), which counts the corpus once and sizes (k, bands)
+    * jointly from (n, threshold) with [[minhashOperatingPoint]]'s logged
+    * miss bound — the fixed point's recall/candidate-mass balance only
+    * holds near the demo corpus size.
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, k: Int = 64, bands: Int = 16,
+      threshold: Double = 0.8,
+      point: OperatingPoint[MinHashBands] = RegistryMinHashPoint,
       maxDocFreq: Long = DefaultMaxDocFreq,
       scope: CacheScope = CacheScope.unmanaged,
       pinLayout: Boolean = false): DataFrame = {
+    val (MinHashBands(k, bands), pin) = resolve(point, df, threshold, pinLayout)
     // cached: signatures, sizes and both verification join sides all read
     // the hashed shingle set (4 scan+explode+distinct recomputes otherwise);
     // lifetime is the caller's CacheScope. The df cap applies to the whole
@@ -547,7 +581,7 @@ object Dedup {
     val hashed = scope.cached(pinCacheLayout(capDocFreq(
       shingleSet(df, idCol, textCol)
         .select(col(idCol), xxhash64(col("shingle")).as("sh")),
-      maxDocFreq), col(idCol), force = pinLayout))
+      maxDocFreq), col(idCol), force = pin))
     // NOTE (r16): an eager hashed.count() to pre-build the cache before its
     // four concurrent consumer stages was measured a wash (the extra job
     // costs what the block-lock contention saves) — left lazy.
@@ -621,50 +655,6 @@ object Dedup {
     (k, bands)
   }
 
-  /** [[minhashLshPairs]] at the jointly-scaled operating point from
-    * [[minhashOperatingPoint]] — the corpus-scale form: one `count()`
-    * sizes the corpus, then (k, bands) scale together so neither recall
-    * nor candidate mass degrades as n grows (d03's scale twin; the fixed
-    * 64/16 registry form stays the oracle-gated demo point).
-    */
-  def minhashLshPairsAuto(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, missTarget: Double = 1e-3, maxK: Int = 512,
-      maxDocFreq: Long = DefaultMaxDocFreq,
-      scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    val n = df.count()
-    val (k, bands) = minhashOperatingPoint(n, threshold, missTarget, maxK)
-    val pin = n >= PinLayoutMinDocs
-    lastAutoPoint = (k, bands, pin)
-    minhashLshPairs(df, idCol, textCol, threshold, k, bands, maxDocFreq, scope,
-      pinLayout = pin)
-  }
-
-  /** The (k, bands, pinCacheLayout) the last [[minhashLshPairsAuto]] call
-    * on this JVM chose — benchmark telemetry so a scale row can stamp its
-    * operating point AND layout branch into the committed artifact
-    * (VERDICT r14 #2: d03auto's task-seconds moved +49 % across rounds and
-    * the row could not say whether the auto point or the pin branch moved
-    * with corpus realization). Same pattern as
-    * [[graft.ops.Similarity.lastAutoPoint]].
-    */
-  @volatile var lastAutoPoint: (Int, Int, Boolean) = (-1, -1, false)
-
-  /** [[editNearDupPairsLsh]] at the jointly-scaled operating point — the
-    * candidate gate (MinHash-LSH) sizes (k, bands) from the corpus the way
-    * [[minhashLshPairsAuto]] does, so the Levenshtein verify stage's input
-    * mass stays O(n) as the corpus grows (d17's scale twin; the fixed
-    * 64/16 registry form stays the oracle-gated demo point).
-    */
-  def editNearDupPairsLshAuto(docs: DataFrame, idCol: String, textCol: String,
-      maxDist: Int, threshold: Double = 0.8, missTarget: Double = 1e-3,
-      maxK: Int = 512, maxDocFreq: Long = DefaultMaxDocFreq,
-      scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    val n = docs.count()
-    val (k, bands) = minhashOperatingPoint(n, threshold, missTarget, maxK)
-    editNearDupPairsLsh(docs, idCol, textCol, maxDist, threshold, k, bands,
-      maxDocFreq, scope, pinLayout = n >= PinLayoutMinDocs)
-  }
-
   /** Incremental NEAR-dup dedup — [[incrementalExactSurvivors]]'s fuzzy
     * sibling, the daily-ingest form of [[minhashLshPairs]]: survivors among
     * the incoming batch (rows matching `incomingPred`; NULL counts as
@@ -680,14 +670,19 @@ object Dedup {
     * re-shuffle — the same discipline as [[incrementalExactSurvivors]].
     * Recall is d03's LSH guarantee (P(miss | j≥0.8) < 1e-7 at 64/16).
     *
-    * ORACLE/REGISTRY form: fixed (k, bands) is the oracle contract;
-    * production callers at corpus scale use [[incrementalNearDupAuto]].
+    * `point` defaults to the registry's fixed 64/16 point (the oracle
+    * contract). [[FromCorpus]] sizes (k, bands) from the FULL corpus
+    * (history + incoming batch): the candidate join runs incoming buckets
+    * against ALL buckets, so the background-collision mass the band width
+    * must control is the history side's, which dominates at steady state.
     */
   def incrementalNearDupSurvivors(df: DataFrame, idCol: String, textCol: String,
-      incomingPred: Column, threshold: Double = 0.8, k: Int = 64, bands: Int = 16,
+      incomingPred: Column, threshold: Double = 0.8,
+      point: OperatingPoint[MinHashBands] = RegistryMinHashPoint,
       maxDocFreq: Long = DefaultMaxDocFreq,
       scope: CacheScope = CacheScope.unmanaged,
       pinLayout: Boolean = false): DataFrame = {
+    val (MinHashBands(k, bands), pin) = resolve(point, df, threshold, pinLayout)
     val pred = coalesce(incomingPred, lit(false))
     val tagged = df.withColumn("_inc", pred)
     // one shingle table for BOTH sides: sizes and intersections live in the
@@ -696,7 +691,7 @@ object Dedup {
     val hashed = scope.cached(pinCacheLayout(capDocFreq(
       shingleSet(tagged, idCol, textCol)
         .select(col(idCol), xxhash64(col("shingle")).as("sh")),
-      maxDocFreq), col(idCol), force = pinLayout))
+      maxDocFreq), col(idCol), force = pin))
     val flags = tagged.select(col(idCol), col("_inc"))
     val buckets = bandBuckets(
       minhashSignaturesHashed(hashed, idCol, k), idCol, k, bands,
@@ -724,23 +719,6 @@ object Dedup {
         (col("n1") + col("n2") - col("inter")).cast("double") >= threshold)
       .select(col("d2").as(idCol)).distinct()
     df.filter(pred).select(col(idCol)).join(dirty, Seq(idCol), "left_anti")
-  }
-
-  /** [[incrementalNearDupSurvivors]] at the jointly-scaled operating point:
-    * (k, bands) are sized from the FULL corpus (history + incoming batch)
-    * because the candidate join runs incoming buckets against ALL buckets —
-    * the background-collision mass that the band width must control is the
-    * history side's, which dominates at steady state (d13's scale twin;
-    * the fixed 64/16 registry form stays the oracle-gated demo point).
-    */
-  def incrementalNearDupAuto(df: DataFrame, idCol: String, textCol: String,
-      incomingPred: Column, threshold: Double = 0.8, missTarget: Double = 1e-3,
-      maxK: Int = 512, maxDocFreq: Long = DefaultMaxDocFreq,
-      scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    val n = df.count()
-    val (k, bands) = minhashOperatingPoint(n, threshold, missTarget, maxK)
-    incrementalNearDupSurvivors(df, idCol, textCol, incomingPred, threshold,
-      k, bands, maxDocFreq, scope, pinLayout = n >= PinLayoutMinDocs)
   }
 
   /** SimHash via bit votes: sig bit b = 1 iff Σ_tokens (bit b of hash ? +1 : -1) > 0.

@@ -407,6 +407,10 @@ object Similarity {
       .select("d1", "d2", "cos_r")
   }
 
+  /** The registry's fixed hyperplane point (s07): the oracle contract. */
+  final val RegistryCosinePoint: OperatingPoint[Hyperplanes] =
+    Fixed(Hyperplanes(planes = 4, tables = 48))
+
   /** Bucketed cosine near-dup pairs — the 100 TB form of
     * [[cosineNearDupPairs]]: candidates are pairs sharing ≥1 (table, bucket)
     * LSH cell (same sign-hyperplane tables as [[annHyperplane]]), deduped,
@@ -423,61 +427,56 @@ object Similarity {
     * tables. The registry gates this empirically: s07 must hash-match the
     * exact all-pairs s03 formulation.
     *
-    * `planes <= 0` (the default) = AUTO, and auto is THRESHOLD-AWARE
-    * (ADVICE r7): the size-driven choice max(4, ⌈log₂(n/256)⌉, cap 16)
-    * shrinks buckets as the corpus grows — but every extra plane also
-    * multiplies the per-table collision of a barely-qualifying pair by
-    * p(threshold), so unchecked growth silently destroys recall for weak
-    * thresholds (at t = 0.45 / 48 tables, planes 16 would miss ~95% of
-    * threshold-grade pairs where 4 misses ~1e-4). Auto therefore caps the
-    * size-driven value at the largest planes whose all-tables miss for a
-    * pair AT the threshold stays ≤ `missTarget`: completeness wins and the
-    * cost shows up as bigger buckets (logged), never as silent pair loss.
-    * The candidate mass of the cell self-join is
-    * Σ_cells m² ≈ tables·n·(n/2^planes), so weak thresholds at scale are
-    * intrinsically expensive — that is the operator's honest tradeoff, and
-    * the log line states both numbers. At the gated test SFs (≤ 2k
-    * vectors) auto resolves to exactly the historical 4, so completeness
-    * gates and oracles are unchanged.
-    *
-    * ORACLE/REGISTRY form: the fixed/auto-planes point here is the oracle
-    * contract; production callers at corpus scale use [[cosineNearDupAuto]],
-    * which sizes (planes, tables) jointly from (n, threshold) and spreads
-    * signature compute with the work (the s07 100× operating point).
+    * `point` defaults to the registry's fixed 48 tables × 4 planes — the
+    * oracle contract of s07, whose weak 0.45 threshold caps planes at 4 at
+    * ANY corpus size (a fifth plane would miss 2.9e-3 of threshold-grade
+    * pairs, against 8.7e-5 at 4). The cell self-join's candidate mass is
+    * Σ_cells m² ≈ tables·n·(n/2^planes), so a weak threshold at scale is
+    * intrinsically expensive. [[FromCorpus]] counts the corpus once,
+    * sizes (planes, tables) jointly from (n, threshold) with
+    * [[lshOperatingPoint]] (the s07 100× operating point), and spreads the
+    * signature compute with the work.
     */
   def cosineNearDupBucketed(emb: DataFrame, idCol: String, embCol: String,
-      threshold: Double, tables: Int = 48, planes: Int = 0,
-      missTarget: Double = 1e-3, parallelism: Int = 0,
+      threshold: Double,
+      point: OperatingPoint[Hyperplanes] = RegistryCosinePoint,
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    // parallelism > 0 spreads the SIGNATURE compute (tables×planes×dims
-    // mul-adds per vector — the dominant cost) over that many partitions
-    // before caching: embeddings are byte-dense (a 0.2 M-vector corpus is
-    // ~50 MB ≈ ONE default input split), so without an explicit repartition
-    // the per-task compute grows with n while the task COUNT doesn't — the
-    // s07_100x 9.7 s straggler was exactly this, a compute-dense scan task,
-    // not skew (VERDICT r10 #1). [[cosineNearDupAuto]] sizes it from
-    // n·tables·planes; 0 keeps the input partitioning (the oracle-gated
-    // registry form, whose plan is pinned in ExplainSpec).
-    val spread =
-      if (parallelism > 0) emb.repartition(parallelism)
-      // registry/auto-sized-elsewhere form: still unserialize a
-      // near-singleton split count (the signature compute is scan-fused)
-      else TextOps.spreadCompute(emb)
+    val (Hyperplanes(planes, tables), spread) = point match {
+      // still unserialize a near-singleton split count (the signature
+      // compute is scan-fused)
+      case Fixed(p) => (p, TextOps.spreadCompute(emb))
+      case FromCorpus =>
+        val n = emb.count()
+        val (planes, tables) = lshOperatingPoint(n, threshold)
+        // Signature compute (tables×planes×dims mul-adds per vector — the
+        // dominant cost) is spread over partitions sized by the WORK
+        // (n·tables·planes plane projections), not the input bytes:
+        // embeddings are byte-dense (a 0.2 M-vector corpus is ~50 MB ≈ ONE
+        // default input split), so without an explicit repartition the
+        // per-task compute grows with n while the task COUNT doesn't — the
+        // s07_100x 9.7 s straggler was exactly this, a compute-dense scan
+        // task, not skew (VERDICT r10 #1). ~3.2 M projections per task keeps
+        // the heaviest task under ~2 s on one core while staying at the
+        // session default for small corpora. Capped at 4096: beyond that,
+        // scheduling overhead beats task-size wins on any realistic
+        // executor count.
+        val parallelism = math.max(
+          emb.sparkSession.sparkContext.defaultParallelism,
+          math.min(4096L, n * tables * planes / 3200000L).toInt)
+        log.info(s"cosineNearDupBucketed: n=$n -> signature parallelism=$parallelism")
+        (Hyperplanes(planes, tables), emb.repartition(parallelism))
+    }
     val vecs = scope.cached(
       spread.select(col(idCol), col(embCol).as("e"))
         .withColumn("qv", quantize(col("e")))
         .withColumn("nrm", dotQ(col("qv"), col("qv"))))
-    val p =
-      if (planes > 0) planes
-      else autoPlanes(vecs.count(), threshold, tables, missTarget)
-      // (the count materializes the cache, reused downstream)
     // Cached: the self-join below reads the bucket table TWICE, and its
     // map side is the signature computation (tables×planes×dims mul-adds
     // per vector — the dominant cost; a 100× stage probe measured ~350
     // task-seconds PER PASS, running twice). Caching the narrow
     // (id, t, b) rows (~20 B/row) halves signature compute for the price
     // of one in-memory copy of n·tables narrow rows.
-    val buckets = scope.cached(lshBucketTable(vecs, idCol, "e", tables, p)
+    val buckets = scope.cached(lshBucketTable(vecs, idCol, "e", tables, planes)
       .select(col(idCol), col("t"), col("b")))
     // NOTE (r11): widening the join stages by pre-repartitioning both
     // sides on the join keys was tried and MEASURED WORSE at 100× (task
@@ -596,44 +595,8 @@ object Similarity {
     (planes, tables)
   }
 
-  /** [[cosineNearDupBucketed]] at the jointly-scaled operating point from
-    * [[lshOperatingPoint]] — the form to reach for at corpus scale: one
-    * `count()` sizes the corpus, then planes/tables scale together so
-    * neither recall nor candidate mass degrades as n grows.
-    */
-  /** The (planes, tables) the LAST [[cosineNearDupAuto]] call in this JVM
-    * chose — bench-readable telemetry (VERDICT r13 #3: the s07_100x scale
-    * row must record its operating point so the measurement is
-    * reproducible from the artifact alone; the INFO log line is invisible
-    * under bench sessions' ERROR log level). (-1, -1) until a call runs;
-    * bench rows run serially per JVM, so last-writer is the row's own run.
-    */
-  @volatile var lastAutoPoint: (Int, Int) = (-1, -1)
-
-  def cosineNearDupAuto(emb: DataFrame, idCol: String, embCol: String,
-      threshold: Double, missTarget: Double = 1e-3, maxTables: Int = 256,
-      scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    val n = emb.count()
-    val (planes, tables) = lshOperatingPoint(n, threshold, missTarget, maxTables)
-    lastAutoPoint = (planes, tables)
-    // Signature-compute parallelism scales with the WORK (n·tables·planes
-    // plane projections), not the input bytes: ~3.2 M projections per task
-    // keeps the heaviest task under ~2 s on one core while staying at the
-    // session default for small corpora (VERDICT r10 #1 — the 100× row's
-    // 9.7 s max task was one default-split scan computing a quarter of all
-    // signatures). Capped at 4096: beyond that, scheduling overhead beats
-    // task-size wins on any realistic executor count.
-    val parallelism = math.max(
-      emb.sparkSession.sparkContext.defaultParallelism,
-      math.min(4096L, n * tables * planes / 3200000L).toInt)
-    log.info(s"cosineNearDupAuto: n=$n -> signature parallelism=$parallelism")
-    cosineNearDupBucketed(emb, idCol, embCol, threshold,
-      tables = tables, planes = planes, parallelism = parallelism,
-      scope = scope)
-  }
-
-  /** Candidate-pair mass of the [[cosineNearDupAuto]] bucketing at the
-    * corpus's own operating point: Σ over (table, bucket) cells of
+  /** Candidate-pair mass of the [[FromCorpus]] [[cosineNearDupBucketed]]
+    * bucketing at the corpus's own operating point: Σ over (table, bucket) cells of
     * m·(m−1)/2 — the number of same-cell unordered pairs the candidate
     * self-join emits BEFORE the cross-table distinct, plus the max bucket
     * size. This is the quantity whose growth decides whether the LSH stays
@@ -647,10 +610,9 @@ object Similarity {
     * @return (pairMass, maxBucket, corpusN)
     */
   def lshCandidateMass(emb: DataFrame, idCol: String, embCol: String,
-      threshold: Double, missTarget: Double = 1e-3,
-      maxTables: Int = 256): (Long, Long, Long) = {
+      threshold: Double): (Long, Long, Long) = {
     val n = emb.count()
-    val (planes, tables) = lshOperatingPoint(n, threshold, missTarget, maxTables)
+    val (planes, tables) = lshOperatingPoint(n, threshold)
     val cells = lshBucketTable(emb, idCol, embCol, tables, planes)
       .groupBy("t", "b").agg(count(lit(1)).as("m"))
     val r = cells.agg(
@@ -658,37 +620,6 @@ object Similarity {
       max(col("m")).as("max_bucket")).head()
     (if (r.isNullAt(0)) 0L else r.getLong(0),
       if (r.isNullAt(1)) 0L else r.getLong(1), n)
-  }
-
-  /** Threshold-aware auto-planes (ADVICE r7): the size-driven choice
-    * (max(4, ⌈log₂(n/256)⌉), cap 16) capped at the largest plane count
-    * whose all-tables miss probability for a pair at exactly `threshold`
-    * stays ≤ `missTarget` — so growing the corpus can never silently trade
-    * recall for bucket size. Package-private for direct unit testing.
-    */
-  private[graft] def autoPlanes(n: Long, threshold: Double, tables: Int,
-      missTarget: Double): Int = {
-    val sizeDriven = math.max(4, math.min(16,
-      math.ceil(math.log(math.max(1.0, n / 256.0)) / math.log(2.0)).toInt))
-    // per-bit collision of a pair at exactly `threshold`
-    val pBit = 1.0 -
-      math.acos(math.min(1.0, math.max(-1.0, threshold))) / math.Pi
-    def missAt(l: Int): Double =
-      math.pow(1.0 - math.pow(pBit, l.toDouble), tables.toDouble)
-    val recallBound = (1 to 16).takeWhile(missAt(_) <= missTarget)
-      .lastOption.getOrElse(1)
-    val chosen = math.max(1, math.min(sizeDriven, recallBound))
-    log.info(f"cosineNearDupBucketed auto-planes: n=$n threshold=" +
-      f"$threshold%.2f tables=$tables sizeDriven=$sizeDriven " +
-      f"recallBound=$recallBound chosen=$chosen " +
-      f"missAtThreshold=${missAt(chosen)}%.2e")
-    if (chosen < sizeDriven)
-      log.warn(f"cosineNearDupBucketed: weak threshold $threshold%.2f " +
-        f"caps planes at $recallBound (size wanted $sizeDriven); " +
-        f"expected bucket ≈ ${n / math.pow(2.0, chosen.toDouble)}%.0f " +
-        "rows — candidate mass grows instead of recall silently " +
-        "dropping. Raise missTarget to trade recall for cost.")
-    chosen
   }
 
   /** The kernel-assignment operators read the id with `getLong` after a

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -97,9 +99,21 @@ object ProtectionPipeline {
     }
   }
 
+  /** Parse a stamped [[KeyOrigType]] value; an unparseable type is invalid
+    * input. `where` names the column (or nothing) in the message.
+    */
+  private[graft] def parseType(json: String, where: String = ""): DataType =
+    try DataType.fromJson(json)
+    catch {
+      case NonFatal(e) => throw new GraftInvalidInputException(
+        s"invalid $KeyOrigType metadata$where: ${e.getMessage}")
+    }
+
   /** Decrypt every column stamped with protection metadata (or the subset in
     * `columns`). Self-describing: key id, codec, mode, original type all come
-    * from metadata. Fails on version mismatch like the reference (P5).
+    * from metadata. Fails on version mismatch like the reference (P5), and
+    * on missing or damaged metadata (the file is input like any other) with
+    * an invalid-input error naming the column and key — at plan time.
     */
   def decrypt(df: DataFrame, columns: Seq[String] = Nil): DataFrame = {
     val targets = df.schema.fields.filter { f =>
@@ -112,7 +126,12 @@ object ProtectionPipeline {
           s"columns not protected or absent: ${missing.mkString(", ")}")
     }
     targets.foldLeft(df) { (acc, f) =>
-      val version = f.metadata.getString(KeyVersion)
+      def invalid(key: String, why: String) =
+        new GraftInvalidInputException(s"'$key' metadata on '${f.name}' $why")
+      def stamped(key: String): String =
+        try f.metadata.getString(key)
+        catch { case NonFatal(_) => throw invalid(key, "is missing or not a string") }
+      val version = stamped(KeyVersion)
       if (!version.startsWith(RequiredVersionPrefix))
         throw new GraftInvalidInputException(
           s"unsupported agent version '$version' on '${f.name}' " +
@@ -120,11 +139,17 @@ object ProtectionPipeline {
       if (f.dataType != BinaryType)
         throw new GraftInvalidInputException(
           s"protected column '${f.name}' must be BINARY, found ${f.dataType.catalogString}")
-      val mode = ProtectMode(f.metadata.getString(KeyMode))
-      val origType = DataType.fromJson(f.metadata.getString(KeyOrigType))
-      val dec = protect.decrypt_value(
-        col(f.name), f.metadata.getString(KeyKeyId), origType,
-        f.metadata.getString(KeyCodec), f.name, perValue = mode == PerValue)
+      val modeName = stamped(KeyMode)
+      val mode = try ProtectMode(modeName)
+        catch { case e: GraftInvalidInputException => throw invalid(KeyMode, e.getMessage) }
+      val origType = parseType(stamped(KeyOrigType), s" on '${f.name}'")
+      if (!ValueSerde.supports(origType))
+        throw invalid(KeyOrigType, s"names an unprotectable type ${origType.catalogString}")
+      val codec = stamped(KeyCodec)
+      if (!CryptoCodec.Names.contains(codec))
+        throw invalid(KeyCodec, s"names an unknown codec '$codec'")
+      val dec = protect.decrypt_value(col(f.name), stamped(KeyKeyId), origType,
+        codec, f.name, perValue = mode == PerValue)
       acc.withColumn(f.name, dec.as(f.name, Metadata.empty))
     }
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.CryptoCodec
 import graft.functions.protect
-import graft.ops.{CacheScope, ConnectedComponents, Decontamination, Dedup, Multimodal, Packing, Similarity, TextOps}
+import graft.ops.{CacheScope, ConnectedComponents, Decontamination, Dedup, FromCorpus, Multimodal, Packing, Similarity, TextOps}
 import graft.operators.AsofJoin
 import graft.pipeline.{ColumnPolicy, PerValue, ProtectionPipeline}
 
@@ -168,16 +168,16 @@ object PipelineOpsQueries {
         .orderBy("d1", "d2")
     }, Some(jaccardSql)),
 
-    // The BLESSED corpus-scale entry point as its own first-class oracle
-    // row (VERDICT r12 #6): minhashLshPairsAuto sizes (k, bands) jointly
-    // from (n, threshold) — the form production runs and the 100× scale
-    // rows measure (d03auto_100x, FASTER than the fixed point there) — and
+    // The corpus-scale operating point as its own first-class oracle row
+    // (VERDICT r12 #6): FromCorpus sizes (k, bands) jointly from
+    // (n, threshold) — the form production runs and the 100× scale rows
+    // measure (d03auto_100x, FASTER than the fixed point there) — and
     // DuckDB's exact-Jaccard recompute replays whatever operating point it
     // chose. Same oracle as d03: verified pairs are LSH-recall-complete at
     // both points, so both forms must equal brute force exactly.
     ("d25_minhash_lsh_auto", (s: SparkSession, dir: String) => {
-      Dedup.minhashLshPairsAuto(rd(s, dir, "documents"), "doc_id", "text",
-          threshold = 0.8)
+      Dedup.minhashLshPairs(rd(s, dir, "documents"), "doc_id", "text",
+          threshold = 0.8, point = FromCorpus)
         .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
           col("jaccard"))
         .orderBy("d1", "d2")

@@ -195,9 +195,9 @@ class ExplainSpec extends SparkSpec {
     // r12 #5): the pin is a repartition-by-doc_id of the cached shingle
     // table, applied ONLY when AQE's coalescing is byte-driven
     // (parallelismFirst=false — the regime where AQE coalesces the cache
-    // into deserialize-fat partitions) or when the auto forms force it at
-    // PinLayoutMinDocs+ docs. A future AQE default change that silently
-    // inverted the trade must fail here, not in a 100× bench run. The
+    // into deserialize-fat partitions) or when a FromCorpus operator forces
+    // it at PinLayoutMinDocs+ docs. A future AQE default change that
+    // silently inverted the trade must fail here, not in a 100× bench run. The
     // RepartitionByExpression node is asserted on the ANALYZED plan — the
     // cache substitutes an InMemoryRelation into the physical plan, but
     // the logical tree still carries the operator's own shape.
@@ -237,9 +237,9 @@ class ExplainSpec extends SparkSpec {
   }
 
   test("d03 cache-layout pin: the auto forms' force override pins at any session") {
-    // the third branch: force=true (what minhashLshPairsAuto passes at
+    // the third branch: force=true (what a FromCorpus operator passes at
     // PinLayoutMinDocs+ docs) pins regardless of the AQE policy — measured
-    // at 100× as the 26.2→21.9 s win on d03's auto form
+    // at 100× as the 26.2→21.9 s win on d03's corpus-sized form
     spark.catalog.clearCache()
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val df = graft.ops.Dedup.minhashLshPairs(docs, "doc_id", "text",

@@ -9,7 +9,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.functions.RollingHash64
 import graft.operators.AsofJoin
-import graft.ops.{CacheScope, Dedup, Multimodal, Sampling, Similarity, TextOps}
+import graft.ops.{CacheScope, Dedup, FromCorpus, Multimodal, Sampling, Similarity, TextOps}
 
 /** Unit tests for the training-pipeline operators on hand-built fixtures. */
 class OpsSpec extends SparkSpec {
@@ -342,12 +342,12 @@ class OpsSpec extends SparkSpec {
   }
 
   test("minhashLshPairsAuto equals the fixed-point pipeline's verified pairs") {
-    // the auto point changes only candidate GENERATION parameters; verified
-    // Jaccard pairs at the threshold must match the fixed 64/16 form (both
-    // recall-complete at j >= 0.8 on the fixture corpus)
+    // the FromCorpus point changes only candidate GENERATION parameters;
+    // verified Jaccard pairs at the threshold must match the fixed 64/16
+    // form (both recall-complete at j >= 0.8 on the fixture corpus)
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def keyOf(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1))
-    val auto = Dedup.minhashLshPairsAuto(df, "doc_id", "text", 0.8)
+    val auto = Dedup.minhashLshPairs(df, "doc_id", "text", 0.8, point = FromCorpus)
       .select("d1", "d2").collect().map(keyOf).toSet
     val fixed = Dedup.minhashLshPairs(df, "doc_id", "text", 0.8)
       .select("d1", "d2").collect().map(keyOf).toSet
@@ -356,7 +356,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("incrementalNearDupAuto equals the fixed-point survivors") {
-    // same contract as minhashLshPairsAuto: the auto point only re-sizes
+    // same contract as minhashLshPairs: the FromCorpus point only re-sizes
     // candidate generation; the verified-Jaccard survivor set must match
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val docs = Seq(
@@ -367,8 +367,8 @@ class OpsSpec extends SparkSpec {
       (36L, "novel fresh content one two three four five six seven nine"),
       (39L, "unrelated survivor text aa bb cc dd ee ff gg hh ii jj"))
       .toDF("doc_id", "text")
-    val auto = Dedup.incrementalNearDupAuto(docs, "doc_id", "text",
-        col("doc_id") % 3 === 0, threshold = 0.8)
+    val auto = Dedup.incrementalNearDupSurvivors(docs, "doc_id", "text",
+        col("doc_id") % 3 === 0, threshold = 0.8, point = FromCorpus)
       .collect().map(_.getLong(0)).toSet
     // the contract is equality with the fixed 64/16 form's survivors
     // (ADVICE r11: a hardcoded set alone can't catch the two forms drifting
@@ -386,7 +386,8 @@ class OpsSpec extends SparkSpec {
     def norm(df: DataFrame) = df.select("d1", "d2", "edit_dist").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val fixed = norm(Dedup.editNearDupPairsLsh(docs, "doc_id", "text", maxDist = 50))
-    val auto = norm(Dedup.editNearDupPairsLshAuto(docs, "doc_id", "text", maxDist = 50))
+    val auto = norm(Dedup.editNearDupPairsLsh(docs, "doc_id", "text", maxDist = 50,
+      point = FromCorpus))
     assert(fixed.nonEmpty)
     assert(auto == fixed, s"auto missed ${fixed -- auto}, extra ${auto -- fixed}")
   }
@@ -428,36 +429,34 @@ class OpsSpec extends SparkSpec {
     }
   }
 
-  test("blessed corpus-scale entry points: the *Auto forms are the production path") {
-    // VERDICT r11 #6 — the fixed-point forms are ORACLE/REGISTRY contracts
-    // (their scaladoc says so); production callers at corpus scale use the
-    // jointly-scaled auto operating points. This test NAMES the blessed
-    // path per family, so a rename or signature break fails loudly here:
-    //   MinHash pairs        -> Dedup.minhashLshPairsAuto      (result-equal test above)
-    //   incremental near-dup -> Dedup.incrementalNearDupAuto   (result-equal test above)
-    //   edit-distance        -> Dedup.editNearDupPairsLshAuto  (result-equal test above)
-    //   cosine near-dup      -> Similarity.cosineNearDupAuto   (gated here)
-    val blessed: Seq[(String, String)] = Seq(
-      "minhash" -> "minhashLshPairsAuto",
-      "incremental" -> "incrementalNearDupAuto",
-      "edit" -> "editNearDupPairsLshAuto",
-      "cosine" -> "cosineNearDupAuto")
-    blessed.foreach { case (fam, fn) =>
-      val host: Class[_] =
-        if (fam == "cosine") Similarity.getClass else Dedup.getClass
-      assert(host.getMethods.exists(_.getName == fn),
-        s"blessed $fam entry point $fn is gone — update scaladoc + callers")
-    }
-    // the one family without a result-equal pin above: the cosine auto
-    // point must reproduce the exact all-pairs oracle on the fixture
+  test("cosineNearDupBucketed at FromCorpus equals the exact all-pairs formulation") {
+    // the corpus-sized point must reproduce the exact all-pairs oracle on
+    // the fixture, like the registry's fixed point does (test above)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     def pairs(df: DataFrame): Set[(Long, Long)] =
       df.select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairs(Similarity.cosineNearDupPairs(emb, "vec_id", "embedding", 0.45))
-    val auto = pairs(Similarity.cosineNearDupAuto(emb, "vec_id", "embedding", 0.45))
+    val auto = pairs(Similarity.cosineNearDupBucketed(emb, "vec_id", "embedding", 0.45,
+      point = FromCorpus))
     assert(exact.nonEmpty)
     assert(auto == exact,
       s"auto point diverged: missed ${exact -- auto}, extra ${auto -- exact}")
+  }
+
+  test("editNearDupPairsLsh: the fixed point builds lazily, FromCorpus counts") {
+    // d17's registry form is the fused session-width plan — building the
+    // DataFrame runs no Spark job; only FromCorpus counts (the corpus for
+    // its point, the cached candidates for the verify width)
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val sc = spark.sparkContext
+    def jobsWhile(build: => DataFrame): Int = {
+      sc.setJobGroup("lsh-build", "build only")
+      try { build; sc.statusTracker.getJobIdsForGroup("lsh-build").length }
+      finally sc.clearJobGroup()
+    }
+    assert(jobsWhile(Dedup.editNearDupPairsLsh(docs, "doc_id", "text", maxDist = 50)) == 0)
+    assert(jobsWhile(Dedup.editNearDupPairsLsh(docs, "doc_id", "text", maxDist = 50,
+      point = FromCorpus)) >= 2)
   }
 
   test("hyperplane_sig: codegen column matches an independent weight-formula loop") {
@@ -1054,24 +1053,6 @@ class OpsSpec extends SparkSpec {
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
     assert(hashed.sameElements(got))
-  }
-
-  test("autoPlanes: recall-capped for weak thresholds, size-driven for strong") {
-    import graft.ops.Similarity.autoPlanes
-    // gated SFs: small corpus resolves to the historical 4 at any threshold
-    assert(autoPlanes(200L, 0.45, 48, 1e-3) == 4)
-    assert(autoPlanes(2000L, 0.45, 48, 1e-3) == 4)
-    // weak threshold at scale: recall bound CAPS the size-driven growth —
-    // at t=0.45/48 tables, planes beyond 4 would miss >0.1% of
-    // threshold-grade pairs (planes=16 misses ~95%), so auto must hold 4
-    assert(autoPlanes(16_000_000L, 0.45, 48, 1e-3) == 4)
-    // strong threshold at scale: size-driven growth is allowed up to the
-    // (looser) recall bound — must exceed the weak-threshold choice
-    val strong = autoPlanes(16_000_000L, 0.9, 16, 1e-3)
-    assert(strong > 4 && strong <= 16, s"strong=$strong")
-    // raising missTarget trades recall for smaller buckets monotonically
-    assert(autoPlanes(16_000_000L, 0.45, 48, 0.05) >=
-      autoPlanes(16_000_000L, 0.45, 48, 1e-3))
   }
 
   test("semDedup fails fast on non-integral ids and oversized centroid matrices") {

@@ -122,6 +122,33 @@ class ProtectionPipelineSpec extends SparkSpec {
     intercept[GraftInvalidInputException](ProtectionPipeline.decrypt(tampered))
   }
 
+  test("decrypt rejects missing or damaged protection metadata, naming column and key") {
+    import ProtectionPipeline._
+    val enc = ProtectionPipeline.encrypt(Seq(1).toDF("v"),
+      Seq(ColumnPolicy("v", "k", PerValue, CryptoCodec.Xor)))
+    def decryptWith(edit: MetadataBuilder => MetadataBuilder): String = {
+      val meta = edit(new MetadataBuilder().withMetadata(enc.schema("v").metadata)).build()
+      intercept[GraftInvalidInputException](
+        ProtectionPipeline.decrypt(enc.withColumn("v", col("v").as("v", meta)))).getMessage
+    }
+    for (key <- Seq(KeyKeyId, KeyOrigType, KeyMode, KeyCodec)) {
+      val dropped = decryptWith(_.remove(key))
+      assert(dropped.contains("'v'") && dropped.contains(key), dropped)
+      val notString = decryptWith(_.putLong(key, 7L))
+      assert(notString.contains("'v'") && notString.contains(key), notString)
+    }
+    val damaged = Seq(
+      KeyOrigType -> """{"type": "struct", "fields": [""",
+      KeyOrigType -> "\"no_such_type\"",
+      KeyOrigType -> ArrayType(IntegerType).json,
+      KeyMode -> "sideways",
+      KeyCodec -> "rot13")
+    for ((key, value) <- damaged) {
+      val msg = decryptWith(_.putString(key, value))
+      assert(msg.contains("'v'") && msg.contains(key), msg)
+    }
+  }
+
   test("decrypt of subset columns + missing-column policy errors") {
     val df = Seq((1, "a"), (2, "b")).toDF("i", "s")
     val enc = ProtectionPipeline.encrypt(df, Seq(

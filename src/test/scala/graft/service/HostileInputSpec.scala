@@ -1,8 +1,12 @@
 package graft.service
 
 import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.charset.StandardCharsets.UTF_8
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.agent.{FlatJson, LocalProtectionAgent}
 import graft.core._
 import graft.pipeline.PageSequencer
-import graft.service.JsonEnvelope.ProtectRequest
+import graft.service.JsonEnvelope.{DecryptResponse, EncryptResponse, ProtectRequest}
 
 /** Parse boundaries on hostile bytes: an element count read from a payload
   * or from the request's attributes is checked against the bytes actually
@@ -83,14 +87,21 @@ class HostileInputSpec extends AnyFunSuite {
       applicationContext = """{"user_id": "user456"}""", referenceId = "1",
       value = value, encryptionMetadata = metadata).toJson
 
-  test("service: hostile counts answer 400 with the error envelope") {
+  private val tokenBody =
+    FlatJson.write(Map("client_id" -> "graft", "api_key" -> "graft-api-key"))
+
+  /** A service with one registered client, and a valid bearer header. */
+  private def serviceWithAuth(): (ProtectionService, Map[String, String]) = {
     val store = new ClientCredentialStore("spec-jwt-secret")
     store.init(Map("graft" -> "graft-api-key"))
     val service = new ProtectionService(store)
-    val token = mapper.readTree(service.post("/token",
-      FlatJson.write(Map("client_id" -> "graft", "api_key" -> "graft-api-key")), Map.empty).body)
+    val token = mapper.readTree(service.post("/token", tokenBody, Map.empty).body)
       .get("token").asText()
-    val auth = Map("Authorization" -> s"Bearer $token")
+    (service, Map("Authorization" -> s"Bearer $token"))
+  }
+
+  test("service: hostile counts answer 400 with the error envelope") {
+    val (service, auth) = serviceWithAuth()
     val perValue = Map("dbps_agent_version" -> "v0.01-graft-spark",
       PageSequencer.ModeKeyDictionaryPage -> PageSequencer.ModePerValue)
     val cases = Seq(
@@ -168,6 +179,76 @@ class HostileInputSpec extends AnyFunSuite {
       forAll(mutations(enc.ciphertext), 500) { m =>
         typedOnly(sequencer.decrypt(m, attrs, enc.metadata))
       }
+    }
+  }
+
+  /** Every field path of a JSON object tree, parents before children. */
+  private def fieldPaths(n: JsonNode, prefix: Vector[String] = Vector.empty): Seq[Vector[String]] =
+    n.fieldNames.asScala.toSeq.flatMap { f =>
+      val p = prefix :+ f
+      p +: (if (n.get(f).isObject) fieldPaths(n.get(f), p) else Nil)
+    }
+
+  /** Truncate the body, flip one bit of its UTF-8 bytes, or swap one
+    * field's value for a value of another JSON type.
+    */
+  private def bodyMutations(body: String): Gen[(String, String)] = {
+    val bytes = body.getBytes(UTF_8)
+    val nodes = mapper.getNodeFactory
+    val swaps: Seq[JsonNode] = Seq(nodes.numberNode(7), nodes.numberNode(-1.5),
+      nodes.booleanNode(true), nodes.nullNode(), nodes.arrayNode().add("x"),
+      nodes.objectNode(), nodes.textNode("12abc"))
+    Gen.oneOf(
+      Gen.choose(0, body.length - 1).map(n => "truncated" -> body.take(n)),
+      for (i <- Gen.choose(0, bytes.length - 1); b <- Gen.choose(0, 7)) yield {
+        val m = bytes.clone(); m(i) = (m(i) ^ (1 << b)).toByte
+        "flipped" -> new String(m, UTF_8)
+      },
+      for (path <- Gen.oneOf(fieldPaths(mapper.readTree(body))); v <- Gen.oneOf(swaps))
+        yield {
+          val root = mapper.readTree(body)
+          path.init.foldLeft(root)(_.get(_)).asInstanceOf[ObjectNode].set[JsonNode](path.last, v)
+          "type-swapped" -> mapper.writeValueAsString(root)
+        })
+  }
+
+  test("property: mutated /encrypt, /decrypt and /token bodies answer 4xx with the error envelope") {
+    val (service, auth) = serviceWithAuth()
+    val values = Seq("alpha", "bb", "", "dddd").map(_.getBytes("UTF-8"))
+    val encryptBody = request(encrypt = true,
+      PageCodec.joinValueBytes(values, "BYTE_ARRAY", None), dictAttrs(4))
+    val encrypted = EncryptResponse.parse(service.post("/encrypt", encryptBody, auth).body)
+      .fold(e => fail(e), identity)
+    val decryptBody = request(encrypt = false, encrypted.encryptedValue, dictAttrs(4),
+      encrypted.encryptionMetadata)
+    assert(DecryptResponse.parse(service.post("/decrypt", decryptBody, auth).body).isRight)
+    // a mutation may leave the request valid (a flipped bit inside the page
+    // value, a number where a string scalar was): then the reply must be
+    // the endpoint's well-formed 200 body
+    val validReply: Map[String, String => Boolean] = Map(
+      "/encrypt" -> (b => EncryptResponse.parse(b).isRight),
+      "/decrypt" -> (b => DecryptResponse.parse(b).isRight),
+      "/token" -> (b => FlatJson.parse(b).get("token").exists(_.nonEmpty)))
+    val bodies = Seq("/encrypt" -> encryptBody, "/decrypt" -> decryptBody, "/token" -> tokenBody)
+    for ((endpoint, body) <- bodies) {
+      val headers = if (endpoint == "/token") Map.empty[String, String] else auth
+      val rejected = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+      forAll(bodyMutations(body), 400) { case (kind, mutated) =>
+        val resp = try service.post(endpoint, mutated, headers) catch {
+          case e: Throwable => fail(s"$endpoint threw on a $kind body: $e\n$mutated")
+        }
+        val where = s"$endpoint $kind -> ${resp.status} ${resp.body}\n$mutated"
+        if (resp.status == 200 && kind != "truncated") assert(validReply(endpoint)(resp.body), where)
+        else {
+          assert(resp.status >= 400 && resp.status < 500, where)
+          val reply = mapper.readTree(resp.body)
+          assert(reply.isObject && reply.size == 1 && reply.get("error").isTextual, where)
+          rejected(kind) += 1
+        }
+      }
+      // every kind of mutation reached the error path at least once
+      assert(rejected.keySet == Set("truncated", "flipped", "type-swapped"),
+        s"$endpoint rejections by kind: $rejected")
     }
   }
 }
