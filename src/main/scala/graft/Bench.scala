@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
 
 import graft.core.CryptoCodec
 import graft.functions.protect
 import graft.queries.{GraftSession, GraftTables}
+import graft.BenchJson.{fixed, num, obj, render, text}
 
 /** Benchmark main. Sections in one JSON line (full detail persisted to
   * bench_full.json — the driver keeps only ~2 KB of stdout):
@@ -187,18 +188,27 @@ object Bench {
     * physically implausible for a 3-ALU-op keystream. Returns the loadavg
     * observed when the wait ended (recorded so a reader can see whether the
     * gate was met or the deadline expired).
+    *
+    * `dedicated` waits have their OWN bound, not the shared retry cap
+    * (VERDICT r11 #1): the r11 sweep started at loadavg 6.14 and published
+    * ~20 % slower walls across untouched sections — the grid's start gate
+    * drew on the same 480 s budget the per-query retry gates need, so a
+    * busy start could exhaust it before the sweep's first query ran. The
+    * two section-start gates (grid, sweep) are the cheap place to absorb
+    * ambient load — they run once, while retry gates run per flagged query.
     */
-  private def waitForQuiet(threshold: Double = 2.0, maxWaitSec: Int = 240): String = {
+  private def waitForQuiet(threshold: Double = 2.0, maxWaitSec: Int = 240,
+      dedicated: Boolean = false): String = {
     // Global cap (VERDICT r8 #1c): a dozen gate points × 90-240 s ceilings
     // could burn 20+ min of pure sleep in r8. Total quiet-wait spend is now
     // bounded; once exhausted the gate records the loadavg and returns.
-    val capLeft = QuietCapMs - quietSpentMs.get()
+    val capLeft = if (dedicated) Long.MaxValue else QuietCapMs - quietSpentMs.get()
     val deadline = System.currentTimeMillis() +
       math.min(maxWaitSec * 1000L, math.max(0L, capLeft))
     var la = loadavg1()
     while (la > threshold && System.currentTimeMillis() < deadline) {
       Thread.sleep(5000)
-      quietSpentMs.addAndGet(5000)
+      if (!dedicated) quietSpentMs.addAndGet(5000)
       la = loadavg1()
     }
     if (la.isNaN) "" else f"$la%.2f"
@@ -214,67 +224,7 @@ object Bench {
     .orElse(sys.env.get("SPARK_GRAFT_QUIET_CAP_S"))
     .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(480L) * 1000L
 
-  /** Quiet wait with its OWN bound, not the shared retry cap (VERDICT r11
-    * #1): the r11 sweep started at loadavg 6.14 and published ~20 % slower
-    * walls across untouched sections — the grid's start gate draws on the
-    * same 480 s budget the per-query retry gates need, so a busy start can
-    * exhaust it before the sweep's first query runs. The two section-start
-    * gates (grid, sweep) are the cheap place to absorb ambient load — they
-    * run once, while retry gates run per flagged query — so they get their
-    * own bounded wait and leave the shared cap intact.
-    */
-  private def waitForQuietDedicated(threshold: Double, maxWaitSec: Int): String = {
-    val deadline = System.currentTimeMillis() + maxWaitSec * 1000L
-    var la = loadavg1()
-    while (la > threshold && System.currentTimeMillis() < deadline) {
-      Thread.sleep(5000)
-      la = loadavg1()
-    }
-    if (la.isNaN) "" else f"$la%.2f"
-  }
-
-  /** Per-task telemetry: sum of executor run time, max single task, GC. */
-  private[graft] final class TaskStatsListener extends SparkListener {
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong
-    val taskGcMs = new java.util.concurrent.atomic.AtomicLong
-    val maxInput = new java.util.concurrent.atomic.AtomicLong
-    val maxShuffleRead = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        taskMs.addAndGet(m.executorRunTime)
-        maxTaskMs.getAndAccumulate(m.executorRunTime, Math.max)
-        taskGcMs.addAndGet(m.jvmGCTime)
-        maxInput.getAndAccumulate(m.inputMetrics.bytesRead, Math.max)
-        maxShuffleRead.getAndAccumulate(m.shuffleReadMetrics.totalBytesRead, Math.max)
-      }
-    }
-    def reset(): Unit = {
-      taskMs.set(0); maxTaskMs.set(0); taskGcMs.set(0)
-      maxInput.set(0); maxShuffleRead.set(0)
-    }
-  }
-
-  /** One query measurement: warmup + iters wall times plus telemetry.
-    * ccRounds/stBatches/stStateRows are per-run work counters (VERDICT r15
-    * #6: d06 moved +27 % with clean cal/steal/load — the sweep row must
-    * say whether the WORK changed); -1 = the query never ran that op.
-    */
-  private final case class QueryStat(
-      med: Double, min: Double, max: Double, load: String, gcSec: Double,
-      taskSec: Double, taskGcSec: Double, maxTaskMs: Long, retried: Boolean,
-      errors: Int = 0, isolated: Double = -1.0, ccRounds: Int = -1,
-      stBatches: Long = -1, stStateRows: Long = -1) {
-    /** All timed iterations threw: there is no legitimate time to publish. */
-    def failed: Boolean = med < 0
-    /** Published value: the in-sweep median unless an isolated re-run
-      * measured lower (then the sweep number was contamination, not cost).
-      */
-    def value: Double = if (isolated >= 0) math.min(med, isolated) else med
-  }
-
-  private[graft] def freshSession(cpus: String): (SparkSession, TaskStatsListener) = {
+  private[graft] def freshSession(cpus: String): (SparkSession, QueryTelemetry) = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val spark = GraftSession
@@ -284,13 +234,11 @@ object Bench {
     // CacheManager's "already cached" WARNs (one per iteration per cached
     // query) crowd the 2 KB stdout tail the driver keeps.
     spark.sparkContext.setLogLevel("ERROR")
-    val listener = new TaskStatsListener
-    spark.sparkContext.addSparkListener(listener)
-    (spark, listener)
+    (spark, QueryTelemetry.attach(spark.sparkContext))
   }
 
   /** Run one query's warmup + iterations on `spark`, with telemetry. */
-  private def measure(spark: SparkSession, listener: TaskStatsListener,
+  private[graft] def measure(spark: SparkSession, telemetry: QueryTelemetry,
       fn: (SparkSession, String) => DataFrame, sfDir: String): QueryStat = {
     spark.catalog.clearCache() // previous queries' unmanaged caches
     // Force a collection so the ContextCleaner actually reaps the previous
@@ -304,7 +252,6 @@ object Bench {
     Thread.sleep(200)
     val load = loadavgStr()
     val gc0 = gcMs()
-    listener.reset()
     // Work-counter telemetry, sweep-side twin of measureScaleRun's reset
     // (VERDICT r15 #6): the ops are deterministic, so the LAST iteration's
     // counters are the query's counters — a mover row whose counters match
@@ -317,7 +264,8 @@ object Bench {
     // exception path published a near-zero "median" for a query that never
     // ran (ADVICE r7) — with telemetry attached, a convincing-looking lie.
     var errors = 0
-    val times = (0 until QueryWarmup + QueryIters).flatMap { i =>
+    val runs = 0 until QueryWarmup + QueryIters
+    val times = runs.flatMap { i =>
       // Per-iteration cache clear (VERDICT r9 #7): a query that caches
       // internally and doesn't unpersist lets later iterations ride the
       // first run's cache — d03's min sat at 0.97 s vs med 2.66 s, a 2.7×
@@ -326,7 +274,7 @@ object Bench {
       // work, so med/min spread is noise again.
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
+      val ok = try { telemetry.tagged(s"sweep.$i")(fn(spark, sfDir).count()); true }
         catch { case _: Throwable => errors += 1; false }
       val sec = (System.nanoTime() - t0) / 1e9
       if (ok && i >= QueryWarmup) Some(sec) else None
@@ -334,13 +282,17 @@ object Bench {
     val (med, mn, mx) =
       if (times.nonEmpty) (times(times.size / 2), times.head, times.last)
       else (-1.0, -1.0, -1.0)
-    QueryStat(med, mn, mx, load,
-      (gcMs() - gc0) / 1e3, listener.taskMs.get() / 1e3,
-      listener.taskGcMs.get() / 1e3, listener.maxTaskMs.get(),
-      retried = false, errors = errors,
+    val gcSec = (gcMs() - gc0) / 1e3
+    telemetry.drain()
+    val work = runs.map(i => telemetry.take(s"sweep.$i"))
+    val all = work.reduce(_ ++ _)
+    QueryStat(med, mn, mx, load, gcSec, all.taskMs / 1e3, all.gcMs / 1e3,
+      all.maxTaskMs, retried = false, errors = errors,
       ccRounds = graft.ops.ConnectedComponents.lastRunRounds,
       stBatches = graft.streaming.StreamOps.lastRunBatches,
-      stStateRows = graft.streaming.StreamOps.lastRunStateRows)
+      stStateRows = graft.streaming.StreamOps.lastRunStateRows,
+      jobs = work.last.jobs, stages = work.last.stages,
+      shuffleWriteBytes = work.last.shuffleWriteBytes)
   }
 
   /** The benchmark contract is `sbt 'runMain graft.Bench'`, which forks
@@ -365,17 +317,12 @@ object Bench {
     */
   private def reexecBigHeap(): Unit = {
     if (sys.env.contains("GRAFT_BENCH_NO_REEXEC")) return
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
     val mem = sys.env.getOrElse("SPARK_GRAFT_REEXEC_MEM", "16g")
     val memGb = scala.util.Try(mem.toLowerCase.stripSuffix("g").toDouble)
       .getOrElse(16.0)
     val curGb = Runtime.getRuntime.maxMemory / (1L << 30).toDouble
     if (math.abs(curGb - memGb) / memGb <= 0.25) return
-    val cmd = (Seq(javaBin, s"-Xmx$mem", "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC") ++ jdk17AddOpens ++
-      Seq("-cp", cp, "graft.Bench")).toArray
-    val pb = new ProcessBuilder(cmd: _*)
+    val pb = childJvm(mem, "graft.Bench")
     pb.environment().put("GRAFT_BENCH_NO_REEXEC", "1")
     pb.inheritIO()
     sys.exit(pb.start().waitFor())
@@ -389,7 +336,19 @@ object Bench {
     val t0Sweep = System.currentTimeMillis()
 
     // ---- session 1: JVM warm + the crypto/page grids (quiet machine first)
-    var (spark, listener) = freshSession(cpus)
+    var (spark, telemetry) = freshSession(cpus)
+    /** Stop the session, let the ContextCleaner reap the dead session's
+      * refs, pass the quiet `gate` (its load is returned), and start a
+      * fresh session.
+      */
+    def restart(gate: => String = ""): String = {
+      spark.stop()
+      System.gc()
+      val load = gate
+      val fresh = freshSession(cpus)
+      spark = fresh._1; telemetry = fresh._2
+      load
+    }
     // warm the JVM/codegen once on the smallest SF so per-query numbers
     // measure execution, not first-call class loading.
     SparkEntry.queries.headOption.foreach { case (_, fn) =>
@@ -398,8 +357,8 @@ object Bench {
     // Dedicated start gate (VERDICT r11 #1): ambient load at bench start is
     // the one condition every downstream number inherits, so it gets a real
     // wait of its own instead of a slice of the shared retry cap.
-    val gridLoad = waitForQuietDedicated(2.0,
-      math.min(420L, math.max(0L, remainingS - 900L)).toInt)
+    val gridLoad = waitForQuiet(2.0,
+      math.min(420L, math.max(0L, remainingS - 900L)).toInt, dedicated = true)
     val crypto = cryptoGrid(spark, sfDir, gridLoad)
     val page = pageGrid(spark, sfDir)
 
@@ -421,8 +380,8 @@ object Bench {
     // our own 32-thread bursts, and sleeping for self-load to decay would
     // burn ~1 min per section for nothing. Per-section start/end loads are
     // recorded instead so a reader can see exactly which sections ran hot.
-    val sweepGateLoad = waitForQuietDedicated(3.0,
-      math.min(420L, math.max(0L, remainingS - 600L)).toInt)
+    val sweepGateLoad = waitForQuiet(3.0,
+      math.min(420L, math.max(0L, remainingS - 600L)).toInt, dedicated = true)
     // per section: (load start, load end, steal %, cal start M rows/s,
     // cal end M rows/s) — the cal samples are the machine-speed probe the
     // summary normalizes section walls by (VERDICT r12 #1)
@@ -437,14 +396,8 @@ object Bench {
     // normalized by the MEAN OF ITS OWN bracketing pair, and its /proc
     // steal delta is recorded alongside, so any >10 % mover in the
     // round-over-round table carries its own cal/steal/load attribution.
-    val qCal = scala.collection.mutable.LinkedHashMap
-      .empty[String, (Double, Double)]
-    val qSteal = scala.collection.mutable.LinkedHashMap.empty[String, String]
     sections.foreach { section =>
-      spark.stop()
-      System.gc() // let the ContextCleaner reap the dead session's refs
-      val fresh = freshSession(cpus)
-      spark = fresh._1; listener = fresh._2
+      restart()
       val sectionStartLoad = loadavgStr()
       val sectionStartSteal = cpuStealTotal()
       // sectionLoads telemetry keeps the FULL sample (best-of-5 with
@@ -456,20 +409,19 @@ object Bench {
       var calPrev = calSample(iters = 2, warmup = 0)
       section.foreach { name =>
         val stealT0 = cpuStealTotal()
-        var s = measure(spark, listener, fns(name), sfDir)
+        var s = measure(spark, telemetry, fns(name), sfDir)
         // inconsistent iterations (median ≫ best) = a load spike mid-query:
         // re-run once behind the quiet gate and keep the better set. A run
         // with errors also retries once — transient vs genuine failure.
         if ((s.med > 3 * s.min && s.med - s.min > 0.5) || s.errors > 0) {
           waitForQuiet(2.5, 90)
-          val r = measure(spark, listener, fns(name), sfDir)
+          val r = measure(spark, telemetry, fns(name), sfDir)
           s = (if (s.failed || (!r.failed && r.med < s.med)) r else s)
             .copy(retried = true)
         }
-        stats(name) = s
         val calNext = calSample(iters = 2, warmup = 0)
-        qCal(name) = (calPrev, calNext)
-        qSteal(name) = stealPctSince(stealT0)
+        stats(name) = s.copy(cal = Some((calPrev, calNext)),
+          stealPct = Some(stealPctSince(stealT0)))
         calPrev = calNext
       }
       // the section-end figure for sectionLoads is its own full sample,
@@ -488,11 +440,8 @@ object Bench {
     // pipeline ops with max-task telemetry in a fresh session. Mandatory
     // (never budget-skipped), and it runs BEFORE the optional sections so
     // a tight budget spends itself on the must-publish rows first.
-    spark.stop()
-    System.gc()
-    val fresh10 = freshSession(cpus)
-    spark = fresh10._1; listener = fresh10._2
-    val (scale10x, scale10xSecs) = scale10xRows(spark, listener, sfDir)
+    restart()
+    val (scale10x, scale10xSecs) = scale10xRows(spark, telemetry, sfDir)
 
     // ---- 8 GB-heap smoke (VERDICT r7 #8): a big heap MASKS the
     // ContextCleaner-debt class of bug (it can run a whole sweep without a
@@ -507,7 +456,7 @@ object Bench {
       .sortBy(-_._2.med).take(5).map(_._1)
     val heap8g =
       if (remainingS > 180) heapSmoke(sfDir, cpus, slowest5)
-      else """{"skipped":"budget"}"""
+      else obj("skipped" -> "budget")
     // heap8g cross-check (VERDICT r8 #2): an 8 GB row disagreeing with the
     // big-heap sweep median by >2× is the ContextCleaner-debt signature —
     // an automatic isolation trigger for that query regardless of what the
@@ -516,10 +465,9 @@ object Bench {
     val heap8gFlagged: Set[String] =
       slowest5.flatMap { q =>
         for {
-          m <- ("\"" + q + "\":\\{\"med\":([0-9.]+)").r
-            .findFirstMatchIn(heap8g)
+          m <- num(heap8g \ q \ "med") if m > 0
           s <- stats.get(q)
-          if !s.failed && s.med > 2.0 * m.group(1).toDouble
+          if !s.failed && s.med > 2.0 * m
         } yield q
       }.toSet
 
@@ -550,12 +498,8 @@ object Bench {
       // stop isolating rather than blow the driver's window (the sweep
       // median is still published, just without the reconciliation run).
       if (remainingS > 180) {
-        spark.stop()
-        System.gc()
-        waitForQuiet(2.0, 180)
-        val fresh = freshSession(cpus)
-        spark = fresh._1; listener = fresh._2
-        val iso = measure(spark, listener, fns(name), sfDir)
+        restart(waitForQuiet(2.0, 180))
+        val iso = measure(spark, telemetry, fns(name), sfDir)
         stats(name) = stats(name).copy(isolated = iso.med)
       }
     }
@@ -574,21 +518,17 @@ object Bench {
     // trust on a later window.
     val calProbeQueries = Seq("q01_pricing_summary", "d01_exact_dedup",
       "d06_neardup_clusters", "t05_token_bpe", "st01_stream_dedup")
-    val (calValidation: String, calValidationVerdict: String) =
-      if (remainingS < 240) ("""{"skipped":"budget"}""", "skipped")
+    val (calValidation: JValue, calValidationVerdict: String) =
+      if (remainingS < 240) (obj("skipped" -> "budget"), "skipped")
       else {
-        spark.stop()
-        System.gc()
-        val gateLoad = waitForQuiet(2.0, 240)
-        val fresh = freshSession(cpus)
-        spark = fresh._1; listener = fresh._2
+        val gateLoad = restart(waitForQuiet(2.0, 240))
         val rows = calProbeQueries.flatMap { q =>
           for {
             s <- stats.get(q) if !s.failed
-            (cb, ca) <- qCal.get(q)
+            (cb, ca) <- s.cal
           } yield {
             val c0 = calSample(iters = 2, warmup = 0)
-            val iso = measure(spark, listener, fns(q), sfDir)
+            val iso = measure(spark, telemetry, fns(q), sfDir)
             val c1 = calSample(iters = 2, warmup = 0)
             val calQuiet = (c0 + c1) / 2
             val calSweep = (cb + ca) / 2
@@ -614,11 +554,14 @@ object Bench {
             val errs = contrastRows.map(r => math.abs(r._7)).sorted
             if (errs(errs.size / 2) <= 10.0) "pass" else "fail"
           }
-        val rowsJson = rows.map { case (q, sm, cs, qm, cq, p, e, el) =>
-          f""""$q":{"sweep_s":$sm%.3f,"cal_sweep_mrows":${cs / 1e6}%.1f,"quiet_s":$qm%.3f,"cal_quiet_mrows":${cq / 1e6}%.1f,"predicted_quiet_s":$p%.3f,"err_pct":$e%.1f,"err_linear_pct":$el%.1f}"""
-        }.mkString(",")
-        (s"""{"alpha":$CalCouplingAlpha,"gate_load":"$gateLoad","verdict":"$verdict","probes":{$rowsJson}}""",
-          verdict)
+        val probes = rows.map { case (q, sm, cs, qm, cq, p, e, el) =>
+          q -> obj("sweep_s" -> fixed(sm, 3), "cal_sweep_mrows" -> fixed(cs / 1e6, 1),
+            "quiet_s" -> fixed(qm, 3), "cal_quiet_mrows" -> fixed(cq / 1e6, 1),
+            "predicted_quiet_s" -> fixed(p, 3), "err_pct" -> fixed(e, 1),
+            "err_linear_pct" -> fixed(el, 1))
+        }
+        (obj("alpha" -> CalCouplingAlpha, "gate_load" -> gateLoad, "verdict" -> verdict,
+          "probes" -> obj(probes: _*)), verdict)
       }
 
     // ---- 100× scale rows (VERDICT r7 #5): the headline five on a 100×
@@ -638,35 +581,15 @@ object Bench {
         spark.stop()
         System.gc()
         scale100xForked(sfDir, cpus)
-      } else if (run100x) ("""{"skipped":"budget"}""", Seq.empty[(String, Double)])
+      } else if (run100x) (obj("skipped" -> "budget"), Seq.empty[(String, Double)])
       else scale100xFromArtifact()
 
     val errorNames = stats.collect { case (k, s) if s.failed => k }.toVector
     val results = stats.collect { case (k, s) if !s.failed => k -> s.value }
     val loadEnd = loadavgStr()
     val sweepSec = (System.currentTimeMillis() - t0Sweep) / 1000
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val spread = stats.map { case (k, s) =>
-      val iso = if (s.isolated >= 0) f""","isolated":${s.isolated}%.3f""" else ""
-      val err = if (s.errors > 0) s""","errors":${s.errors}""" else ""
-      val cal = qCal.get(k).map { case (c0, c1) =>
-        f""","cal_b_mrows":${c0 / 1e6}%.1f,"cal_a_mrows":${c1 / 1e6}%.1f""" }
-        .getOrElse("")
-      val st = qSteal.get(k).map(v => s""","steal_pct":"$v"""").getOrElse("")
-      // per-query work counters (VERDICT r15 #6) — present only when the
-      // query ran the op, so engine-vs-data movement is attributable
-      val work = (if (s.ccRounds >= 0) s""","cc_rounds":${s.ccRounds}""" else "") +
-        (if (s.stBatches >= 0) s""","st_batches":${s.stBatches}""" else "") +
-        (if (s.stStateRows >= 0) s""","st_state_rows":${s.stStateRows}""" else "")
-      f""""$k":{"med":${s.med}%.3f,"min":${s.min}%.3f,"max":${s.max}%.3f,"load":"${s.load}","gc_s":${s.gcSec}%.2f,"task_s":${s.taskSec}%.1f,"task_gc_s":${s.taskGcSec}%.1f,"max_task_ms":${s.maxTaskMs},"retried":${s.retried}$cal$st$work$err$iso}"""
-    }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val errJson = errorNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val heapGb = Runtime.getRuntime.maxMemory / 1e9
-    val sectionLoadsJson = sectionLoads.map { case (p, (s0, s1, st, c0, c1)) =>
-      f""""$p":"$s0→$s1 steal $st%% cal ${c0 / 1e6}%.1f/${c1 / 1e6}%.1f""""
-    }.mkString("{", ",", "}")
     // cal_rows_per_s: the run's best observed machine speed (the cleanest
     // window); per-section samples live in section_loads. Normalization
     // uses the per-section MEAN of the start/end samples (the machine's
@@ -681,49 +604,44 @@ object Bench {
       roundsOf("""BENCH_r0*(\d+)\.json""".r).foldLeft(0)(math.max) + 1
     val prevRound: Int = roundsOf("""bench_norm_r0*(\d+)\.json""".r)
       .filter(_ < currentRound).foldLeft(-1)(math.max)
-    val fullJson =
-      f"""{"metric":"total","value":$total,"unit":"sec","errors":$errJson,"queries":$qs,"query_spread":$spread,"crypto":$crypto,"page":$page,"scale10x":$scale10x,"scale100x":$scale100x,"heap8g":$heap8g,"cal_validation":$calValidation,"sf":"$sfDir","round":$currentRound,"baseline_round":$prevRound,"loadavg_start":"$loadStart","loadavg_grid_gate":"$gridLoad","loadavg_sweep_gate":"$sweepGateLoad","section_loads":$sectionLoadsJson,"cal_rows_per_s":$calBest%.0f,"cal_baseline_rows_per_s":$CalBaselineRowsPerS%.0f,"loadavg_end":"$loadEnd","heap_gb":$heapGb%.1f,"sweep_wall_s":$sweepSec}"""
+    val fullJson = obj(
+      "metric" -> "total", "value" -> total, "unit" -> "sec", "errors" -> errorNames,
+      "queries" -> obj(results.toSeq: _*),
+      "query_spread" -> obj(stats.toSeq.map { case (k, s) => k -> s.json }: _*),
+      "crypto" -> crypto.json, "page" -> page.json, "scale10x" -> scale10x,
+      "scale100x" -> scale100x, "heap8g" -> heap8g, "cal_validation" -> calValidation,
+      "sf" -> sfDir, "round" -> currentRound, "baseline_round" -> prevRound,
+      "loadavg_start" -> loadStart, "loadavg_grid_gate" -> gridLoad,
+      "loadavg_sweep_gate" -> sweepGateLoad,
+      "section_loads" -> obj(sectionLoads.toSeq.map { case (p, (s0, s1, st, c0, c1)) =>
+        p -> f"$s0→$s1 steal $st%% cal ${c0 / 1e6}%.1f/${c1 / 1e6}%.1f" }: _*),
+      "cal_rows_per_s" -> fixed(calBest, 0),
+      "cal_baseline_rows_per_s" -> fixed(CalBaselineRowsPerS, 0),
+      "loadavg_end" -> loadEnd, "heap_gb" -> fixed(heapGb, 1), "sweep_wall_s" -> sweepSec)
     // The driver captures only the LAST ~2 KB of stdout, so the full ~4 KB
     // line never parsed (BENCH_r1..r3 all "parsed": null). Persist the full
     // JSON to a file and print a compact (<2 KB) summary as the final line.
     val fullPath = java.nio.file.Paths.get("bench_full.json").toAbsolutePath
-    java.nio.file.Files.write(fullPath, fullJson.getBytes("UTF-8"))
+    java.nio.file.Files.write(fullPath, render(fullJson).getBytes("UTF-8"))
     def r3(x: Double): Double = math.rint(x * 1000) / 1000
-    val bySection = results.toSeq.groupBy(_._1.take(1)).toSeq.sortBy(_._1)
-      .map { case (p, kvs) => "\"" + p + "\":" + r3(kvs.map(_._2).sum) }
-      .mkString("{", ",", "}")
-    val slowest = results.toSeq.sortBy(-_._2).take(5)
-      .map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+    val bySection = obj(results.toSeq.groupBy(_._1.take(1)).toSeq.sortBy(_._1)
+      .map { case (p, kvs) => p -> r3(kvs.map(_._2).sum) }: _*)
+    val slowest = obj(results.toSeq.sortBy(-_._2).take(5)
+      .map { case (k, v) => k -> r3(v) }: _*)
     // crypto one-liner: rows/s for the four headline scenarios + round trips
     val cryptoKeys = Seq("int64_xor_per_value", "string_xor_per_value",
       "int64_aes_det_per_value", "string_aes_det_per_value",
       "roundtrip_string_xor", "roundtrip_string_aes_det",
       "jvm_string_xor_per_value", "jvm_string_aes_det_per_value")
-    val rps = """"([a-z0-9_]+)":\{[^}]*"rows_per_s":(\d+)""".r
-    val found = rps.findAllMatchIn(crypto).map(m => m.group(1) -> m.group(2)).toMap
-    val cryptoSummary = cryptoKeys.flatMap(k => found.get(k).map(v => "\"" + k + "\":" + v))
-      .mkString("{", ",", "}")
-    val vps = """"([a-z0-9_]+)":\{[^}]*"values_per_s":(\d+)""".r
-    val pageFound = vps.findAllMatchIn(page).map(m => m.group(1) -> m.group(2)).toMap
-    val vpsBest = """"([a-z0-9_]+)":\{[^}]*"values_per_s_best":(\d+)""".r
-    val pageBestFound = vpsBest.findAllMatchIn(page)
-      .map(m => m.group(1) -> m.group(2)).toMap
-    val pageSummary = Seq("v1_plain_uncompressed", "v1_plain_snappy")
-      .flatMap(k => pageFound.get(k).map(v => "\"" + k + "\":" + v))
-      .mkString("{", ",", "}")
-    val pageBestSummary = Seq("v1_plain_uncompressed", "v1_plain_snappy")
-      .flatMap(k => pageBestFound.get(k).map(v => "\"" + k + "\":" + v))
-      .mkString("{", ",", "}")
+    val cryptoSummary = obj(cryptoKeys.map(k => k -> crypto.get(k).map(_.rowsPerS)): _*)
+    val pageKeys = Seq("v1_plain_uncompressed", "v1_plain_snappy")
+    val pageSummary = obj(pageKeys.map(k => k -> page.get(k).map(_.valuesPerS)): _*)
+    val pageBestSummary = obj(pageKeys.map(k => k -> page.get(k).map(_.valuesPerSBest)): _*)
     // Scale summaries come straight from the measured (key, sec) pairs — the
     // r7 regex silently dropped every row because the rows led with "form",
-    // so BENCH_r07 published "scale10x_sec":{} (ADVICE r7). No regex to rot.
-    def secSummary(secs: Seq[(String, Double)]): String =
-      secs.map { case (k, v) => "\"" + k + "\":" + r3(v) }
-        .mkString("{", ",", "}")
-    val scaleSummary = secSummary(scale10xSecs)
-    val scale100Summary = secSummary(scale100xSecs)
-    if (scale10x.contains("\"sec\"") && scale10xSecs.isEmpty)
-      Console.err.println("BUG: scale10x rows present but summary empty")
+    // so BENCH_r07 published "scale10x_sec":{} (ADVICE r7).
+    def secSummary(secs: Seq[(String, Double)]): JObject =
+      obj(secs.map { case (k, v) => k -> r3(v) }: _*)
 
     // ---- bench_summary.md: the human-readable face of bench_full.json,
     // GENERATED from the same in-memory values in the same run. Docs
@@ -732,22 +650,10 @@ object Bench {
     // committed artifact, and a generated summary makes that class of
     // divergence impossible: regenerating the artifact regenerates the
     // prose's numbers with it.
-    val bestRe = """"([a-z0-9_]+)":\{[^}]*"rows_per_s_best":(\d+)""".r
-    val bestFound = bestRe.findAllMatchIn(crypto)
-      .map(m => m.group(1) -> m.group(2)).toMap
-    def jsonField(json: String, rowKey: String, name: String): String = {
-      val i = json.indexOf("\"" + rowKey + "\":{")
-      if (i < 0) "—" else {
-        val row = json.substring(i, math.max(i, json.indexOf('}', i)) + 1)
-        ("\"" + name + "\":(\"[^\"]*\"|\\[[^\\]]*\\]|[-0-9.]+)").r
-          .findFirstMatchIn(row).map(_.group(1).stripPrefix("\"").stripSuffix("\""))
-          .getOrElse("—")
-      }
-    }
-    def ratio(num: String, den: String): String =
-      (bestFound.get(num), bestFound.get(den)) match {
-        case (Some(a), Some(b)) if b.toDouble > 0 =>
-          f"${a.toDouble / b.toDouble}%.2f×"
+    def best(k: String): Option[Double] = crypto.get(k).flatMap(r => num(r.rowsPerSBest))
+    def ratio(a: String, b: String): String =
+      (best(a), best(b)) match {
+        case (Some(x), Some(y)) if y > 0 => f"${x / y}%.2f×"
         case _ => "—"
       }
     val md = new StringBuilder
@@ -806,7 +712,7 @@ object Bench {
       sectionLoads.get(section.head).toSeq.flatMap { case (_, _, _, c0, c1) =>
         val sectionMean = (c0 + c1) / 2
         section.flatMap(q => results.get(q).map { v =>
-          val mean = qCal.get(q)
+          val mean = stats(q).cal
             .map { case (b, a) => (b + a) / 2 }.getOrElse(sectionMean)
           // damped by the MEASURED wall↔cal coupling, never linear — see
           // CalCouplingAlpha (linear over-corrects ~2× on degraded hosts)
@@ -833,44 +739,20 @@ object Bench {
       .get(s"bench_norm_r$prevRound.json").toAbsolutePath
     // prev attribution rides along so the movers table can cite BOTH
     // sides' machine state and work counters, not just this run's
-    val (prevNorm: Map[String, Double], prevAlpha: Double,
-        prevAttr: Map[String, Map[String, String]]) =
+    val (prevNorm: Map[String, Double], prevAlpha: Double, prevAttr: JValue) =
       if (prevRound < 0 || !java.nio.file.Files.exists(prevPath))
-        (Map.empty[String, Double], -1.0,
-          Map.empty[String, Map[String, String]])
+        (Map.empty[String, Double], -1.0, JNothing)
       else try {
-        import org.json4s._
-        val j = org.json4s.jackson.JsonMethods.parse(new String(
+        val j = BenchJson.parse(new String(
           java.nio.file.Files.readAllBytes(prevPath), "UTF-8"))
         val qs = (j \ "queries") match {
-          case JObject(fields) => fields.collect {
-            case (k, JDouble(v)) => k -> v
-            case (k, JInt(v)) => k -> v.toDouble
-          }.toMap
+          case JObject(fields) => fields.flatMap { case (k, v) => num(v).map(k -> _) }.toMap
           case _ => Map.empty[String, Double]
         }
         // a baseline written before the damped model (no "alpha") holds
         // LINEAR-normalized values — comparing against it mixes models
-        val a = (j \ "alpha") match {
-          case JDouble(v) => v
-          case JInt(v) => v.toDouble
-          case _ => 1.0
-        }
-        val attr = (j \ "attribution") match {
-          case JObject(fields) => fields.collect {
-            case (k, JObject(av)) => k -> av.collect {
-              case (ak, JString(s)) => ak -> s
-              case (ak, JDouble(d)) => ak -> d.toString
-              case (ak, JInt(i)) => ak -> i.toString
-              case (ak, JLong(l)) => ak -> l.toString
-            }.toMap
-          }.toMap
-          case _ => Map.empty[String, Map[String, String]]
-        }
-        (qs, a, attr)
-      } catch { case _: Exception =>
-        (Map.empty[String, Double], -1.0,
-          Map.empty[String, Map[String, String]]) }
+        (qs, num(j \ "alpha").getOrElse(1.0), j \ "attribution")
+      } catch { case _: Exception => (Map.empty[String, Double], -1.0, JNothing) }
     if (prevNorm.isEmpty)
       md ++= s"\nNO round-over-round table: no committed baseline from an " +
         s"earlier round (this is round $currentRound; newest earlier " +
@@ -917,29 +799,30 @@ object Bench {
           "run AND from the committed baseline — plus work counters; a " +
           "mover whose cal/steal/load are clean on BOTH rounds and whose " +
           "work matches moved in the engine, anything else moved with " +
-          "the machine or its data):\n\n| query | prev s | this s | delta " +
+          "the machine or its data; work = cc rounds, stream batches, jobs, " +
+          "stages, shuffle write bytes):\n\n| query | prev s | this s | delta " +
           "| cal b/a M rows/s | steal % | load | prev steal/load | work " +
           "prev→this |\n|---|---|---|---|---|---|---|---|---|\n"
+        // the work counters of an attribution row, read the same way for
+        // the committed baseline and for this run
+        def workStr(a: JValue): String = {
+          val parts = Seq("cc_rounds" -> "cc", "st_batches" -> "st", "jobs" -> "jobs",
+            "stages" -> "stages", "shuffle_write_bytes" -> "shuf").flatMap {
+            case (k, label) => num(a \ k).map(v => s"$label=${v.toLong}") }
+          if (parts.isEmpty) "—" else parts.mkString(" ")
+        }
         movers.take(20).foreach { case (q, p, t) =>
-          val (cb, ca) = qCal.getOrElse(q, (0.0, 0.0))
-          val pa = prevAttr.getOrElse(q, Map.empty)
-          val prevSide = s"${pa.getOrElse("steal_pct", "—")}/" +
-            s"${pa.getOrElse("load", "—")}"
-          def workStr(cc: Long, st: Long): String =
-            if (cc >= 0) s"cc=$cc" else if (st >= 0) s"st=$st" else "—"
-          val workPrev = workStr(
-            pa.get("cc_rounds").flatMap(x =>
-              scala.util.Try(x.toLong).toOption).getOrElse(-1L),
-            pa.get("st_batches").flatMap(x =>
-              scala.util.Try(x.toLong).toOption).getOrElse(-1L))
-          val workThis = stats.get(q)
-            .map(s => workStr(s.ccRounds.toLong, s.stBatches)).getOrElse("—")
+          val s = stats(q)
+          val (cb, ca) = s.cal.getOrElse((0.0, 0.0))
+          val pa = prevAttr \ q
+          val prevSide = s"${text(pa \ "steal_pct")}/${text(pa \ "load")}"
+          val (workPrev, workThis) = (workStr(pa), workStr(s.attribution))
           val work =
             if (workPrev == "—" && workThis == "—") "—"
             else s"$workPrev→$workThis"
           md ++= f"| $q | ${r3(p)} | ${r3(t)} | ${100 * (t - p) / p}%+.1f%% " +
-            f"| ${cb / 1e6}%.1f/${ca / 1e6}%.1f | ${qSteal.getOrElse(q, "—")} " +
-            f"| ${stats.get(q).map(_.load).getOrElse("—")} | $prevSide " +
+            f"| ${cb / 1e6}%.1f/${ca / 1e6}%.1f | ${s.stealPct.getOrElse("—")} " +
+            f"| ${s.load} | $prevSide " +
             f"| $work |\n"
         }
         if (movers.size > 20)
@@ -974,25 +857,16 @@ object Bench {
     // steal, load, work counters) so a future round's mover table can cite
     // BOTH sides' state. Only round N's own file is (re)written — never an
     // earlier round's.
-    val normJson = perQueryNorm.toSeq.sortBy(_._1)
-      .map { case (k, v) => f""""$k":${v}%.4f""" }.mkString(",")
-    val attrJson = perQueryNorm.keys.toSeq.sorted.map { k =>
-      val (cb, ca) = qCal.getOrElse(k, (0.0, 0.0))
-      // work counters ride into the baseline so NEXT round's mover table
-      // can say whether the work itself changed (VERDICT r15 #6)
-      val work = stats.get(k).map { s =>
-        (if (s.ccRounds >= 0) s""","cc_rounds":${s.ccRounds}""" else "") +
-          (if (s.stBatches >= 0) s""","st_batches":${s.stBatches}""" else "")
-      }.getOrElse("")
-      f""""$k":{"cal_b_mrows":${cb / 1e6}%.1f,"cal_a_mrows":${ca / 1e6}%.1f,"steal_pct":"${qSteal.getOrElse(k, "")}","load":"${stats.get(k).map(_.load).getOrElse("")}"$work}"""
-    }.mkString(",")
-    java.nio.file.Files.write(baselinePath,
-      (s"""{"round":$currentRound,""" +
-        s""""unix":${System.currentTimeMillis() / 1000},""" +
-        f""""cal_baseline_mrows":${CalBaselineRowsPerS / 1e6}%.1f,""" +
-        s""""alpha":$CalCouplingAlpha,""" +
-        s""""queries":{$normJson},""" +
-        s""""attribution":{$attrJson}}""").getBytes("UTF-8"))
+    // work counters ride into the baseline so NEXT round's mover table can
+    // say whether the work itself changed (VERDICT r15 #6)
+    val sortedNorm = perQueryNorm.toSeq.sortBy(_._1)
+    java.nio.file.Files.write(baselinePath, render(obj(
+      "round" -> currentRound, "unix" -> System.currentTimeMillis() / 1000,
+      "cal_baseline_mrows" -> fixed(CalBaselineRowsPerS / 1e6, 1),
+      "alpha" -> CalCouplingAlpha,
+      "queries" -> obj(sortedNorm.map { case (k, v) => k -> fixed(v, 4) }: _*),
+      "attribution" -> obj(sortedNorm.map { case (k, _) => k -> stats(k).attribution }: _*)
+    )).getBytes("UTF-8"))
     md ++= "## Slowest five (published value; sweep median unless an " +
       "isolated re-run measured lower)\n\n| query | sec | med | min | max | gc_s | max task ms |\n|---|---|---|---|---|---|---|\n"
     results.toSeq.sortBy(-_._2).take(5).foreach { case (k, v) =>
@@ -1012,7 +886,9 @@ object Bench {
       "jvm_int64_xor_per_value", "jvm_int64_aes_det_per_value",
       "jvm_roundtrip_string_xor", "jvm_roundtrip_string_aes_det")
     mdCryptoKeys.foreach { k =>
-      md ++= s"| $k | ${found.getOrElse(k, "—")} | ${bestFound.getOrElse(k, "—")} |\n"
+      val r = crypto.get(k)
+      md ++= s"| $k | ${text(r.fold[JValue](JNothing)(_.rowsPerS))} | " +
+        s"${text(r.fold[JValue](JNothing)(_.rowsPerSBest))} |\n"
     }
     md ++= "\nXOR:AES best-iteration ratios — Spark string " +
       ratio("string_xor_per_value", "string_aes_det_per_value") +
@@ -1025,36 +901,38 @@ object Bench {
       "load-contaminated avg published a 3× apparent drop for " +
       "v2_plain_snappy) — cite med or best when comparing rounds.\n\n" +
       "| scenario | avg | med | best |\n|---|---|---|---|\n"
-    val vpsMed = """"([a-z0-9_]+)":\{[^}]*"values_per_s_med":(\d+)""".r
-    val pageMedFound = vpsMed.findAllMatchIn(page)
-      .map(m => m.group(1) -> m.group(2)).toMap
     Seq("v1_plain_uncompressed", "v1_plain_snappy", "v2_plain_snappy",
       "dict_plain_snappy").foreach { k =>
-      md ++= s"| $k | ${pageFound.getOrElse(k, "—")} | " +
-        s"${pageMedFound.getOrElse(k, "—")} | ${pageBestFound.getOrElse(k, "—")} |\n"
+      val r = page.get(k)
+      def cell(f: PageRow => JValue): String = text(r.fold[JValue](JNothing)(f))
+      md ++= s"| $k | ${cell(_.valuesPerS)} | ${cell(_.valuesPerSMed)} | " +
+        s"${cell(_.valuesPerSBest)} |\n"
     }
-    def scaleTable(title: String, json: String, secs: Seq[(String, Double)]): Unit =
+    // `rows` holds the section's rows by key (the 100× artifact nests them)
+    def scaleTable(title: String, section: JValue, rows: JValue,
+        secs: Seq[(String, Double)]): Unit =
       if (secs.nonEmpty) {
         md ++= s"\n## $title\n\n| row | sec | all runs s | max task ms | rows | gc_s |\n|---|---|---|---|---|---|\n"
         secs.foreach { case (k, v) =>
-          md ++= f"| $k | ${r3(v)} | ${jsonField(json, k, "runs_s")} | " +
-            s"${jsonField(json, k, "max_task_ms")} | ${jsonField(json, k, "rows")} | " +
-            s"${jsonField(json, k, "gc_s")} |\n"
+          def f(name: String): String = text(rows \ k \ name)
+          md ++= s"| $k | ${r3(v)} | ${f("runs_s")} | ${f("max_task_ms")} | " +
+            s"${f("rows")} | ${f("gc_s")} |\n"
         }
-      } else if (json.contains("error"))
-        md ++= s"\n## $title\n\nERROR: $json\n"
+      } else if (section.findField(_._1 == "error").nonEmpty)
+        md ++= s"\n## $title\n\nERROR: ${render(section)}\n"
     // ADVISORY marker (VERDICT r12 #7): the 10× rows ride the sweep with
     // its cheap protocol (2 runs + retry bars, but no per-run quiet gate
     // and no committed-artifact merge) — they shape the scaling curve but
     // are not evidence rows; the 100× artifact is where the bars live.
     scaleTable("scale10x (synthesized 10× corpus) — ADVISORY: sweep-protocol " +
       "runs without the 100× per-run quiet gates; cite bench_scale100x.json " +
-      "rows as scale evidence, these only shape the curve", scale10x, scale10xSecs)
+      "rows as scale evidence, these only shape the curve", scale10x, scale10x,
+      scale10xSecs)
     val t100 = "scale100x (synthesized 100× corpus" +
-      (if (scale100x.contains("\"source\""))
+      (if (scale100x \ "source" != JNothing)
         "; rows from the committed `bench_scale100x.json` dedicated 96 GB run)"
       else ")")
-    scaleTable(t100, scale100x, scale100xSecs)
+    scaleTable(t100, scale100x, scale100x \ "rows", scale100xSecs)
     // ---- the two-decade curve (VERDICT r9 #2): when both scale sections
     // carry measured rows, derive the per-decade growth factors in the
     // GENERATED summary so the curve always cites the same artifacts as
@@ -1072,7 +950,7 @@ object Bench {
           "from the tables above)\n\n| op | 1× sec (sweep) | 10× sec | " +
           "100× sec | 10×→100× factor |\n|---|---|---|---|---|\n"
         curve.foreach { case (k10, s10, _, s100) =>
-          val form = jsonField(scale10x, k10, "form")
+          val form = text(scale10x \ k10 \ "form")
           val oneX = results.get(form).map(v => r3(v).toString).getOrElse("—")
           md ++= f"| ${k10.stripSuffix("_10x")} ($form) | $oneX | ${r3(s10)} | ${r3(s100)} | ${s100 / s10}%.1f× |\n"
         }
@@ -1087,10 +965,8 @@ object Bench {
         // measured candidate-pair mass (VERDICT r15 #5): the rows stamp
         // Σ m(m−1)/2 over LSH cells untimed, so the curve can PROVE the
         // exponent instead of citing the op-point model
-        val mass10 = scala.util.Try(
-          jsonField(scale10x, "s07_10x", "cand_pair_mass").toDouble).toOption
-        val mass100 = scala.util.Try(
-          jsonField(scale100x, "s07_100x", "cand_pair_mass").toDouble).toOption
+        val mass10 = num(scale10x \ "s07_10x" \ "cand_pair_mass")
+        val mass100 = num(scale100x \ "rows" \ "s07_100x" \ "cand_pair_mass")
         (mass10, mass100) match {
           case (Some(m10), Some(m100)) if m10 > 0 =>
             val f = m100 / m10
@@ -1110,17 +986,23 @@ object Bench {
       "big-heap/8 GB ≤ ~2×, beyond it the ContextCleaner-debt bug class " +
       "is back.\n\n| query | 8 GB med s | big-heap s | ratio |\n|---|---|---|---|\n"
     slowest5.foreach { q =>
-      val h8 = jsonField(heap8g, q, "med")
+      val h8 = heap8g \ q \ "med"
       val big = stats.get(q).map(s => r3(s.value)).getOrElse(-1.0)
-      val ratio = scala.util.Try(big / h8.toDouble).toOption
-        .filter(_ > 0).map(r => f"$r%.2f").getOrElse("—")
-      md ++= s"| $q | $h8 | ${if (big >= 0) big else "—"} | $ratio |\n"
+      val ratio = num(h8).map(big / _).filter(_ > 0).map(r => f"$r%.2f").getOrElse("—")
+      md ++= s"| $q | ${text(h8)} | ${if (big >= 0) big else "—"} | $ratio |\n"
     }
     java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_summary.md").toAbsolutePath,
       md.toString.getBytes("UTF-8"))
-    println(
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"errors":$errJson,"queries":$slowest,"section_totals_sec":$bySection,"crypto_rows_per_s":$cryptoSummary,"page_encrypt_values_per_s":$pageSummary,"page_encrypt_values_per_s_best":$pageBestSummary,"scale10x_sec":$scaleSummary,"scale100x_sec":$scale100Summary,"loadavg":"$loadEnd","sf":"$sfDir","full":"$fullPath"}""")
+    println(render(obj(
+      "metric" -> "total", "value" -> r3(total), "unit" -> "sec",
+      "n_queries" -> results.size, "errors" -> errorNames, "queries" -> slowest,
+      "section_totals_sec" -> bySection, "crypto_rows_per_s" -> cryptoSummary,
+      "page_encrypt_values_per_s" -> pageSummary,
+      "page_encrypt_values_per_s_best" -> pageBestSummary,
+      "scale10x_sec" -> secSummary(scale10xSecs),
+      "scale100x_sec" -> secSummary(scale100xSecs), "loadavg" -> loadEnd,
+      "sf" -> sfDir, "full" -> fullPath.toString)))
     spark.stop()
   }
 
@@ -1130,13 +1012,8 @@ object Bench {
     * signal for a hot partition (a 10× corpus must not produce a 10× max
     * task).
     */
-  private final case class ScaleRun(sec: Double, n: Long, maxTask: Long,
-      maxIn: Long, maxShuf: Long, load: String, gcS: Double, taskS: Double,
-      taskGcS: Double, stealPct: String, ccRounds: Int, calMrows: Double,
-      stBatches: Long, stStateRows: Long)
-
   private def measureScaleRun(spark: SparkSession,
-      listener: TaskStatsListener, fn: (SparkSession, String) => DataFrame,
+      telemetry: QueryTelemetry, fn: (SparkSession, String) => DataFrame,
       dir: String): ScaleRun = {
     spark.catalog.clearCache()
     System.gc() // same pre-collect discipline as the sweep's measure()
@@ -1144,7 +1021,6 @@ object Bench {
     val load = loadavgStr()
     val steal0 = cpuStealTotal()
     val gc0 = gcMs()
-    listener.reset()
     // Convergence-round telemetry for iterative ops (VERDICT r12 #3: d06's
     // 38 % run spread needed attribution — an extra large/small-star round
     // is expected behavior, ambient noise is not). Reset before the run so
@@ -1159,12 +1035,14 @@ object Bench {
     // per-row steal sampling alone missed sub-window spikes in r12
     val cal = calSample()
     val t0 = System.nanoTime()
-    val n = fn(spark, dir).count()
+    val n = telemetry.tagged("scale")(fn(spark, dir).count())
     val sec = (System.nanoTime() - t0) / 1e9
-    ScaleRun(sec, n, listener.maxTaskMs.get(), listener.maxInput.get(),
-      listener.maxShuffleRead.get(), load, (gcMs() - gc0) / 1e3,
-      listener.taskMs.get() / 1e3, listener.taskGcMs.get() / 1e3,
-      stealPctSince(steal0), graft.ops.ConnectedComponents.lastRunRounds, cal,
+    val (gcS, stealPct) = ((gcMs() - gc0) / 1e3, stealPctSince(steal0))
+    telemetry.drain()
+    val w = telemetry.take("scale")
+    ScaleRun(sec, n, w.maxTaskMs, w.maxInputBytes, w.maxShuffleReadBytes, load,
+      gcS, w.taskMs / 1e3, w.gcMs / 1e3, stealPct,
+      graft.ops.ConnectedComponents.lastRunRounds, cal,
       graft.streaming.StreamOps.lastRunBatches,
       graft.streaming.StreamOps.lastRunStateRows)
   }
@@ -1194,11 +1072,11 @@ object Bench {
     * the ROW reports the error + disk telemetry while the remaining rows
     * still measure.
     */
-  private def scaleRow(spark: SparkSession, listener: TaskStatsListener,
+  private def scaleRow(spark: SparkSession, telemetry: QueryTelemetry,
       key: String, name: String, fn: (SparkSession, String) => DataFrame,
       dir: String, measuredRuns: Int = 2,
       gateEveryRun: Boolean = false,
-      extraFields: () => String = () => ""): (String, Option[(String, Double)]) = {
+      extraFields: () => Seq[(String, Any)] = () => Nil): ScaleRow = {
     try { fn(spark, dir).count() } catch { case _: Throwable => } // warm
     val runs = scala.collection.mutable.ArrayBuffer.empty[ScaleRun]
     var lastErr: Option[Throwable] = None
@@ -1211,13 +1089,13 @@ object Bench {
     def attempt(): Unit =
       try {
         if (gateEveryRun) waitForQuiet(2.5, 150)
-        runs += measureScaleRun(spark, listener, fn, dir)
+        runs += measureScaleRun(spark, telemetry, fn, dir)
       } catch { case e: Throwable =>
         lastErr = Some(e); errorRuns += 1
         spark.catalog.clearCache(); System.gc()
       }
     (0 until measuredRuns).foreach(_ => attempt())
-    var extra = 0
+    var extraRuns = 0
     def loadOf(r: ScaleRun): Double =
       scala.util.Try(r.load.toDouble).getOrElse(Double.NaN)
     def inconsistent: Boolean = runs.isEmpty || {
@@ -1230,87 +1108,28 @@ object Bench {
         // runs at loadavg 9.9/12.6) — retry behind the quiet gate
         loadOf(best) > 4.0
     }
-    while (extra < 2 && inconsistent) {
+    while (extraRuns < 2 && inconsistent) {
       waitForQuiet(2.0, 120)
       attempt()
-      extra += 1
+      extraRuns += 1
     }
-    if (runs.isEmpty) {
-      val e = lastErr.map(x => s"${x.getClass.getSimpleName}: " +
-        Option(x.getMessage).getOrElse("")
-          .replaceAll("[\"\\\\\n\r\t]", " ").take(120)).getOrElse("?")
-      (f""""$key":{"error":"$e","form":"$name","error_runs":$errorRuns,"disk_avail_gb":${diskAvailGb(dir)}%.1f}""",
-        None)
-    } else {
-      // Publish the WARM MEDIAN, never the min (VERDICT r15 #4: d03auto_100x
-      // published 22.74 from [82.5, 22.7, 46.5, 27.6] — a flattering pick
-      // over a 3.6× spread). Runs are chronological; run #1 may pay cold
-      // corpus IO + JIT, so the published value is the arithmetic median of
-      // runs 2..N (all runs when only one exists; even counts average the
-      // two middles). The cold-start story stays visible in runs_s.
-      // Telemetry comes from the warm run whose wall is closest to the
-      // published value (ties toward the slower run), and the row stamps
-      // "pub":"warm_median" so tools/check_scale.py can recompute the same
-      // rule from runs_s and fail on drift.
-      val warm = (if (runs.length >= 2) runs.drop(1) else runs).toSeq
-      val pubSec = warmMedian(runs.map(_.sec).toSeq)
-      val r = warm.minBy(x => (math.abs(x.sec - pubSec), -x.sec))
-      val allRuns = runs.map(x => f"${x.sec}%.3f").mkString("[", ",", "]")
-      val err = if (errorRuns > 0) s""","error_runs":$errorRuns""" else ""
-      // cc_rounds aligns 1:1 with runs_s (VERDICT r12 #3) — present only
-      // when the row actually ran connected components
-      val ccRounds =
-        if (runs.exists(_.ccRounds >= 0))
-          s""","cc_rounds":${runs.map(_.ccRounds).mkString("[", ",", "]")}"""
-        else ""
-      // per-run machine speed in M rows/s, aligned with runs_s
-      val calRuns = runs.map(x => f"${x.calMrows / 1e6}%.1f")
-        .mkString(""","cal_mrows_per_run":[""", ",", "]")
-      // per-run task-seconds, aligned with runs_s (r14): the engine's work
-      // is deterministic, so a slow run whose OWN task-seconds inflate
-      // proportionally is a throttled machine window (the tasks themselves
-      // ran slower), not operator variance — the field that lets
-      // check_scale.py attribute a spread instead of asking for re-runs
-      val taskRuns = runs.map(x => f"${x.taskS}%.1f")
-        .mkString(""","task_s_per_run":[""", ",", "]")
-      // Per-run max task, aligned with runs_s, and the row-level straggler
-      // figure = the MIN over runs (r16): a hot partition is STRUCTURAL —
-      // it stretches the same task on every run — while a hypervisor
-      // throttle pocket stretches a random task on a random run. Under
-      // warm-median publishing the telemetry run is the median run, and
-      // three otherwise-clean s07 re-measures in a row published walls
-      // within 7 % while a different single task crossed 5 s on a
-      // different run each time (8.7-28.9 s at cal 9-17 M rows/s) — the
-      // min over runs is the estimator for the structural property the
-      // straggler bar exists to check, and the full per-run list stays
-      // published for weather attribution.
-      val maxTaskRuns = runs.map(_.maxTask)
-        .mkString(""","max_task_ms_per_run":[""", ",", "]")
-      val maxTaskMin = runs.map(_.maxTask).min
-      // streaming attribution, aligned with runs_s (VERDICT r13 #2: st04's
-      // 22–124 s spread needs per-run fields naming what the slow runs did)
-      val stRuns =
-        if (runs.exists(_.stBatches >= 0))
-          s""","st_batches":${runs.map(_.stBatches).mkString("[", ",", "]")}""" +
-            s""","st_state_rows":${runs.map(_.stStateRows).mkString("[", ",", "]")}"""
-        else ""
-      // Task-second accounting (VERDICT r11 #2): `core_floor_s` is the wall
-      // a perfectly-scheduled run would take on this session's cores
-      // (task-seconds / cores); `wall_over_core` near 1 proves the wall is
-      // core-bound honest work, not scheduling waste — s07's 49 s at 100×
-      // is 1.11× its 44 s floor. check_scale.py bars compute-dense rows on
-      // this ratio.
-      val cores = spark.sparkContext.defaultParallelism
-      val floorS = r.taskS / math.max(1, cores)
-      // ratio from the PUBLISHED wall so check_scale.py's recompute from
-      // the row's own fields (sec / (task_s/cores)) agrees exactly
-      val wallOverCore = if (floorS > 0) pubSec / floorS else 0.0
-      val extraJson = try extraFields() catch { case e: Throwable =>
-        s""","extra_error":"${e.getClass.getSimpleName}"""" }
-      val json =
-        f""""$key":{"sec":$pubSec%.3f,"pub":"warm_median","form":"$name","runs_s":$allRuns,"retries":$extra$err$ccRounds$calRuns$taskRuns$maxTaskRuns$stRuns$extraJson,"rows":${r.n},"max_task_ms":$maxTaskMin,"max_task_input_mb":${r.maxIn / 1048576.0}%.1f,"max_task_shuffle_mb":${r.maxShuf / 1048576.0}%.1f,"load":"${r.load}","steal_pct":"${r.stealPct}","gc_s":${r.gcS}%.2f,"task_s":${r.taskS}%.1f,"task_gc_s":${r.taskGcS}%.1f,"cores":$cores,"core_floor_s":$floorS%.1f,"wall_over_core":$wallOverCore%.2f,"disk_avail_gb":${diskAvailGb(dir)}%.1f}"""
-      (json, Some(key -> pubSec))
-    }
+    // Publish the WARM MEDIAN, never the min (VERDICT r15 #4: d03auto_100x
+    // published 22.74 from [82.5, 22.7, 46.5, 27.6] — a flattering pick
+    // over a 3.6× spread). Runs are chronological; run #1 may pay cold
+    // corpus IO + JIT, so the published value is the arithmetic median of
+    // runs 2..N (all runs when only one exists; even counts average the
+    // two middles). The cold-start story stays visible in runs_s. The row
+    // stamps "pub":"warm_median" so tools/check_scale.py can recompute the
+    // same rule from runs_s and fail on drift.
+    val error = lastErr.map(x => s"${x.getClass.getSimpleName}: " +
+      Option(x.getMessage).getOrElse("").take(120)).getOrElse("?")
+    val extra =
+      if (runs.isEmpty) Nil
+      else try extraFields() catch { case e: Throwable =>
+        Seq("extra_error" -> e.getClass.getSimpleName) }
+    ScaleRow(key, name, runs.toSeq, extra = extra, retries = extraRuns,
+      errorRuns = errorRuns, error = error,
+      cores = spark.sparkContext.defaultParallelism, diskAvailGb = diskAvailGb(dir))
   }
 
   /** The published wall of a scale row from its CHRONOLOGICAL run walls:
@@ -1327,9 +1146,8 @@ object Bench {
     else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
   }
 
-  private def scaleErr(e: Throwable): String =
-    s"""{"error":"${e.getClass.getSimpleName}: ${Option(e.getMessage)
-      .getOrElse("").replaceAll("[\"\\\\\n\r\t]", " ").take(120)}"}"""
+  private def scaleErr(e: Throwable): JObject =
+    obj("error" -> s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")
 
   // s07's REGISTRY form runs the demo corpus's weak 0.45 threshold, where
   // LSH completeness forces coarse buckets and the candidate mass is
@@ -1341,7 +1159,7 @@ object Bench {
   // ~200-row mean bucket at 100× (200k vectors) and its ~320 M-pair
   // verify join ENOSPC'd an 80 GB disk — planes must track log₂(n) and
   // tables the miss bound, together.
-  private def s07Production(s: SparkSession, dir: String): DataFrame =
+  private[graft] def s07Production(s: SparkSession, dir: String): DataFrame =
     graft.ops.Similarity.cosineNearDupBucketed(
       s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
       threshold = 0.9, point = graft.ops.FromCorpus)
@@ -1360,21 +1178,22 @@ object Bench {
     *    blow-up).
     */
   private def corpusPointExtra(key: String, spark: SparkSession,
-      dir: String): () => String =
+      dir: String): () => Seq[(String, Any)] =
     if (key.startsWith("s07")) { () =>
       val (mass, maxB, n) = graft.ops.Similarity.lshCandidateMass(
         spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
         threshold = 0.9)
       val (p, t) = graft.ops.Similarity.lshOperatingPoint(n, 0.9)
-      s""","op_point":"planes=$p,tables=$t","cand_pair_mass":$mass,"max_bucket":$maxB,"corpus_n":$n"""
+      Seq("op_point" -> s"planes=$p,tables=$t", "cand_pair_mass" -> mass,
+        "max_bucket" -> maxB, "corpus_n" -> n)
     }
     else if (key.startsWith("d03auto")) { () =>
       val n = spark.read.parquet(s"$dir/documents.parquet").count()
       val (k, bands) = graft.ops.Dedup.minhashOperatingPoint(n, 0.8)
       val pin = n >= graft.ops.Dedup.PinLayoutMinDocs
-      s""","op_point":"k=$k,bands=$bands,pin=$pin""""
+      Seq("op_point" -> s"k=$k,bands=$bands,pin=$pin")
     }
-    else () => ""
+    else () => Nil
 
   // d03's scale twin at the jointly-scaled MinHash operating point
   // (Dedup.minhashOperatingPoint, r11 — the s07 auto-point treatment for
@@ -1523,8 +1342,8 @@ object Bench {
         lit(inPartition).as("files_in_partition"))
   }
 
-  private def scale10xRows(spark: SparkSession, listener: TaskStatsListener,
-      sfDir: String): (String, Seq[(String, Double)]) = {
+  private def scale10xRows(spark: SparkSession, telemetry: QueryTelemetry,
+      sfDir: String): (JValue, Seq[(String, Double)]) = {
     val workDir = sys.env.getOrElse("SPARK_GRAFT_10X_DIR", "/tmp/graft_scale10x")
     val targets: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
       "d03_minhash_lsh" -> SparkEntry.queries("d03_minhash_lsh"),
@@ -1536,25 +1355,16 @@ object Bench {
       ScalingRehearsal.synthesizeScaled(spark, sfDir, workDir, 10)
       ScalingRehearsal.synthesizeScaledEmbeddings(spark, sfDir, workDir, 10)
       waitForQuiet(2.5, 240) // synth is our own load; let the 1-min avg decay
-      val out = targets.map { case (name, fn) =>
-        scaleRow(spark, listener, name.take(3) + "_10x", name, fn, workDir,
+      rowsSection(targets.map { case (name, fn) =>
+        scaleRow(spark, telemetry, name.take(3) + "_10x", name, fn, workDir,
           extraFields = corpusPointExtra(name, spark, workDir))
-      }
-      (out.map(_._1).mkString("{", ",", "}"), out.flatMap(_._2))
+      })
     } catch { case e: Throwable => (scaleErr(e), Seq.empty) }
   }
 
-  /** Secs pairs out of a scale100x rows JSON (format is ours — each row
-    * leads with `"sec"`).
-    */
-  private def scale100xSecsOf(json: String): Seq[(String, Double)] =
-    // whitespace-tolerant: the artifact is normally compact, but any
-    // tooling that round-trips it through a pretty-printer must not
-    // silently empty the embed (r13: a json.dump with default separators
-    // published "scale100x_sec":{})
-    """"([a-z0-9_]+_100x)"\s*:\s*\{\s*"sec"\s*:\s*([0-9.]+)""".r
-      .findAllMatchIn(json)
-      .map(m => m.group(1) -> m.group(2).toDouble).toSeq
+  /** A scale section's rows object and its (key, published sec) pairs. */
+  private def rowsSection(rows: Seq[ScaleRow]): (JValue, Seq[(String, Double)]) =
+    (obj(rows.map(r => r.key -> r.json): _*), rows.flatMap(r => r.sec.map(r.key -> _)))
 
   /** Embed a previously-measured `bench_scale100x.json` (written by the
     * dedicated [[Scale100x]] child) so regenerating bench_full.json without
@@ -1563,16 +1373,15 @@ object Bench {
     * rows come from the standalone artifact (which carries its own heap_gb
     * and unix stamp), not from this run.
     */
-  private def scale100xFromArtifact(): (String, Seq[(String, Double)]) = {
+  private def scale100xFromArtifact(): (JValue, Seq[(String, Double)]) = {
     val p = java.nio.file.Paths.get("bench_scale100x.json").toAbsolutePath
     if (!java.nio.file.Files.exists(p))
-      ("""{"skipped":"opt-in (SPARK_GRAFT_SCALE100X=1)"}""",
-        Seq.empty[(String, Double)])
-    else {
-      val art = new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim
-      val tagged = "{\"source\":\"bench_scale100x.json\"," + art.stripPrefix("{")
-      (tagged, scale100xSecsOf(art))
-    }
+      (obj("skipped" -> "opt-in (SPARK_GRAFT_SCALE100X=1)"), Seq.empty[(String, Double)])
+    else try {
+      val art = BenchJson.parse(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+      val secs = Scale100x.rowsOf(art \ "rows").flatMap { case (k, v) => num(v \ "sec").map(k -> _) }
+      (JObject(("source" -> JString("bench_scale100x.json")) :: Scale100x.rowsOf(art)), secs)
+    } catch { case e: Throwable => (scaleErr(e), Seq.empty) }
   }
 
   /** Fork the 100× section into a dedicated child JVM ([[Scale100x]]): the
@@ -1590,15 +1399,10 @@ object Bench {
     * telemetry at 32 GB stays ~1 s/run: the corpus never needed the big
     * heap — the page cache did. Override via SPARK_GRAFT_100X_HEAP.
     */
-  private def scale100xForked(sfDir: String, cpus: String): (String, Seq[(String, Double)]) = {
+  private def scale100xForked(sfDir: String, cpus: String): (JValue, Seq[(String, Double)]) = {
     try {
-      val javaBin = System.getProperty("java.home") + "/bin/java"
-      val cp = System.getProperty("java.class.path")
-      val heap = sys.env.getOrElse("SPARK_GRAFT_100X_HEAP", "32g")
-      val cmd = (Seq(javaBin, s"-Xmx$heap", "-Dspark.ui.enabled=false",
-        "-Dspark.sql.session.timeZone=UTC") ++ jdk17AddOpens ++
-        Seq("-cp", cp, "graft.Scale100x", sfDir, cpus)).toArray
-      val pb = new ProcessBuilder(cmd: _*)
+      val pb = childJvm(sys.env.getOrElse("SPARK_GRAFT_100X_HEAP", "32g"),
+        "graft.Scale100x", sfDir, cpus)
       // the child's whole job is quiet measurement — give it a real quiet
       // budget (Scale100x.main also raises it for direct launches)
       if (!pb.environment().containsKey("SPARK_GRAFT_QUIET_CAP_S"))
@@ -1612,9 +1416,9 @@ object Bench {
       // so even a timeout keeps the rows already measured.
       val waitS = math.min(math.max(remainingS - 60, 300), 9000)
       val done = p.waitFor(waitS, java.util.concurrent.TimeUnit.SECONDS)
-      if (!done) { p.destroyForcibly(); ("""{"error":"timeout"}""", Seq.empty) }
+      if (!done) { p.destroyForcibly(); (obj("error" -> "timeout"), Seq.empty) }
       else if (p.exitValue() != 0)
-        (s"""{"error":"child exit ${p.exitValue()}"}""", Seq.empty)
+        (obj("error" -> s"child exit ${p.exitValue()}"), Seq.empty)
       else scale100xFromArtifact()
     } catch { case e: Throwable => (scaleErr(e), Seq.empty) }
   }
@@ -1706,9 +1510,9 @@ object Bench {
 
   private[graft] def scale100xExpectedKeys: Seq[String] = scale100xTargets.map(_._1)
 
-  private[graft] def scale100xRows(spark0: SparkSession, listener0: TaskStatsListener,
+  private[graft] def scale100xRows(spark0: SparkSession,
       sfDir: String, cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
-      onRow: String => Unit = _ => ()): (String, Seq[(String, Double)]) = {
+      onRow: ScaleRow => Unit = _ => ()): (JValue, Seq[(String, Double)]) = {
     val workDir =
       sys.env.getOrElse("SPARK_GRAFT_100X_DIR", "/tmp/graft_scale100x")
     val targets = scale100xTargets
@@ -1747,7 +1551,7 @@ object Bench {
         // finer splits bound the per-task exposure window exactly like
         // they bound the straggler on a real cluster
         "spark.sql.files.maxPartitionBytes" -> "16m"),
-      // d06's dominant stage is the Jaccard verify join (StageProbe: 678 of
+      // d06's dominant stage is the Jaccard verify join (per-stage telemetry: 678 of
       // ~1600 task-seconds, 37.7 MB/task at width 32) — the same
       // compute-dense shuffle shape as s07's verify, so it gets the same
       // treatment: pre-coalesce granularity + a 16 MB advisory splits it to
@@ -1791,7 +1595,7 @@ object Bench {
       // d07's curation composite: default one-wave (32-task) shuffle
       // stages carry ~4.1 s max tasks on a clean host but straddle the
       // 5 s bar on slower windows (r14: 5.1-6.3 s at quiet load).
-      // StageProbe A/B: TWO waves (64 partitions, parallelismFirst=false,
+      // Per-stage A/B: TWO waves (64 partitions, parallelismFirst=false,
       // 8 MB advisory) halve the straggler (3.2 s) AND cut wall 56→46 s —
       // the second wave overlaps scheduling slack. The d06-style 16 MB
       // file-split treatment was probed and measured 2.7× WORSE here
@@ -1817,8 +1621,7 @@ object Bench {
       ScalingRehearsal.synthesizeScaledValues(spark0, sfDir, workDir, 100)
       ScalingRehearsal.synthesizeScaledLineitem(spark0, sfDir, workDir, 100)
       var spark = spark0
-      var listener = listener0
-      val out = selected.map { case (key, name, fn) =>
+      rowsSection(selected.map { case (key, name, fn) =>
         // FRESH session + quiet gate per row (r10: rows used to share one
         // session back-to-back, so each row ran under the previous row's
         // 1-min loadavg wake — d07, last and single-run, published 65 s at
@@ -1838,29 +1641,28 @@ object Bench {
         // spreads signature compute with n·tables·planes (the r10 9.7 s
         // s07 task was one default input split computing a quarter of all
         // signatures).
-        val fresh = freshSession(cpus)
-        spark = fresh._1; listener = fresh._2
+        val (fresh, telemetry) = freshSession(cpus)
+        spark = fresh
         rowConfs.getOrElse(key, Nil).foreach { case (k, v) =>
           spark.conf.set(k, v) }
-        val row = scaleRow(spark, listener, key, name, fn, workDir,
+        val row = scaleRow(spark, telemetry, key, name, fn, workDir,
           measuredRuns = 2, gateEveryRun = true,
           extraFields = corpusPointExtra(key, spark, workDir))
         // Per-row persistence hook (ADVICE r11): Scale100x merges each row
         // into the artifact as it completes, so a parent timeout or a later
         // row's crash keeps every row already measured.
-        onRow(row._1)
+        onRow(row)
         row
-      }
-      (out.map(_._1).mkString("{", ",", "}"), out.flatMap(_._2))
+      })
     } catch { case e: Throwable => (scaleErr(e), Seq.empty) }
   }
 
-  /** Fork a child JVM at -Xmx8g and re-measure d07 there (VERDICT r7 #8).
-    * The sweep's ~96 GB heap can absorb a whole run's ContextCleaner debt
-    * without a single major GC — precisely the condition that hid the r6
-    * 56× inflation — so this row is the regression guard for that class:
-    * it must stay within ~2× of the big-heap d07 row.
-    */
+  /** A child JVM on this classpath running `main`, with the Spark flags. */
+  private def childJvm(heap: String, main: String, args: String*): ProcessBuilder =
+    new ProcessBuilder((Seq(System.getProperty("java.home") + "/bin/java", s"-Xmx$heap",
+      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC") ++ jdk17AddOpens ++
+      Seq("-cp", System.getProperty("java.class.path"), main) ++ args): _*)
+
   private val jdk17AddOpens: Seq[String] = Seq(
     "java.base/java.lang", "java.base/java.lang.invoke",
     "java.base/java.lang.reflect", "java.base/java.io",
@@ -1871,27 +1673,25 @@ object Bench {
     "java.base/sun.security.action", "java.base/sun.util.calendar"
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
+  /** Fork a child JVM at -Xmx8g and re-measure `names` there (VERDICT r7
+    * #8). A big heap can absorb a whole run's ContextCleaner debt without
+    * a single major GC — precisely the condition that hid the r6 56×
+    * inflation — so these rows are the regression guard for that class:
+    * each must stay within ~2× of its big-heap sweep row.
+    */
   private def heapSmoke(sfDir: String, cpus: String,
-      names: Seq[String]): String = {
+      names: Seq[String]): JValue = {
     try {
-      val javaBin = System.getProperty("java.home") + "/bin/java"
-      val cp = System.getProperty("java.class.path")
-      val cmd = (Seq(javaBin, "-Xmx8g", "-Dspark.ui.enabled=false",
-        "-Dspark.sql.session.timeZone=UTC") ++ jdk17AddOpens ++
-        Seq("-cp", cp, "graft.HeapSmoke", sfDir, cpus) ++ names).toArray
-      val pb = new ProcessBuilder(cmd: _*)
+      val pb = childJvm("8g", "graft.HeapSmoke", sfDir +: cpus +: names: _*)
       pb.redirectError(ProcessBuilder.Redirect.INHERIT)
       val p = pb.start()
       val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
       val done = p.waitFor(600, java.util.concurrent.TimeUnit.SECONDS)
-      if (!done) { p.destroyForcibly(); """{"error":"timeout"}""" }
-      else out.linesIterator.toSeq.reverse.find(_.startsWith("{"))
-        .getOrElse(s"""{"error":"no json (exit ${p.exitValue()})"}""")
+      if (!done) { p.destroyForcibly(); obj("error" -> "timeout") }
+      else out.linesIterator.toSeq.reverse.find(_.startsWith("{")).map(BenchJson.parse)
+        .getOrElse(obj("error" -> s"no json (exit ${p.exitValue()})"))
     } catch { case e: Throwable => scaleErr(e) }
   }
-
-  private def stdev(xs: Seq[Double], mean: Double): Double =
-    math.sqrt(xs.map(x => (x - mean) * (x - mean)).sum / xs.size)
 
   /** Reference protocol: per (datatype, codec, mode) scenario, encrypt one
     * column batch per iteration; discard warmup; report avg/min/max wall ms
@@ -1905,7 +1705,7 @@ object Bench {
     * set is reported, flagged `"retried":true`.
     */
   private def cryptoGrid(spark: SparkSession, sfDir: String,
-      gridLoadavg: String = ""): String = {
+      gridLoadavg: String = ""): CryptoGrid = {
     val li = GraftTables.read(spark, sfDir, "lineitem")
       .select(
         concat_ws("|", col("l_orderkey"), col("l_returnflag"), col("l_shipdate"))
@@ -1916,15 +1716,12 @@ object Bench {
       .cache()
     val rows = li.count() // materialize cache
 
-    def measureScenario(body: () => Unit): (Seq[Double], Double, Double) = {
-      val times = (0 until Warmup + Iters).map { _ =>
+    def measureScenario(body: () => Unit): Seq[Double] =
+      (0 until Warmup + Iters).map { _ =>
         val t0 = System.nanoTime()
         body()
         (System.nanoTime() - t0) / 1e6
       }.drop(Warmup)
-      val avg = times.sum / times.size
-      (times, avg, stdev(times, avg))
-    }
     // Mid-grid load discipline: an unconditional loadavg gate per scenario
     // cannot work — the grid's OWN 32-thread bursts keep the 1-min average
     // above any useful threshold, so it would just sleep 60 s per row.
@@ -1933,24 +1730,20 @@ object Bench {
     // spike — r6's 27 s AES outlier) retries behind a REAL quiet gate: the
     // wait itself is idle, so self-load decays (τ = 60 s) and the gate then
     // distinguishes a still-busy machine from our own wake.
-    def gatedScenario(name: String, body: () => Unit): String = {
+    def gatedScenario(name: String, body: () => Unit): (String, CryptoRow) = {
       val load = loadavgStr()
       // machine-speed probe adjacent to the row (VERDICT r13 #8: the
       // whole-sweep cal held baseline while jvm_string_xor best halved —
       // a cal value NEXT TO each grid row says whether that's ambient)
       val cal = calSample(iters = 3)
-      var (times, avg, sd) = measureScenario(body)
-      var retried = false
-      if (sd > 0.5 * avg) {
+      val row = CryptoRow(measureScenario(body), rows, load, cal, Some(false))
+      if (row.stdev <= 0.5 * row.avg) name -> row
+      else {
         waitForQuiet(2.0, 150)
-        val (t2, a2, s2) = measureScenario(body)
-        if (s2 / a2 < sd / avg) { times = t2; avg = a2; sd = s2 }
-        retried = true
+        val again = row.copy(timesMs = measureScenario(body))
+        name -> (if (again.stdev / again.avg < row.stdev / row.avg) again else row)
+          .copy(retried = Some(true))
       }
-      // rows_per_s follows the reference protocol (avg); rows_per_s_best is
-      // the best-iteration figure — robust to ambient noise on the fast
-      // scenarios, where a few slow iterations can move the avg 30-50%
-      f""""$name":{"avg_ms":$avg%.1f,"min_ms":${times.min}%.1f,"max_ms":${times.max}%.1f,"stdev_ms":$sd%.1f,"rows_per_s":${rows / (avg / 1000)}%.0f,"rows_per_s_best":${rows / (times.min / 1000)}%.0f,"load":"$load","cal_mrows":${cal / 1e6}%.1f,"retried":$retried}"""
     }
 
     val scenarios = for {
@@ -1991,11 +1784,10 @@ object Bench {
       graft.core.CellCryptor(dt, graft.core.ProtectionContext("bench-key", "v"),
         codec, perValue = true)
     var jvmSink = 0L
-    def jvmScenario(name: String, body: () => Unit): String = {
+    def jvmScenario(name: String, body: () => Unit): (String, CryptoRow) = {
       val load = loadavgStr()
       val cal = calSample(iters = 3)
-      val (times, avg, sd) = measureScenario(body)
-      f""""$name":{"avg_ms":$avg%.1f,"min_ms":${times.min}%.1f,"max_ms":${times.max}%.1f,"stdev_ms":$sd%.1f,"rows_per_s":${rows / (avg / 1000)}%.0f,"rows_per_s_best":${rows / (times.min / 1000)}%.0f,"load":"$load","cal_mrows":${cal / 1e6}%.1f}"""
+      name -> CryptoRow(measureScenario(body), rows, load, cal, retried = None)
     }
     val jvmRows = Seq(CryptoCodec.Xor, CryptoCodec.AesDet).flatMap { codec =>
       val cs = jvmCryptor(StringType, codec)
@@ -2020,8 +1812,7 @@ object Bench {
     }
     if (jvmSink == Long.MinValue) Console.err.println("sink") // defeat DCE
     li.unpersist()
-    (scenarios ++ roundTrips ++ jvmRows)
-      .mkString(s"""{"rows":$rows,"loadavg_grid_start":"$gridLoadavg",""", ",", "}")
+    CryptoGrid(rows, gridLoadavg, scenarios ++ roundTrips ++ jvmRows)
   }
 
   /** The reference harness's ACTUAL measured op: one raw page payload per
@@ -2032,7 +1823,7 @@ object Bench {
     * are directly comparable; BYTE_ARRAY values come from lineitem (the
     * `--values_file` analog), one ~multi-MB page per iteration.
     */
-  private def pageGrid(spark: SparkSession, sfDir: String): String = {
+  private def pageGrid(spark: SparkSession, sfDir: String): PageGrid = {
     import java.nio.{ByteBuffer, ByteOrder}
     import graft.agent.LocalProtectionAgent
     import graft.core.PageCodec
@@ -2098,21 +1889,15 @@ object Bench {
       }.drop(Warmup)
       val load = loadavgStr()
       val cal = calSample(iters = 3)
-      var times = lap()
-      var avg = times.sum / times.size
-      var sd = stdev(times, avg)
-      var retried = false
-      if (sd > 0.5 * avg) {
+      val row = PageRow(lap(), n, payload.length, load, cal, retried = false)
+      if (row.stdev <= 0.5 * row.avg) name -> row
+      else {
         waitForQuiet(2.0, 120)
-        val t2 = lap()
-        val a2 = t2.sum / t2.size
-        val s2 = stdev(t2, a2)
-        if (s2 / a2 < sd / avg) { times = t2; avg = a2; sd = s2 }
-        retried = true
+        val again = row.copy(timesMs = lap())
+        name -> (if (again.stdev / again.avg < row.stdev / row.avg) again else row)
+          .copy(retried = true)
       }
-      val med = times.sorted.apply(times.size / 2)
-      f""""$name":{"avg_ms":$avg%.1f,"med_ms":$med%.1f,"min_ms":${times.min}%.1f,"max_ms":${times.max}%.1f,"stdev_ms":$sd%.1f,"values_per_s":${n / (avg / 1000)}%.0f,"values_per_s_med":${n / (med / 1000)}%.0f,"values_per_s_best":${n / (times.min / 1000)}%.0f,"mb_per_s":${payload.length / 1e6 / (avg / 1000)}%.1f,"load":"$load","cal_mrows":${cal / 1e6}%.1f,"retried":$retried}"""
     }
-    out.mkString(s"""{"values":$n,"payload_bytes":${valueBytes.length},""", ",", "}")
+    PageGrid(n, valueBytes.length, out)
   }
 }

@@ -1,21 +1,29 @@
 package graft
 
-import scala.collection.concurrent.TrieMap
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.GraftSession
 
-/** Plan inspection tool: prints the formatted physical plan and wall time
-  * for one or more queries. Usage:
-  *   sbt "runMain graft.Explain <sfDir> <query> [query ...]"
-  *   sbt "runMain graft.Explain <sfDir> <query> --plan"   (also dump plan)
-  *   sbt "runMain graft.Explain <sfDir> <query> --conf k=v"  (conf override)
+/** Plan and stage inspection tool: runs each query three times and prints
+  * each run's wall time. Every run starts after an untimed cache clear, so
+  * a query that caches internally pays its full cost in each run. Usage:
+  *   sbt "runMain graft.Explain <dataDir> <query> [query ...]"
+  *   sbt "runMain graft.Explain <dataDir> <query> --plan"   (also dump plan)
+  *   sbt "runMain graft.Explain <dataDir> <query> --stages" (run 3's work
+  *     counters — jobs, stages, shuffle write — and per-stage telemetry:
+  *     tasks, max and summed task ms, max task shuffle read and input, and
+  *     the stage's label, so a straggler hunt aims at the stage that owns
+  *     the task-seconds)
+  *   sbt "runMain graft.Explain <dataDir> <query> --conf k=v"  (conf override)
+  * `<query>` is a registry name, or `s07auto` for s07 at the production
+  * operating point the scale rows run ([[Bench.s07Production]]).
+  * `<dataDir>` may be a synthesized scale corpus (e.g. /tmp/graft_scale100x).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val wantPlan = args.contains("--plan")
+    val wantStages = args.contains("--stages")
     val confs = args.sliding(2).collect {
       case Array("--conf", kv) if kv.contains('=') =>
         val Array(k, v) = kv.split("=", 2); (k, v)
@@ -29,41 +37,30 @@ object Explain {
     }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // --stages: per-stage (tasks, max task ms, max task shuffle-read/input)
-    // for the LAST run of each query — pinpoints a hot stage/task without
-    // the UI (disabled in GraftSession)
-    val wantStages = args.contains("--stages")
-    val stageMax = new TrieMap[Int, (Int, Long, Long, Long)]()
-    if (wantStages) spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          val (n, ms, sr, in) = stageMax.getOrElse(t.stageId, (0, 0L, 0L, 0L))
-          stageMax.update(t.stageId, (n + 1,
-            math.max(ms, m.executorRunTime),
-            math.max(sr, m.shuffleReadMetrics.totalBytesRead),
-            math.max(in, m.inputMetrics.bytesRead)))
-        }
-      }
-    })
+    val telemetry = QueryTelemetry.attach(spark.sparkContext)
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      val df = fn(spark, sfDir)
+      val fn: (SparkSession, String) => DataFrame =
+        if (name == "s07auto") Bench.s07Production else SparkEntry.queries(name)
       if (wantPlan) {
         println(s"===== $name plan =====")
-        df.explain("formatted")
+        fn(spark, sfDir).explain("formatted")
       }
       (1 to 3).foreach { i =>
-        if (i == 3) stageMax.clear()
+        spark.catalog.clearCache()
         val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
+        val n = telemetry.tagged(s"$name.$i")(fn(spark, sfDir).count())
         println(f"$name run$i: ${(System.nanoTime() - t0) / 1e9}%.3f s  rows=$n")
       }
+      telemetry.drain()
+      val run3 = (1 to 3).map(i => telemetry.take(s"$name.$i")).last
       if (wantStages) {
-        println(s"===== $name per-stage maxima (run3) =====")
-        stageMax.toSeq.sortBy(_._1).foreach { case (sid, (n, ms, sr, in)) =>
-          println(f"stage $sid%4d  tasks=$n%4d  maxTask=$ms%6d ms  " +
-            f"maxShufRead=${sr / 1048576.0}%7.1f MiB  maxInput=${in / 1048576.0}%7.1f MiB")
+        println(s"===== $name run3: jobs=${run3.jobs} stages=${run3.stages} " +
+          s"shuffleWrite=${run3.shuffleWriteBytes} B/${run3.shuffleWriteRecords} records =====")
+        run3.perStage.foreach { s =>
+          println(f"stage ${s.stageId}%4d  tasks=${s.tasks}%4d  maxTask=${s.maxTaskMs}%6d ms  " +
+            f"sum=${s.sumTaskMs / 1000.0}%7.1f s  " +
+            f"maxShufRead=${s.maxShuffleReadBytes / 1048576.0}%7.1f MiB  " +
+            f"maxInput=${s.maxInputBytes / 1048576.0}%7.1f MiB  ${s.name}")
         }
       }
     }

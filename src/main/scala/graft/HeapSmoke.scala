@@ -1,56 +1,26 @@
 package graft
 
-import graft.queries.GraftSession
-
 /** Small-heap re-measurement child (forked by [[Bench]] at `-Xmx8g` —
-  * VERDICT r7 #8). The bench sweep runs on a ~96 GB heap, which can absorb
+  * VERDICT r7 #8). The bench sweep runs on a bigger heap, which can absorb
   * a whole run's ContextCleaner debt without a single major GC — exactly
   * the condition that let the r6 56× sweep inflation go unnoticed until the
-  * heaviest query paid the debt. This main replays the sweep's per-query
-  * protocol (clearCache → System.gc → 1 warmup + 3 timed iterations) on a
-  * deliberately small heap and prints ONE JSON line; the parent embeds it
-  * as the `heap8g` section. A result > ~2× the big-heap median means the
-  * GC-debt bug class is back.
+  * heaviest query paid the debt. This main runs the sweep's own
+  * [[Bench.measure]] on a deliberately small heap and prints ONE JSON line
+  * of the sweep's [[QueryStat]] rows, which the parent embeds as the
+  * `heap8g` section. A median > ~2× the big-heap one means the GC-debt bug
+  * class is back.
   *
   * Usage: `graft.HeapSmoke <sfDir> <cpus> <query> [query ...]`
   */
 object HeapSmoke {
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val cpus = args(1)
-    val names = args.drop(2).toSeq
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def gcMs(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    }
-    val rows = names.map { name =>
-      try {
-        val fn = SparkEntry.queries(name)
-        spark.catalog.clearCache()
-        System.gc()
-        Thread.sleep(200)
-        val gc0 = gcMs()
-        val times = (0 until 4).map { _ =>
-          // same per-iteration cache clear as the sweep's measure() (r10):
-          // a query that caches internally must pay its full cold cost in
-          // EVERY timed run, or the heap8g/big-heap ratio compares a warm
-          // child against a cold sweep and the cross-check reads backwards
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        }.drop(1).sorted
-        f""""$name":{"med":${times(times.size / 2)}%.3f,"min":${times.head}%.3f,"max":${times.last}%.3f,"gc_s":${(gcMs() - gc0) / 1e3}%.2f}"""
-      } catch {
-        case e: Throwable =>
-          s""""$name":{"error":"${e.getClass.getSimpleName}"}"""
-      }
+    val Array(sfDir, cpus) = args.take(2)
+    val (spark, telemetry) = Bench.freshSession(cpus)
+    val rows = args.drop(2).toSeq.map { name =>
+      name -> Bench.measure(spark, telemetry, SparkEntry.queries(name), sfDir).json
     }
     val heapGb = Runtime.getRuntime.maxMemory / 1e9
-    println(rows.mkString(f"""{"heap_gb":$heapGb%.1f,""", ",", "}"))
+    println(BenchJson.render(BenchJson.obj(("heap_gb" -> BenchJson.fixed(heapGb, 1)) +: rows: _*)))
     spark.stop()
   }
 }

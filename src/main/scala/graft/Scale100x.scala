@@ -24,12 +24,20 @@ object Scale100x {
   import org.json4s._
   import org.json4s.jackson.JsonMethods
 
+  import BenchJson.{fixed, obj, parse, render}
+
   /** The merge-time evidence bars — the SAME values tools/check_scale.py
     * gates on (it reads the artifact's "merge_bars" stamp and fails on
     * drift, so this object is the single source).
     */
   private[graft] val MaxTaskMs = 5000L
   private[graft] val MaxLoad = 4.0
+
+  /** The fields of a JSON object (an artifact's rows), or none. */
+  private[graft] def rowsOf(j: JValue): List[(String, JValue)] = j match {
+    case JObject(fields) => fields
+    case _ => Nil
+  }
 
   /** Merge newly-measured rows over the existing artifact's rows: new
     * successful rows (carrying "sec") win; an error row never evicts a
@@ -44,10 +52,6 @@ object Scale100x {
     */
   private[graft] def mergeRows(existingArtifact: Option[String],
       newRowsJson: String, unix: Long): (String, Int) = {
-    def rowsOf(j: JValue): List[(String, JValue)] = j match {
-      case JObject(fields) => fields
-      case _ => Nil
-    }
     // the straggler + quiet-load bars (r14: a best run logged at loadavg
     // 4.01 evicted a load-passing committed row because only the straggler
     // bar was merge-checked). MaxTaskMs/MaxLoad are stamped into the
@@ -73,9 +77,9 @@ object Scale100x {
       }
       taskOk && loadOk
     }
-    val existingRows: Map[String, JValue] = existingArtifact
-      .map(a => rowsOf(JsonMethods.parse(a) \ "rows").toMap)
-      .getOrElse(Map.empty)
+    val existing = existingArtifact
+      .map(a => rowsOf(JsonMethods.parse(a) \ "rows")).getOrElse(Nil)
+    val existingRows = existing.toMap
     val fresh = rowsOf(JsonMethods.parse(newRowsJson)).collect {
       case (k, v: JObject) if (v \ "sec") != JNothing &&
           (passesBars(v, committedRow = false) ||
@@ -83,10 +87,7 @@ object Scale100x {
         k -> JObject(v.obj :+ ("unix" -> JLong(unix)))
     }
     val freshKeys = fresh.map(_._1).toSet
-    val kept = existingArtifact
-      .map(a => rowsOf(JsonMethods.parse(a) \ "rows"))
-      .getOrElse(Nil)
-      .filterNot { case (k, _) => freshKeys.contains(k) }
+    val kept = existing.filterNot { case (k, _) => freshKeys.contains(k) }
     (JsonMethods.compact(JsonMethods.render(JObject(kept ++ fresh))),
       fresh.size)
   }
@@ -105,12 +106,6 @@ object Scale100x {
     val cpus = args.lift(1).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val heapGb = Runtime.getRuntime.maxMemory / 1e9
     val path = java.nio.file.Paths.get("bench_scale100x.json").toAbsolutePath
-    // The expected-row list is emitted INTO the artifact (VERDICT r11 #5):
-    // tools/check_scale.py bar-checks exactly this list (plus a count
-    // floor), so Bench.scale100xTargets is the single registry — adding a
-    // row there gets it bar-checked without touching the checker.
-    val expectedJson = Bench.scale100xExpectedKeys
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
 
     def readExisting(): Option[String] =
       if (java.nio.file.Files.exists(path))
@@ -125,8 +120,13 @@ object Scale100x {
         val unix = System.currentTimeMillis() / 1000
         val (mergedRows, nFresh) = mergeRows(readExisting(), rowsJson, unix)
         if (nFresh > 0) {
-          val out = f"""{"heap_gb":$heapGb%.1f,"unix":$unix,"sf":"$sfDir","merge_bars":{"max_task_ms":$MaxTaskMs,"max_load":$MaxLoad%.1f},"expected_rows":$expectedJson,"rows":$mergedRows}"""
-          java.nio.file.Files.write(path, (out + "\n").getBytes("UTF-8"))
+          // The expected-row list is emitted INTO the artifact (VERDICT r11
+          // #5): tools/check_scale.py bar-checks exactly this list (plus a
+          // count floor), so Bench.scale100xTargets is the single registry.
+          val out = obj("heap_gb" -> fixed(heapGb, 1), "unix" -> unix, "sf" -> sfDir,
+            "merge_bars" -> obj("max_task_ms" -> MaxTaskMs, "max_load" -> fixed(MaxLoad, 1)),
+            "expected_rows" -> Bench.scale100xExpectedKeys, "rows" -> parse(mergedRows))
+          java.nio.file.Files.write(path, (render(out) + "\n").getBytes("UTF-8"))
         }
         nFresh
       } catch { case e: Throwable =>
@@ -134,7 +134,7 @@ object Scale100x {
         0
       }
 
-    val (spark, listener) = Bench.freshSession(cpus)
+    val (spark, _) = Bench.freshSession(cpus)
     // scale100xRows gives each row its own fresh session (quiet-gated,
     // corpus-scaled shuffle partitions) — this session only synthesizes.
     // Rows persist into the artifact ONE BY ONE (ADVICE r11: the parent's
@@ -142,13 +142,13 @@ object Scale100x {
     // was only written at the end), so any interruption keeps every row
     // already measured.
     var nFresh = 0
-    val (json, secs) = Bench.scale100xRows(spark, listener, sfDir, cpus,
-      onRow = row => nFresh += persist("{" + row + "}"))
+    val (json, secs) = Bench.scale100xRows(spark, sfDir, cpus,
+      onRow = row => nFresh += persist(render(obj(row.key -> row.json))))
     if (nFresh > 0) {
       println(s"scale100x rows written ($nFresh fresh, merged per-row): " +
         secs.map { case (k, v) => f"$k=$v%.1fs" }.mkString(", "))
     } else {
-      println(s"scale100x produced NO successful rows, artifact untouched: $json")
+      println(s"scale100x produced NO successful rows, artifact untouched: ${render(json)}")
       spark.stop()
       sys.exit(1)
     }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,23 +26,6 @@ import graft.queries.GraftSession
   * the 10× table under workDir and prints a markdown table for SCALING.md.
   */
 object ScalingRehearsal {
-
-  /** Max single-task input/shuffle-read bytes and task time, per query run. */
-  private final class TaskMaxListener extends SparkListener {
-    val maxInput = new java.util.concurrent.atomic.AtomicLong
-    val maxShuffleRead = new java.util.concurrent.atomic.AtomicLong
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        maxInput.getAndAccumulate(m.inputMetrics.bytesRead, Math.max)
-        maxShuffleRead.getAndAccumulate(
-          m.shuffleReadMetrics.totalBytesRead, Math.max)
-        maxTaskMs.getAndAccumulate(m.executorRunTime, Math.max)
-      }
-    }
-    def reset(): Unit = { maxInput.set(0); maxShuffleRead.set(0); maxTaskMs.set(0) }
-  }
 
   def synthesize10x(spark: SparkSession, sfDir: String, outDir: String): Long =
     synthesizeScaled(spark, sfDir, outDir, 10)
@@ -235,8 +217,7 @@ object ScalingRehearsal {
     val workDir = args.lift(1).getOrElse("/tmp/graft_scale10x")
     val spark = GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val listener = new TaskMaxListener
-    spark.sparkContext.addSparkListener(listener)
+    val telemetry = QueryTelemetry.attach(spark.sparkContext)
 
     val n10 = synthesize10x(spark, sfDir, workDir)
     val e10 = synthesize10xEmbeddings(spark, sfDir, workDir)
@@ -250,12 +231,12 @@ object ScalingRehearsal {
     val queries = SparkEntry.queries
 
     def timed(name: String, dir: String): (Double, Long, Long, Long, Long) = {
-      listener.reset()
       val t0 = System.nanoTime()
-      val rows = queries(name)(spark, dir).count()
+      val rows = telemetry.tagged(name)(queries(name)(spark, dir).count())
       val sec = (System.nanoTime() - t0) / 1e9
-      (sec, rows, listener.maxInput.get, listener.maxShuffleRead.get,
-        listener.maxTaskMs.get)
+      telemetry.drain()
+      val w = telemetry.take(name)
+      (sec, rows, w.maxInputBytes, w.maxShuffleReadBytes, w.maxTaskMs)
     }
 
     println("| query | 1x sec | 10x sec | exponent | 1x rows | 10x rows | " +

@@ -51,14 +51,14 @@ object Jwt {
     * `Left(reason)` on any failure, never an exception.
     */
   def verify(token: String, secretKey: String, nowSeconds: Long): Either[String, String] = {
-    val parts = token.split('.')
+    // limit -1 keeps trailing empty parts, so "h.p.s." is four parts, not three
+    val parts = token.split("\\.", -1)
     if (parts.length != 3 || parts.exists(_.isEmpty))
       return Left("malformed token: expected header.payload.signature")
-    val (headerJson, payloadJson, signature) =
+    val (headerJson, payloadJson) =
       try {
-        (new String(b64dec.decode(parts(0)), UTF_8),
-          new String(b64dec.decode(parts(1)), UTF_8),
-          b64dec.decode(parts(2)))
+        b64dec.decode(parts(2)) // well-formed; compared as text below
+        (new String(b64dec.decode(parts(0)), UTF_8), new String(b64dec.decode(parts(1)), UTF_8))
       } catch {
         case e: IllegalArgumentException => return Left(s"invalid base64url: ${e.getMessage}")
       }
@@ -67,9 +67,12 @@ object Jwt {
       catch { case e: Exception => return Left(s"invalid header JSON: ${e.getMessage}") }
     if (!header.get("alg").contains(Algorithm))
       return Left(s"unsupported algorithm: ${header.getOrElse("alg", "<missing>")}")
-    // Constant-time signature compare over the exact bytes that were signed.
-    val expected = hmacSha256(secretKey, parts(0) + "." + parts(1))
-    if (!MessageDigest.isEqual(expected, signature))
+    // Constant-time compare of the signature TEXT over the exact bytes that
+    // were signed. Base64url leaves the last character's low bits unused and
+    // the decoder ignores them, so comparing decoded bytes would accept a
+    // token whose signature was re-spelled in those bits.
+    val expected = b64.encodeToString(hmacSha256(secretKey, parts(0) + "." + parts(1)))
+    if (!MessageDigest.isEqual(expected.getBytes(UTF_8), parts(2).getBytes(UTF_8)))
       return Left("signature verification failed")
     val claims =
       try FlatJson.parse(payloadJson)

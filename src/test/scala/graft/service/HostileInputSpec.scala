@@ -251,4 +251,48 @@ class HostileInputSpec extends AnyFunSuite {
         s"$endpoint rejections by kind: $rejected")
     }
   }
+
+  /** Truncate, flip one bit, append dots, or replace with random token-ish text. */
+  private def tokenMutations(valid: String): Gen[(String, String)] = Gen.oneOf(
+    Gen.choose(0, valid.length - 1).map(n => "truncated" -> valid.take(n)),
+    for (i <- Gen.choose(0, valid.length - 1); b <- Gen.choose(0, 7)) yield {
+      val m = valid.getBytes(UTF_8); m(i) = (m(i) ^ (1 << b)).toByte
+      "flipped" -> new String(m, UTF_8)
+    },
+    Gen.choose(1, 3).map(n => "dotted" -> (valid + "." * n)),
+    Gen.choose(0, 80).flatMap(n => Gen.stringOfN(n, Gen.oneOf(Gen.alphaNumChar,
+      Gen.oneOf('.', '-', '_', '=', '+', '/')))).map("random" -> _))
+
+  test("property: mutated and random bearer tokens are rejected, never thrown on or accepted") {
+    val secret = "spec-jwt-secret"
+    val now = 1700000000L
+    val store = new ClientCredentialStore(secret, () => now)
+    store.init(Map("graft" -> "graft-api-key"))
+    val service = new ProtectionService(store)
+    val (token, _) = store.generateJwt("graft", "graft-api-key").get
+    assert(Jwt.verify(token, secret, now) == Right("graft"))
+    // trailing empty parts once passed the three-part check
+    for (dots <- Seq(".", "...")) assert(Jwt.verify(token + dots, secret, now).isLeft)
+    // the signature's last character carries bits the decoder ignores: every
+    // other spelling of those bits once decoded to the same signature
+    val alphabet = ('A' to 'Z') ++ ('a' to 'z') ++ ('0' to '9') ++ Seq('-', '_')
+    val last = alphabet.indexOf(token.last)
+    for (v <- (last & ~3) to (last | 3) if v != last)
+      assert(Jwt.verify(token.init + alphabet(v), secret, now).isLeft, alphabet(v))
+    val rejected = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    forAll(tokenMutations(token), 500) { case (kind, t) =>
+      val where = s"$kind token: $t"
+      val verdict = try Jwt.verify(t, secret, now) catch {
+        case e: Throwable => fail(s"verify threw on a $where: $e")
+      }
+      assert(verdict.isLeft, where)
+      val denied = try store.verifyTokenForEndpoint(s"Bearer $t") catch {
+        case e: Throwable => fail(s"verifyTokenForEndpoint threw on a $where: $e")
+      }
+      assert(denied.nonEmpty, where)
+      assert(service.get("/statusz", Map("Authorization" -> s"Bearer $t")).status == 401, where)
+      rejected(kind) += 1
+    }
+    assert(rejected.keySet == Set("truncated", "flipped", "dotted", "random"), rejected)
+  }
 }
