@@ -7,10 +7,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
 
-/** One finished task's metrics. */
+/** One finished task's metrics. `recordsRead` counts the rows it read from a
+  * scan or a shuffle.
+  */
 final case class TaskWork(stageId: Int, runMs: Long, cpuMs: Long, gcMs: Long,
     inputBytes: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
-    shuffleWriteRecords: Long)
+    shuffleWriteRecords: Long, recordsRead: Long)
 
 /** One stage's tasks, summed and maxed, with the stage's label. */
 final case class StageWork(stageId: Int, name: String, tasks: Int, maxTaskMs: Long,
@@ -85,10 +87,11 @@ final class QueryTelemetry private (sc: SparkContext) extends SparkListener {
     if (tag.startsWith(MarkerPrefix)) { ended.add(tag); return }
     val m = e.taskMetrics
     val rec =
-      if (m == null) TaskWork(e.stageId, 0, 0, 0, 0, 0, 0, 0)
+      if (m == null) TaskWork(e.stageId, 0, 0, 0, 0, 0, 0, 0, 0)
       else TaskWork(e.stageId, m.executorRunTime, m.executorCpuTime / 1000000L,
         m.jvmGCTime, m.inputMetrics.bytesRead, m.shuffleReadMetrics.totalBytesRead,
-        m.shuffleWriteMetrics.bytesWritten, m.shuffleWriteMetrics.recordsWritten)
+        m.shuffleWriteMetrics.bytesWritten, m.shuffleWriteMetrics.recordsWritten,
+        m.inputMetrics.recordsRead + m.shuffleReadMetrics.recordsRead)
     tasks.computeIfAbsent(tag, _ => new ConcurrentLinkedQueue[TaskWork]()).add(rec)
   }
 

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.SplitProbe
+
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, shingling, language-ID heuristic, quality scoring,
   * fingerprinting. All pure column expressions (codegen'd, no UDFs) — at
@@ -27,28 +29,13 @@ object TextOps {
     * width-32 kilobyte partitions as +40-50 % wall on this corpus via pure
     * scheduling overhead). On a many-file table (every real corpus) the
     * split count already exceeds `width` and this is a no-op — the shuffle
-    * only ever moves data that fit in ≤ width-1 splits.
+    * only ever moves data that fit in ≤ width-1 splits. Splits count only
+    * when they hold rows ([[SplitProbe]]): a one-row-group file cut into
+    * byte ranges is one split's work however many ranges it has.
     */
   def spreadCompute(df: DataFrame): DataFrame = {
-    if (df.isStreaming) return df
-    val conf = df.sparkSession.sessionState.conf
-    val width = math.min(8, conf.numShufflePartitions)
-    if (width <= 1) return df
-    // Metadata-only short-circuit (VERDICT r16 #9): `df.rdd` converts the
-    // plan and computes the file-split packing — driver work a 100 TB table
-    // pays twice (once here, once for the real plan). Scan packing puts at
-    // most maxPartitionBytes/openCostInBytes files in one split, so a
-    // relation with ≥ that·width files PROVABLY yields ≥ width splits and
-    // the probe can answer from `inputFiles` (served by the relation's
-    // already-built FileIndex, no planning). Small/ambiguous tables (the
-    // only ones the spread can apply to) fall through to the exact probe.
-    val filesPerSplitMax = math.max(1L,
-      conf.filesMaxPartitionBytes / math.max(1L, conf.filesOpenCostInBytes))
-    val manyFiles =
-      try df.inputFiles.length.toLong >= filesPerSplitMax * width
-      catch { case _: Exception => false }
-    if (manyFiles || df.rdd.getNumPartitions >= width) df
-    else df.repartition(width)
+    val width = math.min(8, df.sparkSession.sessionState.conf.numShufflePartitions)
+    if (SplitProbe.narrowerThan(df, width)) df.repartition(width) else df
   }
 
   /** Word n-gram shingles. Guarded for short docs (sequence would descend). */

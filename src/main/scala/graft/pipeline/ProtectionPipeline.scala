@@ -3,7 +3,7 @@ package graft.pipeline
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
 import org.apache.spark.sql.types._
 
 import graft.core.{CryptoCodec, GraftInvalidInputException, ValueSerde}
@@ -50,6 +50,15 @@ final case class ColumnPolicy(
   * Spark type — the analog of the reference's `encryption_metadata` map
   * (`encryption_sequencer.cpp:38-44`), making protected frames
   * self-describing for decryption.
+  *
+  * A narrow input is spread before the protect projection: when fewer of its
+  * splits hold rows than `defaultParallelism` (a small or one-row-group
+  * file), `encrypt` and `decrypt` partition it to `defaultParallelism` by
+  * row position, so the projection runs on every core. Written output then
+  * has that many files, and row order is not kept (Spark never promised it;
+  * the round trip is per row). Many-file and many-row-group tables are left
+  * as they are.
+  * Two policies for one column are rejected.
   */
 object ProtectionPipeline {
   /** Version stamped into metadata; decrypt requires this prefix — same
@@ -77,8 +86,13 @@ object ProtectionPipeline {
     if (requested == PerValue && dt == BooleanType) PerBlock else requested
 
   def encrypt(df: DataFrame, policies: Seq[ColumnPolicy]): DataFrame = {
+    // a second policy would encrypt the first one's ciphertext while the
+    // metadata still stamps the plaintext type: no decrypt could restore it
+    policies.groupBy(_.column).collectFirst { case (c, ps) if ps.size > 1 => c }
+      .foreach(c => throw new GraftInvalidInputException(
+        s"more than one policy for column '$c'"))
     val byName = df.schema.fields.map(f => f.name -> f).toMap
-    policies.foldLeft(df) { (acc, p) =>
+    val projections = policies.map { p =>
       val field = byName.getOrElse(p.column,
         throw new GraftInvalidInputException(
           s"policy references missing column '${p.column}'"))
@@ -93,10 +107,34 @@ object ProtectionPipeline {
         .putString(KeyKeyId, p.keyId)
         .putString(KeyOrigType, field.dataType.json)
         .build()
-      val enc: Column = protect.encrypt_value(
-        col(p.column), p.keyId, p.codec, p.column, perValue = mode == PerValue)
-      acc.withColumn(p.column, enc.as(p.column, meta))
+      p.column -> protect.encrypt_value(
+        col(p.column), p.keyId, p.codec, p.column, perValue = mode == PerValue).as(p.column, meta)
     }
+    project(df, projections)
+  }
+
+  /** Apply the protect projection, spreading a narrow input first: when fewer
+    * of `df`'s splits hold rows than `defaultParallelism`
+    * ([[SplitProbe.narrowerThan]]), the frame is hash-partitioned to
+    * `defaultParallelism` on a row-position key, so the projection runs on
+    * every core instead of in the one task a single-row-group file gives.
+    *
+    * The key is each row's position in the input, never its values: the file
+    * a protected row lands in must tell nothing about its plaintext (a hash
+    * of the values would — murmur3's seed is public, so a guess could be
+    * checked against the file), and a key that reads no column leaves the
+    * scan pruned to the columns the caller uses. The probe spreads only
+    * frames read straight from their source, whose row order a retried task
+    * reproduces, so the placement is retry-deterministic without the sort a
+    * round-robin repartition adds. A spread frame counts as wide, so
+    * `decrypt(encrypt(x))` spreads once.
+    */
+  private def project(df: DataFrame, projections: Seq[(String, Column)]): DataFrame = {
+    val width = df.sparkSession.sparkContext.defaultParallelism
+    val input =
+      if (projections.isEmpty || !SplitProbe.narrowerThan(df, width)) df
+      else df.repartition(width, monotonically_increasing_id())
+    input.withColumns(projections.toMap)
   }
 
   /** Parse a stamped [[KeyOrigType]] value; an unparseable type is invalid
@@ -125,7 +163,7 @@ object ProtectionPipeline {
         throw new GraftInvalidInputException(
           s"columns not protected or absent: ${missing.mkString(", ")}")
     }
-    targets.foldLeft(df) { (acc, f) =>
+    project(df, targets.toSeq.map { f =>
       def invalid(key: String, why: String) =
         new GraftInvalidInputException(s"'$key' metadata on '${f.name}' $why")
       def stamped(key: String): String =
@@ -150,8 +188,8 @@ object ProtectionPipeline {
         throw invalid(KeyCodec, s"names an unknown codec '$codec'")
       val dec = protect.decrypt_value(col(f.name), stamped(KeyKeyId), origType,
         codec, f.name, perValue = mode == PerValue)
-      acc.withColumn(f.name, dec.as(f.name, Metadata.empty))
-    }
+      f.name -> dec.as(f.name, Metadata.empty)
+    })
   }
 
   /** A8 analog: assert an encrypt→decrypt round trip restored the schema. */

@@ -1,8 +1,18 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,7 +21,8 @@ import graft.functions.protect
 import graft.pipeline._
 
 /** FIXTURES.md §1 translation: per-type round-trip suites with null patterns,
-  * metadata/version semantics, boolean per-block fallback, determinism.
+  * metadata/version semantics, boolean per-block fallback, determinism; and
+  * the spread of narrow inputs before the protect projection.
   */
 class ProtectionPipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -219,5 +230,145 @@ class ProtectionPipelineSpec extends SparkSpec {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*(1) Project"), s"expected codegen'd Project in plan:\n$plan")
     assert(df.filter(col("id") === col("back")).count() == 1000)
+  }
+
+  test("two policies for one column are rejected at plan time, naming it") {
+    val df = Seq((1, "a")).toDF("i", "s")
+    val e = intercept[GraftInvalidInputException](ProtectionPipeline.encrypt(df, Seq(
+      ColumnPolicy("s", "k1"), ColumnPolicy("i", "k2"), ColumnPolicy("s", "k3", PerBlock))))
+    assert(e.getMessage.contains("'s'"), e.getMessage)
+  }
+
+  // ---------------------------------------------- spreading narrow inputs
+
+  private lazy val telemetry = QueryTelemetry.attach(spark.sparkContext)
+  private def cores = spark.sparkContext.defaultParallelism
+
+  /** `rows` rows of (id, name, amount[, m]) written as `files` parquet files;
+    * `rowGroupBytes` sets the parquet row-group size.
+    */
+  private def fixture(rows: Int, rowGroupBytes: Long, withMap: Boolean = false,
+      files: Int = 1): String = {
+    val dir = Files.createTempDirectory("graft-spread").resolve("t").toString
+    val base = spark.range(rows).select(col("id"),
+      concat(lit("name-"), col("id").cast("string")).as("name"),
+      (col("id") * 1.25).as("amount"))
+    val df = if (withMap) base.withColumn("m", map(col("name"), col("id"))) else base
+    df.repartition(files).write.option("parquet.block.size", rowGroupBytes).parquet(dir)
+    dir
+  }
+
+  /** Files Spark cuts into byte ranges of at most `bytes` while `body` runs. */
+  private def withSplitBytes[A](bytes: Long)(body: => A): A = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, bytes)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private def exchanges(df: DataFrame): Int = {
+    def count(p: SparkPlan): Int = (p match {
+      case a: AdaptiveSparkPlanExec => count(a.executedPlan)
+      case _: ShuffleExchangeLike => 1
+      case _ => 0
+    }) + p.children.map(count).sum
+    count(df.queryExecution.executedPlan)
+  }
+
+  private def rowGroups(dir: String): Int =
+    new java.io.File(dir).listFiles.filter(_.getName.endsWith(".parquet")).map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.getPath),
+        spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getBlocks.size finally r.close()
+    }.sum
+
+  private def sameRows(a: DataFrame, b: DataFrame): Unit = {
+    val cols = a.columns.map(col).toIndexedSeq
+    assert(a.count() == b.count() &&
+      a.select(cols: _*).exceptAll(b.select(cols: _*)).isEmpty)
+  }
+
+  private val policies = Seq(ColumnPolicy("name", "spread-n", PerValue, CryptoCodec.AesDet),
+    ColumnPolicy("amount", "spread-a", PerValue, CryptoCodec.Xor))
+
+  test("a one-row-group file cut into several splits is encrypted on several cores") {
+    val in = fixture(40000, 64L << 20)
+    assert(rowGroups(in) == 1)
+    val out = in + "-enc"
+    withSplitBytes(64L << 10) {
+      val df = spark.read.parquet(in)
+      assert(df.rdd.getNumPartitions >= cores, "the fixture must be cut into several splits")
+      val enc = telemetry.tagged("plan")(ProtectionPipeline.encrypt(df, policies))
+      telemetry.tagged("spread")(enc.write.parquet(out))
+    }
+    telemetry.drain()
+    assert(telemetry.take("plan").jobs == 0, "the split probe must start no job")
+    val work = telemetry.take("spread")
+    val projectStage = work.tasks.map(_.stageId).max
+    val withRows = work.tasks.count(t => t.stageId == projectStage && t.recordsRead > 0)
+    assert(withRows >= math.min(cores, 2), work.perStage)
+    val written = new java.io.File(out).listFiles.count(_.getName.endsWith(".parquet"))
+    assert(written == cores)
+    sameRows(ProtectionPipeline.decrypt(spark.read.parquet(out)), spark.read.parquet(in))
+  }
+
+  test("many-file and many-row-group inputs are left unspread") {
+    val manyFiles = fixture(40000, 64L << 20, files = 16)
+    val manyGroups = fixture(40000, 16L << 10)
+    assert(rowGroups(manyGroups) >= 8)
+    assert(exchanges(ProtectionPipeline.encrypt(spark.read.parquet(manyFiles), policies)) == 0)
+    withSplitBytes(64L << 10) {
+      val enc = ProtectionPipeline.encrypt(spark.read.parquet(manyGroups), policies)
+      assert(exchanges(enc) == 0)
+      sameRows(ProtectionPipeline.decrypt(enc), spark.read.parquet(manyGroups))
+    }
+  }
+
+  test("decrypt(encrypt(x)) in one plan spreads once") {
+    val in = fixture(20000, 64L << 20)
+    val df = spark.read.parquet(in)
+    val enc = ProtectionPipeline.encrypt(df, policies)
+    assert(exchanges(enc) == 1)
+    val back = ProtectionPipeline.decrypt(enc)
+    assert(exchanges(back) == 1)
+    sameRows(back, df)
+  }
+
+  test("a streaming frame is left as it is") {
+    val in = fixture(100, 64L << 20)
+    val stream = spark.readStream.schema(spark.read.parquet(in).schema).parquet(in)
+    val enc = ProtectionPipeline.encrypt(stream, policies)
+    assert(enc.isStreaming)
+    assert(enc.queryExecution.analyzed.collect { case r: RepartitionOperation => r }.isEmpty)
+  }
+
+  test("a frame with a map column round-trips through the spread") {
+    val in = fixture(5000, 64L << 20, withMap = true)
+    val df = spark.read.parquet(in)
+    val enc = ProtectionPipeline.encrypt(df, policies)
+    assert(exchanges(enc) == 1)
+    val back = ProtectionPipeline.decrypt(enc)
+    ProtectionPipeline.assertSchemaRestored(df.schema, back.schema)
+    val key = (r: Row) => r.getLong(0)
+    assert(back.collect().sortBy(key).toSeq == df.collect().sortBy(key).toSeq)
+  }
+
+  test("the file a spread row is written to does not depend on its protected values") {
+    val in = fixture(20000, 64L << 20)
+    // same rows in the same order, other plaintext in the protected columns
+    val other = in + "-other"
+    spark.read.parquet(in).withColumn("name", reverse(col("name")))
+      .withColumn("amount", -col("amount")).coalesce(1).write.parquet(other)
+    def idsPerFile(src: String): Map[String, Set[Long]] = {
+      val out = src + "-enc"
+      ProtectionPipeline.encrypt(spark.read.parquet(src), policies).write.parquet(out)
+      new java.io.File(out).listFiles.filter(_.getName.endsWith(".parquet")).map { f =>
+        f.getName.split('-')(1) ->
+          spark.read.parquet(f.getPath).select("id").collect().map(_.getLong(0)).toSet
+      }.toMap
+    }
+    val placed = idsPerFile(in)
+    assert(placed.size == cores)
+    assert(idsPerFile(other) == placed)
   }
 }
