@@ -237,7 +237,16 @@ object Bench {
     (spark, QueryTelemetry.attach(spark.sparkContext))
   }
 
-  /** Run one query's warmup + iterations on `spark`, with telemetry. */
+  /** Run one query's warmup + iterations on `spark`, with telemetry.
+    *
+    * Each iteration times `count()`, as every earlier sweep did, so the wall
+    * series stays comparable across rounds. `count()` lets the optimizer
+    * prune each projection it does not read: for the protected queries whose
+    * row count does not depend on the protected values (q21, q24, q27, q28)
+    * it removes the encrypt/decrypt work itself, so those rows time the scan
+    * and, where the input is spread, its exchange, not protection.
+    * `graft.Explain` times the full result ([[Explain.run]]).
+    */
   private[graft] def measure(spark: SparkSession, telemetry: QueryTelemetry,
       fn: (SparkSession, String) => DataFrame, sfDir: String): QueryStat = {
     spark.catalog.clearCache() // previous queries' unmanaged caches

@@ -32,51 +32,33 @@ final case class CellCryptor(
 
   def deterministic: Boolean = CryptoCodec.isDeterministic(codecName)
 
-  @transient private lazy val xorSeed: Option[Long] = codec match {
-    case x: XorCodec => Some(x.seed)
-    case _ => None
-  }
-
-  /** Catalyst value → framed ciphertext cell. XOR codecs take the fused
-    * path: keystream is XORed straight into the framed output buffer
-    * (reference `XorEncryptInto` discipline — no intermediate ciphertext).
+  /** Catalyst value → framed ciphertext cell. The cell is allocated once and
+    * the codec writes its ciphertext straight after the header (reference
+    * `XorEncryptInto` discipline — no intermediate ciphertext).
     */
   def encryptCell(v: Any): Array[Byte] = {
     val plain = ValueSerde.serialize(dataType, v)
-    xorSeed match {
-      case Some(seed) =>
-        val out = new Array[Byte](WireFormat.CellHeaderLen + plain.length)
-        WireFormat.writeCellHeader(out, modeByte, plain.length)
-        StableHash.xorKeystreamInto(seed, plain, out, WireFormat.CellHeaderLen)
-        out
-      case None =>
-        WireFormat.frameCell(modeByte, plain.length, codec.encrypt(plain))
-    }
+    val out = new Array[Byte](WireFormat.CellHeaderLen + codec.overhead + plain.length)
+    WireFormat.writeCellHeader(out, modeByte, plain.length)
+    codec.encryptInto(plain, out, WireFormat.CellHeaderLen)
+    out
   }
 
   /** Framed ciphertext cell → Catalyst value. Validates magic/version/mode/
     * length — the cell-level analog of the reference's decrypt-side
     * version + mode + field-match checks (`encryption_sequencer.cpp:335-365`,
-    * `dbpa_remote.cpp:286-296`).
+    * `dbpa_remote.cpp:286-296`). The codec reads the ciphertext in place.
     */
   def decryptCell(cell: Array[Byte]): Any = {
     val (mode, plen) = WireFormat.validateCellHeader(cell)
     if (mode != modeByte)
       throw new GraftInvalidInputException(
         f"mode mismatch: cell has 0x$mode%02x, column policy expects 0x$modeByte%02x")
-    val plain = xorSeed match {
-      case Some(seed) =>
-        // fused path: XOR straight out of the cell buffer, no ciphertext copy
-        val out = new Array[Byte](cell.length - WireFormat.CellHeaderLen)
-        StableHash.xorKeystreamFrom(seed, cell, WireFormat.CellHeaderLen, out)
-        out
-      case None =>
-        codec.decrypt(java.util.Arrays.copyOfRange(cell, WireFormat.CellHeaderLen, cell.length))
-    }
+    val plain = codec.decryptFrom(cell, WireFormat.CellHeaderLen)
     if (plain.length != plen)
       throw new GraftInvalidInputException(
         s"plaintext length mismatch: got ${plain.length}, header says $plen")
-    ValueSerde.deserialize(dataType, plain)
+    ValueSerde.deserialize(dataType, plain, fixedW)
   }
 
   /** Raw block encrypt — reference `EncryptBlock` parity (no framing,

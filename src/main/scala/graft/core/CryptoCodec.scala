@@ -2,7 +2,6 @@ package graft.core
 
 import java.security.MessageDigest
 import javax.crypto.Cipher
-import javax.crypto.Mac
 import javax.crypto.spec.SecretKeySpec
 
 /** Per-column encryption context — the analog of the reference's encryptor
@@ -21,6 +20,10 @@ final case class ProtectionContext(
 /** The engine's pluggable cipher — analog of the reference `DBPSEncryptor`
   * interface (`dbps_encryptor.h:42-118`). Block-level only; per-value framing
   * lives in [[WireFormat]] so every codec gets it for free.
+  *
+  * A codec writes its ciphertext into a caller's buffer and reads it back in
+  * place, so [[CellCryptor]] frames a cell with one allocation and no copy:
+  * a ciphertext is always exactly `overhead` bytes longer than its plaintext.
   */
 trait CryptoCodec extends Serializable {
   def name: String
@@ -28,8 +31,20 @@ trait CryptoCodec extends Serializable {
     * then fold/reuse these expressions and ciphertext equality joins work.
     */
   def deterministic: Boolean
-  def encrypt(data: Array[Byte]): Array[Byte]
-  def decrypt(data: Array[Byte]): Array[Byte]
+  /** Bytes a ciphertext adds to its plaintext. */
+  def overhead: Int
+  /** Encrypt `plain` into `out(off until off + overhead + plain.length)`. */
+  def encryptInto(plain: Array[Byte], out: Array[Byte], off: Int): Unit
+  /** Decrypt the ciphertext `data(off until data.length)`, read in place. */
+  def decryptFrom(data: Array[Byte], off: Int): Array[Byte]
+
+  final def encrypt(data: Array[Byte]): Array[Byte] = {
+    val out = new Array[Byte](overhead + data.length)
+    encryptInto(data, out, 0)
+    out
+  }
+
+  final def decrypt(data: Array[Byte]): Array[Byte] = decryptFrom(data, 0)
 }
 
 /** XOR-parity codec reproducing the reference `BasicXorEncryptor` keystream
@@ -39,11 +54,17 @@ trait CryptoCodec extends Serializable {
   * exactly like the reference's "basic" encryptor is a stand-in.
   */
 final case class XorCodec(ctx: ProtectionContext) extends CryptoCodec {
-  private[core] val seed: Long = StableHash.fnv1a64(ctx.seedString)
+  private val seed: Long = StableHash.fnv1a64(ctx.seedString)
   override def name: String = CryptoCodec.Xor
   override def deterministic: Boolean = true
-  override def encrypt(data: Array[Byte]): Array[Byte] = StableHash.xorKeystream(seed, data)
-  override def decrypt(data: Array[Byte]): Array[Byte] = StableHash.xorKeystream(seed, data)
+  override def overhead: Int = 0
+  override def encryptInto(plain: Array[Byte], out: Array[Byte], off: Int): Unit =
+    StableHash.xorKeystreamCopy(seed, plain, 0, out, off, plain.length)
+  override def decryptFrom(data: Array[Byte], off: Int): Array[Byte] = {
+    val out = new Array[Byte](data.length - off)
+    StableHash.xorKeystreamCopy(seed, data, off, out, 0, out.length)
+    out
+  }
 }
 
 /** Real cipher: AES-256-CTR + HMAC-SHA256, SIV-style (RFC 5297 shape with
@@ -60,10 +81,18 @@ final case class XorCodec(ctx: ProtectionContext) extends CryptoCodec {
   *    expressions carrying it are marked non-deterministic for Catalyst.
   *
   * Why CTR+HMAC instead of AES-GCM: deterministic (SIV) IVs with a *reused*
-  * Cipher instance trip SunJCE's GCM IV-reuse guard, and per-value
-  * `Cipher.getInstance` costs more than the encryption itself (~20×
-  * throughput loss measured at sf0.1). CTR has no reuse guard; primitives
-  * are cached per thread.
+  * Cipher instance trip SunJCE's GCM IV-reuse guard; CTR has no reuse guard.
+  *
+  * Per-value cost is dominated by JCE set-up, not by AES, so each thread
+  * builds one [[AesCodec.Kit]] per codec and keeps it:
+  *  - an `AES/ECB/NoPadding` cipher initialised once with the column key. It
+  *    is only the block primitive: CTR keystream block i is AES(IV + i), with
+  *    the IV read as a 128-bit big-endian counter that wraps, which is exactly
+  *    how SunJCE's `AES/CTR/NoPadding` counts, so the bytes are the same
+  *    without a `Cipher.init` and an `IvParameterSpec` per value;
+  *  - two SHA-256 digests that have already absorbed the HMAC ipad and opad
+  *    blocks. Each value clones them, so an HMAC costs two compressions, not
+  *    the four `javax.crypto.Mac` spends re-absorbing both pads per call.
   *
   * Keys are derived from the protection context via SHA-256 — a stand-in KMS,
   * mirroring how the reference derives everything from `key_id`
@@ -73,84 +102,147 @@ final case class AesCodec(ctx: ProtectionContext, override val deterministic: Bo
     extends CryptoCodec {
   import AesCodec._
 
-  @transient private lazy val keySpec =
-    new SecretKeySpec(sha256(("graft-aes-key:" + ctx.seedString).getBytes("UTF-8")), "AES")
-  @transient private lazy val ivKeyBytes: Array[Byte] =
+  @transient private lazy val aesKey: Array[Byte] =
+    sha256(("graft-aes-key:" + ctx.seedString).getBytes("UTF-8"))
+  @transient private lazy val ivKey: Array[Byte] =
     sha256(("graft-aes-iv:" + ctx.seedString).getBytes("UTF-8"))
   @transient private lazy val random = new java.security.SecureRandom()
-
-  // JCE service lookup is the dominant per-call cost — cache per thread.
-  @transient private lazy val cipherTL: ThreadLocal[Cipher] =
-    ThreadLocal.withInitial(() => Cipher.getInstance("AES/CTR/NoPadding"))
-  @transient private lazy val macTL: ThreadLocal[Mac] =
-    ThreadLocal.withInitial { () =>
-      val m = Mac.getInstance("HmacSHA256")
-      m.init(new SecretKeySpec(ivKeyBytes, "HmacSHA256"))
-      m // doFinal resets state, so one init per thread suffices
-    }
+  @transient private lazy val kits: ThreadLocal[Kit] =
+    ThreadLocal.withInitial(() => new Kit(aesKey, ivKey))
 
   override def name: String =
     if (deterministic) CryptoCodec.AesDet else CryptoCodec.AesRnd
 
-  private def hmac16(parts: Array[Byte]*): Array[Byte] = {
-    val m = macTL.get()
-    parts.foreach(m.update)
-    java.util.Arrays.copyOf(m.doFinal(), TagLen)
-  }
+  override def overhead: Int = if (deterministic) TagLen else 2 * TagLen
 
-  private def ctr(mode: Int, iv: Array[Byte], data: Array[Byte], off: Int): Array[Byte] = {
-    val c = cipherTL.get()
-    c.init(mode, keySpec, new javax.crypto.spec.IvParameterSpec(iv))
-    c.doFinal(data, off, data.length - off)
-  }
-
-  override def encrypt(data: Array[Byte]): Array[Byte] =
+  override def encryptInto(plain: Array[Byte], out: Array[Byte], off: Int): Unit = {
+    val kit = kits.get()
     if (deterministic) {
-      val tag = hmac16(data) // tag == SIV == CTR IV
-      val ct = ctr(Cipher.ENCRYPT_MODE, tag, data, 0)
-      val out = new Array[Byte](TagLen + ct.length)
-      System.arraycopy(tag, 0, out, 0, TagLen)
-      System.arraycopy(ct, 0, out, TagLen, ct.length)
-      out
+      val md = kit.macStart()
+      md.update(plain)
+      System.arraycopy(kit.macEnd(md), 0, out, off, TagLen) // tag == SIV == CTR IV
+      kit.ctr(out, off, plain, 0, out, off + TagLen, plain.length)
     } else {
-      val iv = new Array[Byte](TagLen)
+      val iv = kit.iv
       random.nextBytes(iv)
-      val ct = ctr(Cipher.ENCRYPT_MODE, iv, data, 0)
-      val tag = hmac16(iv, ct)
-      val out = new Array[Byte](2 * TagLen + ct.length)
-      System.arraycopy(iv, 0, out, 0, TagLen)
-      System.arraycopy(tag, 0, out, TagLen, TagLen)
-      System.arraycopy(ct, 0, out, 2 * TagLen, ct.length)
-      out
+      System.arraycopy(iv, 0, out, off, TagLen)
+      kit.ctr(iv, 0, plain, 0, out, off + 2 * TagLen, plain.length)
+      val md = kit.macStart()
+      md.update(iv)
+      md.update(out, off + 2 * TagLen, plain.length)
+      System.arraycopy(kit.macEnd(md), 0, out, off + TagLen, TagLen)
     }
+  }
 
-  override def decrypt(data: Array[Byte]): Array[Byte] =
+  override def decryptFrom(data: Array[Byte], off: Int): Array[Byte] = {
+    val kit = kits.get()
+    val len = data.length - off
     if (deterministic) {
-      if (data.length < TagLen)
-        throw new GraftInvalidInputException(
-          s"AES-SIV payload too short: ${data.length} bytes")
-      val tag = java.util.Arrays.copyOfRange(data, 0, TagLen)
-      val plain = ctr(Cipher.DECRYPT_MODE, tag, data, TagLen)
-      if (!java.security.MessageDigest.isEqual(hmac16(plain), tag))
+      if (len < TagLen)
+        throw new GraftInvalidInputException(s"AES-SIV payload too short: $len bytes")
+      val plain = new Array[Byte](len - TagLen)
+      kit.ctr(data, off, data, off + TagLen, plain, 0, plain.length)
+      val md = kit.macStart()
+      md.update(plain)
+      if (!kit.tagMatches(kit.macEnd(md), data, off))
         throw new GraftInvalidInputException("AES-SIV authentication failed")
       plain
     } else {
-      if (data.length < 2 * TagLen)
-        throw new GraftInvalidInputException(
-          s"AES-CTR payload too short: ${data.length} bytes")
-      val iv = java.util.Arrays.copyOfRange(data, 0, TagLen)
-      val tag = java.util.Arrays.copyOfRange(data, TagLen, 2 * TagLen)
-      val ct = java.util.Arrays.copyOfRange(data, 2 * TagLen, data.length)
-      if (!java.security.MessageDigest.isEqual(hmac16(iv, ct), tag))
+      if (len < 2 * TagLen)
+        throw new GraftInvalidInputException(s"AES-CTR payload too short: $len bytes")
+      val md = kit.macStart()
+      md.update(data, off, TagLen)
+      md.update(data, off + 2 * TagLen, len - 2 * TagLen)
+      if (!kit.tagMatches(kit.macEnd(md), data, off + TagLen))
         throw new GraftInvalidInputException("AES-CTR authentication failed")
-      ctr(Cipher.DECRYPT_MODE, iv, ct, 0)
+      val plain = new Array[Byte](len - 2 * TagLen)
+      kit.ctr(data, off, data, off + 2 * TagLen, plain, 0, plain.length)
+      plain
     }
+  }
 }
 
 object AesCodec {
   final val TagLen = 16
+  private final val HmacBlockLen = 64
+
   private def sha256(b: Array[Byte]): Array[Byte] =
     MessageDigest.getInstance("SHA-256").digest(b)
+
+  /** One thread's AES-SIV primitives for one key pair, with the scratch
+    * buffers they fill. Not thread-safe: reached only through a
+    * `ThreadLocal`, and every buffer it hands out is valid until its next call.
+    */
+  private final class Kit(aesKey: Array[Byte], macKey: Array[Byte]) {
+    private val aes = Cipher.getInstance("AES/ECB/NoPadding")
+    aes.init(Cipher.ENCRYPT_MODE, new SecretKeySpec(aesKey, "AES"))
+    private val inner = padded(0x36)
+    private val outer = padded(0x5c)
+    private val counter = new Array[Byte](TagLen)
+    private val keystream = new Array[Byte](TagLen)
+    private val digest = new Array[Byte](32)
+    private val tag = new Array[Byte](TagLen)
+    private val seen = new Array[Byte](TagLen)
+    /** Scratch for a random IV. */
+    val iv = new Array[Byte](TagLen)
+
+    /** SHA-256 that has absorbed the zero-padded key XOR `pad` (RFC 2104;
+      * the 32-byte derived key fits one block unhashed).
+      */
+    private def padded(pad: Int): MessageDigest = {
+      val block = Array.tabulate[Byte](HmacBlockLen) { i =>
+        ((if (i < macKey.length) macKey(i) else 0) ^ pad).toByte
+      }
+      val md = MessageDigest.getInstance("SHA-256")
+      md.update(block)
+      md
+    }
+
+    /** A fresh HMAC-SHA256 over the message fed to the returned digest. */
+    def macStart(): MessageDigest = inner.clone().asInstanceOf[MessageDigest]
+
+    /** Finish the HMAC begun by [[macStart]] → its first 16 bytes. */
+    def macEnd(md: MessageDigest): Array[Byte] = {
+      md.digest(digest, 0, digest.length)
+      val o = outer.clone().asInstanceOf[MessageDigest]
+      o.update(digest)
+      o.digest(digest, 0, digest.length)
+      System.arraycopy(digest, 0, tag, 0, TagLen)
+      tag
+    }
+
+    /** Constant-time compare of `computed` with the tag stored at `data(off)`. */
+    def tagMatches(computed: Array[Byte], data: Array[Byte], off: Int): Boolean = {
+      System.arraycopy(data, off, seen, 0, TagLen)
+      MessageDigest.isEqual(computed, seen)
+    }
+
+    /** AES-CTR from the counter block `ivSrc(ivOff until ivOff + 16)`:
+      * `dst(dstOff + i) = src(srcOff + i) ^ keystream(i)` for `i < len`.
+      */
+    def ctr(ivSrc: Array[Byte], ivOff: Int, src: Array[Byte], srcOff: Int,
+        dst: Array[Byte], dstOff: Int, len: Int): Unit = {
+      System.arraycopy(ivSrc, ivOff, counter, 0, TagLen)
+      var done = 0
+      while (done < len) {
+        aes.update(counter, 0, TagLen, keystream, 0)
+        val n = math.min(TagLen, len - done)
+        var i = 0
+        while (i < n) {
+          dst(dstOff + done + i) = (src(srcOff + done + i) ^ keystream(i)).toByte
+          i += 1
+        }
+        done += n
+        var j = TagLen - 1 // 128-bit big-endian increment, wrapping
+        var carry = true
+        while (carry && j >= 0) {
+          counter(j) = (counter(j) + 1).toByte
+          carry = counter(j) == 0
+          j -= 1
+        }
+      }
+    }
+  }
 }
 
 /** Clean failure type for malformed/tampered inputs — analog of the

@@ -32,22 +32,11 @@ object StableHash {
     */
   @inline def keystreamNext(h: Long): Long = (h << 1) | (h >>> 31)
 
-  /** XOR `data` with the rotating keystream seeded at `seed`; the keystream
-    * restarts at `seed` for every call, exactly like `XorEncryptInto`
-    * re-reading `key_id_hash_` per invocation (`basic_xor_encryptor.cpp:32-46`)
-    * — this is what makes per-element encryption deterministic and
-    * equality-preserving.
-    */
-  def xorKeystream(seed: Long, data: Array[Byte]): Array[Byte] = {
-    val out = new Array[Byte](data.length)
-    xorKeystreamCopy(seed, data, 0, out, 0, data.length)
-    out
-  }
-
-  /** General fused kernel — one loop owns the keystream schedule; the
-    * offset-carrying encrypt/decrypt variants below are thin wrappers, so a
-    * schedule fix can never desynchronize them. Analog of the reference's
-    * `XorEncryptInto` writable-span optimization (`basic_xor_encryptor.cpp:30-46`).
+  /** XOR `src(srcOff until srcOff + len)` with the rotating keystream seeded
+    * at `seed` into `dst(dstOff ..)`. The keystream restarts at `seed` for
+    * every call, exactly like `XorEncryptInto` re-reading `key_id_hash_` per
+    * invocation (`basic_xor_encryptor.cpp:30-46`) — this is what makes
+    * per-element encryption deterministic and equality-preserving.
     */
   def xorKeystreamCopy(seed: Long, src: Array[Byte], srcOff: Int,
       dst: Array[Byte], dstOff: Int, len: Int): Unit = {
@@ -59,12 +48,4 @@ object StableHash {
       i += 1
     }
   }
-
-  /** Write-side fusion: XOR `data` into `out` starting at `outOff`. */
-  def xorKeystreamInto(seed: Long, data: Array[Byte], out: Array[Byte], outOff: Int): Unit =
-    xorKeystreamCopy(seed, data, 0, out, outOff, data.length)
-
-  /** Read-side fusion: XOR from `data(dataOff..)` into `out` (whole array). */
-  def xorKeystreamFrom(seed: Long, data: Array[Byte], dataOff: Int, out: Array[Byte]): Unit =
-    xorKeystreamCopy(seed, data, dataOff, out, 0, out.length)
 }

@@ -1,7 +1,5 @@
 package graft.core
 
-import java.nio.{ByteBuffer, ByteOrder}
-
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.unsafe.types.UTF8String
@@ -38,8 +36,27 @@ object ValueSerde {
   def supports(dt: DataType): Boolean =
     try { fixedWidth(dt); true } catch { case _: GraftInvalidInputException => false }
 
-  private def le(n: Int): ByteBuffer =
-    ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
+  /** The low `n` bytes of `v`, little-endian. */
+  private def le(v: Long, n: Int): Array[Byte] = {
+    val b = new Array[Byte](n)
+    var i = 0
+    while (i < n) {
+      b(i) = (v >>> (8 * i)).toByte
+      i += 1
+    }
+    b
+  }
+
+  /** Little-endian `b(0 until b.length)` → its value in the low bytes. */
+  private def fromLe(b: Array[Byte]): Long = {
+    var v = 0L
+    var i = b.length - 1
+    while (i >= 0) {
+      v = (v << 8) | (b(i) & 0xffL)
+      i -= 1
+    }
+    v
+  }
 
   /** Catalyst internal value → bytes. Null must be handled by the caller
     * (reference encrypts only *present* values; nulls ride the levels —
@@ -48,12 +65,11 @@ object ValueSerde {
   def serialize(dt: DataType, v: Any): Array[Byte] = dt match {
     case BooleanType => Array[Byte](if (v.asInstanceOf[Boolean]) 1 else 0)
     case ByteType    => Array(v.asInstanceOf[Byte])
-    case ShortType   => le(2).putShort(v.asInstanceOf[Short]).array()
-    case IntegerType | DateType => le(4).putInt(v.asInstanceOf[Int]).array()
-    case FloatType   => le(4).putFloat(v.asInstanceOf[Float]).array()
-    case LongType | TimestampType | TimestampNTZType =>
-      le(8).putLong(v.asInstanceOf[Long]).array()
-    case DoubleType  => le(8).putDouble(v.asInstanceOf[Double]).array()
+    case ShortType   => le(v.asInstanceOf[Short], 2)
+    case IntegerType | DateType => le(v.asInstanceOf[Int], 4)
+    case FloatType   => le(java.lang.Float.floatToRawIntBits(v.asInstanceOf[Float]), 4)
+    case LongType | TimestampType | TimestampNTZType => le(v.asInstanceOf[Long], 8)
+    case DoubleType  => le(java.lang.Double.doubleToRawLongBits(v.asInstanceOf[Double]), 8)
     case StringType  => v.asInstanceOf[UTF8String].getBytes.clone()
     case BinaryType  => v.asInstanceOf[Array[Byte]]
     case dt: DecimalType =>
@@ -66,22 +82,26 @@ object ValueSerde {
   }
 
   /** Bytes → Catalyst internal value; strict length validation for fixed types. */
-  def deserialize(dt: DataType, b: Array[Byte]): Any = {
-    fixedWidth(dt).foreach { w =>
-      if (b.length != w)
+  def deserialize(dt: DataType, b: Array[Byte]): Any = deserialize(dt, b, fixedWidth(dt))
+
+  /** [[deserialize]] with `width == fixedWidth(dt)` already known, so a
+    * per-cell caller does not look it up (and allocate it) per value.
+    */
+  private[core] def deserialize(dt: DataType, b: Array[Byte], width: Option[Int]): Any = {
+    width match {
+      case Some(w) if b.length != w =>
         throw new GraftInvalidInputException(
           s"decrypted payload for $dt has ${b.length} bytes, expected $w")
+      case _ =>
     }
     dt match {
       case BooleanType => b(0) != 0
       case ByteType    => b(0)
-      case ShortType   => ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getShort
-      case IntegerType | DateType =>
-        ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getInt
-      case FloatType   => ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getFloat
-      case LongType | TimestampType | TimestampNTZType =>
-        ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getLong
-      case DoubleType  => ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getDouble
+      case ShortType   => fromLe(b).toShort
+      case IntegerType | DateType => fromLe(b).toInt
+      case FloatType   => java.lang.Float.intBitsToFloat(fromLe(b).toInt)
+      case LongType | TimestampType | TimestampNTZType => fromLe(b)
+      case DoubleType  => java.lang.Double.longBitsToDouble(fromLe(b))
       case StringType  => UTF8String.fromBytes(b)
       case BinaryType  => b
       case dt: DecimalType =>

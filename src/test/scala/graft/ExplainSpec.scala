@@ -27,6 +27,40 @@ class ExplainSpec extends SparkSpec {
       s"$name must not plan a nested-loop join:\n$plan")
   }
 
+  /** Executed plans of the queries `action` runs as the Dataset action
+    * `funcName` (e.g. "count", or "overwrite" for a write in that mode), from
+    * a query listener.
+    */
+  private def plansOf(funcName: String)(action: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (f == funcName) plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      action
+      val deadline = System.nanoTime() + 30000000000L // the bus delivers asynchronously
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    scala.jdk.CollectionConverters.CollectionHasAsScala(plans).asScala.toSeq
+  }
+
+  test("Explain times protection: its action evaluates graft_encrypt, count() prunes it") {
+    val q28 = SparkEntry.queries("q28_bulk_protect_aes")
+    val timed = plansOf("overwrite")(Explain.run(q28(spark, dir)))
+    assert(timed.nonEmpty && timed.forall(_.contains("graft_encrypt")),
+      s"Explain's timed action must encrypt:\n${timed.mkString("\n")}")
+    // why Explain does not time count(): the row count of q28's one-row
+    // aggregate needs no protected value, so the optimizer drops the work
+    val counted = plansOf("count")(q28(spark, dir).count())
+    assert(counted.nonEmpty && !counted.exists(_.contains("graft_encrypt")),
+      s"count() was expected to prune q28's encryption:\n${counted.mkString("\n")}")
+  }
+
   test("q05 multi-join: all dims broadcast, filters pushed to the scans") {
     val plan = executedPlan("q05_multi_join")
     // four dimension joins (orders→customer→nation→region) all broadcast —
