@@ -1289,10 +1289,10 @@ object Bench {
     val out = s"$dir/lineitem_zorder"
     val a = pmod(col("l_orderkey"), lit(65536))
     val b = pmod(col("l_partkey"), lit(65536))
-    Layout.zorderWrite(s.read.parquet(s"$dir/lineitem.parquet"), a, b,
+    Layout.zorderWrite(s.read.parquet(s"$dir/lineitem.parquet"), Seq(a, b),
       out, numFiles = 192)
     val (aLo, aHi, bLo, bHi) = (1024L, 9215L, 2048L, 6143L)
-    val (split, total) = Layout.zorderFilesForSplit(s, out, aLo, aHi, bLo, bHi)
+    val (_, split, total) = Layout.zorderFiles(s, out, Seq((aLo, aHi), (bLo, bHi)))
     // an empty keep-set (box outside the written key domain — e.g. a later
     // constant edit) would make the varargs-empty parquet read throw an
     // opaque error row; fail loudly and attributably instead (ADVICE r14)
@@ -1310,8 +1310,8 @@ object Bench {
 
   /** The composed-layout cycle over the 100× lineitem (q57's scale twin):
     * one Hive-partitioned + z-ordered-within-partition write
-    * ([[graft.ops.Layout.zorderWritePartitioned]] — still ONE range
-    * exchange, same shuffle cost as the flat zorderWrite), then the
+    * ([[graft.ops.Layout.zorderWrite]] with `partitionBy` — still ONE range
+    * exchange, same shuffle cost as the flat write), then the
     * two-lever read: the partition predicate plans only its directory
     * (asserted on the plan string) and the BIGMIN split cover prunes files
     * INSIDE that directory. The synthesized corpus has no date column, so
@@ -1325,10 +1325,10 @@ object Bench {
     val out = s"$dir/lineitem_pz"
     val a = pmod(col("l_orderkey"), lit(65536))
     val b = pmod(col("l_partkey"), lit(65536))
-    Layout.zorderWritePartitioned(
+    Layout.zorderWrite(
       s.read.parquet(s"$dir/lineitem.parquet")
         .withColumn("l_day", pmod(col("l_orderkey"), lit(8))),
-      "l_day", a, b, out, numFiles = 192)
+      Seq(a, b), out, numFiles = 192, partitionBy = Some("l_day"))
     val rootPlan = s.read.parquet(out).filter(col("l_day") === 3)
       .queryExecution.executedPlan.toString
     val partitionPruned =
@@ -1336,8 +1336,8 @@ object Bench {
         .findFirstIn(rootPlan).nonEmpty && rootPlan.contains("DataFilters: []")
     val partDir = s"$out/l_day=3"
     val (aLo, aHi, bLo, bHi) = (1024L, 9215L, 2048L, 6143L)
-    val (split, inPartition) =
-      Layout.zorderFilesForSplit(s, partDir, aLo, aHi, bLo, bHi)
+    val (_, split, inPartition) =
+      Layout.zorderFiles(s, partDir, Seq((aLo, aHi), (bLo, bHi)))
     require(split.nonEmpty,
       s"composed split cover kept 0 of $inPartition files in $partDir " +
         s"for box a=[$aLo,$aHi] b=[$bLo,$bHi]")

@@ -49,14 +49,6 @@ object WireFormat {
     out(6) = ((plaintextLen >>> 24) & 0xff).toByte
   }
 
-  /** Frame one encrypted cell. */
-  def frameCell(mode: Byte, plaintextLen: Int, ciphertext: Array[Byte]): Array[Byte] = {
-    val out = new Array[Byte](CellHeaderLen + ciphertext.length)
-    writeCellHeader(out, mode, plaintextLen)
-    System.arraycopy(ciphertext, 0, out, CellHeaderLen, ciphertext.length)
-    out
-  }
-
   /** Validate a framed cell header in place → (mode, plaintextLen); the
     * ciphertext is `cell(CellHeaderLen ..)`, never copied here. Fails cleanly
     * on malformed input (FIXTURES.md §2 discipline).

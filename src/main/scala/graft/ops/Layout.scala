@@ -1,10 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.GraftInvalidInputException
+
 /** Z-order (Morton-curve) data layout: the write-side clustering that turns
-  * a 2-D box predicate into file/row-group skipping at scan time.
+  * a box predicate over two or three dimensions into file/row-group
+  * skipping at scan time.
   *
   * At 100 TB the cheapest query is the one that never reads the bytes: a
   * table range-partitioned and sorted by an interleaved key gives every
@@ -12,154 +17,176 @@ import org.apache.spark.sql.functions._
   * key is monotone in each coordinate (a1 ≤ a2 ∧ b1 ≤ b2 ⇒ z1 ≤ z2), any
   * box query maps to a zkey interval whose non-overlapping files are
   * skipped without a read — by parquet row-group stats, by a lakehouse
-  * file index, or by [[zorderFilesFor]] below. A single-column sort gives
+  * file index, or by [[zorderFiles]] below. A single-column sort gives
   * this for one dimension only; the interleave shares the locality between
-  * both.
+  * all of them.
   *
   * Everything here is codegen'd builtin bit arithmetic (shiftleft / AND /
-  * OR) — no UDFs — and the same five mask-shift stages are expressible in
-  * ANSI SQL, so the key is engine-replayable (the q50 oracle recomputes it
-  * in DuckDB).
+  * OR) — no UDFs — and the same mask-shift stages are expressible in
+  * ANSI SQL, so the key is engine-replayable (the q50/q55 oracles recompute
+  * it in DuckDB from the hand-written replicas at the bottom).
   */
 object Layout {
-
-  @transient private lazy val log =
-    org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Inclusive upper bound of each Morton coordinate: the key interleaves
     * 16 bits per dimension, so every caller must deliver coordinates in
     * [0, 65535] (pmod / bucketize first). Out-of-domain values would WRAP
     * under the masking below and silently land in the wrong key interval —
-    * [[zorderFilesFor]] and [[zorderRanges]] reject them loudly instead
+    * [[zorderFiles]] and [[zorderRanges]] reject them loudly instead
     * (ADVICE r13).
     */
   val CoordMax: Long = 65535L
 
-  /** Spread the low 16 bits of a non-negative column so bit i lands at
-    * bit 2i — the classic mask-shift Morton spread (public domain bit
-    * trick; see e.g. "Bit Twiddling Hacks", interleave by binary magic
-    * numbers). Domain: [0, [[CoordMax]]]; higher bits are masked off, so
-    * the CALLER must reduce (pmod) first or distinct coordinates collide.
+  /** The mask-shift stages that spread a 16-bit coordinate so its bit i
+    * lands at bit d·i — the classic Morton spread by binary magic numbers
+    * (public domain; "Bit Twiddling Hacks"). After the input mask 0xffff,
+    * stage b = 8, 4, 2, 1 shifts left by b·(d−1) and keeps bit i of the
+    * coordinate at ⌊i/b⌋·b·d + (i mod b): each stage halves the blocks of
+    * still-adjacent bits. For d = 2 the masks are the familiar
+    * 0x00ff00ff … 0x55555555. d stops at 3: at d = 4 the last lane's bit 15
+    * would land on bit 63, the key would go negative and signed parquet
+    * min/max would no longer be monotone in it.
     */
-  def spread16(c: Column): Column = {
-    val x0 = c.cast("long").bitwiseAND(lit(0xffffL))
-    val x1 = x0.bitwiseOR(shiftleft(x0, 8)).bitwiseAND(lit(0x00ff00ffL))
-    val x2 = x1.bitwiseOR(shiftleft(x1, 4)).bitwiseAND(lit(0x0f0f0f0fL))
-    val x3 = x2.bitwiseOR(shiftleft(x2, 2)).bitwiseAND(lit(0x33333333L))
-    x3.bitwiseOR(shiftleft(x3, 1)).bitwiseAND(lit(0x55555555L))
+  private val spreadStages: Map[Int, Array[(Int, Long)]] =
+    Seq(2, 3).map { d =>
+      d -> Array(8, 4, 2, 1).map { b =>
+        (b * (d - 1),
+          (0 until 16).foldLeft(0L)((m, i) => m | 1L << (i / b * b * d + i % b)))
+      }
+    }.toMap
+
+  private def requireDims(dims: Int): Unit =
+    require(dims == 2 || dims == 3,
+      s"a Z-order key takes 2 or 3 coordinates, got $dims")
+
+  private def stages(dims: Int): Array[(Int, Long)] = {
+    requireDims(dims)
+    spreadStages(dims)
   }
 
-  /** 32-bit Morton key of two 16-bit coordinates: a's bit i at 2i, b's at
-    * 2i+1. Monotone in each coordinate — the property file skipping needs.
+  /** Morton key of two or three 16-bit coordinates: coordinate k's bit i
+    * lands at bit d·i + k (32-bit key for two, 48-bit for three). Monotone
+    * in each coordinate — the property file skipping needs. Domain:
+    * [0, [[CoordMax]]]; higher bits are masked off, so the CALLER must
+    * reduce (pmod) first or distinct coordinates collide.
     */
-  def zorderKey2(a: Column, b: Column): Column =
-    spread16(a).bitwiseOR(shiftleft(spread16(b), 1))
-
-  /** Spread the low 16 bits of a non-negative column so bit i lands at
-    * bit 3i — the 3-D Morton spread (same public-domain mask-shift family
-    * as [[spread16]]; the masks are the standard part-by-two chain used
-    * for ≤21-bit 3-D keys, e.g. libmorton). Domain: [0, [[CoordMax]]];
-    * higher bits are masked off, so the caller must reduce (pmod) first.
-    */
-  def spread16By3(c: Column): Column = {
-    val x0 = c.cast("long").bitwiseAND(lit(0xffffL))
-    val x1 = x0.bitwiseOR(shiftleft(x0, 32)).bitwiseAND(lit(0x1f00000000ffffL))
-    val x2 = x1.bitwiseOR(shiftleft(x1, 16)).bitwiseAND(lit(0x1f0000ff0000ffL))
-    val x3 = x2.bitwiseOR(shiftleft(x2, 8)).bitwiseAND(lit(0x100f00f00f00f00fL))
-    val x4 = x3.bitwiseOR(shiftleft(x3, 4)).bitwiseAND(lit(0x10c30c30c30c30c3L))
-    x4.bitwiseOR(shiftleft(x4, 2)).bitwiseAND(lit(0x1249249249249249L))
+  def zorderKey(coords: Column*): Column = {
+    val st = stages(coords.length)
+    coords.zipWithIndex.map { case (c, k) =>
+      val spread = st.foldLeft(c.cast("long").bitwiseAND(lit(CoordMax))) {
+        case (x, (shift, mask)) =>
+          x.bitwiseOR(shiftleft(x, shift)).bitwiseAND(lit(mask))
+      }
+      if (k == 0) spread else shiftleft(spread, k)
+    }.reduce(_.bitwiseOR(_))
   }
 
-  /** 48-bit Morton key of THREE 16-bit coordinates — the multi-dimension
-    * clustering key for the common (date, customer, part)-style layout
-    * where box queries constrain any subset of three dimensions. Monotone
-    * in each coordinate like [[zorderKey2]], so per-file zkey min/max
-    * footer pruning stays sound; codegen'd bit arithmetic, no UDF.
-    */
-  def zorderKey3(a: Column, b: Column, c: Column): Column =
-    spread16By3(a).bitwiseOR(shiftleft(spread16By3(b), 1))
-      .bitwiseOR(shiftleft(spread16By3(c), 2))
+  /** Driver-side Morton key (same bit layout as [[zorderKey]]). */
+  def morton(coords: Long*): Long = mortonKey(coords.toArray)
 
-  /** Write `df` clustered by the Morton key of (a, b): range-partition into
-    * `numFiles` zkey slices (each output file covers a tight, disjoint key
-    * interval — range exchange samples the key, no full sort) and sort rows
-    * within each file so row-group min/max stats are tight too. The zkey
-    * column is persisted: it is the skip index.
+  /** [[morton]] without the varargs wrapping — [[zorderRanges]] calls it
+    * once per emitted cell.
     */
-  def zorderWrite(df: DataFrame, a: Column, b: Column, outDir: String,
-      numFiles: Int): Unit = {
-    // a pre-existing zkey column would be silently overwritten in the
+  private def mortonKey(coords: Array[Long]): Long = {
+    val st = stages(coords.length)
+    var z = 0L
+    var k = 0
+    while (k < coords.length) {
+      var x = coords(k) & CoordMax
+      var i = 0
+      while (i < st.length) {
+        x = (x | (x << st(i)._1)) & st(i)._2
+        i += 1
+      }
+      z |= x << k
+      k += 1
+    }
+    z
+  }
+
+  /** Driver-side Morton inverse: recover the `dims` coordinates of a key —
+    * the direction a debugging session needs when a file's [zmin, zmax]
+    * footer range is to be read back as box corners. Runs [[morton]]'s
+    * stages backwards: shift right, then keep the previous stage's mask.
+    */
+  def unmorton(z: Long, dims: Int): IndexedSeq[Long] = {
+    val st = stages(dims)
+    val masks = CoordMax +: st.map(_._2)
+    (0 until dims).map { k =>
+      st.indices.reverse.foldLeft((z >> k) & masks.last) { (x, j) =>
+        (x | (x >> st(j)._1)) & masks(j)
+      }
+    }
+  }
+
+  /** The persisted key column of a `dims`-key layout: `zkey` for two keys,
+    * `zkey3` for three (so layouts written by the earlier per-dimension
+    * writers stay readable).
+    */
+  private def keyColumn(dims: Int): String = {
+    requireDims(dims)
+    if (dims == 2) "zkey" else "zkey3"
+  }
+
+  /** Write `df` clustered by the Morton key of `keys` (two or three):
+    * range-partition into `numFiles` key slices (each output file covers a
+    * tight, disjoint key interval — range exchange samples the key, no full
+    * sort) and sort rows within each file so row-group min/max stats are
+    * tight too. The key column ([[keyColumn]]) is persisted: it is the skip
+    * index.
+    *
+    * With `partitionBy`, the output is also Hive-partitioned by that column
+    * and z-ordered WITHIN each partition — the two pruning levers composed,
+    * which is the 100 TB layout story: a scan with a partition predicate
+    * plans only the matching directories (q53's lever), and a box predicate
+    * inside a partition skips files by the persisted key via [[zorderFiles]]
+    * on that partition's directory (q52's lever). It is still one range
+    * exchange, on (partition, key): the sampler gives each task a contiguous
+    * (partition, key) slice, so almost every task writes ONE file into ONE
+    * partition directory covering a tight, near-disjoint key interval.
+    */
+  def zorderWrite(df: DataFrame, keys: Seq[Column], outDir: String,
+      numFiles: Int, partitionBy: Option[String] = None): Unit = {
+    val key = keyColumn(keys.length)
+    // a pre-existing key column would be silently overwritten in the
     // persisted layout (ADVICE r13) — refuse loudly instead
-    require(!df.columns.contains("zkey"),
-      "input already has a 'zkey' column; rename it before zorderWrite")
-    df.withColumn("zkey", zorderKey2(a, b))
-      .repartitionByRange(numFiles, col("zkey"))
-      .sortWithinPartitions("zkey")
-      .write.mode("overwrite").parquet(outDir)
+    require(!df.columns.contains(key),
+      s"input already has a '$key' column; rename it before zorderWrite")
+    partitionBy.foreach(p => require(df.columns.contains(p),
+      s"partition column '$p' not in input"))
+    val order = (partitionBy.toSeq :+ key).map(col)
+    val writer = df.withColumn(key, zorderKey(keys: _*))
+      .repartitionByRange(numFiles, order: _*)
+      .sortWithinPartitions(order: _*)
+      .write.mode("overwrite")
+    partitionBy.fold(writer)(writer.partitionBy(_)).parquet(outDir)
   }
 
-  /** File-level skip set for a box query over a [[zorderWrite]] layout:
-    * per-file zkey min/max (from the persisted key — the same numbers a
-    * parquet footer carries) intersected with the box's coarse zkey
-    * interval [z(aLo,bLo), z(aHi,bHi)]. Monotonicity makes the interval
-    * sound (every box row's key is inside it), so reading only the
-    * returned files is CORRECT, just possibly more than minimal (the
-    * coarse interval is the standard one-range Z-envelope;
-    * [[zorderFilesForSplit]] is the tightened multi-range form).
+  /** File-level skip sets for a box query (one inclusive (lo, hi) per key,
+    * in the order the layout was written with) over a [[zorderWrite]]
+    * layout, from ONE pass over the directory's parquet footers. Returns
+    * (coarseFiles, splitFiles, totalFiles):
     *
-    * Driver-side work is one aggregate over file names — O(numFiles) rows,
-    * never data-sized.
-    */
-  def zorderFilesFor(spark: org.apache.spark.sql.SparkSession, dir: String,
-      aLo: Long, aHi: Long, bLo: Long, bHi: Long): (Seq[String], Long) = {
-    requireBox(aLo, aHi, bLo, bHi)
-    val zLo = mortonOf(aLo, bLo)
-    val zHi = mortonOf(aHi, bHi)
-    val stats = fileStats(spark, dir)
-    val keep = stats.filter { case (_, zmin, zmax) =>
-      zmax >= zLo && zmin <= zHi }.map(_._1)
-    (keep, stats.length.toLong)
-  }
-
-  /** File-level skip set via SPLIT Z-ranges (the BIGMIN/LITMAX refinement
-    * the coarse envelope concedes in [[zorderFilesFor]]'s doc): the box is
-    * decomposed into ≤ `maxRanges` disjoint zkey intervals by quadrant
-    * recursion — an aligned 2^k square either lies outside the box (its
-    * whole contiguous z-interval is SKIPPED, including the seam gaps the
-    * one-range envelope keeps), inside it (emitted verbatim), or straddles
-    * it (recursed). Emitted in increasing z; adjacent intervals are merged
-    * and, when more than `maxRanges` survive, the smallest inter-range gaps
-    * are re-covered first — merging only ever OVER-covers, so soundness is
-    * unconditional while the range count stays index-friendly. A file is
-    * read iff its [zmin, zmax] overlaps some range, so a box hugging the
-    * curve's seam skips the files the coarse interval was forced to keep
-    * (LayoutSpec pins both soundness and the strict improvement).
+    *  - coarse: files whose [zmin, zmax] overlaps the box's one-range
+    *    envelope [z(lo corner), z(hi corner)] — sound by per-coordinate
+    *    monotonicity (every box row's key is inside it), but it keeps the
+    *    seam gaps the curve jumps across;
+    *  - split: files whose [zmin, zmax] overlaps some range of the
+    *    [[zorderRanges]] cover — the BIGMIN/LITMAX refinement, so a box
+    *    hugging a seam skips the files the envelope was forced to keep.
+    *    Split ⊆ coarse (LayoutSpec pins soundness and the strict
+    *    improvement).
     *
-    * Same driver cost shape as the coarse form: O(numFiles · log ranges)
-    * after one O(numFiles) stats aggregate — never data-sized.
+    * Reading only either set is CORRECT, just possibly more than minimal.
+    * Driver-side work is one footer read per file plus O(numFiles · log
+    * ranges) — never data-sized, and no Spark job.
     */
-  def zorderFilesForSplit(spark: org.apache.spark.sql.SparkSession,
-      dir: String, aLo: Long, aHi: Long, bLo: Long, bHi: Long,
-      maxRanges: Int = 64): (Seq[String], Long) = {
-    val ranges = zorderRanges(aLo, aHi, bLo, bHi, maxRanges)
-    val stats = fileStats(spark, dir)
-    (filesOverlapping(stats, ranges), stats.length.toLong)
-  }
-
-  /** Coarse envelope AND split cover from ONE stats pass — for callers that
-    * want both (e.g. to assert the split cover is no worse): the two
-    * single-cover entry points each read the directory's footers, so asking
-    * them separately doubles the metadata pass. Returns
-    * (coarseFiles, splitFiles, totalFiles).
-    */
-  def zorderFilesForBoth(spark: org.apache.spark.sql.SparkSession,
-      dir: String, aLo: Long, aHi: Long, bLo: Long, bHi: Long,
+  def zorderFiles(spark: SparkSession, dir: String, box: Seq[(Long, Long)],
       maxRanges: Int = 64): (Seq[String], Seq[String], Long) = {
-    requireBox(aLo, aHi, bLo, bHi)
-    val zLo = mortonOf(aLo, bLo)
-    val zHi = mortonOf(aHi, bHi)
-    val ranges = zorderRanges(aLo, aHi, bLo, bHi, maxRanges)
-    val stats = fileStats(spark, dir)
+    val ranges = zorderRanges(box, maxRanges)
+    val zLo = morton(box.map(_._1): _*)
+    val zHi = morton(box.map(_._2): _*)
+    val stats = fileStats(spark, dir, keyColumn(box.length))
     val coarse = stats.filter { case (_, zmin, zmax) =>
       zmax >= zLo && zmin <= zHi }.map(_._1).toSeq
     (coarse, filesOverlapping(stats, ranges), stats.length.toLong)
@@ -181,192 +208,88 @@ object Layout {
     }.map(_._1).toSeq
   }
 
-  /** The box's zkey cover as ≤ `maxRanges` disjoint, increasing intervals
-    * (driver-side, pure). The exact cover can hold O(perimeter) intervals;
-    * the merge step trades range count for over-read bytes explicitly —
-    * maxRanges = 1 degenerates to the coarse envelope, so the split cover
-    * is never worse.
+  /** The box's key cover as ≤ `maxRanges` disjoint, increasing intervals
+    * (driver-side, pure), by recursive halving of aligned cells: an aligned
+    * 2^k cell's keys are contiguous (its low d·k key bits range over all
+    * values), so a cell either lies outside the box (its whole z-interval
+    * is SKIPPED, including the seam gaps the one-range envelope keeps),
+    * inside it (emitted verbatim), or straddles it (split into 2^d
+    * children). Child order — coordinate k offset iff bit k of the child
+    * index is set — IS increasing z, because coordinate k's bits sit at
+    * positions d·i + k.
+    *
+    * The exact cover grows with the box's surface (perimeter in 2-D, area
+    * in 3-D), so a split budget (64·maxRanges splits, min 4096) bounds the
+    * driver work — and it is spent BREADTH-FIRST, one level at a time
+    * (ADVICE r15: a depth-first recursion concentrated refinement on the
+    * lowest-z cells, so once the budget ran out every remaining high-z
+    * straddler was emitted whole and residual over-cover piled onto one
+    * side of the box). A level either splits every straddler it holds or
+    * none: once the remaining budget can't split the whole level, ALL its
+    * straddlers are emitted whole, clamped to the coarse envelope — residual
+    * over-cover is spread evenly across the box at a uniform depth, and
+    * soundness is unconditional.
+    *
+    * Adjacent intervals are merged and, when more than `maxRanges` survive,
+    * the smallest inter-range gaps are re-covered first — merging only ever
+    * OVER-covers. maxRanges = 1 degenerates exactly to the coarse envelope,
+    * so the split cover is never worse (LayoutSpec pins it).
     */
-  def zorderRanges(aLo: Long, aHi: Long, bLo: Long, bHi: Long,
+  def zorderRanges(box: Seq[(Long, Long)],
       maxRanges: Int = 64): Seq[(Long, Long)] = {
-    requireBox(aLo, aHi, bLo, bHi)
+    requireBox(box)
     require(maxRanges >= 1, s"maxRanges must be >= 1, got $maxRanges")
-    val exact = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    // quadrant order (b-half, then a-half) IS increasing-z order because a's
-    // bits sit at even positions and b's just above — so `exact` needs no
-    // sort and adjacent-merge is a single pass
-    def rec(ca: Long, cb: Long, size: Long): Unit = {
-      val caHi = ca + size - 1
-      val cbHi = cb + size - 1
-      if (caHi < aLo || ca > aHi || cbHi < bLo || cb > bHi) ()
-      else if (ca >= aLo && caHi <= aHi && cb >= bLo && cbHi <= bHi) {
-        val z0 = mortonOf(ca, cb) // aligned square ⇒ contiguous z-interval
-        val r = (z0, z0 + size * size - 1)
-        if (exact.nonEmpty && exact.last._2 + 1 == r._1)
-          exact(exact.length - 1) = (exact.last._1, r._2)
-        else exact += r
-      } else {
-        val h = size / 2
-        rec(ca, cb, h); rec(ca + h, cb, h)
-        rec(ca, cb + h, h); rec(ca + h, cb + h, h)
-      }
-    }
-    rec(0L, 0L, CoordMax + 1)
-    mergeToBudget(exact, maxRanges)
-  }
-
-  /** Reduce a disjoint increasing cover to ≤ `maxRanges` intervals by
-    * closing the smallest inter-range gaps first: each merge adds gap-many
-    * over-read keys, so greedy-by-gap minimizes total over-cover for the
-    * budget. Merging only ever OVER-covers — soundness is unconditional.
-    */
-  private def mergeToBudget(
-      exact: scala.collection.mutable.ArrayBuffer[(Long, Long)],
-      maxRanges: Int): Seq[(Long, Long)] = {
-    if (exact.length <= maxRanges) exact.toSeq
-    else {
-      val mergeAt = (1 until exact.length)
-        .map(i => (exact(i)._1 - exact(i - 1)._2 - 1, i))
-        .sortBy(_._1).take(exact.length - maxRanges).map(_._2).toSet
-      val out = scala.collection.mutable.ArrayBuffer(exact.head)
-      (1 until exact.length).foreach { i =>
-        if (mergeAt(i)) out(out.length - 1) = (out.last._1, exact(i)._2)
-        else out += exact(i)
-      }
-      out.toSeq
-    }
-  }
-
-  /** Write `df` Hive-partitioned by `partitionCol` AND z-ordered by (a, b)
-    * WITHIN each partition — the two pruning levers composed, which is the
-    * 100 TB layout story: a scan with a partition predicate plans only the
-    * matching directories (q53's lever), and a box predicate inside a
-    * partition skips files by the persisted zkey via [[zorderFilesFor]] /
-    * [[zorderFilesForSplit]] on that partition's directory (q52's lever).
-    *
-    * Mechanics: one range exchange on (partitionCol, zkey) — the sampler
-    * gives each task a contiguous (partition, key) slice, so almost every
-    * task writes ONE file into ONE partition directory covering a tight,
-    * near-disjoint zkey interval; the within-task sort tightens row-group
-    * stats too. Same single-shuffle cost as [[zorderWrite]].
-    */
-  def zorderWritePartitioned(df: DataFrame, partitionCol: String,
-      a: Column, b: Column, outDir: String, numFiles: Int): Unit = {
-    require(!df.columns.contains("zkey"),
-      "input already has a 'zkey' column; rename it before zorderWritePartitioned")
-    require(df.columns.contains(partitionCol),
-      s"partition column '$partitionCol' not in input")
-    df.withColumn("zkey", zorderKey2(a, b))
-      .repartitionByRange(numFiles, col(partitionCol), col("zkey"))
-      .sortWithinPartitions(partitionCol, "zkey")
-      .write.partitionBy(partitionCol).mode("overwrite").parquet(outDir)
-  }
-
-  /** Write `df` clustered by the 3-D Morton key of (a, b, c) — the
-    * three-dimension twin of [[zorderWrite]] for the (date, customer,
-    * part)-style layout q55 pins the key for. Same mechanics: range
-    * exchange on the persisted `zkey3` (samples the key, no full sort),
-    * within-file sort so row-group min/max stats are tight.
-    */
-  def zorderWrite3(df: DataFrame, a: Column, b: Column, c: Column,
-      outDir: String, numFiles: Int): Unit = {
-    require(!df.columns.contains("zkey3"),
-      "input already has a 'zkey3' column; rename it before zorderWrite3")
-    df.withColumn("zkey3", zorderKey3(a, b, c))
-      .repartitionByRange(numFiles, col("zkey3"))
-      .sortWithinPartitions("zkey3")
-      .write.mode("overwrite").parquet(outDir)
-  }
-
-  /** 3-D box's zkey3 cover as ≤ `maxRanges` disjoint, increasing intervals
-    * (driver-side, pure) — the octant-recursion BIGMIN form of
-    * [[zorderRanges]]. The 2-D argument generalizes directly: an aligned
-    * 2^k cube's keys are contiguous (its low 3k z-bits range over all
-    * values), and octant order (c-half, then b-half, then a-half) IS
-    * increasing z because a's bits sit at positions 3i, b's at 3i+1, c's
-    * at 3i+2 — so emission needs no sort and adjacent-merge is one pass.
-    *
-    * One 3-D-specific guard the 2-D form doesn't need: the EXACT cover
-    * grows with the box's SURFACE AREA (O((side/s)^2) straddling cells per
-    * level), not its perimeter, so an unbudgeted recursion over a large box
-    * could emit millions of driver-side intervals. A split budget
-    * (64·maxRanges splits, min 4096) caps that — and it is spent
-    * BREADTH-FIRST, one octree level at a time (ADVICE r15: the old
-    * depth-first recursion concentrated refinement on the lowest-z octants,
-    * so once the budget ran out every remaining high-z straddling cube was
-    * emitted whole and residual over-cover piled onto one side of the box).
-    * A level either splits every straddler it holds or none: once the
-    * remaining budget can't split the whole level, ALL its straddlers are
-    * emitted whole — residual over-cover is spread evenly across the box at
-    * a uniform refinement depth. Whole-cube emissions are pure over-cover,
-    * so soundness is unconditional and tightness degrades gracefully toward
-    * the coarse envelope. maxRanges = 1 still degenerates exactly to
-    * [z(aLo,bLo,cLo), z(aHi,bHi,cHi)] (LayoutSpec pins it).
-    */
-  def zorderRanges3(aLo: Long, aHi: Long, bLo: Long, bHi: Long,
-      cLo: Long, cHi: Long, maxRanges: Int = 64): Seq[(Long, Long)] = {
-    requireBox3(aLo, aHi, bLo, bHi, cLo, cHi)
-    require(maxRanges >= 1, s"maxRanges must be >= 1, got $maxRanges")
-    val exact = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var budget = math.max(4096L, 64L * maxRanges)
+    val d = box.length
+    val los = box.map(_._1).toArray
+    val his = box.map(_._2).toArray
     // every box key lies in the coarse envelope (per-coordinate
     // monotonicity: min/max over the box land at its corners) — used to
-    // clamp budget-exhausted whole-cube emissions so over-cover never
+    // clamp budget-exhausted whole-cell emissions so over-cover never
     // escapes the envelope and maxRanges=1 degenerates exactly to it
-    val envLo = mortonOf3(aLo, bLo, cLo)
-    val envHi = mortonOf3(aHi, bHi, cHi)
-    // BFS emits levels interleaved in z, so intervals collect unsorted and
-    // sort+merge once at the end (bounded: exact and level sizes are both
-    // O(budget), ≤ ~32k intervals at the default budget)
-    def emitWhole(ca: Long, cb: Long, cc: Long, size: Long): Unit = {
-      // over-cover the straddling cube whole, clamped to the envelope
-      // (sound — its box rows' keys lie in the cube's interval AND in the
-      // envelope; a straddling cube holds at least one box key, so the
-      // clamp never empties the interval)
-      val z0 = mortonOf3(ca, cb, cc)
-      exact += ((math.max(z0, envLo),
-        math.min(z0 + size * size * size - 1, envHi)))
-    }
-    var level =
-      scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Long)](
-        (0L, 0L, 0L, CoordMax + 1))
+    val envLo = mortonKey(los)
+    val envHi = mortonKey(his)
+    val exact = ArrayBuffer.empty[(Long, Long)]
+    var budget = math.max(4096L, 64L * maxRanges)
+    // the cells of one level share a side, so a cell is its low corner
+    var side = CoordMax + 1
+    var level = ArrayBuffer(Array.fill(d)(0L))
     while (level.nonEmpty) {
       if (budget < level.length) {
         // can't split this whole level: emit EVERY remaining straddler
-        // whole — uniform refinement depth, evenly-spread residual cover
-        level.foreach { case (ca, cb, cc, size) => emitWhole(ca, cb, cc, size) }
-        level.clear()
+        // whole, clamped to the envelope (sound — its box rows' keys lie in
+        // the cell's interval AND in the envelope; a straddling cell holds
+        // at least one box key, so the clamp never empties the interval)
+        val keys = Seq.fill(d)(side).product
+        level.foreach { cell =>
+          val z0 = mortonKey(cell)
+          exact += ((math.max(z0, envLo), math.min(z0 + keys - 1, envHi)))
+        }
+        level = ArrayBuffer.empty
       } else {
         budget -= level.length
-        val next = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Long, Long, Long)]
-        level.foreach { case (ca, cb, cc, size) =>
-          val h = size / 2
-          // octant order (c-half, then b-half, then a-half) IS increasing z
-          Seq((ca, cb, cc), (ca + h, cb, cc), (ca, cb + h, cc),
-            (ca + h, cb + h, cc), (ca, cb, cc + h), (ca + h, cb, cc + h),
-            (ca, cb + h, cc + h), (ca + h, cb + h, cc + h))
-            .foreach { case (oa, ob, oc) =>
-              val oaHi = oa + h - 1
-              val obHi = ob + h - 1
-              val ocHi = oc + h - 1
-              if (oaHi < aLo || oa > aHi || obHi < bLo || ob > bHi ||
-                  ocHi < cLo || oc > cHi) ()
-              else if (oa >= aLo && oaHi <= aHi && ob >= bLo && obHi <= bHi &&
-                  oc >= cLo && ocHi <= cHi) {
-                val z0 = mortonOf3(oa, ob, oc) // aligned ⇒ contiguous z
-                exact += ((z0, z0 + h * h * h - 1))
-              } else next += ((oa, ob, oc, h))
-            }
+        val h = side / 2
+        val keys = Seq.fill(d)(h).product
+        val next = ArrayBuffer.empty[Array[Long]]
+        level.foreach { cell =>
+          (0 until (1 << d)).foreach { j =>
+            val child = Array.tabulate(d)(k => cell(k) + ((j >> k) & 1) * h)
+            val ks = 0 until d
+            if (ks.exists(k => child(k) + h - 1 < los(k) || child(k) > his(k))) ()
+            else if (ks.forall(k => child(k) >= los(k) && child(k) + h - 1 <= his(k))) {
+              val z0 = mortonKey(child)
+              exact += ((z0, z0 + keys - 1))
+            } else next += child
+          }
         }
         level = next
+        side = h
       }
     }
-    // cube intervals are pairwise disjoint (distinct octree cells; clamps
-    // only shrink) — sort by lo, then one-pass adjacent merge
-    val sorted = exact.sortBy(_._1)
-    val merged = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    sorted.foreach { case (lo, hi) =>
+    // BFS emits levels interleaved in z; cell intervals are pairwise
+    // disjoint (distinct cells; clamps only shrink) — sort by lo, then
+    // one-pass adjacent merge
+    val merged = ArrayBuffer.empty[(Long, Long)]
+    exact.sortBy(_._1).foreach { case (lo, hi) =>
       if (merged.nonEmpty && merged.last._2 + 1 == lo)
         merged(merged.length - 1) = (merged.last._1, hi)
       else merged += ((lo, hi))
@@ -374,49 +297,25 @@ object Layout {
     mergeToBudget(merged, maxRanges)
   }
 
-  /** Coarse one-range file skip set for a 3-D box over a [[zorderWrite3]]
-    * layout — the 3-D twin of [[zorderFilesFor]] (sound by per-coordinate
-    * monotonicity of the key; [[zorderFilesForSplit3]] is the tightened
-    * multi-range form).
+  /** Reduce a disjoint increasing cover to ≤ `maxRanges` intervals by
+    * closing the smallest inter-range gaps first: each merge adds gap-many
+    * over-read keys, so greedy-by-gap minimizes total over-cover for the
+    * budget. Merging only ever OVER-covers — soundness is unconditional.
     */
-  def zorderFilesFor3(spark: org.apache.spark.sql.SparkSession, dir: String,
-      aLo: Long, aHi: Long, bLo: Long, bHi: Long,
-      cLo: Long, cHi: Long): (Seq[String], Long) = {
-    requireBox3(aLo, aHi, bLo, bHi, cLo, cHi)
-    val zLo = mortonOf3(aLo, bLo, cLo)
-    val zHi = mortonOf3(aHi, bHi, cHi)
-    val stats = fileStats3(spark, dir)
-    val keep = stats.filter { case (_, zmin, zmax) =>
-      zmax >= zLo && zmin <= zHi }.map(_._1)
-    (keep, stats.length.toLong)
-  }
-
-  /** File-level skip set via SPLIT 3-D Z-ranges — the BIGMIN read path for
-    * [[zorderWrite3]] layouts ([[zorderFilesForSplit]]'s 3-D twin). Same
-    * driver cost shape: O(numFiles · log ranges) after one O(numFiles)
-    * stats aggregate — never data-sized.
-    */
-  def zorderFilesForSplit3(spark: org.apache.spark.sql.SparkSession,
-      dir: String, aLo: Long, aHi: Long, bLo: Long, bHi: Long,
-      cLo: Long, cHi: Long, maxRanges: Int = 64): (Seq[String], Long) = {
-    val ranges = zorderRanges3(aLo, aHi, bLo, bHi, cLo, cHi, maxRanges)
-    val stats = fileStats3(spark, dir)
-    (filesOverlapping(stats, ranges), stats.length.toLong)
-  }
-
-  /** 3-D twin of [[zorderFilesForBoth]] — one stats pass for both covers. */
-  def zorderFilesForBoth3(spark: org.apache.spark.sql.SparkSession,
-      dir: String, aLo: Long, aHi: Long, bLo: Long, bHi: Long,
-      cLo: Long, cHi: Long, maxRanges: Int = 64)
-      : (Seq[String], Seq[String], Long) = {
-    requireBox3(aLo, aHi, bLo, bHi, cLo, cHi)
-    val zLo = mortonOf3(aLo, bLo, cLo)
-    val zHi = mortonOf3(aHi, bHi, cHi)
-    val ranges = zorderRanges3(aLo, aHi, bLo, bHi, cLo, cHi, maxRanges)
-    val stats = fileStats3(spark, dir)
-    val coarse = stats.filter { case (_, zmin, zmax) =>
-      zmax >= zLo && zmin <= zHi }.map(_._1).toSeq
-    (coarse, filesOverlapping(stats, ranges), stats.length.toLong)
+  private def mergeToBudget(exact: ArrayBuffer[(Long, Long)],
+      maxRanges: Int): Seq[(Long, Long)] = {
+    if (exact.length <= maxRanges) exact.toSeq
+    else {
+      val mergeAt = (1 until exact.length)
+        .map(i => (exact(i)._1 - exact(i - 1)._2 - 1, i))
+        .sortBy(_._1).take(exact.length - maxRanges).map(_._2).toSet
+      val out = ArrayBuffer(exact.head)
+      (1 until exact.length).foreach { i =>
+        if (mergeAt(i)) out(out.length - 1) = (out.last._1, exact(i)._2)
+        else out += exact(i)
+      }
+      out.toSeq
+    }
   }
 
   /** What [[compactSmallFiles]] did, for callers/specs: counts are file
@@ -494,50 +393,29 @@ object Layout {
       files.map(_.getLen).sum, smallBytes)
   }
 
-  private def requireBox(aLo: Long, aHi: Long, bLo: Long, bHi: Long): Unit = {
-    require(aLo <= aHi && bLo <= bHi, "empty box")
-    // out-of-domain bounds would WRAP under mortonOf's 16-bit masks and
+  private def requireBox(box: Seq[(Long, Long)]): Unit = {
+    requireDims(box.length)
+    require(box.forall { case (lo, hi) => lo <= hi }, "empty box")
+    // out-of-domain bounds would WRAP under morton's 16-bit masks and
     // silently skip files containing matching rows (ADVICE r13)
-    require(aLo >= 0 && aHi <= CoordMax && bLo >= 0 && bHi <= CoordMax,
-      s"box coordinates must lie in [0, $CoordMax]: " +
-        s"got a=[$aLo,$aHi] b=[$bLo,$bHi]")
+    require(box.forall { case (lo, hi) => lo >= 0 && hi <= CoordMax },
+      s"box coordinates must lie in [0, $CoordMax]: got " +
+        box.map { case (lo, hi) => s"[$lo,$hi]" }.mkString(" "))
   }
 
-  private def requireBox3(aLo: Long, aHi: Long, bLo: Long, bHi: Long,
-      cLo: Long, cHi: Long): Unit = {
-    require(aLo <= aHi && bLo <= bHi && cLo <= cHi, "empty box")
-    require(aLo >= 0 && aHi <= CoordMax && bLo >= 0 && bHi <= CoordMax &&
-      cLo >= 0 && cHi <= CoordMax,
-      s"box coordinates must lie in [0, $CoordMax]: " +
-        s"got a=[$aLo,$aHi] b=[$bLo,$bHi] c=[$cLo,$cHi]")
-  }
-
-  /** Per-file zkey min/max FROM THE PARQUET FOOTERS — O(numFiles) metadata
-    * reads, zero data decoded (optimization guide §6: skip-set planning must
-    * ride file statistics, not a table scan; the previous form computed the
-    * "same numbers a parquet footer carries" by aggregating the persisted
-    * key over EVERY ROW, i.e. a full-table read per skip-set request —
-    * data-sized at 100 TB). The zkey column is a non-null INT64 written by
-    * the Spark parquet writer, so exact row-group min/max statistics are
-    * always present; should a footer ever lack them (foreign writer,
-    * suppressed stats), the data-scan twin below answers for the whole
-    * directory so the skip set is NEVER built from partial knowledge.
+  /** Per-file `key` min/max FROM THE PARQUET FOOTERS — O(numFiles) metadata
+    * reads, zero data decoded, no Spark job (optimization guide §6:
+    * skip-set planning must ride file statistics, not a table scan, which
+    * would be data-sized at 100 TB). [[zorderWrite]] always persists the
+    * key as a non-null INT64, for which the Spark parquet writer always
+    * records row-group min/max. So a file without the key column or its
+    * min/max is not such a layout — e.g. a 3-D box over a 2-D layout, or a
+    * plain directory — and fails here, naming the file and the key.
     *
-    * Files with zero rows are excluded, matching the scan form (a row-less
-    * file has no `input_file_name()` group — and no key range to overlap).
+    * Files with zero rows are excluded (no key range to overlap).
     */
-  private def fileStats(spark: org.apache.spark.sql.SparkSession,
-      dir: String, key: String = "zkey"): Array[(String, Long, Long)] =
-    try fileStatsFromFooters(spark, dir, key)
-    catch {
-      case e: Exception =>
-        log.warn(s"footer stats unavailable for $dir ($key): ${e.getMessage}" +
-          " — falling back to the data-scan form")
-        fileStatsFromScan(spark, dir, key)
-    }
-
-  private def fileStatsFromFooters(spark: org.apache.spark.sql.SparkSession,
-      dir: String, key: String): Array[(String, Long, Long)] = {
+  private def fileStats(spark: SparkSession, dir: String,
+      key: String): Array[(String, Long, Long)] = {
     import scala.jdk.CollectionConverters._
     val conf = spark.sessionState.newHadoopConf()
     val path = new org.apache.hadoop.fs.Path(dir)
@@ -558,11 +436,13 @@ object Layout {
           blocks.foreach { b =>
             val cc = b.getColumns.asScala
               .find(_.getPath.toDotString == key)
-              .getOrElse(throw new IllegalStateException(
-                s"${st.getPath}: no column chunk for $key"))
+              .getOrElse(throw new GraftInvalidInputException(
+                s"${st.getPath}: no column chunk for Z-order key $key — not a " +
+                  "zorderWrite layout with this box's number of keys"))
             val stats = cc.getStatistics
-            require(stats != null && !stats.isEmpty && stats.hasNonNullValue,
-              s"${st.getPath}: footer carries no $key min/max")
+            if (stats == null || stats.isEmpty || !stats.hasNonNullValue)
+              throw new GraftInvalidInputException(
+                s"${st.getPath}: footer carries no $key min/max")
             zmin = math.min(zmin,
               stats.genericGetMin.asInstanceOf[java.lang.Long].longValue)
             zmax = math.max(zmax,
@@ -574,83 +454,11 @@ object Layout {
     }
   }
 
-  /** Data-scan twin of [[fileStatsFromFooters]] — the pre-r16 form, kept
-    * only as the fallback for footers without statistics.
-    */
-  private def fileStatsFromScan(spark: org.apache.spark.sql.SparkSession,
-      dir: String, key: String): Array[(String, Long, Long)] =
-    spark.read.parquet(dir)
-      .groupBy(input_file_name().as("file"))
-      .agg(min(key).as("zmin"), max(key).as("zmax"))
-      .collect()
-      .map(r => (r.getAs[String]("file"), r.getAs[Long]("zmin"),
-        r.getAs[Long]("zmax")))
-
-  /** [[fileStats]] for a [[zorderWrite3]] layout (persisted key `zkey3`). */
-  private def fileStats3(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Array[(String, Long, Long)] =
-    fileStats(spark, dir, "zkey3")
-
-  /** Driver-side Morton key (same bit layout as [[zorderKey2]]). */
-  def mortonOf(a: Long, b: Long): Long = {
-    def spread(v: Long): Long = {
-      var x = v & 0xffffL
-      x = (x | (x << 8)) & 0x00ff00ffL
-      x = (x | (x << 4)) & 0x0f0f0f0fL
-      x = (x | (x << 2)) & 0x33333333L
-      (x | (x << 1)) & 0x55555555L
-    }
-    spread(a) | (spread(b) << 1)
-  }
-
-  /** Driver-side Morton inverse: recover the (a, b) coordinates of a key —
-    * the direction a debugging session needs when a file's [zmin, zmax]
-    * footer range is to be read back as box corners. Exact inverse of
-    * [[mortonOf]] (LayoutSpec round-trips the full 16-bit grid diagonal
-    * plus random points).
-    */
-  def mortonInverse(z: Long): (Long, Long) = {
-    def unspread(v: Long): Long = {
-      var x = v & 0x55555555L
-      x = (x | (x >> 1)) & 0x33333333L
-      x = (x | (x >> 2)) & 0x0f0f0f0fL
-      x = (x | (x >> 4)) & 0x00ff00ffL
-      (x | (x >> 8)) & 0x0000ffffL
-    }
-    (unspread(z), unspread(z >> 1))
-  }
-
-  /** Driver-side 3-D Morton key (same bit layout as [[zorderKey3]]). */
-  def mortonOf3(a: Long, b: Long, c: Long): Long = {
-    def spread(v: Long): Long = {
-      var x = v & 0xffffL
-      x = (x | (x << 32)) & 0x1f00000000ffffL
-      x = (x | (x << 16)) & 0x1f0000ff0000ffL
-      x = (x | (x << 8)) & 0x100f00f00f00f00fL
-      x = (x | (x << 4)) & 0x10c30c30c30c30c3L
-      (x | (x << 2)) & 0x1249249249249249L
-    }
-    spread(a) | (spread(b) << 1) | (spread(c) << 2)
-  }
-
-  /** Driver-side 3-D Morton inverse — exact inverse of [[mortonOf3]]
-    * (LayoutSpec round-trips grid diagonals plus random points).
-    */
-  def mortonInverse3(z: Long): (Long, Long, Long) = {
-    def unspread(v: Long): Long = {
-      var x = v & 0x1249249249249249L
-      x = (x | (x >> 2)) & 0x10c30c30c30c30c3L
-      x = (x | (x >> 4)) & 0x100f00f00f00f00fL
-      x = (x | (x >> 8)) & 0x1f0000ff0000ffL
-      x = (x | (x >> 16)) & 0x1f00000000ffffL
-      (x | (x >> 32)) & 0xffffL
-    }
-    (unspread(z), unspread(z >> 1), unspread(z >> 2))
-  }
-
-  /** The q55 oracle's SQL replica of [[spread16By3]] (string-built so the
-    * six stages cannot drift from the Column form above; masks interpolate
-    * as decimals, which both engines parse).
+  /** The q55 oracle's SQL replica of [[zorderKey]]'s three-key spread: the
+    * five-stage libmorton mask chain, written out by hand (masks interpolate
+    * as decimals, which both engines parse). It must never be derived from
+    * the generated stage table above — the oracle checks the engine's key
+    * only as long as the two are built independently.
     */
   def spreadSql3(e: String): String = {
     // BIGINT cast up front: DuckDB range-checks `<< 32` against the LEFT
@@ -666,8 +474,9 @@ object Layout {
   def zorderKey3Sql(a: String, b: String, c: String): String =
     s"(${spreadSql3(a)} | (${spreadSql3(b)} << 1) | (${spreadSql3(c)} << 2))"
 
-  /** The q50 oracle's SQL replica of [[spread16]] (string-built so the five
-    * stages cannot drift from the Column form above).
+  /** The q50 oracle's SQL replica of [[zorderKey]]'s two-key spread, the
+    * mask chain written out by hand — independent of the generated stage
+    * table for the same reason as [[spreadSql3]].
     */
   def spreadSql(e: String): String = {
     val x0 = s"(($e) & 65535)"

@@ -449,7 +449,7 @@ object RelationalQueries {
       rd(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_partkey"), col("l_suppkey"),
-          Layout.zorderKey2(pmod(col("l_partkey"), lit(65536)),
+          Layout.zorderKey(pmod(col("l_partkey"), lit(65536)),
             pmod(col("l_suppkey"), lit(65536))).as("zkey"))
         .orderBy(col("zkey"), col("l_orderkey"), col("l_linenumber"))
         .limit(200)
@@ -474,7 +474,7 @@ object RelationalQueries {
       Layout.zorderWrite(
         rd(s, dir, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
           col("l_partkey"), col("l_suppkey")),
-        pmod(col("l_partkey"), lit(65536)), pmod(col("l_suppkey"), lit(65536)),
+        Seq(pmod(col("l_partkey"), lit(65536)), pmod(col("l_suppkey"), lit(65536))),
         tmp, numFiles = 16)
       s.read.parquet(tmp)
         .groupBy(pmod(col("zkey"), lit(64)).as("zbucket"))
@@ -508,14 +508,13 @@ object RelationalQueries {
       Layout.zorderWrite(
         rd(s, dir, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
           col("l_partkey"), col("l_suppkey")),
-        pmod(col("l_partkey"), lit(65536)), pmod(col("l_suppkey"), lit(65536)),
+        Seq(pmod(col("l_partkey"), lit(65536)), pmod(col("l_suppkey"), lit(65536))),
         tmp, numFiles = 16)
       val (aLo, aHi, bLo, bHi) = (64L, 1600L, 16L, 72L)
       // both covers from ONE footer-stats pass (guide §6 — planning reads
-      // metadata, not the table; asking the two entry points separately
-      // would read every footer twice)
+      // metadata, not the table)
       val (coarse, split, _) =
-        Layout.zorderFilesForBoth(s, tmp, aLo, aHi, bLo, bHi)
+        Layout.zorderFiles(s, tmp, Seq((aLo, aHi), (bLo, bHi)))
       s.read.parquet(split: _*)
         .filter(pmod(col("l_partkey"), lit(65536)).between(aLo, aHi) &&
           pmod(col("l_suppkey"), lit(65536)).between(bLo, bHi))
@@ -612,7 +611,7 @@ object RelationalQueries {
       rd(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_partkey"), col("l_suppkey"),
-          Layout.zorderKey3(pmod(col("l_partkey"), lit(65536)),
+          Layout.zorderKey(pmod(col("l_partkey"), lit(65536)),
             pmod(col("l_suppkey"), lit(65536)),
             pmod(col("l_orderkey"), lit(65536))).as("zkey3"))
         .orderBy(col("zkey3"), col("l_orderkey"), col("l_linenumber"))
@@ -626,8 +625,8 @@ object RelationalQueries {
 
     // The 3-D BIGMIN read path through the oracle gate (r15 — closes the
     // "3-D key has no split read path" item): a 3-D box query over a
-    // zorderWrite3 layout answered by reading ONLY the files the octant-
-    // recursion split cover (Layout.zorderRanges3) keeps — the aggregate
+    // three-key zorderWrite layout answered by reading ONLY the files the
+    // octant-recursion split cover (Layout.zorderRanges) keeps — the aggregate
     // must equal DuckDB's over the FULL table, so a cover that drops a file
     // containing box rows hash-fails through the data. The gate bit pins
     // split ≤ coarse; the strict seam-box improvement, exact-cover volume,
@@ -635,16 +634,16 @@ object RelationalQueries {
     ("q56_zorder3_pruned_scan", (s: SparkSession, dir: String) => {
       import graft.ops.Layout
       val tmp = QueryUtil.scratchDir("graft_q56_")
-      Layout.zorderWrite3(
+      Layout.zorderWrite(
         rd(s, dir, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
           col("l_partkey"), col("l_suppkey")),
-        pmod(col("l_partkey"), lit(65536)), pmod(col("l_suppkey"), lit(65536)),
-        pmod(col("l_orderkey"), lit(65536)), tmp, numFiles = 16)
+        Seq(pmod(col("l_partkey"), lit(65536)), pmod(col("l_suppkey"), lit(65536)),
+          pmod(col("l_orderkey"), lit(65536))), tmp, numFiles = 16)
       val (aLo, aHi, bLo, bHi, cLo, cHi) =
         (64L, 1600L, 16L, 72L, 256L, 16384L)
       // both covers from ONE footer-stats pass (see q52)
-      val (coarse, split, _) = Layout.zorderFilesForBoth3(s, tmp,
-        aLo, aHi, bLo, bHi, cLo, cHi)
+      val (coarse, split, _) =
+        Layout.zorderFiles(s, tmp, Seq((aLo, aHi), (bLo, bHi), (cLo, cHi)))
       // an empty keep-set means the box misses every file's key range; a
       // varargs-empty parquet read would throw an opaque error instead
       require(split.nonEmpty,
@@ -671,7 +670,7 @@ object RelationalQueries {
     // partition pruning, q52 z-order file skipping; this row proves they
     // stack, which is the 100 TB read path end-to-end): lineitem written
     // Hive-partitioned by ship year AND z-ordered by (part, supp) within
-    // each partition (Layout.zorderWritePartitioned — one range exchange).
+    // each partition (Layout.zorderWrite's partitionBy — one range exchange).
     // The read takes lever 1 by planning a year-filtered scan whose
     // executed plan must carry the predicate as a PartitionFilter with
     // empty Data/PushedFilters (the `partition_pruned` bit re-checks q53's
@@ -684,14 +683,13 @@ object RelationalQueries {
     ("q57_partition_zorder_composed", (s: SparkSession, dir: String) => {
       import graft.ops.Layout
       val tmp = QueryUtil.scratchDir("graft_q57_")
-      Layout.zorderWritePartitioned(
+      Layout.zorderWrite(
         rd(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
             col("l_suppkey"), col("l_shipdate"))
           .withColumn("l_year", year(col("l_shipdate"))),
-        "l_year",
-        pmod(col("l_partkey"), lit(65536)), pmod(col("l_suppkey"), lit(65536)),
-        tmp, numFiles = 64)
+        Seq(pmod(col("l_partkey"), lit(65536)), pmod(col("l_suppkey"), lit(65536))),
+        tmp, numFiles = 64, partitionBy = Some("l_year"))
       // lever 1: the year predicate plans as a partition filter — nothing
       // left for per-row evaluation (the same properties ExplainSpec pins
       // for q53, re-checked here on the composed layout)
@@ -705,8 +703,8 @@ object RelationalQueries {
       // lever 2: BIGMIN file skipping INSIDE the surviving partition
       val partDir = s"$tmp/l_year=1996"
       val (aLo, aHi, bLo, bHi) = (0L, 255L, 0L, 31L)
-      val (split, filesInPartition) =
-        Layout.zorderFilesForSplit(s, partDir, aLo, aHi, bLo, bHi)
+      val (_, split, filesInPartition) =
+        Layout.zorderFiles(s, partDir, Seq((aLo, aHi), (bLo, bHi)))
       require(split.nonEmpty,
         s"split cover kept no files in $partDir for box a=[$aLo,$aHi] b=[$bLo,$bHi]")
       s.read.parquet(split: _*)

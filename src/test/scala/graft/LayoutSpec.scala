@@ -1,13 +1,16 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.GraftInvalidInputException
 import graft.ops.{Layout, Sketches}
 
 /** Z-order layout (the write-side pruning primitive) and the count-min
   * sketch: the properties the registry oracles can't see — actual file
   * skipping for a box query, and the CMS guarantee under adversarial
-  * collisions.
+  * collisions. The Z-order bodies that hold for two and three keys are
+  * written once and registered per dimension count.
   */
 class LayoutSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
@@ -15,107 +18,181 @@ class LayoutSpec extends SparkSpec {
   private def lineitem = spark.read.parquet(s"$sf/lineitem.parquet")
     .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
 
-  test("morton key: Column form, SQL form, and driver form agree bit-for-bit") {
+  private lazy val telemetry = QueryTelemetry.attach(spark.sparkContext)
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Every combination of one value per lane. */
+  private def cross(choices: Seq[Seq[Long]]): Seq[Seq[Long]] =
+    choices.foldLeft(Seq(Seq.empty[Long])) { (acc, lane) =>
+      for (p <- acc; v <- lane) yield p :+ v
+    }
+
+  /** A (2^bits)^d-point grid over the full 16-bit domain: lane k (column
+    * `ck`) is id's k-th `bits`-bit digit scaled by 2^(16 − bits). (sf0.001's
+    * real key domains are too narrow to exercise pruning — every key would
+    * sit inside any interesting box.)
+    */
+  private def grid(d: Int, bits: Int): DataFrame =
+    spark.range(1L << (d * bits)).select(col("id") +: (0 until d).map { k =>
+      shiftleft(shiftright(col("id"), k * bits).bitwiseAND(lit((1L << bits) - 1)),
+        16 - bits).as(s"c$k")
+    }: _*)
+
+  private def lanes(d: Int): Seq[Column] = (0 until d).map(k => col(s"c$k"))
+
+  private def inBox(box: Seq[(Long, Long)]): Column =
+    box.zipWithIndex.map { case ((lo, hi), k) => col(s"c$k").between(lo, hi) }
+      .reduce(_ && _)
+
+  private def covered(rs: Seq[(Long, Long)], z: Long): Boolean =
+    rs.exists(r => z >= r._1 && z <= r._2)
+
+  private def assertDisjointIncreasing(rs: Seq[(Long, Long)]): Unit =
+    rs.sliding(2).foreach {
+      case Seq((_, h1), (l2, _)) => assert(h1 < l2, "disjoint and increasing")
+      case _ =>
+    }
+
+  // ---- Morton key: Column, SQL and driver forms ------------------------
+
+  /** Coordinate columns of the key-form checks (the q50/q55 lanes). */
+  private val keyLanes = Seq("l_partkey", "l_suppkey", "l_orderkey")
+
+  private def keyFormsAgree(d: Int): Unit = {
+    val coords = keyLanes.take(d).map(c => pmod(col(c), lit(65536)))
     val rows = lineitem.limit(64)
-      .select(pmod(col("l_partkey"), lit(65536)).as("a"),
-        pmod(col("l_suppkey"), lit(65536)).as("b"),
-        Layout.zorderKey2(pmod(col("l_partkey"), lit(65536)),
-          pmod(col("l_suppkey"), lit(65536))).as("z"))
+      .select(coords.zipWithIndex.map { case (c, k) => c.as(s"c$k") } :+
+        Layout.zorderKey(coords: _*).as("z"): _*)
       .collect()
     assert(rows.nonEmpty)
-    rows.foreach { r =>
-      assert(r.getAs[Long]("z") ===
-        Layout.mortonOf(r.getAs[Long]("a"), r.getAs[Long]("b")))
+    def driverKey(r: org.apache.spark.sql.Row): Long =
+      Layout.morton((0 until d).map(k => r.getAs[Long](s"c$k")): _*)
+    rows.foreach(r => assert(r.getAs[Long]("z") === driverKey(r)))
+    // the SQL replica (the q50/q55 oracle) through Spark's own SQL engine
+    val view = s"li_z$d"
+    lineitem.limit(64).createOrReplaceTempView(view)
+    val sqlCoords = keyLanes.take(d).map(c => s"$c % 65536")
+    val sqlKey = d match {
+      case 2 => Layout.zorderKeySql(sqlCoords(0), sqlCoords(1))
+      case 3 => Layout.zorderKey3Sql(sqlCoords(0), sqlCoords(1), sqlCoords(2))
     }
-    // the SQL replica (the q50 oracle) through Spark's own SQL engine
-    lineitem.limit(64).createOrReplaceTempView("li_z")
-    val sqlRows = spark.sql(
-      s"""SELECT ${Layout.zorderKeySql("l_partkey % 65536", "l_suppkey % 65536")} AS z,
-            l_partkey % 65536 AS a, l_suppkey % 65536 AS b FROM li_z""").collect()
-    sqlRows.foreach { r =>
-      assert(r.getAs[Long]("z") ===
-        Layout.mortonOf(r.getAs[Long]("a"), r.getAs[Long]("b")))
+    val sqlRows = spark.sql(s"SELECT $sqlKey AS z, " +
+      sqlCoords.zipWithIndex.map { case (c, k) => s"$c AS c$k" }.mkString(", ") +
+      s" FROM $view").collect()
+    assert(sqlRows.nonEmpty)
+    sqlRows.foreach(r => assert(r.getAs[Long]("z") === driverKey(r)))
+  }
+
+  /** Exact inverse over the grid diagonal (every `step`) + edges, each
+    * paired with mirrored and scattered partners in the other lanes.
+    */
+  private def inverseRoundTrips(d: Int, step: Long): Unit = {
+    val pts = (0L to 65535L by step) ++ Seq(0L, 1L, 65534L, 65535L)
+    for (a <- pts; rest <- cross(Seq.fill(d - 1)(
+        Seq(a, 65535L - a, (a * 31L + 7L) % 65536L)))) {
+      val coords = a +: rest
+      assert(Layout.unmorton(Layout.morton(coords: _*), d) === coords,
+        s"round trip failed at $coords")
     }
+  }
+
+  /** Raising any one coordinate raises the key (pruning soundness). */
+  private def monotone(samples: Seq[Seq[Long]]): Unit =
+    for (coords <- cross(samples); k <- coords.indices
+         if coords(k) < Layout.CoordMax) {
+      val up = coords.updated(k, coords(k) + 1)
+      assert(Layout.morton(coords: _*) < Layout.morton(up: _*),
+        s"key must grow with coordinate $k at $coords")
+    }
+
+  test("morton key: Column form, SQL form, and driver form agree bit-for-bit") {
+    keyFormsAgree(2)
   }
 
   test("morton inverse round-trips every key form") {
-    // full diagonal + edges + a deterministic pseudo-random scatter
-    val pts = (0L to 65535L by 257L) ++ Seq(0L, 1L, 65534L, 65535L)
-    for (a <- pts; b <- Seq(a, 65535L - a, (a * 31L + 7L) % 65536L)) {
-      val z = Layout.mortonOf(a, b)
-      assert(Layout.mortonInverse(z) === (a, b), s"round trip failed at ($a, $b)")
-    }
+    inverseRoundTrips(2, step = 257L)
   }
 
   test("morton key is monotone in each coordinate") {
-    for (a <- Seq(0L, 1L, 77L, 65535L); b <- Seq(0L, 1L, 300L, 65535L)) {
-      if (a < 65535L)
-        assert(Layout.mortonOf(a, b) < Layout.mortonOf(a + 1, b))
-      if (b < 65535L)
-        assert(Layout.mortonOf(a, b) < Layout.mortonOf(a, b + 1))
-    }
+    monotone(Seq(Seq(0L, 1L, 77L, 65535L), Seq(0L, 1L, 300L, 65535L)))
   }
 
   test("3-D morton: Column, SQL, and driver forms agree; inverse round-trips; monotone") {
-    // Column form vs driver form over real data
-    val rows = lineitem.limit(64)
-      .select(pmod(col("l_partkey"), lit(65536)).as("a"),
-        pmod(col("l_suppkey"), lit(65536)).as("b"),
-        pmod(col("l_orderkey"), lit(65536)).as("c"),
-        Layout.zorderKey3(pmod(col("l_partkey"), lit(65536)),
-          pmod(col("l_suppkey"), lit(65536)),
-          pmod(col("l_orderkey"), lit(65536))).as("z"))
-      .collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      assert(r.getAs[Long]("z") === Layout.mortonOf3(r.getAs[Long]("a"),
-        r.getAs[Long]("b"), r.getAs[Long]("c")))
-    }
-    // the SQL replica (the q55 oracle) through Spark's own SQL engine
-    lineitem.limit(64).createOrReplaceTempView("li_z3")
-    spark.sql(s"""SELECT ${Layout.zorderKey3Sql("l_partkey % 65536",
-        "l_suppkey % 65536", "l_orderkey % 65536")} AS z,
-        l_partkey % 65536 AS a, l_suppkey % 65536 AS b,
-        l_orderkey % 65536 AS c FROM li_z3""").collect()
-      .foreach { r =>
-        assert(r.getAs[Long]("z") === Layout.mortonOf3(r.getAs[Long]("a"),
-          r.getAs[Long]("b"), r.getAs[Long]("c")))
+    keyFormsAgree(3)
+    inverseRoundTrips(3, step = 509L)
+    monotone(Seq(Seq(0L, 77L, 65534L), Seq(1L, 300L, 65534L),
+      Seq(0L, 4097L, 65534L)))
+  }
+
+  // The spread chains the key used before the stages were generated from
+  // the dimension count, copied verbatim as the reference.
+  private def spreadBy2(v: Long): Long = {
+    var x = v & 0xffffL
+    x = (x | (x << 8)) & 0x00ff00ffL
+    x = (x | (x << 4)) & 0x0f0f0f0fL
+    x = (x | (x << 2)) & 0x33333333L
+    (x | (x << 1)) & 0x55555555L
+  }
+
+  private def spreadBy3(v: Long): Long = {
+    var x = v & 0xffffL
+    x = (x | (x << 32)) & 0x1f00000000ffffL
+    x = (x | (x << 16)) & 0x1f0000ff0000ffL
+    x = (x | (x << 8)) & 0x100f00f00f00f00fL
+    x = (x | (x << 4)) & 0x10c30c30c30c30c3L
+    (x | (x << 2)) & 0x1249249249249249L
+  }
+
+  test("morton: generated spread stages equal the literal 2-D and 3-D mask chains on every coordinate") {
+    for ((d, ref) <- Seq[(Int, Long => Long)](2 -> spreadBy2, 3 -> spreadBy3)) {
+      val ks = 0 until d
+      // driver form: each lane alone, every 16-bit value
+      (0L to Layout.CoordMax).foreach { v =>
+        ks.foreach { k =>
+          val coords = ks.map(j => if (j == k) v else 0L)
+          val z = Layout.morton(coords: _*)
+          if (z != ref(v) << k) fail(s"d=$d lane $k: morton($coords) = $z, want ${ref(v) << k}")
+          if (Layout.unmorton(z, d) != coords) fail(s"d=$d: unmorton($z) != $coords")
+        }
       }
-    // exact inverse over diagonal + edges + deterministic scatter
-    val pts = (0L to 65535L by 509L) ++ Seq(0L, 1L, 65534L, 65535L)
-    for (a <- pts) {
-      val b = (a * 31L + 7L) % 65536L
-      val c = 65535L - a
-      val z = Layout.mortonOf3(a, b, c)
-      assert(Layout.mortonInverse3(z) === ((a, b, c)),
-        s"3-D round trip failed at ($a, $b, $c)")
-    }
-    // monotone in each coordinate (the pruning-soundness property)
-    for (a <- Seq(0L, 77L, 65534L); b <- Seq(1L, 300L, 65534L);
-         c <- Seq(0L, 4097L, 65534L)) {
-      assert(Layout.mortonOf3(a, b, c) < Layout.mortonOf3(a + 1, b, c))
-      assert(Layout.mortonOf3(a, b, c) < Layout.mortonOf3(a, b + 1, c))
-      assert(Layout.mortonOf3(a, b, c) < Layout.mortonOf3(a, b, c + 1))
+      // Column form over the same domain
+      val keys = ks.map(k => Layout.zorderKey(ks.map(j =>
+        if (j == k) col("id") else lit(0L)): _*).as(s"z$k"))
+      val rows = spark.range(Layout.CoordMax + 1).select(col("id") +: keys: _*)
+        .collect()
+      assert(rows.length === 65536)
+      rows.foreach { r =>
+        val v = r.getLong(0)
+        ks.foreach { k =>
+          if (r.getLong(k + 1) != ref(v) << k)
+            fail(s"d=$d lane $k: zorderKey at $v = ${r.getLong(k + 1)}, want ${ref(v) << k}")
+        }
+      }
     }
   }
 
+  test("morton and zorderKey take two or three coordinates only") {
+    intercept[IllegalArgumentException](Layout.morton(1L))
+    intercept[IllegalArgumentException](Layout.morton(1L, 2L, 3L, 4L))
+    intercept[IllegalArgumentException](Layout.unmorton(0L, 4))
+    intercept[IllegalArgumentException](Layout.zorderKey(col("a")))
+    intercept[IllegalArgumentException](Layout.zorderRanges(Seq((0L, 1L))))
+  }
+
+  // ---- write + file skipping -------------------------------------------
+
   test("zorderWrite: box query skips most files; a round-robin layout skips none") {
-    val tmpZ = java.nio.file.Files.createTempDirectory("graft_zorder_").toString
-    val tmpN = java.nio.file.Files.createTempDirectory("graft_naive_").toString
-    // a full 256×256 grid over the 16-bit key space (sf0.001's real key
-    // domains are too narrow to exercise pruning — every key would sit
-    // inside any interesting box)
-    val grid = spark.range(65536L)
-      .select(col("id"),
-        shiftleft(col("id").bitwiseAND(lit(255L)), 8).as("ca"),
-        shiftleft(shiftright(col("id"), 8).bitwiseAND(lit(255L)), 8).as("cb"))
-    val a = col("ca")
-    val b = col("cb")
+    val tmpZ = tempDir("graft_zorder_")
+    val tmpN = tempDir("graft_naive_")
+    // a full 256×256 grid over the 16-bit key space
+    val g = grid(2, bits = 8)
     val nFiles = 16
-    Layout.zorderWrite(grid, a, b, tmpZ, nFiles)
+    Layout.zorderWrite(g, lanes(2), tmpZ, nFiles)
     // naive comparator: same zkey column, but round-robin placement — every
     // file's footer range spans nearly the whole key space
-    grid.withColumn("zkey", Layout.zorderKey2(a, b))
+    g.withColumn("zkey", Layout.zorderKey(lanes(2): _*))
       .repartition(nFiles)
       .write.mode("overwrite").parquet(tmpN)
 
@@ -133,51 +210,60 @@ class LayoutSpec extends SparkSpec {
     }
 
     // a small 2-D box: both dims constrained
-    val (aLo, aHi, bLo, bHi) = (0L, 2047L, 0L, 2047L)
-    val (keepZ, totalZ) = Layout.zorderFilesFor(spark, tmpZ, aLo, aHi, bLo, bHi)
-    val (keepN, totalN) = Layout.zorderFilesFor(spark, tmpN, aLo, aHi, bLo, bHi)
+    val box = Seq((0L, 2047L), (0L, 2047L))
+    val (keepZ, _, totalZ) = Layout.zorderFiles(spark, tmpZ, box)
+    val (keepN, _, totalN) = Layout.zorderFiles(spark, tmpN, box)
     assert(keepZ.size.toDouble / totalZ <= 0.5,
       s"zorder layout should skip at least half the files for a 1/1024 box, kept ${keepZ.size}/$totalZ")
     assert(keepN.size.toDouble >= totalN * 0.9,
       s"round-robin layout should skip ~nothing, kept ${keepN.size}/$totalN")
 
     // soundness: the kept files contain every box row
-    val expected = grid
-      .filter(a.between(aLo, aHi) && b.between(bLo, bHi)).count()
+    val expected = g.filter(inBox(box)).count()
     assert(expected === 64L, "8×8 grid cells inside the box")
-    val got = spark.read.parquet(keepZ: _*)
-      .filter(col("ca").between(aLo, aHi) && col("cb").between(bLo, bHi))
-      .count()
+    val got = spark.read.parquet(keepZ: _*).filter(inBox(box)).count()
     assert(got === expected, "file pruning must not drop box rows")
   }
 
-  private def covered(rs: Seq[(Long, Long)], z: Long): Boolean =
-    rs.exists(r => z >= r._1 && z <= r._2)
-
-  test("zorderRanges: exact cover is disjoint, increasing, and exactly the box") {
-    val (aLo, aHi, bLo, bHi) = (3L, 300L, 129L, 40000L)
-    val rs = Layout.zorderRanges(aLo, aHi, bLo, bHi, maxRanges = Int.MaxValue)
-    rs.sliding(2).foreach {
-      case Seq((_, h1), (l2, _)) => assert(h1 < l2, "disjoint and increasing")
-      case _ =>
-    }
-    // exact quadtree cover: total keys covered == box area (no over-read)
+  /** The exact cover (no budget) is disjoint, increasing, covers exactly
+    * the box's volume, holds the sampled box points (corners plus
+    * `interior` values per lane) and misses the points one step outside
+    * each face and the domain's two corners.
+    */
+  private def exactCover(box: Seq[(Long, Long)], interior: Seq[Seq[Long]]): Unit = {
+    val rs = Layout.zorderRanges(box, maxRanges = Int.MaxValue)
+    assertDisjointIncreasing(rs)
+    // exact cover: total keys covered == box volume (no over-read)
     assert(rs.map(r => r._2 - r._1 + 1).sum ===
-      (aHi - aLo + 1) * (bHi - bLo + 1))
-    // every sampled box point is covered; seam-adjacent outside points are not
-    for (a <- Seq(aLo, aHi, 77L, 256L); b <- Seq(bLo, bHi, 1024L, 32768L, 39999L))
-      assert(covered(rs, Layout.mortonOf(a, b)), s"box point ($a,$b) must be covered")
-    for ((a, b) <- Seq((aLo - 1, bLo), (aHi + 1, bHi), (aLo, bLo - 1),
-        (aHi, bHi + 1), (0L, 0L), (65535L, 65535L)))
-      assert(!covered(rs, Layout.mortonOf(a, b)),
-        s"outside point ($a,$b) must not be covered by the exact cover")
+      box.map { case (lo, hi) => hi - lo + 1 }.product)
+    for (p <- cross(box.zip(interior).map { case ((lo, hi), in) => Seq(lo, hi) ++ in }))
+      assert(covered(rs, Layout.morton(p: _*)), s"box point $p must be covered")
+    val (los, his) = box.unzip
+    val outside = box.indices.flatMap { k =>
+      Seq(los.updated(k, los(k) - 1), his.updated(k, his(k) + 1))
+    } ++ Seq(box.map(_ => 0L), box.map(_ => Layout.CoordMax))
+    for (p <- outside)
+      assert(!covered(rs, Layout.morton(p: _*)),
+        s"outside point $p must not be covered by the exact cover")
   }
 
-  test("zorderRanges: merged covers stay sound; maxRanges=1 degenerates to the coarse envelope") {
-    val (aLo, aHi, bLo, bHi) = (100L, 5000L, 30000L, 35000L) // crosses the b=32768 seam
-    val exact = Layout.zorderRanges(aLo, aHi, bLo, bHi, maxRanges = Int.MaxValue)
+  test("zorderRanges: exact cover is disjoint, increasing, and exactly the box") {
+    exactCover(Seq((3L, 300L), (129L, 40000L)),
+      Seq(Seq(77L, 256L), Seq(1024L, 32768L, 39999L)))
+  }
+
+  test("zorderRanges3: exact cover is disjoint, increasing, and exactly the box") {
+    exactCover(Seq((3L, 60L), (9L, 200L), (7L, 50L)),
+      Seq(Seq(33L), Seq(128L), Seq(32L)))
+  }
+
+  /** Budgeted covers contain every exact range; maxRanges = 1 is the
+    * coarse envelope.
+    */
+  private def mergedCovers(box: Seq[(Long, Long)]): Unit = {
+    val exact = Layout.zorderRanges(box, maxRanges = Int.MaxValue)
     for (m <- Seq(1, 4, 16, 64)) {
-      val rs = Layout.zorderRanges(aLo, aHi, bLo, bHi, maxRanges = m)
+      val rs = Layout.zorderRanges(box, maxRanges = m)
       assert(rs.length <= m)
       // merging only over-covers: every exact range sits inside a merged one
       exact.foreach { case (lo, hi) =>
@@ -185,85 +271,139 @@ class LayoutSpec extends SparkSpec {
           s"maxRanges=$m dropped keys of an exact range")
       }
     }
-    assert(Layout.zorderRanges(aLo, aHi, bLo, bHi, maxRanges = 1) ===
-      Seq((Layout.mortonOf(aLo, bLo), Layout.mortonOf(aHi, bHi))))
+    assert(Layout.zorderRanges(box, maxRanges = 1) ===
+      Seq((Layout.morton(box.map(_._1): _*), Layout.morton(box.map(_._2): _*))))
+  }
+
+  test("zorderRanges: merged covers stay sound; maxRanges=1 degenerates to the coarse envelope") {
+    mergedCovers(Seq((100L, 5000L), (30000L, 35000L))) // crosses the b=32768 seam
+  }
+
+  test("zorderRanges3: merged covers stay sound; maxRanges=1 degenerates to the coarse envelope") {
+    // crosses the b = 32768 seam (key bit 46)
+    mergedCovers(Seq((100L, 5000L), (30000L, 35000L), (7L, 900L)))
+  }
+
+  /** A box whose exact cover needs more splits than the budget: the cover
+    * keeps the requested cap and still holds every sampled box point.
+    */
+  private def budgetExhaustion(box: Seq[(Long, Long)], interior: Seq[Seq[Long]]): Unit = {
+    val rs = Layout.zorderRanges(box, maxRanges = 8)
+    assert(rs.length <= 8)
+    assertDisjointIncreasing(rs)
+    val vol = box.map { case (lo, hi) => hi - lo + 1 }.product
+    assert(rs.map(r => r._2 - r._1 + 1).sum >= vol,
+      "budgeted cover must still cover at least the box volume")
+    for (p <- cross(box.zip(interior).map { case ((lo, hi), in) => Seq(lo, hi) ++ in }))
+      assert(covered(rs, Layout.morton(p: _*)),
+        s"box point $p must survive budget exhaustion")
+  }
+
+  test("zorderRanges: split-budget exhaustion over-covers but never drops box keys") {
+    // ~11k splits for the exact cover vs the 4096-split budget
+    budgetExhaustion(Seq((100L, 5000L), (30000L, 35000L)),
+      Seq(Seq(2048L), Seq(32767L, 32768L)))
+  }
+
+  test("zorderRanges3: split-budget exhaustion over-covers but never drops box keys") {
+    // a box this large has an exact octree cover in the millions of cells
+    budgetExhaustion(Seq((100L, 50000L), (200L, 60000L), (300L, 40000L)),
+      Seq(Seq(32768L), Seq(4096L), Seq(16384L)))
   }
 
   test("zorderRanges rejects out-of-domain boxes that would wrap under the 16-bit masks") {
     intercept[IllegalArgumentException] {
-      Layout.zorderRanges(0L, 65536L, 0L, 10L)
+      Layout.zorderRanges(Seq((0L, 65536L), (0L, 10L)))
     }
     intercept[IllegalArgumentException] {
-      Layout.zorderFilesFor(spark, "/nonexistent", -1L, 10L, 0L, 10L)
+      Layout.zorderFiles(spark, "/nonexistent", Seq((-1L, 10L), (0L, 10L)))
     }
   }
 
-  test("split envelope: sound, and strictly better than coarse on a seam-crossing box") {
-    val tmpZ = java.nio.file.Files.createTempDirectory("graft_zsplit_").toString
-    val grid = spark.range(65536L)
-      .select(col("id"),
-        shiftleft(col("id").bitwiseAND(lit(255L)), 8).as("ca"),
-        shiftleft(shiftright(col("id"), 8).bitwiseAND(lit(255L)), 8).as("cb"))
-    Layout.zorderWrite(grid, col("ca"), col("cb"), tmpZ, 16)
-    // box crossing the b = 32768 seam: the coarse one-range envelope spans
-    // the whole inter-half z gap, the split cover skips it
-    val (aLo, aHi, bLo, bHi) = (0L, 2047L, 32512L, 33535L)
-    val (coarse, total) = Layout.zorderFilesFor(spark, tmpZ, aLo, aHi, bLo, bHi)
-    val (split, total2) = Layout.zorderFilesForSplit(spark, tmpZ, aLo, aHi, bLo, bHi)
-    assert(total === total2)
+  test("zorderRanges3 rejects out-of-domain boxes that would wrap under the 16-bit masks") {
+    intercept[IllegalArgumentException] {
+      Layout.zorderRanges(Seq((0L, 65536L), (0L, 10L), (0L, 10L)))
+    }
+    intercept[IllegalArgumentException] {
+      Layout.zorderFiles(spark, "/nonexistent", Seq((0L, 10L), (-1L, 10L), (0L, 10L)))
+    }
+  }
+
+  /** On a box crossing the top key bit's seam the split cover keeps a
+    * strict subset of the coarse envelope's files, and loses no box row.
+    */
+  private def splitEnvelope(d: Int, bits: Int, box: Seq[(Long, Long)],
+      expectedRows: Long): Unit = {
+    val tmpZ = tempDir(s"graft_zsplit${d}_")
+    val g = grid(d, bits)
+    Layout.zorderWrite(g, lanes(d), tmpZ, 16)
+    val (coarse, split, total) = Layout.zorderFiles(spark, tmpZ, box)
+    assert(total === dataFiles(tmpZ).size.toLong, "every written file is counted")
     assert(split.toSet.subsetOf(coarse.toSet),
       "split ranges lie inside the coarse interval, so kept files must too")
     assert(split.size < coarse.size,
       s"split must prune strictly more on a seam box: split ${split.size} " +
         s"vs coarse ${coarse.size} of $total")
     // soundness: the kept files contain every box row
-    val expected = grid.filter(col("ca").between(aLo, aHi) &&
-      col("cb").between(bLo, bHi)).count()
-    assert(expected === 32L)
-    val got = spark.read.parquet(split: _*)
-      .filter(col("ca").between(aLo, aHi) && col("cb").between(bLo, bHi))
-      .count()
+    val expected = g.filter(inBox(box)).count()
+    assert(expected === expectedRows)
+    val got = spark.read.parquet(split: _*).filter(inBox(box)).count()
     assert(got === expected, "split file pruning must not drop box rows")
   }
 
+  test("split envelope: sound, and strictly better than coarse on a seam-crossing box") {
+    // 256×256 grid; the box crosses the b = 32768 seam: the coarse one-range
+    // envelope spans the whole inter-half z gap, the split cover skips it
+    splitEnvelope(2, bits = 8, Seq((0L, 2047L), (32512L, 33535L)), 32L)
+  }
+
+  test("3-D split envelope: sound, and strictly better than coarse on a seam-crossing box") {
+    // 32^3 grid; the box crosses the c = 32768 seam (key bit 47, the
+    // topmost): the coarse envelope spans nearly the whole key space, the
+    // split cover keeps two compact regions
+    splitEnvelope(3, bits = 5,
+      Seq((0L, 4095L), (0L, 4095L), (30720L, 34815L)), 8L)
+  }
+
   test("zorderFilesForBoth: one stats pass reproduces both covers exactly") {
-    val tmpZ = java.nio.file.Files.createTempDirectory("graft_zboth_").toString
-    val grid = spark.range(65536L)
-      .select(col("id"),
-        shiftleft(col("id").bitwiseAND(lit(255L)), 8).as("ca"),
-        shiftleft(shiftright(col("id"), 8).bitwiseAND(lit(255L)), 8).as("cb"))
-    Layout.zorderWrite(grid, col("ca"), col("cb"), tmpZ, 16)
-    val (aLo, aHi, bLo, bHi) = (0L, 2047L, 32512L, 33535L)
-    val (coarse1, total1) = Layout.zorderFilesFor(spark, tmpZ, aLo, aHi, bLo, bHi)
-    val (split1, _) = Layout.zorderFilesForSplit(spark, tmpZ, aLo, aHi, bLo, bHi)
-    val (coarse2, split2, total2) =
-      Layout.zorderFilesForBoth(spark, tmpZ, aLo, aHi, bLo, bHi)
-    assert(coarse2.sorted === coarse1.sorted)
-    assert(split2.sorted === split1.sorted)
-    assert(total2 === total1)
+    val tmpZ = tempDir("graft_zboth_")
+    Layout.zorderWrite(grid(2, bits = 8), lanes(2), tmpZ, 16)
+    val box = Seq((0L, 2047L), (32512L, 33535L))
+    val (coarse, split, total) = Layout.zorderFiles(spark, tmpZ, box)
+    // reference: per-file key ranges from a data scan, intersected with the
+    // envelope and with the range cover
+    val scanned = spark.read.parquet(tmpZ)
+      .groupBy(input_file_name().as("f"))
+      .agg(min("zkey").as("zmin"), max("zkey").as("zmax"))
+      .collect()
+      .map(r => (new org.apache.hadoop.fs.Path(r.getAs[String]("f")).toString,
+        r.getAs[Long]("zmin"), r.getAs[Long]("zmax")))
+    val (zLo, zHi) = (Layout.morton(0L, 32512L), Layout.morton(2047L, 33535L))
+    val ranges = Layout.zorderRanges(box)
+    def overlapping(rs: Seq[(Long, Long)]): Seq[String] = scanned.collect {
+      case (f, zmin, zmax) if rs.exists(r => zmax >= r._1 && zmin <= r._2) => f
+    }.toSeq
+    assert(coarse.sorted === overlapping(Seq((zLo, zHi))).sorted)
+    assert(split.sorted === overlapping(ranges).sorted)
+    assert(total === scanned.length.toLong)
     intercept[IllegalArgumentException] {
-      Layout.zorderFilesForBoth(spark, "/nonexistent", -1L, 10L, 0L, 10L)
+      Layout.zorderFiles(spark, "/nonexistent", Seq((-1L, 10L), (0L, 10L)))
     }
   }
 
   test("footer-based file stats agree with a data scan of the persisted key") {
     // the skip set must be buildable from footer metadata alone; this pins
-    // that the footer min/max equal the scanned min/max per file (the
-    // pre-r16 scan form survives only as the no-stats fallback)
-    val tmpZ = java.nio.file.Files.createTempDirectory("graft_zfoot_").toString
-    val grid = spark.range(4096L)
-      .select(col("id"),
-        shiftleft(col("id").bitwiseAND(lit(63L)), 10).as("ca"),
-        shiftleft(shiftright(col("id"), 6).bitwiseAND(lit(63L)), 10).as("cb"))
-    Layout.zorderWrite(grid, col("ca"), col("cb"), tmpZ, 8)
+    // that the footer min/max equal the scanned min/max per file
+    val tmpZ = tempDir("graft_zfoot_")
+    Layout.zorderWrite(grid(2, bits = 6), lanes(2), tmpZ, 8)
     val scanned = spark.read.parquet(tmpZ)
       .groupBy(input_file_name().as("file"))
       .agg(min("zkey").as("zmin"), max("zkey").as("zmax"))
       .collect()
       .map(r => (r.getAs[Long]("zmin"), r.getAs[Long]("zmax"))).sorted
     // the full-domain box keeps every file; its stats pass is footer-based
-    val (all, total) = Layout.zorderFilesFor(spark, tmpZ,
-      0L, Layout.CoordMax, 0L, Layout.CoordMax)
+    val (all, _, total) = Layout.zorderFiles(spark, tmpZ,
+      Seq((0L, Layout.CoordMax), (0L, Layout.CoordMax)))
     assert(all.size.toLong === total)
     // per-file ranges from the footers must tile exactly like the scan's:
     // re-derive them by scanning the kept files one at a time
@@ -275,114 +415,28 @@ class LayoutSpec extends SparkSpec {
     assert(byFooter === scanned.toSeq)
   }
 
-  test("zorderRanges3: exact cover is disjoint, increasing, and exactly the box") {
-    val (aLo, aHi, bLo, bHi, cLo, cHi) = (3L, 60L, 9L, 200L, 7L, 50L)
-    val rs = Layout.zorderRanges3(aLo, aHi, bLo, bHi, cLo, cHi,
-      maxRanges = Int.MaxValue)
-    rs.sliding(2).foreach {
-      case Seq((_, h1), (l2, _)) => assert(h1 < l2, "disjoint and increasing")
-      case _ =>
+  test("zorderFiles: a layout without the box's key column fails fast, naming file and key, with no Spark job") {
+    val tmpZ = tempDir("graft_zmismatch_")
+    Layout.zorderWrite(grid(2, bits = 6), lanes(2), tmpZ, 4)
+    val tmpPlain = tempDir("graft_zplain_")
+    grid(2, bits = 6).write.mode("overwrite").parquet(tmpPlain)
+    val tag = "layout-mismatch"
+    val (threeOverTwo, twoOverPlain) = telemetry.tagged(tag) {
+      (intercept[GraftInvalidInputException](Layout.zorderFiles(spark, tmpZ,
+        Seq((0L, 10L), (0L, 10L), (0L, 10L)))),
+       intercept[GraftInvalidInputException](Layout.zorderFiles(spark, tmpPlain,
+        Seq((0L, 10L), (0L, 10L)))))
     }
-    // exact octree cover: total keys covered == box volume (no over-read)
-    assert(rs.map(r => r._2 - r._1 + 1).sum ===
-      (aHi - aLo + 1) * (bHi - bLo + 1) * (cHi - cLo + 1))
-    // every sampled box point is covered; seam-adjacent outside points not
-    for (a <- Seq(aLo, aHi, 33L); b <- Seq(bLo, bHi, 128L); c <- Seq(cLo, cHi, 32L))
-      assert(covered(rs, Layout.mortonOf3(a, b, c)),
-        s"box point ($a,$b,$c) must be covered")
-    for ((a, b, c) <- Seq((aLo - 1, bLo, cLo), (aHi + 1, bHi, cHi),
-        (aLo, bLo - 1, cLo), (aHi, bHi + 1, cHi), (aLo, bLo, cLo - 1),
-        (aHi, bHi, cHi + 1), (0L, 0L, 0L), (65535L, 65535L, 65535L)))
-      assert(!covered(rs, Layout.mortonOf3(a, b, c)),
-        s"outside point ($a,$b,$c) must not be covered by the exact cover")
-  }
-
-  test("zorderRanges3: merged covers stay sound; maxRanges=1 degenerates to the coarse envelope") {
-    // crosses the b = 32768 seam (key bit 46)
-    val (aLo, aHi, bLo, bHi, cLo, cHi) = (100L, 5000L, 30000L, 35000L, 7L, 900L)
-    val exact = Layout.zorderRanges3(aLo, aHi, bLo, bHi, cLo, cHi,
-      maxRanges = Int.MaxValue)
-    for (m <- Seq(1, 4, 16, 64)) {
-      val rs = Layout.zorderRanges3(aLo, aHi, bLo, bHi, cLo, cHi, maxRanges = m)
-      assert(rs.length <= m)
-      // merging only over-covers: every exact range sits inside a merged one
-      exact.foreach { case (lo, hi) =>
-        assert(rs.exists(r => r._1 <= lo && hi <= r._2),
-          s"maxRanges=$m dropped keys of an exact range")
-      }
-    }
-    assert(Layout.zorderRanges3(aLo, aHi, bLo, bHi, cLo, cHi, maxRanges = 1) ===
-      Seq((Layout.mortonOf3(aLo, bLo, cLo), Layout.mortonOf3(aHi, bHi, cHi))))
-  }
-
-  test("zorderRanges3: split-budget exhaustion over-covers but never drops box keys") {
-    // a box this large has an exact octree cover in the millions of cells —
-    // the split budget must kick in, keep the range count at the requested
-    // cap, and still cover every box point (over-cover only)
-    val (aLo, aHi, bLo, bHi, cLo, cHi) =
-      (100L, 50000L, 200L, 60000L, 300L, 40000L)
-    val rs = Layout.zorderRanges3(aLo, aHi, bLo, bHi, cLo, cHi, maxRanges = 8)
-    assert(rs.length <= 8)
-    rs.sliding(2).foreach {
-      case Seq((_, h1), (l2, _)) => assert(h1 < l2, "disjoint and increasing")
-      case _ =>
-    }
-    val vol = (aHi - aLo + 1) * (bHi - bLo + 1) * (cHi - cLo + 1)
-    assert(rs.map(r => r._2 - r._1 + 1).sum >= vol,
-      "budgeted cover must still cover at least the box volume")
-    for (a <- Seq(aLo, aHi, 32768L); b <- Seq(bLo, bHi, 4096L);
-        c <- Seq(cLo, cHi, 16384L))
-      assert(covered(rs, Layout.mortonOf3(a, b, c)),
-        s"box point ($a,$b,$c) must survive budget exhaustion")
-  }
-
-  test("zorderRanges3 rejects out-of-domain boxes that would wrap under the 16-bit masks") {
-    intercept[IllegalArgumentException] {
-      Layout.zorderRanges3(0L, 65536L, 0L, 10L, 0L, 10L)
-    }
-    intercept[IllegalArgumentException] {
-      Layout.zorderFilesFor3(spark, "/nonexistent", 0L, 10L, -1L, 10L, 0L, 10L)
-    }
-  }
-
-  test("3-D split envelope: sound, and strictly better than coarse on a seam-crossing box") {
-    val tmpZ = java.nio.file.Files.createTempDirectory("graft_zsplit3_").toString
-    // 32^3 grid scaled by 2048 so coordinates span the full 16-bit domain
-    val grid = spark.range(32768L)
-      .select(col("id"),
-        shiftleft(col("id").bitwiseAND(lit(31L)), 11).as("ca"),
-        shiftleft(shiftright(col("id"), 5).bitwiseAND(lit(31L)), 11).as("cb"),
-        shiftleft(shiftright(col("id"), 10).bitwiseAND(lit(31L)), 11).as("cc"))
-    Layout.zorderWrite3(grid, col("ca"), col("cb"), col("cc"), tmpZ, 16)
-    // box crossing the c = 32768 seam (key bit 47, the topmost): the coarse
-    // one-range envelope spans nearly the whole key space, the split cover
-    // keeps two compact regions
-    val (aLo, aHi) = (0L, 4095L)
-    val (bLo, bHi) = (0L, 4095L)
-    val (cLo, cHi) = (30720L, 34815L)
-    val (coarse, total) = Layout.zorderFilesFor3(spark, tmpZ,
-      aLo, aHi, bLo, bHi, cLo, cHi)
-    val (split, total2) = Layout.zorderFilesForSplit3(spark, tmpZ,
-      aLo, aHi, bLo, bHi, cLo, cHi)
-    assert(total === total2)
-    assert(split.toSet.subsetOf(coarse.toSet),
-      "split ranges lie inside the coarse interval, so kept files must too")
-    assert(split.size < coarse.size,
-      s"split must prune strictly more on a seam box: split ${split.size} " +
-        s"vs coarse ${coarse.size} of $total")
-    // soundness: the kept files contain every box row
-    val expected = grid.filter(col("ca").between(aLo, aHi) &&
-      col("cb").between(bLo, bHi) && col("cc").between(cLo, cHi)).count()
-    assert(expected === 8L)
-    val got = spark.read.parquet(split: _*)
-      .filter(col("ca").between(aLo, aHi) && col("cb").between(bLo, bHi) &&
-        col("cc").between(cLo, cHi))
-      .count()
-    assert(got === expected, "split file pruning must not drop box rows")
+    assert(threeOverTwo.getMessage.contains("zkey3") &&
+      threeOverTwo.getMessage.contains(tmpZ), threeOverTwo.getMessage)
+    assert(twoOverPlain.getMessage.contains("zkey") &&
+      twoOverPlain.getMessage.contains(tmpPlain), twoOverPlain.getMessage)
+    telemetry.drain()
+    assert(telemetry.take(tag).jobs === 0, "footer checks must not start a job")
   }
 
   test("zorderWritePartitioned: both levers hold — partition dirs + in-partition file skipping, row set exact") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zpart_").toString
+    val tmp = tempDir("graft_zpart_")
     // 3 partitions × a 64×64 coordinate grid scaled by 1024
     val grid = spark.range(12288L)
       .select(col("id"),
@@ -390,7 +444,8 @@ class LayoutSpec extends SparkSpec {
         shiftleft(col("id").bitwiseAND(lit(63L)), 10).as("ca"),
         shiftleft(shiftright(col("id"), 6).bitwiseAND(lit(63L)), 10)
           .bitwiseAND(lit(65535L)).as("cb"))
-    Layout.zorderWritePartitioned(grid, "p", col("ca"), col("cb"), tmp, 24)
+    Layout.zorderWrite(grid, Seq(col("ca"), col("cb")), tmp, 24,
+      partitionBy = Some("p"))
     // lever 1: the layout is Hive-partitioned — one directory per p value
     val fs = new org.apache.hadoop.fs.Path(tmp)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -400,8 +455,8 @@ class LayoutSpec extends SparkSpec {
     // lever 2: INSIDE one partition the persisted zkey still skips files
     // for a small box (the composition q57 gates through data at sf0.01)
     val (aLo, aHi, bLo, bHi) = (0L, 4095L, 0L, 4095L)
-    val (keep, total) = Layout.zorderFilesForSplit(spark, s"$tmp/p=1",
-      aLo, aHi, bLo, bHi)
+    val (_, keep, total) = Layout.zorderFiles(spark, s"$tmp/p=1",
+      Seq((aLo, aHi), (bLo, bHi)))
     assert(total >= 4, s"partition should hold several files, got $total")
     assert(keep.size < total,
       s"box must skip files inside the partition: kept ${keep.size}/$total")
@@ -418,6 +473,7 @@ class LayoutSpec extends SparkSpec {
       .agg(sum(col("id")).cast("long")).head.getLong(0) ===
       12288L * 12287L / 2)
   }
+
 
   test("count-min sketch never underestimates and is exact for unique-bucket tokens") {
     import spark.implicits._

@@ -153,7 +153,10 @@ class CryptoCoreSpec extends AnyFunSuite {
   }
 
   test("cell framing: header fields + malformed rejections") {
-    val cell = WireFormat.frameCell(WireFormat.ModePerValueFixed, 4, Array[Byte](9, 9, 9, 9))
+    val ct = Array[Byte](9, 9, 9, 9)
+    val cell = new Array[Byte](WireFormat.CellHeaderLen + ct.length)
+    WireFormat.writeCellHeader(cell, WireFormat.ModePerValueFixed, 4)
+    System.arraycopy(ct, 0, cell, WireFormat.CellHeaderLen, ct.length)
     val (mode, plen) = WireFormat.validateCellHeader(cell)
     assert(mode == WireFormat.ModePerValueFixed && plen == 4)
     assert(cell.drop(WireFormat.CellHeaderLen).sameElements(Array[Byte](9, 9, 9, 9)))
