@@ -7,15 +7,17 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.functions.{conv, md5, substring, xxhash64}
 import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types._
 
 /** SimHash as a custom `TypedImperativeAggregate`: accumulates per-bit ±1
   * votes from 64-bit token hashes into a 64-int buffer and emits the 64-bit
-  * signature.
+  * signature. [[graft.ops.Dedup.simhash]] feeds it a [[TokenHash]].
   *
   * Scale rationale: the composable formulation (explode 64 bit-votes per
-  * token, two groupBys — `Dedup.simhashViaBits`) shuffles 64× the rows; this
+  * token, two groupBys — kept in the test tree as `OpsSpec.simhashViaBits`,
+  * the reference that pins this aggregate) shuffles 64× the rows; this
   * aggregate is ONE partial-aggregated shuffle with a 256-byte buffer —
   * exactly the mutable-buffer pattern the reference uses for its in-place
   * encryption loops (`typed_buffer.h` write buffers).
@@ -84,4 +86,35 @@ object SimHashAgg {
   /** simhash_agg(tokenHash) — aggregate a LongType token-hash column. */
   def simhash_agg(c: Column): Column =
     ColumnShim.column(SimHashAgg(ColumnShim.expression(c)).toAggregateExpression())
+}
+
+/** The per-token hash a SimHash signature votes over. [[SimHashAgg]]
+  * always emits 64 bits; a bit the token hash never sets votes −1 for
+  * every token and stays clear in every signature.
+  */
+sealed trait TokenHash {
+  def apply(tok: Column): Column
+}
+
+object TokenHash {
+  /** xxhash64: all 64 bits, the production hash; no SQL replay. */
+  case object Xxhash64 extends TokenHash {
+    def apply(tok: Column): Column = xxhash64(tok)
+  }
+
+  /** [[HashKernels.fmixToken63]]: non-negative 63 bits, replayed bit for bit
+    * in DuckDB (d04); signatures are non-negative, which the oracle's
+    * BIGINT bit extraction relies on.
+    */
+  case object Fmix63 extends TokenHash {
+    def apply(tok: Column): Column = FmixTokenHash63.fmix_token_hash63(tok)
+  }
+
+  /** The first 15 hex digits of md5 as a 60-bit BIGINT (d05, d08, st04):
+    * bits 60..63 of every signature stay clear, as the oracle recomputes.
+    */
+  case object Md5 extends TokenHash {
+    def apply(tok: Column): Column =
+      conv(substring(md5(tok), 1, 15), 16, 10).cast("long")
+  }
 }

@@ -482,7 +482,7 @@ object VectorFunctions {
     *  - `graft_mix64(h, seed)`               64-bit finalizer mix
     *  - `graft_hyperplane_sig(qv, off, planes)`  sign-LSH bucket
     *  - `graft_rolling_hash(text)`           base-257 rolling fingerprint
-    *  - `graft_simhash(hash)` (aggregate)    60-bit SimHash over token hashes
+    *  - `graft_simhash(hash)` (aggregate)    64-bit SimHash (60/63 live bits under md5/fmix)
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry

@@ -8,12 +8,12 @@ import org.apache.spark.sql.DataFrame
   * pipelines (shingle tables, quantized embeddings).
   *
   * The dedup/similarity pipelines cache frames that feed 3–4 downstream
-  * consumers; without a scope those cached RDDs live until Spark's
-  * ContextCleaner collects the plan, which a caller looping over many corpora
-  * can outpace. `CacheScope.withScope { scope => ... materialize ... }`
-  * unpersists everything the pipeline cached as soon as the result is
-  * materialized; the default [[CacheScope.unmanaged]] keeps the historical
-  * one-shot-job behavior (cache, let the cleaner reap it).
+  * consumers, and Spark's `CacheManager` holds each until `unpersist` or
+  * `clearCache` (the ContextCleaner never reaps it with the plan).
+  * `CacheScope.withScope { scope => ... materialize ... }` unpersists
+  * everything the pipeline cached as soon as the result is materialized;
+  * under the default [[CacheScope.unmanaged]] a caller looping over many
+  * corpora must `clearCache()` itself, or the session's cache only grows.
   */
 final class CacheScope private[ops] (track: Boolean) {
   private val frames = ArrayBuffer.empty[DataFrame]
@@ -35,8 +35,8 @@ final class CacheScope private[ops] (track: Boolean) {
 }
 
 object CacheScope {
-  /** Untracked scope: caches live until the ContextCleaner drops them with
-    * the plan. The right default for one-shot jobs (registry queries).
+  /** Untracked scope: caches live until the session's `clearCache()`.
+    * Fits one-shot jobs only (registry queries).
     */
   val unmanaged: CacheScope = new CacheScope(track = false)
 

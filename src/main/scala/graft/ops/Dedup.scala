@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TokenHash
+
 /** Deduplication operators for training-data pipelines.
   *
   * Scale design (100 TB discipline):
@@ -493,19 +495,13 @@ object Dedup {
       .select("d1", "d2", "edit_dist")
   }
 
-  /** MinHash signatures: ONE xxhash64 over the shingle string, then k cheap
-    * 64-bit finalizer mixes (xor-fold + odd multiply) — hashing the string k
-    * times costs k× the string bytes; mixing the long costs 3 ALU ops. One
-    * groupBy; each min is a partial aggregate (map-side combined).
+  /** MinHash signatures over pre-hashed (id, sh: long) shingles: k cheap
+    * 64-bit finalizer mixes (xor-fold + odd multiply, 3 ALU ops) of each
+    * shingle's ONE xxhash64, computed by the caller in a projection
+    * (aggregate inputs are not common-subexpression-eliminated, so k min()s
+    * over a string hash would hash it k times). One groupBy; each min is a
+    * partial aggregate (map-side combined).
     */
-  def minhashSignatures(shingles: DataFrame, idCol: String, k: Int = 64): DataFrame =
-    // hash the string ONCE in a projection; aggregate inputs are not
-    // common-subexpression-eliminated across aggregate functions, so the 64
-    // min() inputs must read the precomputed long.
-    minhashSignaturesHashed(
-      shingles.select(col(idCol), xxhash64(col("shingle")).as("sh")), idCol, k)
-
-  /** As [[minhashSignatures]] but over pre-hashed (id, sh: long) shingles. */
   def minhashSignaturesHashed(hashed: DataFrame, idCol: String, k: Int): DataFrame = {
     val aggs = (0 until k).map(i => min(graft.functions.VectorFunctions.mix64(
       col("sh"), 0x9e3779b97f4a7c15L * (i + 1))).as(s"mh$i"))
@@ -721,51 +717,18 @@ object Dedup {
     df.filter(pred).select(col(idCol)).join(dirty, Seq(idCol), "left_anti")
   }
 
-  /** SimHash via bit votes: sig bit b = 1 iff Σ_tokens (bit b of hash ? +1 : -1) > 0.
-    * Two groupBys; the single-shuffle custom-aggregate variant is
-    * `graft.functions.simhash_agg` (TypedImperativeAggregate).
+  /** SimHash per document, (idCol, simhash): sig bit b = 1 iff Σ_tokens
+    * (bit b of `hash`(token) ? +1 : −1) > 0, via the custom aggregate
+    * (`graft.functions.SimHashAgg`) — the 100 TB path: one
+    * partial-aggregated shuffle with a 256-byte buffer instead of 64
+    * bit-vote rows per token. `Fmix63` (d04) and `Md5` (d05/d08) let a
+    * DuckDB oracle recompute every signature bit.
     */
-  def simhashViaBits(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tok = TextOps.spreadCompute(df.select(col(idCol), col(textCol)))
-      .select(col(idCol), explode(TextOps.tokens(col(textCol))).as("tok"))
-      .withColumn("h", xxhash64(col("tok")))
-    val masks = typedlit((0 until 64).map(b => 1L << b))
-    val bitVotes = tok.select(col(idCol),
-      posexplode(transform(sequence(lit(0), lit(63)), b =>
-        when(col("h").bitwiseAND(element_at(masks, (b + 1).cast("int"))) =!= 0,
-          lit(1)).otherwise(lit(-1)))).as(Seq("bit", "vote")))
-    bitVotes.groupBy(col(idCol), col("bit"))
-      .agg(sum(col("vote")).as("v"))
-      .groupBy(col(idCol))
-      .agg(sum(when(col("v") > 0,
-        element_at(typedlit((0 until 64).map(b => 1L << b)),
-          (col("bit") + 1).cast("int"))).otherwise(0L)).as("simhash"))
-  }
-
-  /** SimHash via the custom single-shuffle aggregate
-    * (`graft.functions.SimHashAgg`) — the 100 TB path: one partial-aggregated
-    * shuffle with a 256-byte buffer instead of 64 bit-vote rows per token.
-    */
-  def simhashAggregate(df: DataFrame, idCol: String, textCol: String): DataFrame =
+  def simhash(df: DataFrame, idCol: String, textCol: String,
+      hash: TokenHash = TokenHash.Xxhash64): DataFrame =
     TextOps.spreadCompute(df.select(col(idCol), col(textCol)))
       .select(col(idCol), explode(TextOps.tokens(col(textCol))).as("tok"))
-      .withColumn("h", xxhash64(col("tok")))
-      .groupBy(col(idCol))
-      .agg(graft.functions.SimHashAgg.simhash_agg(col("h")).as("simhash"))
-
-  /** [[simhashAggregate]] on the oracle-replayable 63-bit token hash
-    * ([[graft.functions.HashKernels.fmixToken63]]: rolling64 halves →
-    * fmix32 split-multiply) instead of xxhash64 — identical plan shape
-    * (explode → ONE partial-aggregated shuffle), but every signature bit
-    * is recomputable in DuckDB, so the full SimHash chain (token hash →
-    * bit votes → signature → banded pairs) carries a value-level oracle
-    * (d04). The xxhash64 form stays the production twin (pinned
-    * pair-equivalent on the fixture corpus in OpsSpec).
-    */
-  def simhashAggregateFmix(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    TextOps.spreadCompute(df.select(col(idCol), col(textCol)))
-      .select(col(idCol), explode(TextOps.tokens(col(textCol))).as("tok"))
-      .withColumn("h", graft.functions.FmixTokenHash63.fmix_token_hash63(col("tok")))
+      .withColumn("h", hash(col("tok")))
       .groupBy(col(idCol))
       .agg(graft.functions.SimHashAgg.simhash_agg(col("h")).as("simhash"))
 

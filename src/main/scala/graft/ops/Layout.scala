@@ -219,8 +219,9 @@ object Layout {
     * positions d·i + k.
     *
     * The exact cover grows with the box's surface (perimeter in 2-D, area
-    * in 3-D), so a split budget (64·maxRanges splits, min 4096) bounds the
-    * driver work — and it is spent BREADTH-FIRST, one level at a time
+    * in 3-D), so a split budget (64·maxRanges splits, min 4096, max 2^17
+    * for any `maxRanges`: ≤ 2^(17+d) cells) bounds the driver work — and
+    * it is spent BREADTH-FIRST, one level at a time
     * (ADVICE r15: a depth-first recursion concentrated refinement on the
     * lowest-z cells, so once the budget ran out every remaining high-z
     * straddler was emitted whole and residual over-cover piled onto one
@@ -249,7 +250,7 @@ object Layout {
     val envLo = mortonKey(los)
     val envHi = mortonKey(his)
     val exact = ArrayBuffer.empty[(Long, Long)]
-    var budget = math.max(4096L, 64L * maxRanges)
+    var budget = math.min(1L << 17, math.max(4096L, 64L * maxRanges))
     // the cells of one level share a side, so a cell is its low corner
     var side = CoordMax + 1
     var level = ArrayBuffer(Array.fill(d)(0L))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.CryptoCodec
-import graft.functions.protect
+import graft.functions.{TokenHash, protect}
 import graft.ops.{CacheScope, ConnectedComponents, Decontamination, Dedup, FromCorpus, Multimodal, Packing, Similarity, TextOps}
 import graft.operators.AsofJoin
 import graft.pipeline.{ColumnPolicy, PerValue, ProtectionPipeline}
@@ -186,11 +186,12 @@ object PipelineOpsQueries {
     // Hash-green since r11 (the last no-oracle row graduated): the token
     // hash is the oracle-replayable fmixToken63 chain (rolling64 → fmix32
     // halves) instead of xxhash64, so DuckDB recomputes every signature and
-    // every banded pair. The xxhash64 production twin keeps the identical
+    // every banded pair. The xxhash64 production hash runs the identical
     // plan and is pinned pair-equivalent on the fixture corpus in OpsSpec.
     ("d04_simhash_pairs", (s: SparkSession, dir: String) => {
       // custom TypedImperativeAggregate: single-shuffle signature computation
-      val sigs = Dedup.simhashAggregateFmix(rd(s, dir, "documents"), "doc_id", "text")
+      val sigs = Dedup.simhash(rd(s, dir, "documents"), "doc_id", "text",
+        TokenHash.Fmix63)
       Dedup.simhashPairs(sigs, "doc_id", maxDist = 3)
         .orderBy("d1", "d2")
     }, Some(s"""$simhashFmixCte
@@ -206,29 +207,18 @@ object PipelineOpsQueries {
     // votes, so the custom aggregate's bit-vote/merge/serde logic is
     // hash-matched end to end — the d04 path differs only in the token hash.
     ("d05_simhash_md5_oracle", (s: SparkSession, dir: String) => {
-      import graft.functions.SimHashAgg
-      rd(s, dir, "documents")
-        .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-        .withColumn("h",
-          expr("CAST(conv(substring(md5(tok), 1, 15), 16, 10) AS BIGINT)"))
-        .groupBy("doc_id")
-        .agg(SimHashAgg.simhash_agg(col("h")).as("simhash"))
+      Dedup.simhash(rd(s, dir, "documents"), "doc_id", "text", TokenHash.Md5)
         .orderBy("doc_id")
     }, Some(simhashMd5Sql)),
 
     // d04's PAIR GENERATION gated by a full oracle: the same pigeonhole
     // banding + hamming verification ([[Dedup.simhashPairs]]) run on the
     // cross-engine md5-hash signatures, against a brute-force all-pairs
-    // DuckDB recompute. d04 differs only in the token hash (xxhash64), so a
+    // DuckDB recompute. d04 differs only in the token hash (fmixToken63), so a
     // banding or distance bug in its candidate generation fails here.
     ("d08_simhash_pairs_md5", (s: SparkSession, dir: String) => {
-      import graft.functions.SimHashAgg
-      val sigs = rd(s, dir, "documents")
-        .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-        .withColumn("h",
-          expr("CAST(conv(substring(md5(tok), 1, 15), 16, 10) AS BIGINT)"))
-        .groupBy("doc_id")
-        .agg(SimHashAgg.simhash_agg(col("h")).as("simhash"))
+      val sigs = Dedup.simhash(rd(s, dir, "documents"), "doc_id", "text",
+        TokenHash.Md5)
       Dedup.simhashPairs(sigs, "doc_id", maxDist = 3)
         .orderBy("d1", "d2")
     }, Some(s"""$simhashMd5Cte
@@ -2670,7 +2660,7 @@ $prRounds
           graft.streaming.StreamOps.parquetRowCount(s, s"$tmp/src"),
         skipTrailingNoDataBatch = true)(
         graft.streaming.StreamOps.nearDupDedupDocumentStream(stream, "text",
-            "ts", "24 hours", graft.streaming.StreamOps.md5TokenHash)
+            "ts", "24 hours", TokenHash.Md5)
           .writeStream.format("parquet")
           .option("path", s"$tmp/sink")
           .option("checkpointLocation", s"$tmp/chk")

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.CryptoCodec
-import graft.functions.protect
+import graft.functions.{TokenHash, protect}
 
 /** Structured Streaming surface: the protection expressions compose
   * unchanged over streams (`readStream` → encrypt → watermark → windowed
@@ -248,18 +248,18 @@ object StreamOps {
       .dropDuplicatesWithinWatermark("fp")
 
   /** Per-ROW SimHash signature as a pure column expression — identical bit
-    * semantics to the batch [[graft.functions.SimHashAgg]] aggregate
-    * (xxhash64 per token OCCURRENCE, ±1 vote per bit, sign → bit), but
-    * computed inside one row so it works where an aggregation can't: a
-    * streaming dedup key. Powers-of-two ride along as a materialized array
-    * column — a constant captured in a HOF lambda would otherwise be
-    * rebuilt per element (the lambda-capture rule).
+    * semantics to the batch [[graft.ops.Dedup.simhash]] aggregate under the
+    * same `hash` (one token hash per OCCURRENCE, ±1 vote per bit, sign →
+    * bit), but computed inside one row so it works where an aggregation
+    * can't: a streaming dedup key. Powers-of-two ride along as a
+    * materialized array column — a constant captured in a HOF lambda would
+    * otherwise be rebuilt per element (the lambda-capture rule).
     */
   def withSimhash(df: DataFrame, textCol: String, out: String,
-      tokenHash: Column => Column = t => xxhash64(t)): DataFrame = {
+      hash: TokenHash = TokenHash.Xxhash64): DataFrame = {
     val powers = array((0 until 64).map(b => lit(1L << b)): _*)
     df.withColumn("_toks", graft.ops.TextOps.tokens(col(textCol)))
-      .withColumn("_hashes", transform(col("_toks"), t => tokenHash(t)))
+      .withColumn("_hashes", transform(col("_toks"), t => hash(t)))
       .withColumn("_pw", powers)
       .withColumn("_votes",
         aggregate(col("_hashes"), array_repeat(lit(0), 64),
@@ -298,30 +298,14 @@ object StreamOps {
     * HDFS-backed; flip the knob when horizon state genuinely exceeds
     * executor heap (10⁸+ rows/executor), which is the regime RocksDB
     * exists for — and enable changelog checkpointing with it there.
-    */
-  def nearDupDedupDocumentStream(docs: DataFrame, textCol: String = "text",
-      tsCol: String = "ts", withinWatermark: String = "1 hour",
-      tokenHash: Column => Column = t => xxhash64(t)): DataFrame =
-    withSimhash(docs, textCol, "simhash", tokenHash)
-      .withWatermark(tsCol, withinWatermark)
-      .dropDuplicatesWithinWatermark("simhash")
-
-  /** The md5-chain token hash (low 60 bits of the digest as a BIGINT) —
-    * the oracle-replayable twin of the xxhash64 default, same chain as the
-    * batch d05/d08 SimHash oracles. Bits 60..63 of the resulting signature
-    * always vote −1 and stay clear, matching the 60-bit oracle recompute.
-    */
-  val md5TokenHash: Column => Column =
-    t => conv(substring(md5(t), 1, 15), 16, 10).cast("long")
-
-  /** Streaming near-dup dedup that CLOSES the hamming-≤3 tail in-stream
-    * (r5's deferred item): the 64-bit SimHash splits into four 16-bit bands;
+    *
+    * `bands = 4` closes the hamming-≤3 tail in-stream instead (r5's
+    * deferred item): the 64-bit signature splits into four 16-bit bands;
     * two signatures within hamming distance 3 must agree on ≥1 band
     * (pigeonhole over 4 bands), so four chained
     * `dropDuplicatesWithinWatermark` passes — one per band — drop every doc
     * that repeats ANY band of a doc that survived ahead of it. A 1-bit flip
     * leaves 3 of 4 bands equal and is dropped at the first shared band.
-    *
     * State: 4 bounded dedup states (one band value per surviving doc per
     * horizon) — still watermark-bounded, unlike any join formulation.
     *
@@ -332,20 +316,22 @@ object StreamOps {
     * widens the signature (the formulation is width-agnostic) or extends
     * each band key with a cheap blocking column (lang, length bucket).
     */
-  def nearDupDedupDocumentStreamBanded(docs: DataFrame, textCol: String = "text",
-      tsCol: String = "ts", withinWatermark: String = "1 hour"): DataFrame = {
-    val sig = withSimhash(docs, textCol, "simhash")
-      .withColumn("band0", col("simhash").bitwiseAND(lit(0xffffL)))
-      .withColumn("band1", shiftrightunsigned(col("simhash"), 16).bitwiseAND(lit(0xffffL)))
-      .withColumn("band2", shiftrightunsigned(col("simhash"), 32).bitwiseAND(lit(0xffffL)))
-      .withColumn("band3", shiftrightunsigned(col("simhash"), 48).bitwiseAND(lit(0xffffL)))
-      .withWatermark(tsCol, withinWatermark)
-    sig
-      .dropDuplicatesWithinWatermark("band0")
-      .dropDuplicatesWithinWatermark("band1")
-      .dropDuplicatesWithinWatermark("band2")
-      .dropDuplicatesWithinWatermark("band3")
-      .drop("band0", "band1", "band2", "band3")
+  def nearDupDedupDocumentStream(docs: DataFrame, textCol: String = "text",
+      tsCol: String = "ts", withinWatermark: String = "1 hour",
+      hash: TokenHash = TokenHash.Xxhash64, bands: Int = 1): DataFrame = {
+    require(bands == 1 || bands == 4,
+      s"bands must be 1 (signature equality) or 4 (16-bit bands), got $bands")
+    val sig = withSimhash(docs, textCol, "simhash", hash)
+    if (bands == 1)
+      sig.withWatermark(tsCol, withinWatermark).dropDuplicatesWithinWatermark("simhash")
+    else {
+      val keys = (0 until 4).map(b => s"band$b")
+      keys.zipWithIndex.foldLeft(sig) { case (df, (k, b)) =>
+        df.withColumn(k, shiftrightunsigned(col("simhash"), 16 * b).bitwiseAND(lit(0xffffL)))
+      }.withWatermark(tsCol, withinWatermark)
+        .transform(df => keys.foldLeft(df)(_.dropDuplicatesWithinWatermark(_)))
+        .drop(keys: _*)
+    }
   }
 
   /** Streaming incremental dedup against an accepted HISTORY table — the

@@ -225,13 +225,86 @@ class LayoutSpec extends SparkSpec {
     assert(got === expected, "file pruning must not drop box rows")
   }
 
+  /** Reference for the budgeted [[Layout.zorderRanges]]: the box's exact
+    * key cover with no split budget, by depth-first halving of aligned
+    * cells in z order, handing `f` each maximal run of adjacent in-box
+    * cells in increasing key order. Child j of a cell offsets coordinate k
+    * by the half side h iff bit k of j is set, which sets key bit d·log2(h)
+    * + k: its keys start j·h^d after its parent's. Work grows with the
+    * box's surface, unbounded.
+    */
+  private def forEachExactRange(box: Seq[(Long, Long)])(f: (Long, Long) => Unit): Unit = {
+    val d = box.length
+    val (los, his) = (box.map(_._1).toArray, box.map(_._2).toArray)
+    var runLo, runHi = -2L
+    def visit(cell: Array[Long], side: Long, z0: Long): Unit = {
+      var inside = true
+      var outside = false
+      var k = 0
+      while (k < d) {
+        if (cell(k) + side - 1 < los(k) || cell(k) > his(k)) outside = true
+        if (cell(k) < los(k) || cell(k) + side - 1 > his(k)) inside = false
+        k += 1
+      }
+      if (outside) ()
+      else if (inside) {
+        val z1 = z0 + math.pow(side.toDouble, d).toLong - 1
+        if (runHi + 1 == z0) runHi = z1
+        else {
+          if (runLo >= 0) f(runLo, runHi)
+          runLo = z0; runHi = z1
+        }
+      } else {
+        val h = side / 2
+        val keys = math.pow(h.toDouble, d).toLong
+        var j = 0
+        while (j < (1 << d)) {
+          val child = new Array[Long](d)
+          k = 0
+          while (k < d) { child(k) = cell(k) + ((j >> k) & 1) * h; k += 1 }
+          visit(child, h, z0 + j * keys)
+          j += 1
+        }
+      }
+    }
+    visit(new Array[Long](d), Layout.CoordMax + 1, 0L)
+    if (runLo >= 0) f(runLo, runHi)
+  }
+
+  private def exactRanges(box: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    forEachExactRange(box)((lo, hi) => out += ((lo, hi)))
+    out.toSeq
+  }
+
+  /** Every key of `box` lies in each of `covers` (each disjoint and
+    * increasing): one pass over the exact cover, each exact range checked
+    * against the one cover range that can hold it.
+    */
+  private def assertHoldBox(box: Seq[(Long, Long)], covers: Seq[Seq[(Long, Long)]]): Unit = {
+    val rs = covers.map(_.toArray)
+    val at = new Array[Int](rs.length)
+    forEachExactRange(box) { (lo, hi) =>
+      var c = 0
+      while (c < rs.length) {
+        val r = rs(c)
+        while (at(c) < r.length && r(at(c))._2 < lo) at(c) += 1
+        if (at(c) == r.length || r(at(c))._1 > lo || r(at(c))._2 < hi)
+          fail(s"cover $c (${r.length} ranges) drops keys of exact range [$lo, $hi]")
+        c += 1
+      }
+    }
+  }
+
   /** The exact cover (no budget) is disjoint, increasing, covers exactly
     * the box's volume, holds the sampled box points (corners plus
     * `interior` values per lane) and misses the points one step outside
-    * each face and the domain's two corners.
+    * each face and the domain's two corners; under the split cap,
+    * zorderRanges at an unlimited `maxRanges` returns exactly it.
     */
   private def exactCover(box: Seq[(Long, Long)], interior: Seq[Seq[Long]]): Unit = {
-    val rs = Layout.zorderRanges(box, maxRanges = Int.MaxValue)
+    val rs = exactRanges(box)
+    assert(Layout.zorderRanges(box, maxRanges = Int.MaxValue) === rs)
     assertDisjointIncreasing(rs)
     // exact cover: total keys covered == box volume (no over-read)
     assert(rs.map(r => r._2 - r._1 + 1).sum ===
@@ -261,16 +334,14 @@ class LayoutSpec extends SparkSpec {
     * coarse envelope.
     */
   private def mergedCovers(box: Seq[(Long, Long)]): Unit = {
-    val exact = Layout.zorderRanges(box, maxRanges = Int.MaxValue)
-    for (m <- Seq(1, 4, 16, 64)) {
+    val covers = Seq(1, 4, 16, 64).map { m =>
       val rs = Layout.zorderRanges(box, maxRanges = m)
       assert(rs.length <= m)
-      // merging only over-covers: every exact range sits inside a merged one
-      exact.foreach { case (lo, hi) =>
-        assert(rs.exists(r => r._1 <= lo && hi <= r._2),
-          s"maxRanges=$m dropped keys of an exact range")
-      }
+      assertDisjointIncreasing(rs)
+      rs
     }
+    // merging only over-covers: every exact range sits inside a merged one
+    assertHoldBox(box, covers)
     assert(Layout.zorderRanges(box, maxRanges = 1) ===
       Seq((Layout.morton(box.map(_._1): _*), Layout.morton(box.map(_._2): _*))))
   }
@@ -309,6 +380,18 @@ class LayoutSpec extends SparkSpec {
     // a box this large has an exact octree cover in the millions of cells
     budgetExhaustion(Seq((100L, 50000L), (200L, 60000L), (300L, 40000L)),
       Seq(Seq(32768L), Seq(4096L), Seq(16384L)))
+  }
+
+  test("zorderRanges: an unlimited maxRanges still caps the splits; q56's box keeps every key") {
+    val box = Seq((64L, 1600L), (16L, 72L), (256L, 16384L)) // q56_zorder3_pruned_scan
+    val rs = Layout.zorderRanges(box, maxRanges = Int.MaxValue)
+    // ≤ 2^d cells per split under the 2^17-split cap (the exact cover is
+    // 13.4 M cells)
+    assert(rs.length <= (1 << (17 + box.length)), s"${rs.length} ranges")
+    assertDisjointIncreasing(rs)
+    assertHoldBox(box, Seq(rs))
+    assert(rs.head._1 >= Layout.morton(box.map(_._1): _*) &&
+      rs.last._2 <= Layout.morton(box.map(_._2): _*), "cover leaves the envelope")
   }
 
   test("zorderRanges rejects out-of-domain boxes that would wrap under the 16-bit masks") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-import graft.functions.RollingHash64
+import graft.functions.{RollingHash64, TokenHash}
 import graft.operators.AsofJoin
 import graft.ops.{CacheScope, Dedup, FromCorpus, Multimodal, Sampling, Similarity, TextOps}
 
@@ -168,11 +168,32 @@ class OpsSpec extends SparkSpec {
     assert(leaked.isEmpty, s"cached RDDs leaked past scope: $leaked")
   }
 
+  /** Reference SimHash via bit votes, the composable formulation that pins
+    * [[graft.functions.SimHashAgg]]: sig bit b = 1 iff Σ_tokens (bit b of
+    * xxhash64(token) ? +1 : -1) > 0. Two groupBys, 64 vote rows per token.
+    */
+  private def simhashViaBits(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val tok = TextOps.spreadCompute(df.select(col(idCol), col(textCol)))
+      .select(col(idCol), explode(TextOps.tokens(col(textCol))).as("tok"))
+      .withColumn("h", xxhash64(col("tok")))
+    val masks = typedlit((0 until 64).map(b => 1L << b))
+    val bitVotes = tok.select(col(idCol),
+      posexplode(transform(sequence(lit(0), lit(63)), b =>
+        when(col("h").bitwiseAND(element_at(masks, (b + 1).cast("int"))) =!= 0,
+          lit(1)).otherwise(lit(-1)))).as(Seq("bit", "vote")))
+    bitVotes.groupBy(col(idCol), col("bit"))
+      .agg(sum(col("vote")).as("v"))
+      .groupBy(col(idCol))
+      .agg(sum(when(col("v") > 0,
+        element_at(typedlit((0 until 64).map(b => 1L << b)),
+          (col("bit") + 1).cast("int"))).otherwise(0L)).as("simhash"))
+  }
+
   test("simhash: custom aggregate equals composable bit-vote formulation") {
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val viaAgg = Dedup.simhashAggregate(df, "doc_id", "text")
+    val viaAgg = Dedup.simhash(df, "doc_id", "text")
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val viaBits = Dedup.simhashViaBits(df, "doc_id", "text")
+    val viaBits = simhashViaBits(df, "doc_id", "text")
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(viaAgg == viaBits)
   }
@@ -199,8 +220,8 @@ class OpsSpec extends SparkSpec {
       Dedup.simhashPairs(sigs, "doc_id", 3)
         .filter(col("hamming") === 0).select("d1", "d2").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val prod = zeroPairsOf(Dedup.simhashAggregate(df, "doc_id", "text"))
-    val oracle = zeroPairsOf(Dedup.simhashAggregateFmix(df, "doc_id", "text"))
+    val prod = zeroPairsOf(Dedup.simhash(df, "doc_id", "text", TokenHash.Xxhash64))
+    val oracle = zeroPairsOf(Dedup.simhash(df, "doc_id", "text", TokenHash.Fmix63))
     assert(dupPairs.subsetOf(prod),
       s"xxhash64 twin missed exact-dup pairs: ${dupPairs -- prod}")
     assert(dupPairs.subsetOf(oracle),
@@ -208,7 +229,7 @@ class OpsSpec extends SparkSpec {
     // fmixToken63 is 63-bit non-negative → signature bit 63 can never win a
     // vote, so every fmix signature is non-negative (the oracle's BIGINT
     // bit extraction depends on this)
-    val sigs = Dedup.simhashAggregateFmix(df, "doc_id", "text")
+    val sigs = Dedup.simhash(df, "doc_id", "text", TokenHash.Fmix63)
       .collect().map(_.getLong(1))
     assert(sigs.forall(_ >= 0L))
   }
@@ -216,7 +237,7 @@ class OpsSpec extends SparkSpec {
   test("simhash pairs: identical docs at hamming 0") {
     val df = Seq((1L, "a b c d e f g h"), (2L, "a b c d e f g h"),
       (3L, "totally different words entirely here now ok yes")).toDF("doc_id", "text")
-    val sigs = Dedup.simhashAggregate(df, "doc_id", "text")
+    val sigs = Dedup.simhash(df, "doc_id", "text")
     val pairs = Dedup.simhashPairs(sigs, "doc_id", 3).collect()
     assert(pairs.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L && r.getLong(2) == 0L))
   }
@@ -1351,7 +1372,7 @@ class OpsSpec extends SparkSpec {
       FROM (SELECT doc_id, explode(split(text, '\\s+')) AS tok FROM v_docs)
       GROUP BY doc_id ORDER BY doc_id""").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    val simApi = Dedup.simhashAggregate(docs, "doc_id", "text")
+    val simApi = Dedup.simhash(docs, "doc_id", "text")
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(simSql.toSeq == simApi.toSeq)
   }

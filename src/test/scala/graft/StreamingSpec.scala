@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.TokenHash
 import graft.queries.GraftTables
 import graft.streaming.StreamOps
 
@@ -292,14 +293,25 @@ class StreamingSpec extends SparkSpec {
 
   test("per-row simhash column equals the batch SimHashAgg signatures") {
     val docs = GraftTables.read(spark, "/root/testdata/sf0.001", "documents")
-    val got = StreamOps.withSimhash(docs, "text", "simhash")
-      .select("doc_id", "simhash").orderBy("doc_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
-    val want = graft.ops.Dedup.simhashAggregate(docs, "doc_id", "text")
-      .orderBy("doc_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
-    assert(got.nonEmpty)
-    assert(got == want, "per-row signature diverges from the aggregate")
+    for (hash <- Seq(TokenHash.Xxhash64, TokenHash.Fmix63, TokenHash.Md5)) {
+      val got = StreamOps.withSimhash(docs, "text", "simhash", hash)
+        .select("doc_id", "simhash").orderBy("doc_id")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+      val want = graft.ops.Dedup.simhash(docs, "doc_id", "text", hash)
+        .orderBy("doc_id")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+      assert(got.nonEmpty)
+      assert(got == want, s"per-row signature diverges from the aggregate under $hash")
+      // the st04/d05 and d04 oracle CTEs recompute only the bits these
+      // token hashes can set
+      hash match {
+        case TokenHash.Md5 => assert(want.forall(_._2 >>> 60 == 0L),
+          "md5 signatures must keep bits 60..63 clear")
+        case TokenHash.Fmix63 => assert(want.forall(_._2 >= 0L),
+          "fmix signatures must be non-negative")
+        case TokenHash.Xxhash64 =>
+      }
+    }
   }
 
   test("streaming near-dup dedup keeps one doc per simhash signature") {
@@ -366,9 +378,13 @@ class StreamingSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("graft-banded-stream").toString
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val q = StreamOps.nearDupDedupDocumentStreamBanded(
+    for (bands <- Seq(0, 2, 3, 8))
+      intercept[IllegalArgumentException](
+        StreamOps.nearDupDedupDocumentStream(named, bands = bands))
+    val q = StreamOps.nearDupDedupDocumentStream(
         spark.readStream.schema(docSchema).parquet(tmp)
-          .withColumn("ts", timestamp_micros(lit(86400L) * 1000000L)))
+          .withColumn("ts", timestamp_micros(lit(86400L) * 1000000L)),
+        bands = 4)
       .select("doc_id")
       .writeStream.outputMode("append").format("memory").queryName("banded_out")
       .start()
