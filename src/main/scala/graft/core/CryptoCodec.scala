@@ -1,6 +1,6 @@
 package graft.core
 
-import java.security.MessageDigest
+import java.security.{MessageDigest, SecureRandom}
 import javax.crypto.Cipher
 import javax.crypto.spec.SecretKeySpec
 
@@ -33,10 +33,29 @@ trait CryptoCodec extends Serializable {
   def deterministic: Boolean
   /** Bytes a ciphertext adds to its plaintext. */
   def overhead: Int
-  /** Encrypt `plain` into `out(off until off + overhead + plain.length)`. */
-  def encryptInto(plain: Array[Byte], out: Array[Byte], off: Int): Unit
-  /** Decrypt the ciphertext `data(off until data.length)`, read in place. */
-  def decryptFrom(data: Array[Byte], off: Int): Array[Byte]
+  /** Encrypt `plain(plainOff until plainOff + len)` into
+    * `out(off until off + overhead + len)`. A codec only reads `plain`, never
+    * writes it, so a caller may pass bytes it does not own: a page it was
+    * handed, or the array behind a `UTF8String`.
+    */
+  def encryptInto(plain: Array[Byte], plainOff: Int, len: Int, out: Array[Byte], off: Int): Unit
+  /** Decrypt the ciphertext `data(off until off + len)`, read in place, into
+    * `out(outOff until outOff + len - overhead)`. A ciphertext shorter than
+    * `overhead` fails before anything is written.
+    */
+  def decryptInto(data: Array[Byte], off: Int, len: Int, out: Array[Byte], outOff: Int): Unit
+
+  /** Encrypt all of `plain` into `out(off ..)`. */
+  final def encryptInto(plain: Array[Byte], out: Array[Byte], off: Int): Unit =
+    encryptInto(plain, 0, plain.length, out, off)
+
+  /** Decrypt the ciphertext `data(off until data.length)`. */
+  final def decryptFrom(data: Array[Byte], off: Int): Array[Byte] = {
+    val len = data.length - off
+    val out = new Array[Byte](math.max(0, len - overhead))
+    decryptInto(data, off, len, out, 0)
+    out
+  }
 
   final def encrypt(data: Array[Byte]): Array[Byte] = {
     val out = new Array[Byte](overhead + data.length)
@@ -58,13 +77,12 @@ final case class XorCodec(ctx: ProtectionContext) extends CryptoCodec {
   override def name: String = CryptoCodec.Xor
   override def deterministic: Boolean = true
   override def overhead: Int = 0
-  override def encryptInto(plain: Array[Byte], out: Array[Byte], off: Int): Unit =
-    StableHash.xorKeystreamCopy(seed, plain, 0, out, off, plain.length)
-  override def decryptFrom(data: Array[Byte], off: Int): Array[Byte] = {
-    val out = new Array[Byte](data.length - off)
-    StableHash.xorKeystreamCopy(seed, data, off, out, 0, out.length)
-    out
-  }
+  override def encryptInto(plain: Array[Byte], plainOff: Int, len: Int,
+      out: Array[Byte], off: Int): Unit =
+    StableHash.xorKeystreamCopy(seed, plain, plainOff, out, off, len)
+  override def decryptInto(data: Array[Byte], off: Int, len: Int,
+      out: Array[Byte], outOff: Int): Unit =
+    StableHash.xorKeystreamCopy(seed, data, off, out, outOff, len)
 }
 
 /** Real cipher: AES-256-CTR + HMAC-SHA256, SIV-style (RFC 5297 shape with
@@ -106,7 +124,6 @@ final case class AesCodec(ctx: ProtectionContext, override val deterministic: Bo
     sha256(("graft-aes-key:" + ctx.seedString).getBytes("UTF-8"))
   @transient private lazy val ivKey: Array[Byte] =
     sha256(("graft-aes-iv:" + ctx.seedString).getBytes("UTF-8"))
-  @transient private lazy val random = new java.security.SecureRandom()
   @transient private lazy val kits: ThreadLocal[Kit] =
     ThreadLocal.withInitial(() => new Kit(aesKey, ivKey))
 
@@ -115,38 +132,38 @@ final case class AesCodec(ctx: ProtectionContext, override val deterministic: Bo
 
   override def overhead: Int = if (deterministic) TagLen else 2 * TagLen
 
-  override def encryptInto(plain: Array[Byte], out: Array[Byte], off: Int): Unit = {
+  override def encryptInto(plain: Array[Byte], plainOff: Int, len: Int,
+      out: Array[Byte], off: Int): Unit = {
     val kit = kits.get()
     if (deterministic) {
       val md = kit.macStart()
-      md.update(plain)
+      md.update(plain, plainOff, len)
       System.arraycopy(kit.macEnd(md), 0, out, off, TagLen) // tag == SIV == CTR IV
-      kit.ctr(out, off, plain, 0, out, off + TagLen, plain.length)
+      kit.ctr(out, off, plain, plainOff, out, off + TagLen, len)
     } else {
       val iv = kit.iv
-      random.nextBytes(iv)
+      kit.random.nextBytes(iv)
       System.arraycopy(iv, 0, out, off, TagLen)
-      kit.ctr(iv, 0, plain, 0, out, off + 2 * TagLen, plain.length)
+      kit.ctr(iv, 0, plain, plainOff, out, off + 2 * TagLen, len)
       val md = kit.macStart()
       md.update(iv)
-      md.update(out, off + 2 * TagLen, plain.length)
+      md.update(out, off + 2 * TagLen, len)
       System.arraycopy(kit.macEnd(md), 0, out, off + TagLen, TagLen)
     }
   }
 
-  override def decryptFrom(data: Array[Byte], off: Int): Array[Byte] = {
+  override def decryptInto(data: Array[Byte], off: Int, len: Int,
+      out: Array[Byte], outOff: Int): Unit = {
     val kit = kits.get()
-    val len = data.length - off
     if (deterministic) {
       if (len < TagLen)
         throw new GraftInvalidInputException(s"AES-SIV payload too short: $len bytes")
-      val plain = new Array[Byte](len - TagLen)
-      kit.ctr(data, off, data, off + TagLen, plain, 0, plain.length)
+      val n = len - TagLen
+      kit.ctr(data, off, data, off + TagLen, out, outOff, n)
       val md = kit.macStart()
-      md.update(plain)
+      md.update(out, outOff, n)
       if (!kit.tagMatches(kit.macEnd(md), data, off))
         throw new GraftInvalidInputException("AES-SIV authentication failed")
-      plain
     } else {
       if (len < 2 * TagLen)
         throw new GraftInvalidInputException(s"AES-CTR payload too short: $len bytes")
@@ -155,9 +172,7 @@ final case class AesCodec(ctx: ProtectionContext, override val deterministic: Bo
       md.update(data, off + 2 * TagLen, len - 2 * TagLen)
       if (!kit.tagMatches(kit.macEnd(md), data, off + TagLen))
         throw new GraftInvalidInputException("AES-CTR authentication failed")
-      val plain = new Array[Byte](len - 2 * TagLen)
-      kit.ctr(data, off, data, off + 2 * TagLen, plain, 0, plain.length)
-      plain
+      kit.ctr(data, off, data, off + 2 * TagLen, out, outOff, len - 2 * TagLen)
     }
   }
 }
@@ -185,6 +200,11 @@ object AesCodec {
     private val seen = new Array[Byte](TagLen)
     /** Scratch for a random IV. */
     val iv = new Array[Byte](TagLen)
+    /** This thread's IV source. A `SecureRandom` shared by all threads
+      * (`NativePRNG`) draws every IV under one JVM-wide lock; a DRBG per
+      * thread, seeded on its own, draws without one.
+      */
+    lazy val random: SecureRandom = SecureRandom.getInstance("DRBG")
 
     /** SHA-256 that has absorbed the zero-padded key XOR `pad` (RFC 2104;
       * the 32-byte derived key fits one block unhashed).

@@ -2,8 +2,6 @@ package graft.core
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Feature-gap failure: the per-value path cannot handle this input shape and
   * the sequencer may fall back to per-block — the analog of the reference's
   * `DBPSUnsupportedException` (`/root/reference/src/common/exceptions.h`).
@@ -369,77 +367,117 @@ object PageCodec {
         throw new GraftInvalidInputException(s"Invalid datatype: $other")
     }
 
-  /** Split PLAIN-encoded value bytes into `numElements` per-value byte
-    * arrays (`ReinterpretValueBytesAsTypedValuesBuffer`,
-    * `parquet_utils.cpp:420-468` + the typed-buffer bounds checks).
+  /** A PLAIN value section whose layout has been checked: `count` values
+    * of `width` bytes back to back, or with no width (BYTE_ARRAY)
+    * `[u32 LE len][bytes]` per value, the prefix of value `i` at
+    * `prefixes(i)`. The bytes are read in place, never copied per value.
     */
-  def splitValueBytes(valueBytes: Array[Byte], numElements: Int,
-      physicalType: String, typeLength: Option[Int], encoding: String): Seq[Array[Byte]] = {
+  final class PlainValues private (val bytes: Array[Byte], val count: Int,
+      val width: Option[Int], prefixes: Array[Int]) {
+    private val w = width.getOrElse(-1)
+
+    /** Offset of value `i`'s bytes in [[bytes]]. */
+    def start(i: Int): Int = if (w >= 0) i * w else prefixes(i) + 4
+
+    def length(i: Int): Int = if (w >= 0) w else WireFormat.getU32(bytes, prefixes(i))
+
+    def copy(i: Int): Array[Byte] =
+      java.util.Arrays.copyOfRange(bytes, start(i), start(i) + length(i))
+  }
+
+  object PlainValues {
+    /** Check that `bytes` holds exactly `count` PLAIN values of `width` —
+      * the typed-buffer bounds checks of
+      * `ReinterpretValueBytesAsTypedValuesBuffer` (`parquet_utils.cpp:420-468`).
+      */
+    def apply(bytes: Array[Byte], count: Int, width: Option[Int]): PlainValues = width match {
+      case Some(w) =>
+        if (bytes.length != count.toLong * w)
+          throw new GraftInvalidInputException(
+            s"value bytes length ${bytes.length} != $count elements × $w bytes")
+        new PlainValues(bytes, count, width, null)
+      case None =>
+        // the count comes from the request's attributes: bound it by the
+        // 4-byte length prefixes the bytes can hold before allocating
+        if (count > bytes.length / 4)
+          throw new GraftInvalidInputException(
+            s"BYTE_ARRAY element count $count exceeds the ${bytes.length} value bytes")
+        val n = math.max(0, count) // a negative count reads as no values
+        val prefixes = new Array[Int](n)
+        var pos = 0
+        var i = 0
+        while (i < n) {
+          if (bytes.length - pos < 4)
+            throw new GraftInvalidInputException(
+              s"truncated BYTE_ARRAY length prefix at element $i")
+          val len = WireFormat.getU32(bytes, pos)
+          val remaining = bytes.length - pos - 4
+          if (len < 0 || len > remaining)
+            throw new GraftInvalidInputException(
+              s"BYTE_ARRAY element $i length $len exceeds remaining $remaining")
+          prefixes(i) = pos
+          pos += 4 + len
+          i += 1
+        }
+        if (pos != bytes.length)
+          throw new GraftInvalidInputException(
+            s"${bytes.length - pos} trailing bytes after BYTE_ARRAY values")
+        new PlainValues(bytes, n, width, prefixes)
+    }
+  }
+
+  /** The PLAIN value section of a page: `numElements` values of the
+    * physical type, checked in place. Only PLAIN values are present as
+    * bytes, so any other encoding is a feature gap.
+    */
+  def plainValues(valueBytes: Array[Byte], numElements: Int, physicalType: String,
+      typeLength: Option[Int], encoding: String): PlainValues = {
     if (encoding == "RLE_DICTIONARY")
       throw new GraftUnsupportedException(
         "Unsupported encoding: RLE_DICTIONARY is not supported for per-value operations " +
           "since values are not present in the data, only references to them.")
     if (encoding != "PLAIN")
       throw new GraftUnsupportedException(s"Unsupported encoding: $encoding")
-    fixedWidth(physicalType, typeLength) match {
-      case Some(w) =>
-        if (valueBytes.length != numElements.toLong * w)
-          throw new GraftInvalidInputException(
-            s"value bytes length ${valueBytes.length} != $numElements elements × $w bytes")
-        (0 until numElements).map(i =>
-          java.util.Arrays.copyOfRange(valueBytes, i * w, (i + 1) * w))
-      case None => // BYTE_ARRAY: [u32 LE len][bytes] per value
-        // numElements comes from the request's attributes: bound it by the
-        // 4-byte length prefixes the bytes can hold before allocating
-        if (numElements > valueBytes.length / 4)
-          throw new GraftInvalidInputException(
-            s"BYTE_ARRAY element count $numElements exceeds the ${valueBytes.length} value bytes")
-        val buf = ByteBuffer.wrap(valueBytes).order(ByteOrder.LITTLE_ENDIAN)
-        val out = new ArrayBuffer[Array[Byte]]
-        var i = 0
-        while (i < numElements) {
-          if (buf.remaining() < 4)
-            throw new GraftInvalidInputException(
-              s"truncated BYTE_ARRAY length prefix at element $i")
-          val len = buf.getInt()
-          if (len < 0 || len > buf.remaining())
-            throw new GraftInvalidInputException(
-              s"BYTE_ARRAY element $i length $len exceeds remaining ${buf.remaining()}")
-          val e = new Array[Byte](len)
-          buf.get(e)
-          out += e
-          i += 1
-        }
-        if (buf.remaining() != 0)
-          throw new GraftInvalidInputException(
-            s"${buf.remaining()} trailing bytes after BYTE_ARRAY values")
-        out.toSeq
-    }
+    PlainValues(valueBytes, numElements, fixedWidth(physicalType, typeLength))
+  }
+
+  /** Split PLAIN-encoded value bytes into `numElements` per-value byte
+    * arrays (`ReinterpretValueBytesAsTypedValuesBuffer`,
+    * `parquet_utils.cpp:420-468` + the typed-buffer bounds checks).
+    */
+  def splitValueBytes(valueBytes: Array[Byte], numElements: Int,
+      physicalType: String, typeLength: Option[Int], encoding: String): Seq[Array[Byte]] = {
+    val values = plainValues(valueBytes, numElements, physicalType, typeLength, encoding)
+    (0 until values.count).map(values.copy)
   }
 
   /** Inverse of [[splitValueBytes]]: reassemble PLAIN value bytes
     * (`GetTypedValuesBufferAsValueBytes` analog).
     */
   def joinValueBytes(elements: Seq[Array[Byte]],
-      physicalType: String, typeLength: Option[Int]): Array[Byte] =
-    fixedWidth(physicalType, typeLength) match {
-      case Some(w) =>
-        elements.foreach { e =>
-          if (e.length != w)
-            throw new GraftInvalidInputException(
-              s"decrypted element width ${e.length} != $w")
-        }
-        val out = new Array[Byte](elements.map(_.length).sum)
-        var off = 0
-        elements.foreach { e =>
-          System.arraycopy(e, 0, out, off, e.length); off += e.length
-        }
-        out
-      case None =>
-        val out = ByteBuffer
-          .allocate(elements.map(_.length + 4).sum)
-          .order(ByteOrder.LITTLE_ENDIAN)
-        elements.foreach { e => out.putInt(e.length); out.put(e) }
-        out.array()
+      physicalType: String, typeLength: Option[Int]): Array[Byte] = {
+    val width = fixedWidth(physicalType, typeLength)
+    width.foreach { w =>
+      elements.foreach { e =>
+        if (e.length != w)
+          throw new GraftInvalidInputException(s"decrypted element width ${e.length} != $w")
+      }
     }
+    joinPlain(elements, width)
+  }
+
+  /** `elements` as PLAIN bytes: back to back when they have a fixed width,
+    * `[u32 LE len][bytes]` each otherwise.
+    */
+  private[core] def joinPlain(elements: Seq[Array[Byte]], width: Option[Int]): Array[Byte] = {
+    val prefix = if (width.isDefined) 0 else 4
+    val out = new Array[Byte](elements.iterator.map(_.length.toLong + prefix).sum.toInt)
+    var off = 0
+    elements.foreach { e =>
+      if (prefix > 0) WireFormat.putU32(out, off, e.length)
+      System.arraycopy(e, 0, out, off + prefix, e.length)
+      off += prefix + e.length
+    }
+    out
+  }
 }

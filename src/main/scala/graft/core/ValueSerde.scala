@@ -70,7 +70,9 @@ object ValueSerde {
     case FloatType   => le(java.lang.Float.floatToRawIntBits(v.asInstanceOf[Float]), 4)
     case LongType | TimestampType | TimestampNTZType => le(v.asInstanceOf[Long], 8)
     case DoubleType  => le(java.lang.Double.doubleToRawLongBits(v.asInstanceOf[Double]), 8)
-    case StringType  => v.asInstanceOf[UTF8String].getBytes.clone()
+    // the backing array itself when it holds exactly the string: codecs
+    // only read their plaintext (CryptoCodec.encryptInto)
+    case StringType  => v.asInstanceOf[UTF8String].getBytes
     case BinaryType  => v.asInstanceOf[Array[Byte]]
     case dt: DecimalType =>
       // unscaled big-endian two's-complement bytes (BigInteger canonical form);

@@ -16,10 +16,11 @@ final case class PageEncryptResult(ciphertext: Array[Byte], metadata: Map[String
   * per-block fallback on any [[GraftUnsupportedException]] raised by the
   * page machinery (unsupported compression/encoding/datatype).
   *
-  * The per-value path decompresses and splits the page, reinterprets the
-  * value section as typed elements, and feeds the exact same §1.5 value-list
-  * wire format ([[WireFormat]]) the cell path uses — so page-encrypted and
-  * cell-encrypted values share one ciphertext layout.
+  * The per-value path decompresses and splits the page, checks the PLAIN
+  * value section in place, and encrypts each value straight from the page
+  * into the exact same §1.5 value-list wire format ([[WireFormat]]) the cell
+  * path uses — so page-encrypted and cell-encrypted values share one
+  * ciphertext layout.
   */
 final class PageSequencer(
     codec: CryptoCodec,
@@ -66,9 +67,9 @@ final class PageSequencer(
     val mk = modeKey(attrs)
     try {
       val lvb = PageCodec.decompressAndSplit(plaintext, compression, attrs)
-      val typed = PageCodec.splitValueBytes(
+      val values = PageCodec.plainValues(
         lvb.valueBytes, lvb.numElements, physicalType, typeLength, attrs.pageEncoding)
-      PageEncryptResult(encryptPerValue(lvb.levelBytes, typed),
+      PageEncryptResult(WireFormat.encryptPerValue(codec, lvb.levelBytes, values),
         Map(mk -> ModePerValue,
           ProtectionPipeline.KeyVersion -> ProtectionPipeline.AgentVersion))
     } catch {
@@ -87,17 +88,11 @@ final class PageSequencer(
     }
   }
 
-  /** Per-value ciphertext: `[u32 len][encrypted level bytes][§1.5 value list]`. */
-  private def encryptPerValue(levelBytes: Array[Byte], typed: Seq[Array[Byte]]): Array[Byte] = {
-    val encryptedValueBytes = WireFormat.encryptValueList(
-      codec, typed, PageCodec.fixedWidth(physicalType, typeLength))
-    WireFormat.joinWithLengthPrefix(codec.encrypt(levelBytes), encryptedValueBytes)
-  }
-
   /** The per-value ciphertext of a page with no levels and no values: the
     * payload of an empty cell batch, which [[encrypt]] rejects as an empty page.
     */
-  def encryptEmpty(): Array[Byte] = encryptPerValue(Array.emptyByteArray, Nil)
+  def encryptEmpty(): Array[Byte] = WireFormat.encryptPerValue(codec, Array.emptyByteArray,
+    PageCodec.PlainValues(Array.emptyByteArray, 0, PageCodec.fixedWidth(physicalType, typeLength)))
 
   /** `DecryptAndEncode` (`encryption_sequencer.cpp:199-256`): version
     * prefix-match, mode dispatch from metadata, then the inverse pipeline
@@ -118,11 +113,8 @@ final class PageSequencer(
     val mk = modeKey(attrs)
     encryptionMetadata.get(mk) match {
       case Some(ModePerValue) =>
-        val (encryptedLevelBytes, encryptedValueBytes) =
-          WireFormat.splitWithLengthPrefix(ciphertext)
-        val levelBytes = codec.decrypt(encryptedLevelBytes)
-        val typed = WireFormat.decryptValueList(codec, encryptedValueBytes)
-        val valueBytes = PageCodec.joinValueBytes(typed, physicalType, typeLength)
+        val (levelBytes, valueBytes) = WireFormat.decryptPerValue(
+          codec, ciphertext, PageCodec.fixedWidth(physicalType, typeLength))
         PageCodec.compressAndJoin(levelBytes, valueBytes, compression, attrs)
       case Some(ModePerBlock) =>
         codec.decrypt(ciphertext)

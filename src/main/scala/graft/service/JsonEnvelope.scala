@@ -1,9 +1,13 @@
 package graft.service
 
+import java.io.StringWriter
+import java.nio.{ByteBuffer, CharBuffer}
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.util.Base64
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.{JsonGenerator, JsonParser, JsonToken}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 
@@ -18,6 +22,13 @@ import com.fasterxml.jackson.databind.node.ObjectNode
   * where a scalar is expected, or malformed JSON leaves the field in its
   * "missing" state, and validation reports the reference's exact
   * `Missing required fields: …` message.
+  *
+  * Bodies are streamed, so a page value goes between the body text and its
+  * bytes without becoming a `String` or a tree node: [[readBody]] decodes it
+  * straight from the body's UTF-8 bytes, and [[BodyWriter]] writes the encoder's
+  * output with no escaping pass. Every other field goes through the same
+  * `JsonNode` and `JsonGenerator` calls a whole-tree parse and build make, so
+  * parse results and bodies are exactly those of the tree.
   */
 object JsonEnvelope {
 
@@ -63,19 +74,149 @@ object JsonEnvelope {
     try Base64.getDecoder.decode(s)
     catch { case _: IllegalArgumentException => Array.emptyByteArray }
 
-  private[service] def b64(bytes: Array[Byte]): String =
-    Base64.getEncoder.encodeToString(bytes)
+  /** [[decodeBase64]] of `chars(off until off + len)`, read as ISO-8859-1
+    * the way `Base64.Decoder.decode(String)` reads a string. A char above
+    * 0xFF is never base64, so it fails the value like any other bad char.
+    */
+  private def decodeBase64(chars: Array[Char], off: Int, len: Int): Array[Byte] = {
+    val latin1 = new Array[Byte](len)
+    val narrowed = ISO_8859_1.newEncoder()
+      .encode(CharBuffer.wrap(chars, off, len), ByteBuffer.wrap(latin1), true)
+    if (narrowed.isError) Array.emptyByteArray else decodeBase64(latin1, 0, len)
+  }
 
-  private def stringMap(node: JsonNode): Map[String, String] =
+  private def decodeBase64(bytes: Array[Byte], off: Int, len: Int): Array[Byte] =
+    try {
+      val out = Base64.getDecoder.decode(ByteBuffer.wrap(bytes, off, len))
+      if (out.remaining == out.capacity) out.array()
+      else java.util.Arrays.copyOfRange(out.array(), out.position(), out.limit())
+    } catch { case _: IllegalArgumentException => Array.emptyByteArray }
+
+  private[service] def stringMap(node: JsonNode): Map[String, String] =
     if (node == null || !node.isObject) Map.empty
     else node.fields().asScala
       .filterNot(e => e.getValue.isContainerNode || e.getValue.isNull)
       .map(e => e.getKey -> e.getValue.asText()).toMap
 
-  private[service] def putStringMap(parent: ObjectNode, field: String,
-      values: Map[String, String]): Unit = {
-    val node = parent.putObject(field)
-    values.toSeq.sortBy(_._1).foreach { case (k, v) => node.put(k, v) }
+  /** One streamed body: every field but the page value, as `readTree` of
+    * the whole body would give it, and the page value, if present.
+    */
+  private final case class Body(root: ObjectNode, value: Option[Array[Byte]])
+
+  /** Stream `body`, whose page value sits at `container.value`, over its
+    * UTF-8 bytes. The value's string is base64-decoded straight from those
+    * bytes, or from the parser's characters when it holds an escape; any
+    * other scalar there is stringified first, as `asText` does, and a
+    * container or null is missing. Every other field is `readTree` of its
+    * own subtree, so a later duplicate key replaces the whole earlier
+    * subtree, as in a tree. None for malformed JSON or a root that is not an
+    * object.
+    *
+    * UTF-8 cannot carry a lone surrogate (it writes '?'), and the parser
+    * reads a leading NUL or byte-order mark as a sign of another encoding:
+    * such bodies are read from their characters instead.
+    */
+  private def readBody(body: String, container: String): Option[Body] = {
+    val utf8 = body.getBytes(UTF_8)
+    val sniffed = utf8.iterator.take(4).contains(0.toByte) || body.startsWith("\uFEFF")
+    val fromBytes =
+      if (sniffed) None
+      else read(mapper.getFactory.createParser(utf8), container, utf8, body)
+    if (!sniffed && fromBytes.forall(b => !holds('?', b.root))) fromBytes
+    else read(mapper.getFactory.createParser(body), container, null, body)
+  }
+
+  /** Whether a key or a string in `node` contains `c`. */
+  private def holds(c: Char, node: JsonNode): Boolean =
+    if (node.isTextual) node.textValue.indexOf(c) >= 0
+    else if (node.isObject)
+      node.fields().asScala.exists(e => e.getKey.indexOf(c) >= 0 || holds(c, e.getValue))
+    else node.elements().asScala.exists(holds(c, _)) // an array's; a scalar has none
+
+  private def read(p: JsonParser, container: String, utf8: Array[Byte],
+      body: String): Option[Body] =
+    try {
+      if (p.nextToken() != JsonToken.START_OBJECT) return None
+      val root = mapper.createObjectNode()
+      var value: Option[Array[Byte]] = None
+      while (p.nextToken() == JsonToken.FIELD_NAME) {
+        val name = p.currentName
+        if (p.nextToken() == JsonToken.START_OBJECT && name == container) {
+          val node = root.putObject(name)
+          value = None
+          while (p.nextToken() == JsonToken.FIELD_NAME) {
+            val field = p.currentName
+            p.nextToken()
+            if (field == "value") value = pageValue(p, utf8, body)
+            else node.set[JsonNode](field, mapper.readTree[JsonNode](p))
+          }
+        } else {
+          root.set[JsonNode](name, mapper.readTree[JsonNode](p))
+          if (name == container) value = None
+        }
+      }
+      Some(Body(root, value))
+    } catch { case _: Exception => None }
+    finally p.close()
+
+  private def pageValue(p: JsonParser, utf8: Array[Byte], body: String): Option[Array[Byte]] =
+    if (p.currentToken != JsonToken.VALUE_STRING) {
+      val node = mapper.readTree[JsonNode](p)
+      if (node.isNull || node.isContainerNode) None else Some(decodeBase64(node.asText()))
+    } else {
+      // the parser has read just past the opening quote and no further; when
+      // every char is one byte, the string runs to the next quote in `body`,
+      // unless an escape comes first
+      val start = if (utf8 == null) -1 else p.currentLocation.getByteOffset.toInt
+      val end =
+        if (start > 0 && utf8.length == body.length && utf8(start - 1) == '"')
+          body.indexOf('"', start)
+        else -1
+      val escaped = end < 0 || { val b = body.indexOf('\\', start); b >= 0 && b < end }
+      val len = if (escaped) p.getTextLength else end - start
+      p.streamReadConstraints.validateStringLength(len) // as getText would
+      Some(if (escaped) decodeBase64(p.getTextCharacters, p.getTextOffset, len)
+        else decodeBase64(utf8, start, len))
+    }
+
+  /** Builds one body with the generator `writeValueAsString` uses, field by
+    * field in the order the reference's tree builder adds them.
+    */
+  private final class BodyWriter(valueBytes: Int) {
+    private val out = new StringWriter(1024 + 4 * ((valueBytes + 2) / 3))
+    private val g: JsonGenerator = mapper.createGenerator(out)
+    g.writeStartObject()
+
+    def obj(name: String)(fields: => Unit): Unit = {
+      g.writeObjectFieldStart(name)
+      fields
+      g.writeEndObject()
+    }
+
+    def str(name: String, v: String): Unit = g.writeStringField(name, v)
+
+    def int(name: String, v: Int): Unit = g.writeNumberField(name, v)
+
+    /** Sorted by key, like the reference's string maps. */
+    def strings(name: String, values: Map[String, String]): Unit =
+      obj(name)(values.toSeq.sortBy(_._1).foreach { case (k, v) => str(k, v) })
+
+    /** A page value: base64 needs no escaping, so the encoder's output goes
+      * straight to the body between the quotes the generator writes.
+      */
+    def value(bytes: Array[Byte]): Unit = {
+      g.writeFieldName("value")
+      g.writeRawValue("\"")
+      g.flush()
+      out.write(Base64.getEncoder.encodeToString(bytes))
+      g.writeRaw('"')
+    }
+
+    def result(): String = {
+      g.writeEndObject()
+      g.close()
+      out.toString
+    }
   }
 
   /** `BuildValidationError` (`json_request.cpp:93-104`). */
@@ -142,31 +283,30 @@ object JsonEnvelope {
       * builder; emits the exact nested shape the reference sends.
       */
     def toJson: String = {
-      val root = mapper.createObjectNode()
-      root.putObject("column_reference").put("name", columnName)
-
-      val dataBatch = root.putObject("data_batch")
-      val dtInfo = dataBatch.putObject("datatype_info")
-      dtInfo.put("datatype", datatype.getOrElse(""))
-      datatypeLength.foreach(dtInfo.put("length", _))
-      if (encrypt) dataBatch.put("value", b64(value))
-      val vf = dataBatch.putObject("value_format")
-      vf.put("compression", compression.getOrElse(""))
-      vf.put("encoding", encoding.getOrElse(""))
-      if (encodingAttributes.nonEmpty)
-        putStringMap(vf, "encoding_attributes", encodingAttributes)
-
-      val dbe = root.putObject("data_batch_encrypted")
-      if (!encrypt) dbe.put("value", b64(value))
-      dbe.putObject("value_format")
-        .put("compression", encryptedCompression.getOrElse(""))
-
-      root.putObject("encryption").put("key_id", keyId)
-      root.putObject("access").put("user_id", userId)
-      root.put("application_context", applicationContext)
-      root.putObject("debug").put("reference_id", referenceId)
-      if (!encrypt) putStringMap(root, "encryption_metadata", encryptionMetadata)
-      mapper.writeValueAsString(root)
+      val w = new BodyWriter(value.length)
+      w.obj("column_reference")(w.str("name", columnName))
+      w.obj("data_batch") {
+        w.obj("datatype_info") {
+          w.str("datatype", datatype.getOrElse(""))
+          datatypeLength.foreach(w.int("length", _))
+        }
+        if (encrypt) w.value(value)
+        w.obj("value_format") {
+          w.str("compression", compression.getOrElse(""))
+          w.str("encoding", encoding.getOrElse(""))
+          if (encodingAttributes.nonEmpty) w.strings("encoding_attributes", encodingAttributes)
+        }
+      }
+      w.obj("data_batch_encrypted") {
+        if (!encrypt) w.value(value)
+        w.obj("value_format")(w.str("compression", encryptedCompression.getOrElse("")))
+      }
+      w.obj("encryption")(w.str("key_id", keyId))
+      w.obj("access")(w.str("user_id", userId))
+      w.str("application_context", applicationContext)
+      w.obj("debug")(w.str("reference_id", referenceId))
+      if (!encrypt) w.strings("encryption_metadata", encryptionMetadata)
+      w.result()
     }
   }
 
@@ -176,20 +316,14 @@ object JsonEnvelope {
       * stop-parsing-on-invalid behavior.
       */
     def parse(body: String, encrypt: Boolean): ProtectRequest = {
-      val root =
-        try {
-          val n = mapper.readTree(body)
-          if (n == null || !n.isObject) null else n
-        } catch { case _: Exception => null }
+      val read = readBody(body, if (encrypt) "data_batch" else "data_batch_encrypted")
+      val root = read.map(_.root).orNull
 
       def get(path: String*): Option[String] =
         if (root == null) None else safeGet(root, path: _*)
 
       val lengthRaw = get("data_batch", "datatype_info", "length")
       val lengthParsed = lengthRaw.map(stoiLike)
-      val valueB64 =
-        if (encrypt) get("data_batch", "value")
-        else get("data_batch_encrypted", "value")
 
       ProtectRequest(
         encrypt = encrypt,
@@ -210,7 +344,7 @@ object JsonEnvelope {
         userId = get("access", "user_id").getOrElse(""),
         applicationContext = get("application_context").getOrElse(""),
         referenceId = get("debug", "reference_id").getOrElse(""),
-        value = valueB64.map(decodeBase64).getOrElse(Array.emptyByteArray),
+        value = read.flatMap(_.value).getOrElse(Array.emptyByteArray),
         encryptionMetadata =
           if (encrypt || root == null) Map.empty
           else stringMap(root.get("encryption_metadata")))
@@ -234,17 +368,19 @@ object JsonEnvelope {
       encryptionMetadata: Map[String, String]) {
 
     def toJson: String = {
-      val root = mapper.createObjectNode()
-      val dbe = root.putObject("data_batch_encrypted")
-      dbe.putObject("value_format").put("compression", encryptedCompression)
-      dbe.put("value", b64(encryptedValue))
-      val access = root.putObject("access")
-      access.put("user_id", userId)
-      access.put("role", role)
-      access.put("access_control", accessControl)
-      root.putObject("debug").put("reference_id", referenceId)
-      putStringMap(root, "encryption_metadata", encryptionMetadata)
-      mapper.writeValueAsString(root)
+      val w = new BodyWriter(encryptedValue.length)
+      w.obj("data_batch_encrypted") {
+        w.obj("value_format")(w.str("compression", encryptedCompression))
+        w.value(encryptedValue)
+      }
+      w.obj("access") {
+        w.str("user_id", userId)
+        w.str("role", role)
+        w.str("access_control", accessControl)
+      }
+      w.obj("debug")(w.str("reference_id", referenceId))
+      w.strings("encryption_metadata", encryptionMetadata)
+      w.result()
     }
   }
 
@@ -253,17 +389,13 @@ object JsonEnvelope {
       * the api-client error the reference raises for an invalid body.
       */
     def parse(body: String): Either[String, EncryptResponse] = {
-      val root =
-        try {
-          val n = mapper.readTree(body)
-          if (n == null || !n.isObject) return Left("Invalid JSON encrypt response") else n
-        } catch { case _: Exception => return Left("Invalid JSON encrypt response") }
+      val Body(root, value) = readBody(body, "data_batch_encrypted")
+        .getOrElse(return Left("Invalid JSON encrypt response"))
       val r = EncryptResponse(
         encryptedCompression =
           safeGet(root, "data_batch_encrypted", "value_format", "compression")
             .filter(Compressions).getOrElse(""),
-        encryptedValue = safeGet(root, "data_batch_encrypted", "value")
-          .map(decodeBase64).getOrElse(Array.emptyByteArray),
+        encryptedValue = value.getOrElse(Array.emptyByteArray),
         userId = safeGet(root, "access", "user_id").getOrElse(""),
         role = safeGet(root, "access", "role").getOrElse(""),
         accessControl = safeGet(root, "access", "access_control").getOrElse(""),
@@ -291,31 +423,32 @@ object JsonEnvelope {
       referenceId: String) {
 
     def toJson: String = {
-      val root = mapper.createObjectNode()
-      val dataBatch = root.putObject("data_batch")
-      val dtInfo = dataBatch.putObject("datatype_info")
-      dtInfo.put("datatype", datatype)
-      datatypeLength.foreach(dtInfo.put("length", _))
-      dataBatch.put("value", b64(value))
-      val vf = dataBatch.putObject("value_format")
-      vf.put("compression", compression)
-      vf.put("encoding", encoding)
-      val access = root.putObject("access")
-      access.put("user_id", userId)
-      access.put("role", role)
-      access.put("access_control", accessControl)
-      root.putObject("debug").put("reference_id", referenceId)
-      mapper.writeValueAsString(root)
+      val w = new BodyWriter(value.length)
+      w.obj("data_batch") {
+        w.obj("datatype_info") {
+          w.str("datatype", datatype)
+          datatypeLength.foreach(w.int("length", _))
+        }
+        w.value(value)
+        w.obj("value_format") {
+          w.str("compression", compression)
+          w.str("encoding", encoding)
+        }
+      }
+      w.obj("access") {
+        w.str("user_id", userId)
+        w.str("role", role)
+        w.str("access_control", accessControl)
+      }
+      w.obj("debug")(w.str("reference_id", referenceId))
+      w.result()
     }
   }
 
   object DecryptResponse {
     def parse(body: String): Either[String, DecryptResponse] = {
-      val root =
-        try {
-          val n = mapper.readTree(body)
-          if (n == null || !n.isObject) return Left("Invalid JSON decrypt response") else n
-        } catch { case _: Exception => return Left("Invalid JSON decrypt response") }
+      val Body(root, value) = readBody(body, "data_batch")
+        .getOrElse(return Left("Invalid JSON decrypt response"))
       val r = DecryptResponse(
         datatype = safeGet(root, "data_batch", "datatype_info", "datatype")
           .filter(Datatypes).getOrElse(""),
@@ -325,8 +458,7 @@ object JsonEnvelope {
           .filter(Compressions).getOrElse(""),
         encoding = safeGet(root, "data_batch", "value_format", "encoding")
           .filter(Encodings).getOrElse(""),
-        value = safeGet(root, "data_batch", "value")
-          .map(decodeBase64).getOrElse(Array.emptyByteArray),
+        value = value.getOrElse(Array.emptyByteArray),
         userId = safeGet(root, "access", "user_id").getOrElse(""),
         role = safeGet(root, "access", "role").getOrElse(""),
         accessControl = safeGet(root, "access", "access_control").getOrElse(""),

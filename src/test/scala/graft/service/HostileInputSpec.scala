@@ -23,6 +23,8 @@ import graft.service.JsonEnvelope.{DecryptResponse, EncryptResponse, ProtectRequ
   * `{"error": …}` envelope at the service.
   */
 class HostileInputSpec extends AnyFunSuite {
+  import HostileInputSpec._
+
   private val ctx = ProtectionContext("k1", "email", "user456", """{"user_id": "user456"}""")
   private val xor = XorCodec(ctx)
   private val mapper = new ObjectMapper()
@@ -121,15 +123,6 @@ class HostileInputSpec extends AnyFunSuite {
 
   // ------------------------------------------------------------- property --
 
-  /** Seeded ScalaCheck loop (the scalatestplus bridge is not on the classpath). */
-  private def forAll[T](gen: Gen[T], n: Int)(f: T => Unit): Unit = {
-    var seed = org.scalacheck.rng.Seed(7L)
-    (0 until n).foreach { _ =>
-      gen.apply(Gen.Parameters.default, seed).foreach(f)
-      seed = seed.next
-    }
-  }
-
   /** Truncate, flip one bit, overwrite 4 bytes with a random int (hits the
     * count and length fields), or replace with random bytes.
     */
@@ -180,36 +173,6 @@ class HostileInputSpec extends AnyFunSuite {
         typedOnly(sequencer.decrypt(m, attrs, enc.metadata))
       }
     }
-  }
-
-  /** Every field path of a JSON object tree, parents before children. */
-  private def fieldPaths(n: JsonNode, prefix: Vector[String] = Vector.empty): Seq[Vector[String]] =
-    n.fieldNames.asScala.toSeq.flatMap { f =>
-      val p = prefix :+ f
-      p +: (if (n.get(f).isObject) fieldPaths(n.get(f), p) else Nil)
-    }
-
-  /** Truncate the body, flip one bit of its UTF-8 bytes, or swap one
-    * field's value for a value of another JSON type.
-    */
-  private def bodyMutations(body: String): Gen[(String, String)] = {
-    val bytes = body.getBytes(UTF_8)
-    val nodes = mapper.getNodeFactory
-    val swaps: Seq[JsonNode] = Seq(nodes.numberNode(7), nodes.numberNode(-1.5),
-      nodes.booleanNode(true), nodes.nullNode(), nodes.arrayNode().add("x"),
-      nodes.objectNode(), nodes.textNode("12abc"))
-    Gen.oneOf(
-      Gen.choose(0, body.length - 1).map(n => "truncated" -> body.take(n)),
-      for (i <- Gen.choose(0, bytes.length - 1); b <- Gen.choose(0, 7)) yield {
-        val m = bytes.clone(); m(i) = (m(i) ^ (1 << b)).toByte
-        "flipped" -> new String(m, UTF_8)
-      },
-      for (path <- Gen.oneOf(fieldPaths(mapper.readTree(body))); v <- Gen.oneOf(swaps))
-        yield {
-          val root = mapper.readTree(body)
-          path.init.foldLeft(root)(_.get(_)).asInstanceOf[ObjectNode].set[JsonNode](path.last, v)
-          "type-swapped" -> mapper.writeValueAsString(root)
-        })
   }
 
   test("property: mutated /encrypt, /decrypt and /token bodies answer 4xx with the error envelope") {
@@ -294,5 +257,48 @@ class HostileInputSpec extends AnyFunSuite {
       rejected(kind) += 1
     }
     assert(rejected.keySet == Set("truncated", "flipped", "dotted", "random"), rejected)
+  }
+}
+
+object HostileInputSpec {
+  private val bodyMapper = new ObjectMapper()
+
+  /** Seeded ScalaCheck loop (the scalatestplus bridge is not on the classpath). */
+  private[graft] def forAll[T](gen: Gen[T], n: Int)(f: T => Unit): Unit = {
+    var seed = org.scalacheck.rng.Seed(7L)
+    (0 until n).foreach { _ =>
+      gen.apply(Gen.Parameters.default, seed).foreach(f)
+      seed = seed.next
+    }
+  }
+
+  /** Every field path of a JSON object tree, parents before children. */
+  private def fieldPaths(n: JsonNode, prefix: Vector[String] = Vector.empty): Seq[Vector[String]] =
+    n.fieldNames.asScala.toSeq.flatMap { f =>
+      val p = prefix :+ f
+      p +: (if (n.get(f).isObject) fieldPaths(n.get(f), p) else Nil)
+    }
+
+  /** Truncate the body, flip one bit of its UTF-8 bytes, or swap one
+    * field's value for a value of another JSON type.
+    */
+  private[service] def bodyMutations(body: String): Gen[(String, String)] = {
+    val bytes = body.getBytes(UTF_8)
+    val nodes = bodyMapper.getNodeFactory
+    val swaps: Seq[JsonNode] = Seq(nodes.numberNode(7), nodes.numberNode(-1.5),
+      nodes.booleanNode(true), nodes.nullNode(), nodes.arrayNode().add("x"),
+      nodes.objectNode(), nodes.textNode("12abc"))
+    Gen.oneOf(
+      Gen.choose(0, body.length - 1).map(n => "truncated" -> body.take(n)),
+      for (i <- Gen.choose(0, bytes.length - 1); b <- Gen.choose(0, 7)) yield {
+        val m = bytes.clone(); m(i) = (m(i) ^ (1 << b)).toByte
+        "flipped" -> new String(m, UTF_8)
+      },
+      for (path <- Gen.oneOf(fieldPaths(bodyMapper.readTree(body))); v <- Gen.oneOf(swaps))
+        yield {
+          val root = bodyMapper.readTree(body)
+          path.init.foldLeft(root)(_.get(_)).asInstanceOf[ObjectNode].set[JsonNode](path.last, v)
+          "type-swapped" -> bodyMapper.writeValueAsString(root)
+        })
   }
 }
