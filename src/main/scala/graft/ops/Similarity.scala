@@ -1,19 +1,35 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import scala.reflect.runtime.universe.TypeTag
+
+import graft.functions.VectorFunctions
 
 /** Similarity search over embedding columns (Array[Float]).
   *
-  * Two paths:
-  *  - [[knnExactQuantized]] — brute-force cosine top-k in an exact integer
-  *    space (scale 1e4 fixed-point): dot products and norms are BIGINTs, so
-  *    results are bit-identical across engines (oracle-able) and the kernel
-  *    is a codegen'd `aggregate(zip_with(...))` — no UDFs.
-  *  - [[annHyperplane]] — random-hyperplane LSH bucketing: queries only meet
-  *    candidates sharing a signature bucket. At 100 TB this is the scale
-  *    path: bucket join replaces the full cross product; plane count tunes
-  *    recall/cost.
+  * Every search is one skeleton (PAPERS.md *REPOSE*): an index prunes the
+  * candidates, then each query ranks its candidates and keeps the top k
+  * ([[topK]]), the measure being a plug-in. Scores live in an exact
+  * integer space (×10⁴ fixed point, [[quantize]]): dot products and norms
+  * are BIGINTs, so results are bit-identical across engines (oracle-able).
+  *  - [[knnExactQuantized]]: no index, brute-force cosine (s01).
+  *  - [[annHyperplane]]: sign-LSH buckets of the chosen [[SignPlanes]]
+  *    kernel (s02 exact, s05 float reference); candidate generation is one
+  *    bucket join instead of the full cross product.
+  *  - [[annIvfExact]] / [[annIvfPq]]: coarse lists trained by the one
+  *    floor-mean Lloyd's loop ([[lloyd]]), queries probe `nprobe` lists
+  *    and scan them in exact L2 (s04, s11); [[annPq]] scans product codes
+  *    (s10). [[annIvf]] is the float spherical-k-means reference (s05).
+  *  - [[kmeansAssign]] / [[semDedup]] / [[semDedupTrained]] /
+  *    [[nearestCentroid]]: the same loop and centroid assignment
+  *    ([[assignTo]]) for clustering, semantic dedup and classification
+  *    (s08, s09, d14, d19).
+  *  - [[cosineNearDupPairs]] / [[cosineNearDupBucketed]]: near-dup pairs
+  *    above a cosine threshold, all-pairs (s03) or over the hyperplane
+  *    bucket table (s07).
   */
 object Similarity {
 
@@ -24,7 +40,7 @@ object Similarity {
     * kernel; semantics identical to `round(x*scale)::long` per element).
     */
   def quantize(emb: Column, scale: Int = 10000): Column =
-    graft.functions.VectorFunctions.quantize_vec(emb, scale)
+    VectorFunctions.quantize_vec(emb, scale)
 
   /** Run `n` INDEPENDENT per-subspace training loops as overlapping Spark
     * jobs (optimization guide §2.6: actions are only sequential because the
@@ -32,7 +48,7 @@ object Similarity {
     * share no state — each loop's jobs are tiny (collect of ≤nlist centroid
     * rows over the cached base), so run serially their wall is dominated by
     * per-job scheduling latency, not compute: s10 measured 8 sequential
-    * pqLoops = 16 driver-barrier jobs. Results are deterministic and
+    * Lloyd's loops = 16 driver-barrier jobs. Results are deterministic and
     * identical to the sequential form: each subspace's trajectory depends
     * only on its own slice, and the returned Seq keeps subspace order.
     * Callers MUST materialize any shared cached input first (one cheap
@@ -57,7 +73,7 @@ object Similarity {
     * no per-element lambda frames; see [[graft.functions.DotProductQ]]).
     */
   def dotQ(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.dot_q(a, b)
+    VectorFunctions.dot_q(a, b)
 
   /** Per-vector max |x| as double — the scale basis for symmetric int8
     * quantization. Materialize this in its own projection before passing it
@@ -95,7 +111,6 @@ object Similarity {
     */
   def knnExactQuantized(emb: DataFrame, idCol: String, embCol: String,
       queryPred: Column, k: Int = 10, maxQueryRows: Long = 100000): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // NOTE (r16): spreading the scan (TextOps.spreadCompute) was measured
     // WORSE here (+50 % isolated wall) — the n×queries verify is too light
     // at the gated scale to pay for the exchange, and at corpus scale the
@@ -108,27 +123,34 @@ object Similarity {
     require(nQueries <= maxQueryRows,
       s"knnExactQuantized query side has $nQueries rows (> $maxQueryRows): " +
         "the query set is broadcast and scored against every corpus row — " +
-        "use annHyperplane/annIvf for large query sets")
+        "use annHyperplane(…, SignPlanes.Exact) or annIvfExact for large " +
+        "query sets")
     val pairs = q.join(broadcast(queries), col(idCol) =!= col("qid"))
       .withColumn("dot", dotQ(col("qq"), col("qv")))
       .withColumn("cos_r", cosineQ(col("dot"), col("qn"), col("nrm")))
-    val w = Window.partitionBy("qid").orderBy(col("cos_r").desc, col(idCol))
-    pairs.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col(idCol).as("nbr"), col("rnk"), col("cos_r"))
+      .select(col(idCol).as("nbr"), col("qid"), col("cos_r"))
+    topK(pairs, k, Seq(col("cos_r").desc, col("nbr")), "qid", "nbr", "rnk", "cos_r")
   }
+
+  /** Each query's (`qid`'s) first `k` rows in `order`, numbered 1..k as
+    * `rnk`, projected to `out`: the per-query rank every search ends in.
+    */
+  private def topK(rows: DataFrame, k: Int, order: Seq[Column],
+      out: String*): DataFrame =
+    rows.withColumn("rnk",
+        row_number().over(Window.partitionBy("qid").orderBy(order: _*)))
+      .filter(col("rnk") <= k)
+      .select(out.map(col): _*)
 
   /** Sign-bit signature for `planes` hyperplanes → integer bucket id.
     * Native kernel (`HyperplaneSig`): mix64-derived ±1 weights computed in a
     * tight loop, bit-identical to the literal-array `aggregate(zip_with)`
     * form it replaces (same weights, same FP summation order) — the 48-table
     * s07 bucketing shipped ~12k weight literals and a 1.8 MiB task binary as
-    * column expressions. `dims` is retained for source compatibility; the
-    * kernel always uses the vector's actual length (identical for the dense
-    * equal-width embeddings every caller feeds it).
+    * column expressions. The kernel uses the vector's actual length.
     */
-  def hyperplaneBucket(emb: Column, planes: Int, offset: Int = 0, dims: Int = 64): Column =
-    graft.functions.VectorFunctions.hyperplane_sig(emb, offset, planes)
+  def hyperplaneBucket(emb: Column, planes: Int, offset: Int = 0): Column =
+    VectorFunctions.hyperplane_sig(emb, offset, planes)
 
   /** All XOR masks of hamming weight ≤ h over the low `m` bits (multiprobe
     * neighborhood — driver-side constant, ≤ 1+m+m(m-1)/2 entries).
@@ -144,9 +166,32 @@ object Similarity {
     h0 ++ h1 ++ h2
   }
 
+  /** Corpus exploded ONCE into one row per (table, bucket) cell — the shared
+    * candidate-generation table behind [[annHyperplane]],
+    * [[cosineNearDupBucketed]] and [[lshCandidateMass]]: a shuffle-free
+    * projection whose only cost is tables×planes sign projections per row,
+    * made by the `signs` kernel.
+    */
+  private def lshBucketTable(emb: DataFrame, idCol: String, embCol: String,
+      tables: Int, planes: Int, signs: SignPlanes): DataFrame = {
+    val bucketStructs = (0 until tables).map { t =>
+      struct(lit(t).as("t"),
+        signs.bucket(col("e"), col("qv"), t * planes, planes).as("b"))
+    }
+    emb.select(col(idCol), col(embCol).as("e"))
+      .withColumn("qv", quantize(col("e")))
+      .withColumn("nrm", dotQ(col("qv"), col("qv")))
+      .withColumn("tb", explode(array(bucketStructs: _*)))
+      .select(col(idCol), col("qv"), col("nrm"),
+        col("tb.t").as("t"), col("tb.b").as("b"))
+  }
+
   /** ANN via `tables` independent sign-LSH tables of `planes` bits each, with
     * hamming-≤`probeHamming` multiprobe on the query side; exact cosine
-    * re-ranking of the candidate union.
+    * re-ranking of the candidate union. `signs` picks the plane kernel and
+    * has no default: [[SignPlanes.Exact]] is the production path (s02, its
+    * buckets, probes and re-rank replay bit-for-bit in DuckDB);
+    * [[SignPlanes.Float]] is s05's recall-gated reference.
     *
     * Defaults (8×6, probe ≤1) are tuned on the sf0.01 corpus, whose top-5
     * neighbors sit at cosine 0.27–0.45 (per-bit collision p ≈ 0.6):
@@ -163,33 +208,10 @@ object Similarity {
     * narrow id pairs and the vectors join back only for the exact re-rank
     * (SCALING.md, r6: the wide form was the one hot task in the 10× run).
     */
-  /** Corpus exploded ONCE into one row per (table, bucket) cell — the shared
-    * candidate-generation table behind [[annHyperplane]] and
-    * [[cosineNearDupBucketed]]: a shuffle-free projection whose only cost is
-    * tables×planes sign projections per row.
-    */
-  private def lshBucketTable(emb: DataFrame, idCol: String, embCol: String,
-      tables: Int, planes: Int): DataFrame = {
-    val bucketStructs = (0 until tables).map { t =>
-      struct(lit(t).as("t"),
-        hyperplaneBucket(col("e"), planes, t * planes).as("b"))
-    }
-    emb.select(col(idCol), col(embCol).as("e"))
-      .withColumn("qv", quantize(col("e")))
-      .withColumn("nrm", dotQ(col("qv"), col("qv")))
-      .withColumn("tb", explode(array(bucketStructs: _*)))
-      .select(col(idCol), col("qv"), col("nrm"),
-        col("tb.t").as("t"), col("tb.b").as("b"))
-  }
-
-  @deprecated("production path is annHyperplaneExact (exact-integer twin, " +
-    "oracle-replayable, same plan shape); this float mix64 form is retained " +
-    "only as s05's recall-gated reference", "0.1.0")
   def annHyperplane(emb: DataFrame, idCol: String, embCol: String,
-      queryPred: Column, k: Int = 5, tables: Int = 8, planes: Int = 6,
-      probeHamming: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = lshBucketTable(emb, idCol, embCol, tables, planes)
+      queryPred: Column, signs: SignPlanes, k: Int = 5, tables: Int = 8,
+      planes: Int = 6, probeHamming: Int = 1): DataFrame = {
+    val base = lshBucketTable(emb, idCol, embCol, tables, planes, signs)
     val probes = base.filter(queryPred)
       .withColumn("pm", explode(typedlit(hammingMasks(planes, probeHamming))))
       .select(col(idCol).as("qid"), col("t"),
@@ -212,60 +234,7 @@ object Similarity {
       .join(broadcast(queries), "qid")
       .withColumn("dot", dotQ(col("qq"), col("qv")))
       .withColumn("cos_r", cosineQ(col("dot"), col("qn"), col("nrm")))
-    val w = Window.partitionBy("qid").orderBy(col("cos_r").desc, col("nbr"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "nbr", "rnk", "cos_r")
-  }
-
-  /** Exact-integer twin of [[annHyperplane]] (VERDICT r9 #6 — the s04
-    * treatment for s02): buckets come from [[graft.functions.HyperplaneSigExact]]
-    * — fmix32-parity ±1 planes over the ×10⁴-quantized BIGINT vectors, pure
-    * integer projections — so plane derivation, bucket assignment, hamming-
-    * multiprobe and the cosine re-rank all replay bit-for-bit in DuckDB and
-    * the registry row hash-matches its oracle (the float [[annHyperplane]]
-    * stays as the s05 recall-gated helper).
-    *
-    * Scale shape is identical to [[annHyperplane]]: corpus exploded once
-    * into (table, bucket) cells (shuffle-free projection), query probes
-    * broadcast, ONE equality join for candidate generation, narrow
-    * (qid, nbr) dedup, vectors join back only for the exact re-rank.
-    */
-  def annHyperplaneExact(emb: DataFrame, idCol: String, embCol: String,
-      queryPred: Column, k: Int = 5, tables: Int = 8, planes: Int = 6,
-      probeHamming: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bucketStructs = (0 until tables).map { t =>
-      struct(lit(t).as("t"),
-        graft.functions.VectorFunctions.hyperplane_sig_exact(
-          col("qv"), t * planes, planes).as("b"))
-    }
-    val base = emb.select(col(idCol), quantize(col(embCol)).as("qv"))
-      .withColumn("nrm", dotQ(col("qv"), col("qv")))
-      .withColumn("tb", explode(array(bucketStructs: _*)))
-      .select(col(idCol), col("qv"), col("nrm"),
-        col("tb.t").as("t"), col("tb.b").as("b"))
-    val probes = base.filter(queryPred)
-      .withColumn("pm", explode(typedlit(hammingMasks(planes, probeHamming))))
-      .select(col(idCol).as("qid"), col("t"),
-        col("b").bitwiseXOR(col("pm")).as("b"))
-    val cands = base.join(broadcast(probes), Seq("t", "b"))
-      .filter(col(idCol) =!= col("qid"))
-      .select(col("qid"), col(idCol).as("nbr"))
-      .distinct()
-    val vecs = emb.select(col(idCol), quantize(col(embCol)).as("qv"))
-      .withColumn("nrm", dotQ(col("qv"), col("qv")))
-    val queries = vecs.filter(queryPred)
-      .select(col(idCol).as("qid"), col("qv").as("qq"), col("nrm").as("qn"))
-    val scored = cands
-      .join(vecs.select(col(idCol).as("nbr"), col("qv"), col("nrm")), "nbr")
-      .join(broadcast(queries), "qid")
-      .withColumn("dot", dotQ(col("qq"), col("qv")))
-      .withColumn("cos_r", cosineQ(col("dot"), col("qn"), col("nrm")))
-    val w = Window.partitionBy("qid").orderBy(col("cos_r").desc, col("nbr"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "nbr", "rnk", "cos_r")
+    topK(scored, k, Seq(col("cos_r").desc, col("nbr")), "qid", "nbr", "rnk", "cos_r")
   }
 
   /** Deterministic spherical k-means over a bounded training sample —
@@ -332,7 +301,6 @@ object Similarity {
       queryPred: Column, nlist: Int = 16, nprobe: Int = 7, k: Int = 5,
       kmeansIters: Int = 3,
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = emb.sparkSession
     import spark.implicits._
     val base = scope.cached( // consumed by training sample, assignment, queries
@@ -357,29 +325,21 @@ object Similarity {
     // shuffle (the r6 join+partial-agg form is pinned equal in OpsSpec;
     // ties break toward the higher cid exactly like max(struct(ccos, cid)))
     val assigned = base.withColumn("cid",
-        graft.functions.VectorFunctions.argmax_cos_centroid(
-          col("qv"), cvs.map(_.toSeq).toSeq))
+        VectorFunctions.argmax_cos_centroid(col("qv"), cvs.map(_.toSeq).toSeq))
       .select(col(idCol), col("qv"), col("nrm"), col("cid"))
     // queries probe their nprobe nearest centroid lists (query set is tiny)
     val queries = base.filter(queryPred)
       .select(col(idCol).as("qid"), col("qv").as("qq"), col("nrm").as("qn"))
-    val wProbe = Window.partitionBy(col("qid"))
-      .orderBy(col("qcos").desc, col("cid"))
-    val probes = queries.join(broadcast(centroids), lit(true))
-      .withColumn("qcos", cosineQ(dotQ(col("qq"), col("cv")), col("qn"), col("cn")))
-      .withColumn("prnk", row_number().over(wProbe))
-      .filter(col("prnk") <= nprobe)
-      .select(col("qid"), col("qq"), col("qn"), col("cid"))
+    val probes = topK(queries.join(broadcast(centroids), lit(true))
+        .withColumn("qcos", cosineQ(dotQ(col("qq"), col("cv")), col("qn"), col("cn"))),
+      nprobe, Seq(col("qcos").desc, col("cid")), "qid", "qq", "qn", "cid")
     // each vector lives in exactly one list, so (qid, nbr) pairs are unique
-    val wRank = Window.partitionBy("qid").orderBy(col("cos_r").desc, col("nbr"))
-    probes.join(assigned, Seq("cid"))
+    val scored = probes.join(assigned, Seq("cid"))
       .filter(col(idCol) =!= col("qid"))
       .withColumn("cos_r", cosineQ(dotQ(col("qq"), col("qv")),
         col("qn"), col("nrm")))
       .select(col("qid"), col(idCol).as("nbr"), col("cos_r"))
-      .withColumn("rnk", row_number().over(wRank))
-      .filter(col("rnk") <= k)
-      .select("qid", "nbr", "rnk", "cos_r")
+    topK(scored, k, Seq(col("cos_r").desc, col("nbr")), "qid", "nbr", "rnk", "cos_r")
   }
 
   /** Embedding-cosine near-duplicate pairs above a similarity threshold —
@@ -476,8 +436,9 @@ object Similarity {
     // task-seconds PER PASS, running twice). Caching the narrow
     // (id, t, b) rows (~20 B/row) halves signature compute for the price
     // of one in-memory copy of n·tables narrow rows.
-    val buckets = scope.cached(lshBucketTable(vecs, idCol, "e", tables, planes)
-      .select(col(idCol), col("t"), col("b")))
+    val buckets = scope.cached(
+      lshBucketTable(vecs, idCol, "e", tables, planes, SignPlanes.Float)
+        .select(col(idCol), col("t"), col("b")))
     // NOTE (r11): widening the join stages by pre-repartitioning both
     // sides on the join keys was tried and MEASURED WORSE at 100× (task
     // seconds doubled): the explicit REPARTITION_BY_NUM exchanges are not
@@ -613,7 +574,7 @@ object Similarity {
       threshold: Double): (Long, Long, Long) = {
     val n = emb.count()
     val (planes, tables) = lshOperatingPoint(n, threshold)
-    val cells = lshBucketTable(emb, idCol, embCol, tables, planes)
+    val cells = lshBucketTable(emb, idCol, embCol, tables, planes, SignPlanes.Float)
       .groupBy("t", "b").agg(count(lit(1)).as("m"))
     val r = cells.agg(
       sum(expr("m * (m - 1) DIV 2")).as("mass"),
@@ -645,9 +606,7 @@ object Similarity {
       centRows: Seq[(Long, Seq[Long])], threshold: Double,
       scope: CacheScope): DataFrame = {
     val assigned = scope.cached(base
-      .withColumn("cid", element_at(typedlit(centRows.map(_._1).toSeq),
-        graft.functions.VectorFunctions.argmax_cos_centroid(
-          col("qv"), centRows.map(_._2).toSeq) + 1))
+      .withColumn("cid", assignTo(col("qv"), centRows, MaxCos))
       .select(col(idCol), col("cid"), col("qv"), col("nrm")))
     val a = assigned.select(col("cid"), col(idCol).as("d1"),
       col("qv").as("v1"), col("nrm").as("n1"))
@@ -677,7 +636,8 @@ object Similarity {
     val base = scope.cached(
       emb.select(col(idCol).cast("long").as(idCol), quantize(col(embCol)).as("qv"))
         .withColumn("nrm", dotQ(col("qv"), col("qv"))))
-    val cents = kmeansLoop(base, idCol, initPred, kmIters)
+    val cents = lloyd(base, idCol, "qv", initPred, kmIters, MaxCos,
+      "semDedupTrained: initPred")
     semDedupCore(base, idCol, cents, threshold, scope)
   }
 
@@ -697,8 +657,8 @@ object Similarity {
     * is scale-invariant, so the grid costs no ranking fidelity). Empty
     * clusters keep their previous centroid.
     *
-    * Per iteration: ONE broadcast join + argmax partial-agg (corpus shuffles
-    * on the id), then one posexplode+groupBy for the update (k·dims rows
+    * Per iteration: the argmax kernel assignment (a projection, no
+    * shuffle), then one posexplode+groupBy for the update (k·dims rows
     * out — partial-agg combined map-side). Returns (idCol, cid) after
     * `iters` rounds.
     */
@@ -708,37 +668,48 @@ object Similarity {
     val base = scope.cached(
       emb.select(col(idCol).cast("long").as(idCol), quantize(col(embCol)).as("qv"))
         .withColumn("nrm", dotQ(col("qv"), col("qv"))))
-    val cents = kmeansLoop(base, idCol, initPred, iters)
-    assignKernel(base, idCol, cents).select(col(idCol), col("cid"))
+    val cents = lloyd(base, idCol, "qv", initPred, iters, MaxCos,
+      "kmeansAssign: initPred")
+    base.withColumn("cid", assignTo(col("qv"), cents, MaxCos))
+      .select(col(idCol), col("cid"))
   }
 
-  /** Kernel assignment of every `base` row to its nearest centroid —
-    * n output rows, no n×k join rows, no groupBy shuffle. `cents` must be
-    * sorted ascending by cid so the kernel's tie-toward-higher-index
-    * replicates `max(struct(ccos, cid))`'s higher-cid preference.
+  /** An assignment kernel: the 0-based index of `v`'s nearest row of
+    * `cents`. [[MaxCos]] breaks ties toward the higher index, [[MinL2]]
+    * toward the lower one, so with centroids sorted ascending by cid they
+    * replicate `max(struct(ccos, cid))` and `min(struct(d2, cid))`.
     */
-  private def assignKernel(base: DataFrame, idCol: String,
-      cents: Seq[(Long, Seq[Long])]): DataFrame =
-    base.withColumn("cid", element_at(typedlit(cents.map(_._1)),
-        graft.functions.VectorFunctions.argmax_cos_centroid(
-          col("qv"), cents.map(_._2)) + 1))
-      .select(col(idCol), col("cid"), col("qv"))
+  private type Nearest = (Column, Seq[Seq[Long]]) => Column
+  private val MaxCos: Nearest = VectorFunctions.argmax_cos_centroid
+  private val MinL2: Nearest = VectorFunctions.argmin_l2_centroid
 
-  /** Distributed Lloyd's iterations (see [[kmeansAssign]] scaladoc): returns
-    * the final centroids after `iters` rounds, sorted ascending by cid.
-    * Centroids live on the driver between rounds (k·dims longs — the
-    * MLlib-KMeans pattern; the CORPUS never leaves the cluster).
+  /** The label of `v`'s nearest centroid: `cents` are (label, centroid)
+    * rows, sorted ascending by the centroid id. One projection per vector:
+    * no n×k join rows, no groupBy shuffle.
     */
-  private def kmeansLoop(base: DataFrame, idCol: String,
-      initPred: Column, iters: Int): Seq[(Long, Seq[Long])] = {
+  private def assignTo[T: TypeTag](v: Column, cents: Seq[(T, Seq[Long])],
+      nearest: Nearest): Column =
+    element_at(typedlit(cents.map(_._1)), nearest(v, cents.map(_._2)) + 1)
+
+  /** Distributed floor-mean Lloyd's rounds over the vector column `vec` of
+    * `rows` (see [[kmeansAssign]]): seeds are the `seeds` rows, each round
+    * assigns with `nearest` and moves every centroid to the exact-integer
+    * floor-mean of its rows; empty clusters keep their previous centroid.
+    * Returns the centroids after `iters` rounds, sorted ascending by cid.
+    * Centroids live on the driver between rounds (k·dims longs — the
+    * MLlib-KMeans pattern; the CORPUS never leaves the cluster). `seedArg`
+    * names the caller and its predicate in the empty-seed error.
+    */
+  private def lloyd(rows: DataFrame, idCol: String, vec: String, seeds: Column,
+      iters: Int, nearest: Nearest, seedArg: String): Seq[(Long, Seq[Long])] = {
     require(iters >= 1, s"iters must be >= 1: $iters")
-    var cents: Seq[(Long, Seq[Long])] = base.filter(initPred)
-      .select(col(idCol), col("qv")).collect()
+    var cents: Seq[(Long, Seq[Long])] = rows.filter(seeds)
+      .select(col(idCol), col(vec)).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).sortBy(_._1).toSeq
-    require(cents.nonEmpty, "kmeans: initPred selected no centroids")
+    require(cents.nonEmpty, s"$seedArg selected no centroid seeds")
     for (_ <- 1 until iters) {
-      val updated = assignKernel(base, idCol, cents)
-        .select(col("cid"), posexplode(col("qv")).as(Seq("pos", "v")))
+      val updated = rows.withColumn("cid", assignTo(col(vec), cents, nearest))
+        .select(col("cid"), posexplode(col(vec)).as(Seq("pos", "v")))
         .groupBy("cid", "pos")
         .agg(sum(col("v")).as("s"), count(lit(1)).as("c"))
         .withColumn("m", expr("(s - pmod(s, c)) DIV c"))
@@ -794,9 +765,7 @@ object Similarity {
       .map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1)
     require(centRows.nonEmpty, "nearestCentroid: no labeled rows")
     // |q − c|² = q·q − 2·q·c + c·c, all exact longs inside the kernel
-    q.withColumn("pred", element_at(typedlit(centRows.map(_._1).toSeq),
-        graft.functions.VectorFunctions.argmin_l2_centroid(
-          col("qv"), centRows.map(_._2).toSeq) + 1))
+    q.withColumn("pred", assignTo(col("qv"), centRows.toSeq, MinL2))
       .select(col(idCol), col(labelCol), col("pred"))
   }
 
@@ -829,37 +798,44 @@ object Similarity {
       queryPred: Column, initPred: Column, subspaces: Int = 8,
       dims: Int = 64, iters: Int = 2, k: Int = 5,
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     requireIntegralId(emb, idCol, "annPq")
     require(subspaces >= 1 && dims % subspaces == 0,
       s"dims ($dims) must divide into subspaces ($subspaces)")
-    val sub = dims / subspaces
     val base = scope.cached(
       emb.select(col(idCol).cast("long").as(idCol),
         quantize(col(embCol)).as("qv")))
     base.count() // materialize once; the concurrent loops below share it
-    val books: Seq[Seq[(Long, Seq[Long])]] = inParallel(subspaces) { ms =>
-      pqLoop(base.select(col(idCol),
-        slice(col("qv"), ms * sub + 1, sub).as("sv")), idCol, initPred, iters)
-    }
-    val recon = concat((0 until subspaces).map { ms =>
-      element_at(typedlit(books(ms).map(_._2)),
-        graft.functions.VectorFunctions.argmin_l2_centroid(
-          slice(col("qv"), ms * sub + 1, sub), books(ms).map(_._2)) + 1)
-    }: _*)
+    val recon = productCodes(base, idCol, "qv", initPred, subspaces,
+      dims / subspaces, iters, "annPq: initPred")
     val encoded = base.withColumn("rv", recon)
       .withColumn("rn", dotQ(col("rv"), col("rv")))
     val queries = base.filter(queryPred)
       .select(col(idCol).as("qid"), col("qv").as("qq"))
       .withColumn("qn", dotQ(col("qq"), col("qq")))
-    val wRank = Window.partitionBy("qid").orderBy(col("d2"), col("nbr"))
-    encoded.join(broadcast(queries), col(idCol) =!= col("qid"))
+    val scored = encoded.join(broadcast(queries), col(idCol) =!= col("qid"))
       .withColumn("d2",
         col("qn") + col("rn") - lit(2L) * dotQ(col("qq"), col("rv")))
       .select(col("qid"), col(idCol).as("nbr"), col("d2"))
-      .withColumn("rnk", row_number().over(wRank))
-      .filter(col("rnk") <= k)
-      .select("qid", "nbr", "rnk", "d2")
+    topK(scored, k, Seq(col("d2"), col("nbr")), "qid", "nbr", "rnk", "d2")
+  }
+
+  /** Product codes of the vector column `vec` of `rows`: one L2 codebook
+    * per `sub`-wide slice, trained by [[lloyd]] from the `seeds` rows (the
+    * loops are independent and overlap, see [[inParallel]], so `rows` must
+    * be materialized first). Returns the reconstruction of `vec`: every
+    * slice replaced by its nearest codeword.
+    */
+  private def productCodes(rows: DataFrame, idCol: String, vec: String,
+      seeds: Column, subspaces: Int, sub: Int, iters: Int,
+      seedArg: String): Column = {
+    def slab(ms: Int): Column = slice(col(vec), ms * sub + 1, sub)
+    val books: Seq[Seq[(Long, Seq[Long])]] = inParallel(subspaces) { ms =>
+      lloyd(rows.select(col(idCol), slab(ms).as("sv")), idCol, "sv", seeds,
+        iters, MinL2, seedArg)
+    }
+    concat((0 until subspaces).map { ms =>
+      assignTo(slab(ms), books(ms).map { case (_, cv) => cv -> cv }, MinL2)
+    }: _*)
   }
 
   /** IVF-PQ — the FAISS `IndexIVFPQ` composition and the canonical
@@ -872,9 +848,9 @@ object Similarity {
     *
     * Unlike [[annIvf]] (driver-sample float spherical k-means — the
     * rows-only form), EVERYTHING here stays on the exact ×10⁴ integer
-    * grid: the coarse codebook is [[pqLoop]] at full dimension (L2
+    * grid: the coarse codebook is [[lloyd]] at full dimension (L2
     * floor-mean Lloyd's, `coarsePred` seeds), residual codebooks are
-    * [[pqLoop]] per subvector slice (`initPred` seeds), assignment and
+    * [[lloyd]] per subvector slice (`initPred` seeds), assignment and
     * encoding are the native argmin-L2 kernel, and ADC distance is
     * ‖q − (C[cid] + recon(residual))‖² expanded on the [[dotQ]] kernel —
     * so coarse training, residual training, probe, and scan all replay
@@ -891,71 +867,37 @@ object Similarity {
       queryPred: Column, coarsePred: Column, initPred: Column,
       nprobe: Int = 5, subspaces: Int = 8, dims: Int = 64, iters: Int = 2,
       k: Int = 5, scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     requireIntegralId(emb, idCol, "annIvfPq")
     require(subspaces >= 1 && dims % subspaces == 0,
       s"dims ($dims) must divide into subspaces ($subspaces)")
     require(nprobe >= 1, s"nprobe must be >= 1: $nprobe")
-    val sub = dims / subspaces
     val base = scope.cached(
       emb.select(col(idCol).cast("long").as(idCol),
         quantize(col(embCol)).as("qv")))
-    // coarse codebook: full-dimension residual-free pqLoop (L2 Lloyd's)
-    val coarse = pqLoop(base.select(col(idCol), col("qv").as("sv")),
-      idCol, coarsePred, iters)
+    // coarse codebook: full-dimension residual-free L2 Lloyd's
+    val coarse = lloyd(base, idCol, "qv", coarsePred, iters, MinL2,
+      "annIvfPq: coarsePred")
     val coarseCvs = coarse.map(_._2)
     // one-row-per-vector coarse assignment + exact residual (pure projection)
     val resid = scope.cached(base
-      .withColumn("ci", graft.functions.VectorFunctions.argmin_l2_centroid(
-        col("qv"), coarseCvs))
+      .withColumn("ci", MinL2(col("qv"), coarseCvs))
       .withColumn("cid", element_at(typedlit(coarse.map(_._1)), col("ci") + 1))
       .withColumn("cv", element_at(typedlit(coarseCvs), col("ci") + 1))
       .withColumn("rv", zip_with(col("qv"), col("cv"), (a, b) => a - b))
       .select(col(idCol), col("cid"), col("cv"), col("rv")))
     resid.count() // materialize once; the concurrent loops below share it
-    // per-subspace residual codebooks (independent — overlapped, see
-    // [[inParallel]]), then encode + reconstruct
-    val books: Seq[Seq[(Long, Seq[Long])]] = inParallel(subspaces) { ms =>
-      pqLoop(resid.select(col(idCol),
-        slice(col("rv"), ms * sub + 1, sub).as("sv")), idCol, initPred, iters)
-    }
-    val reconResid = concat((0 until subspaces).map { ms =>
-      element_at(typedlit(books(ms).map(_._2)),
-        graft.functions.VectorFunctions.argmin_l2_centroid(
-          slice(col("rv"), ms * sub + 1, sub), books(ms).map(_._2)) + 1)
-    }: _*)
-    val encoded = resid
+    // per-subspace residual codebooks, then encode + reconstruct
+    val reconResid = productCodes(resid, idCol, "rv", initPred, subspaces,
+      dims / subspaces, iters, "annIvfPq: initPred")
+    val lists = resid
       .withColumn("fv", zip_with(col("cv"), reconResid, (a, b) => a + b))
       .withColumn("rn", dotQ(col("fv"), col("fv")))
-      .select(col(idCol), col("cid"), col("fv"), col("rn"))
-    // probe: each query ranks the nlist coarse centroids by exact L2
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val centDf = coarse.toDF("cid", "ccv")
-    val queries = base.filter(queryPred)
-      .select(col(idCol).as("qid"), col("qv").as("qq"))
-      .withColumn("qn", dotQ(col("qq"), col("qq")))
-    val wProbe = Window.partitionBy("qid").orderBy(col("d2c"), col("cid"))
-    val probes = queries.join(broadcast(centDf), lit(true))
-      .withColumn("d2c", col("qn") + dotQ(col("ccv"), col("ccv"))
-        - lit(2L) * dotQ(col("qq"), col("ccv")))
-      .withColumn("prnk", row_number().over(wProbe))
-      .filter(col("prnk") <= nprobe)
-      .select(col("qid"), col("qq"), col("qn"), col("cid"))
-    // scan only the probed lists; each vector lives in exactly one list
-    val wRank = Window.partitionBy("qid").orderBy(col("d2"), col("nbr"))
-    encoded.join(broadcast(probes), Seq("cid"))
-      .filter(col(idCol) =!= col("qid"))
-      .withColumn("d2",
-        col("qn") + col("rn") - lit(2L) * dotQ(col("qq"), col("fv")))
-      .select(col("qid"), col(idCol).as("nbr"), col("d2"))
-      .withColumn("rnk", row_number().over(wRank))
-      .filter(col("rnk") <= k)
-      .select("qid", "nbr", "rnk", "d2")
+      .select(col(idCol), col("cid"), col("fv").as("v"), col("rn").as("vn"))
+    ivfL2Search(base, lists, idCol, queryPred, coarse, nprobe, k)
   }
 
   /** IVF ANN on the exact ×10⁴ integer grid — [[annIvf]] with the
-    * float spherical-k-means trainer swapped for [[pqLoop]] at full
+    * float spherical-k-means trainer swapped for [[lloyd]] at full
     * dimension (VERDICT r8 #5: s11 proved the coarse-quantized k-means +
     * exact-integer chain is fully SQL-replayable; this is that chain
     * WITHOUT the residual product codes, i.e. FAISS `IndexIVFFlat`).
@@ -968,8 +910,8 @@ object Similarity {
     * bit-for-bit in SQL: the s04 oracle is s11's chain minus the
     * per-subspace residual CTEs.
     *
-    * Scale shape: identical to [[annIvfPq]]'s skeleton — the codebook is a
-    * driver-resident literal (nlist×dims longs), assignment is a pure
+    * Scale shape: [[annIvfPq]]'s skeleton ([[ivfL2Search]]) — the codebook
+    * is a driver-resident literal (nlist×dims longs), assignment is a pure
     * projection, queries broadcast to probe, the scan is an equality
     * broadcast-hash join on cid touching only ~nprobe/nlist of the corpus,
     * and the per-query top-k is one window. IVFFlat pays full vector bytes
@@ -979,73 +921,77 @@ object Similarity {
       queryPred: Column, coarsePred: Column, nprobe: Int = 5,
       iters: Int = 2, k: Int = 5,
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     requireIntegralId(emb, idCol, "annIvfExact")
     require(nprobe >= 1, s"nprobe must be >= 1: $nprobe")
     val base = scope.cached(
       emb.select(col(idCol).cast("long").as(idCol),
         quantize(col(embCol)).as("qv")))
-    val coarse = pqLoop(base.select(col(idCol), col("qv").as("sv")),
-      idCol, coarsePred, iters)
-    val coarseCvs = coarse.map(_._2)
-    val assigned = base
-      .withColumn("cid", element_at(typedlit(coarse.map(_._1)),
-        graft.functions.VectorFunctions.argmin_l2_centroid(
-          col("qv"), coarseCvs) + 1))
+    val coarse = lloyd(base, idCol, "qv", coarsePred, iters, MinL2,
+      "annIvfExact: coarsePred")
+    val lists = base
+      .withColumn("cid", assignTo(col("qv"), coarse, MinL2))
       .withColumn("nrm", dotQ(col("qv"), col("qv")))
-      .select(col(idCol), col("cid"), col("qv"), col("nrm"))
-    val spark = emb.sparkSession
+      .select(col(idCol), col("cid"), col("qv").as("v"), col("nrm").as("vn"))
+    ivfL2Search(base, lists, idCol, queryPred, coarse, nprobe, k)
+  }
+
+  /** The L2 IVF search of [[annIvfExact]] and [[annIvfPq]]. Probe: each
+    * query (the `queryPred` rows of `base`, columns idCol and qv) ranks the
+    * `coarse` centroids by exact L2 and keeps `nprobe`. Scan: the probed
+    * `lists` rows (idCol, cid, v, vn = v·v) ranked by exact L2
+    * ‖q − v‖² = q·q + v·v − 2·q·v, top `k` per query.
+    */
+  private def ivfL2Search(base: DataFrame, lists: DataFrame, idCol: String,
+      queryPred: Column, coarse: Seq[(Long, Seq[Long])], nprobe: Int,
+      k: Int): DataFrame = {
+    val spark = base.sparkSession
     import spark.implicits._
     val centDf = coarse.toDF("cid", "ccv")
       .withColumn("cn", dotQ(col("ccv"), col("ccv")))
     val queries = base.filter(queryPred)
       .select(col(idCol).as("qid"), col("qv").as("qq"))
       .withColumn("qn", dotQ(col("qq"), col("qq")))
-    val wProbe = Window.partitionBy("qid").orderBy(col("d2c"), col("cid"))
-    val probes = queries.join(broadcast(centDf), lit(true))
-      .withColumn("d2c", col("qn") + col("cn")
-        - lit(2L) * dotQ(col("qq"), col("ccv")))
-      .withColumn("prnk", row_number().over(wProbe))
-      .filter(col("prnk") <= nprobe)
-      .select(col("qid"), col("qq"), col("qn"), col("cid"))
-    val wRank = Window.partitionBy("qid").orderBy(col("d2"), col("nbr"))
-    assigned.join(broadcast(probes), Seq("cid"))
+    val probes = topK(queries.join(broadcast(centDf), lit(true))
+        .withColumn("d2c", col("qn") + col("cn")
+          - lit(2L) * dotQ(col("qq"), col("ccv"))),
+      nprobe, Seq(col("d2c"), col("cid")), "qid", "qq", "qn", "cid")
+    // scan only the probed lists; each vector lives in exactly one list
+    val scored = lists.join(broadcast(probes), Seq("cid"))
       .filter(col(idCol) =!= col("qid"))
       .withColumn("d2",
-        col("qn") + col("nrm") - lit(2L) * dotQ(col("qq"), col("qv")))
+        col("qn") + col("vn") - lit(2L) * dotQ(col("qq"), col("v")))
       .select(col("qid"), col(idCol).as("nbr"), col("d2"))
-      .withColumn("rnk", row_number().over(wRank))
-      .filter(col("rnk") <= k)
-      .select("qid", "nbr", "rnk", "d2")
+    topK(scored, k, Seq(col("d2"), col("nbr")), "qid", "nbr", "rnk", "d2")
+  }
+}
+
+/** The sign kernel of a hyperplane-LSH bucket table
+  * ([[Similarity.annHyperplane]]): which ±1 planes, over which form of the
+  * vector.
+  */
+sealed trait SignPlanes {
+  /** `planes` sign bits from plane `offset` on, over the float vector `e`
+    * or its ×10⁴ quantized form `qv`.
+    */
+  private[ops] def bucket(e: Column, qv: Column, offset: Int, planes: Int): Column
+}
+
+object SignPlanes {
+  /** mix64 ±1 planes over the float vector ([[Similarity.hyperplaneBucket]]):
+    * s07's near-dup tables and s05's recall reference. Float sums, so no
+    * SQL replay.
+    */
+  case object Float extends SignPlanes {
+    private[ops] def bucket(e: Column, qv: Column, offset: Int, planes: Int): Column =
+      Similarity.hyperplaneBucket(e, planes, offset)
   }
 
-  /** L2 twin of [[kmeansLoop]] over a subvector column `sv`: floor-mean
-    * Lloyd's rounds, centroids driver-resident between rounds, empty
-    * clusters keep their previous centroid, cids ascending (kernel
-    * tie-toward-lowest-index == `min(struct(d2, cid))`).
+  /** fmix32-parity ±1 planes over the ×10⁴ BIGINT vector
+    * ([[graft.functions.HyperplaneSigExact]]): pure integer projections, so
+    * buckets and probes replay bit-for-bit in DuckDB (s02).
     */
-  private def pqLoop(slices: DataFrame, idCol: String, initPred: Column,
-      iters: Int): Seq[(Long, Seq[Long])] = {
-    require(iters >= 1, s"iters must be >= 1: $iters")
-    var cents: Seq[(Long, Seq[Long])] = slices.filter(initPred)
-      .select(col(idCol), col("sv")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1)).sortBy(_._1).toSeq
-    require(cents.nonEmpty, "annPq: initPred selected no codebook seeds")
-    for (_ <- 1 until iters) {
-      val updated = slices
-        .withColumn("cid", element_at(typedlit(cents.map(_._1)),
-          graft.functions.VectorFunctions.argmin_l2_centroid(
-            col("sv"), cents.map(_._2)) + 1))
-        .select(col("cid"), posexplode(col("sv")).as(Seq("pos", "v")))
-        .groupBy("cid", "pos")
-        .agg(sum(col("v")).as("s"), count(lit(1)).as("c"))
-        .withColumn("mv", expr("(s - pmod(s, c)) DIV c"))
-        .groupBy("cid")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mv")))),
-          x => x.getField("mv")).as("cv"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      cents = cents.map { case (cid, old) => cid -> updated.getOrElse(cid, old) }
-    }
-    cents
+  case object Exact extends SignPlanes {
+    private[ops] def bucket(e: Column, qv: Column, offset: Int, planes: Int): Column =
+      VectorFunctions.hyperplane_sig_exact(qv, offset, planes)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.CryptoCodec
 import graft.functions.{TokenHash, protect}
-import graft.ops.{CacheScope, ConnectedComponents, Decontamination, Dedup, FromCorpus, Multimodal, Packing, Similarity, TextOps}
+import graft.ops.{CacheScope, ConnectedComponents, Decontamination, Dedup, FromCorpus, Multimodal, Packing, SignPlanes, Similarity, TextOps}
 import graft.operators.AsofJoin
 import graft.pipeline.{ColumnPolicy, PerValue, ProtectionPipeline}
 
@@ -1126,13 +1126,13 @@ $prRounds
     // it wrap-free), projections are BIGINT sums over the ×10⁴-quantized
     // vectors, multiprobe is integer XOR — the oracle rebuilds buckets,
     // probes, candidates and the cosine re-rank bit-for-bit. The float
-    // mix64 form (Similarity.annHyperplane) stays the s05-gated helper.
+    // mix64 planes (SignPlanes.Float) stay the s05-gated reference.
     ("s02_ann_hyperplane", (s: SparkSession, dir: String) => {
       // defaults tables=8/planes=6/probeHamming=1: the oracle's literal
       // probe-mask VALUES encodes exactly hammingMasks(6, 1) — pinned in
       // QueryRegistrySpec ("s02 oracle's hardcoded probe-mask VALUES")
-      Similarity.annHyperplaneExact(rd(s, dir, "embeddings"), "vec_id",
-          "embedding", col("vec_id") % 50 === 0, k = 5)
+      Similarity.annHyperplane(rd(s, dir, "embeddings"), "vec_id",
+          "embedding", col("vec_id") % 50 === 0, SignPlanes.Exact, k = 5)
         .orderBy("qid", "rnk")
     }, Some("""
       WITH e AS (SELECT vec_id,
@@ -1277,18 +1277,16 @@ $prRounds
               .cast("long").as("recall_ok"))
           .select(lit(method).as("method"), col("n_queries"),
             col("n_exact_pairs"), col("recall_ok"))
-      // the float forms are @deprecated (annHyperplaneExact/annIvfExact are
-      // the blessed production paths) but stay s05's recall-gated
-      // references — this is their one sanctioned call site
-      @scala.annotation.nowarn("cat=deprecation")
-      def floatHyperplane: DataFrame = Similarity.annHyperplane(
-        emb, "vec_id", "embedding", queryPred, k = 5)
+      def hyperplane(signs: SignPlanes): DataFrame = Similarity.annHyperplane(
+        emb, "vec_id", "embedding", queryPred, signs, k = 5)
+      // the float IVF is @deprecated (annIvfExact is the production path)
+      // but stays s05's recall-gated reference, as do the float planes —
+      // this is their one sanctioned call site
       @scala.annotation.nowarn("cat=deprecation")
       def floatIvf: DataFrame = Similarity.annIvf(
         emb, "vec_id", "embedding", queryPred, nlist = 16, nprobe = 7, k = 5)
-      recallOf("hyperplane", floatHyperplane)
-        .unionAll(recallOf("hyperplane_exact", Similarity.annHyperplaneExact(
-          emb, "vec_id", "embedding", queryPred, k = 5)))
+      recallOf("hyperplane", hyperplane(SignPlanes.Float))
+        .unionAll(recallOf("hyperplane_exact", hyperplane(SignPlanes.Exact)))
         .unionAll(recallOf("ivf", floatIvf))
         .unionAll(recallOf("ivf_exact", Similarity.annIvfExact(
           emb, "vec_id", "embedding", queryPred,

@@ -9,7 +9,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{RollingHash64, TokenHash}
 import graft.operators.AsofJoin
-import graft.ops.{CacheScope, Dedup, FromCorpus, Multimodal, Sampling, Similarity, TextOps}
+import graft.ops.{CacheScope, Dedup, FromCorpus, Multimodal, Sampling, SignPlanes, Similarity, TextOps}
 
 /** Unit tests for the training-pipeline operators on hand-built fixtures. */
 class OpsSpec extends SparkSpec {
@@ -150,22 +150,46 @@ class OpsSpec extends SparkSpec {
 
   test("CacheScope.withScope unpersists pipeline caches on exit") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    var inner: DataFrame = null
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    CacheScope.withScope { scope =>
-      inner = scope.cached(spark.range(10).toDF("x"))
-      inner.count()
-      assert(inner.storageLevel != StorageLevel.NONE)
-      Dedup.minhashLshPairs(docs, "doc_id", "text", scope = scope).count()
-      @scala.annotation.nowarn("cat=deprecation") // deprecated float form's scope handling still gated
-      def ivfFloat = Similarity.annIvf(
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet"),
-        "vec_id", "embedding", col("vec_id") % 50 === 0, scope = scope)
-      ivfFloat.count()
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val queries = col("vec_id") % 50 === 0
+    val seeds = col("vec_id") % 100 === 0
+    val coarse = col("vec_id") % 250 === 0
+    @scala.annotation.nowarn("cat=deprecation") // deprecated float form's scope handling still gated
+    def ivfFloat(scope: CacheScope) =
+      Similarity.annIvf(emb, "vec_id", "embedding", queries, scope = scope)
+    // every operator that takes a scope, each in a scope of its own: several
+    // cache the same plan, and one operator's cache must not stand in for
+    // another's
+    val operators: Seq[(String, CacheScope => DataFrame)] = Seq(
+      "minhashLshPairs" -> (s => Dedup.minhashLshPairs(docs, "doc_id", "text", scope = s)),
+      "annIvf" -> ivfFloat,
+      "cosineNearDupBucketed" -> (s => Similarity.cosineNearDupBucketed(
+        emb, "vec_id", "embedding", 0.45, scope = s)),
+      "semDedup" -> (s => Similarity.semDedup(
+        emb, "vec_id", "embedding", seeds, 0.4, scope = s)),
+      "semDedupTrained" -> (s => Similarity.semDedupTrained(
+        emb, "vec_id", "embedding", seeds, 0.4, scope = s)),
+      "kmeansAssign" -> (s => Similarity.kmeansAssign(
+        emb, "vec_id", "embedding", seeds, scope = s)),
+      "annPq" -> (s => Similarity.annPq(
+        emb, "vec_id", "embedding", queries, seeds, scope = s)),
+      "annIvfPq" -> (s => Similarity.annIvfPq(emb, "vec_id", "embedding", queries,
+        coarsePred = coarse, initPred = seeds, scope = s)),
+      "annIvfExact" -> (s => Similarity.annIvfExact(emb, "vec_id", "embedding", queries,
+        coarsePred = coarse, scope = s)))
+    for ((name, op) <- operators) {
+      var inner: DataFrame = null
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      CacheScope.withScope { scope =>
+        inner = scope.cached(spark.range(10).toDF("x"))
+        inner.count()
+        assert(inner.storageLevel != StorageLevel.NONE)
+        op(scope).count()
+      }
+      assert(inner.storageLevel == StorageLevel.NONE, name)
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"$name: cached RDDs leaked past scope: $leaked")
     }
-    assert(inner.storageLevel == StorageLevel.NONE)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty, s"cached RDDs leaked past scope: $leaked")
   }
 
   /** Reference SimHash via bit votes, the composable formulation that pins
@@ -301,16 +325,16 @@ class OpsSpec extends SparkSpec {
     // is information-theoretically short; see Similarity.annIvf scaladoc.
     @scala.annotation.nowarn("cat=deprecation") // s05-style recall gate is the float forms' sanctioned use
     def floatForms = (
-      Similarity.annHyperplane(emb, "vec_id", "embedding", pred, k = 5),
+      Similarity.annHyperplane(emb, "vec_id", "embedding", pred, SignPlanes.Float, k = 5),
       Similarity.annIvf(emb, "vec_id", "embedding", pred, k = 5))
     val hyp = recall(floatForms._1)
     val ivf = recall(floatForms._2)
     assert(hyp >= 0.8, s"hyperplane LSH recall@5 = $hyp < 0.8")
     assert(ivf >= 0.8, s"IVF recall@5 = $ivf < 0.8")
-    // exact-integer twin (fmix32-parity planes, oracle-replayable): same
+    // exact-integer planes (fmix32 parity, oracle-replayable): same
     // 8×6 multiprobe operating point must hold the same recall bar
-    val hypEx = recall(Similarity.annHyperplaneExact(
-      emb, "vec_id", "embedding", pred, k = 5))
+    val hypEx = recall(Similarity.annHyperplane(
+      emb, "vec_id", "embedding", pred, SignPlanes.Exact, k = 5))
     assert(hypEx >= 0.8, s"exact hyperplane LSH recall@5 = $hypEx < 0.8")
   }
 
@@ -935,6 +959,17 @@ class OpsSpec extends SparkSpec {
       // ADC is an exact squared distance to a reconstruction: never negative
       assert(rows.forall(_._4 >= 0))
     }
+  }
+
+  test("an empty coarse-seed predicate fails naming the operator and its argument") {
+    val emb = Seq((0L, Array(1.0f, 0.0f)), (1L, Array(0.0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException] {
+      Similarity.annIvfExact(emb, "vec_id", "embedding", col("vec_id") === 0,
+        coarsePred = lit(false))
+    }
+    assert(e.getMessage.contains("annIvfExact") && e.getMessage.contains("coarsePred"),
+      e.getMessage)
   }
 
   test("perplexity gate drops the bottom quarter by value, ties together") {
