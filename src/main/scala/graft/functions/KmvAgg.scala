@@ -115,7 +115,10 @@ case class KmvAgg(
 
 object KmvAgg {
   /** kmv_agg(hash, k) — bottom-k-distinct sketch of a LongType hash column,
-    * emitted as a sorted `array<long>` of ≤ k values.
+    * emitted as a sorted `array<long>` of ≤ k values. Over a stream (st10)
+    * its state is the one ≤ k-long buffer however long the stream runs,
+    * and the array equals the batch one under any micro-batching (the k
+    * smallest distinct hashes of a union do not depend on order).
     */
   def kmv_agg(c: Column, k: Int): Column =
     ColumnShim.column(KmvAgg(ColumnShim.expression(c), k).toAggregateExpression())

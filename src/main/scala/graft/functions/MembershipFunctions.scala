@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.nio.{ByteBuffer, ByteOrder}
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -9,67 +7,66 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types._
 
-/** Exact long-hash-set membership for benchmark decontamination.
+/** The plan-constant benchmark gram-hash set an [[AnyGramIn]] probe tests
+  * each gram's xxhash64 against, for benchmark decontamination.
   *
-  * Why not Spark's own bloom pair (`BloomFilterAggregate` /
-  * `BloomFilterMightContain`, the runtime-row-filter machinery)? Its
-  * double-hashing scheme has a MEASURED false-positive floor: sized for a
-  * 1e-9 target (43 bits/item) it still returns ~6.4e-6 (320 FPs in 5e7
-  * random probes), so on a ~4e4-probe demo corpus it over-dropped one clean
-  * document per run — and no bit budget fixes a floor. At 64 bits/gram a
-  * SORTED xxhash64 ARRAY is the same size as that bloom and exact:
-  * membership misfires only on a 64-bit hash collision (~1e-11 even at
-  * 10⁶ benchmark × 10¹⁰ corpus grams), so the membership formulation stays
-  * result-identical to the exact gram join — which is what the d10 oracle
-  * asserts. Probe cost is a log₂(n) binary search per gram, inside
-  * whole-stage codegen.
+  * [[GramProbe.ExactSet]] fits whenever the benchmark's set fits the
+  * broadcast budget: exact, and as small as any bloom Spark offers. Why not
+  * Spark's own bloom pair (`BloomFilterAggregate` / `BloomFilterMightContain`,
+  * the runtime-row-filter machinery)? Its double-hashing scheme has a
+  * MEASURED false-positive floor:
+  * sized for a 1e-9 target (43 bits/item) it still returns ~6.4e-6 (320 FPs
+  * in 5e7 random probes), so on a ~4e4-probe demo corpus it over-dropped one
+  * clean document per run — and no bit budget fixes a floor. At 64
+  * bits/gram a SORTED xxhash64 ARRAY is the same size as that bloom and
+  * exact: membership misfires only on a 64-bit hash collision (~1e-11 even
+  * at 10⁶ benchmark × 10¹⁰ corpus grams), so the membership formulation
+  * stays result-identical to the exact gram join — which is what the d10
+  * oracle asserts.
+  *
+  * [[GramProbe.Bloom]] fits when the exact set outgrows the broadcast budget
+  * (a union of many eval suites — 1e9 grams = 8 GB/task): at ~10 bits/key
+  * it is 6× smaller and has NO false negatives, so bloom-hit ∧ exact-verify
+  * ≡ exact — the caller verifies its hits, and only the ~fpp fraction of
+  * clean docs plus the true hits ever reach the verify join (d24).
   */
-object MembershipFunctions {
-
-  /** Serialize a distinct sorted long set to LITTLE_ENDIAN bytes. */
-  def encodeLongSet(hashes: Array[Long]): Array[Byte] = {
-    val sorted = hashes.clone()
-    java.util.Arrays.sort(sorted)
-    val bb = ByteBuffer.allocate(sorted.length * 8).order(ByteOrder.LITTLE_ENDIAN)
-    sorted.foreach(bb.putLong)
-    bb.array()
-  }
-
-  private[functions] def decodeLongSet(bytes: Array[Byte]): Array[Long] = {
-    require(bytes.length % 8 == 0, s"long-set bytes not a multiple of 8: ${bytes.length}")
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val out = new Array[Long](bytes.length / 8)
-    var i = 0
-    while (i < out.length) { out(i) = bb.getLong(); i += 1 }
-    out
-  }
-
-  /** Predicate column: BIGINT `h` is in the serialized sorted set. */
-  def long_set_contains(set: Array[Byte], h: Column): Column =
-    ColumnShim.column(LongSetContains(ColumnShim.expression(h), set))
-
-  // ------------------------------------------------------ bloom pre-screen --
-  // The exact sorted set above costs 64 bits/gram; a benchmark whose gram
-  // set outgrows the broadcast budget (union of many eval suites — 1e9
-  // grams = 8 GB/task) needs a bounded pre-screen instead. A bloom at
-  // ~10 bits/key is 6× smaller and has NO false negatives, so
-  // bloom-hit ∧ exact-verify ≡ exact: the filter stays result-identical
-  // (the d24 oracle asserts it) while only the ~fpp fraction of clean docs
-  // plus the true hits ever reach the verify join.
-
-  /** Serialize a bloom over 64-bit gram hashes: LE int32 k, int32 numWords,
-    * then numWords bit words. k is derived from `bitsPerKey` (k = b·ln2).
+sealed trait GramProbe extends Serializable {
+  /** True when membership misfires only on a 64-bit hash collision. An
+    * inexact probe has false positives but no false negatives, so a caller
+    * that must be exact verifies its hits.
     */
-  def encodeBloom(hashes: Array[Long], bitsPerKey: Int = 10): Array[Byte] = {
+  def exact: Boolean
+
+  /** The probe expression's SQL name, as plans print it. */
+  def sqlName: String
+
+  def contains(h: Long): Boolean
+}
+
+object GramProbe {
+  /** Sorted 64-bit gram hashes, probed by a log₂(n) binary search: 64 bits
+    * per gram.
+    */
+  final class ExactSet(hashes: Array[Long]) extends GramProbe {
+    private[this] val sorted = hashes.clone()
+    java.util.Arrays.sort(sorted)
+    def exact: Boolean = true
+    def sqlName: String = "any_gram_in_set"
+    def contains(h: Long): Boolean = java.util.Arrays.binarySearch(sorted, h) >= 0
+  }
+
+  /** A bloom over 64-bit gram hashes, ~`bitsPerKey` bits per gram in 64-bit
+    * `words`, with k = round(bitsPerKey·ln2) double-hashed bits per key.
+    */
+  final class Bloom(hashes: Array[Long], bitsPerKey: Int) extends GramProbe {
     require(bitsPerKey >= 2 && bitsPerKey <= 64,
       s"bitsPerKey out of range: $bitsPerKey")
-    val k = math.max(1, math.round(bitsPerKey * math.log(2)).toInt)
-    val numWords =
+    private[this] val k = math.max(1, math.round(bitsPerKey * math.log(2)).toInt)
+    private[graft] val words = new Array[Long](
       math.max(1, ((math.max(hashes.length, 1).toLong * bitsPerKey + 63) / 64)
-        .min(Int.MaxValue / 8).toInt)
-    val words = new Array[Long](numWords)
+        .min(Int.MaxValue / 8).toInt))
     hashes.foreach { h =>
-      val m = numWords.toLong * 64
+      val m = words.length.toLong * 64
       var h1 = h
       val h2 = mix64(h) | 1L
       var i = 0
@@ -80,25 +77,23 @@ object MembershipFunctions {
         i += 1
       }
     }
-    val bb = ByteBuffer.allocate(8 + numWords * 8).order(ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(k); bb.putInt(numWords)
-    words.foreach(bb.putLong)
-    bb.array()
-  }
 
-  /** Decode [[encodeBloom]] bytes to (k, bit words) — the probe-side pair
-    * [[bloomContains]] consumes. */
-  def decodeBloom(bytes: Array[Byte]): (Int, Array[Long]) = {
-    require(bytes.length >= 16 && bytes.length % 8 == 0,
-      s"bloom bytes malformed: ${bytes.length}")
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val k = bb.getInt(); val numWords = bb.getInt()
-    require(k >= 1 && numWords == (bytes.length - 8) / 8,
-      s"bloom header inconsistent: k=$k numWords=$numWords len=${bytes.length}")
-    val words = new Array[Long](numWords)
-    var i = 0
-    while (i < numWords) { words(i) = bb.getLong(); i += 1 }
-    (k, words)
+    def exact: Boolean = false
+    def sqlName: String = "any_gram_in_bloom"
+
+    def contains(h: Long): Boolean = {
+      val m = words.length.toLong * 64
+      var h1 = h
+      val h2 = mix64(h) | 1L
+      var i = 0
+      while (i < k) {
+        val bit = java.lang.Long.remainderUnsigned(h1, m)
+        if ((words((bit >>> 6).toInt) & (1L << (bit & 63))) == 0) return false
+        h1 += h2
+        i += 1
+      }
+      true
+    }
   }
 
   /** splitmix64 finalizer — decorrelates the double-hashing step from the
@@ -112,91 +107,33 @@ object MembershipFunctions {
     z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
     z ^ (z >>> 31)
   }
+}
 
-  def bloomContains(words: Array[Long], k: Int, h: Long): Boolean = {
-    val m = words.length.toLong * 64
-    var h1 = h
-    val h2 = mix64(h) | 1L
-    var i = 0
-    while (i < k) {
-      val bit = java.lang.Long.remainderUnsigned(h1, m)
-      if ((words((bit >>> 6).toInt) & (1L << (bit & 63))) == 0) return false
-      h1 += h2
-      i += 1
-    }
-    true
-  }
+object MembershipFunctions {
 
-  /** Predicate column: any word-`n`-gram of the token ARRAY hits the bloom.
-    * Same native-expression argument as [[any_gram_in_set]].
-    */
-  def any_gram_in_bloom(bloom: Array[Byte], toks: Column, n: Int): Column =
-    ColumnShim.column(GramBloomContains(ColumnShim.expression(toks), n, bloom))
-
-  /** Bloom twin of [[anyGramInSet]] — the gram-assembly loop is kept as a
-    * literal sibling (not factored through a closure) because both live in
-    * per-row codegen hot paths.
-    */
-  def anyGramInBloom(toks: org.apache.spark.sql.catalyst.util.ArrayData,
-      n: Int, words: Array[Long], k: Int): Boolean = {
-    val m = toks.numElements()
-    if (m < n || words.length == 0) return false
-    val tb = new Array[Array[Byte]](m)
-    var i = 0
-    while (i < m) {
-      tb(i) = if (toks.isNullAt(i)) null else toks.getUTF8String(i).getBytes
-      i += 1
-    }
-    var buf = new Array[Byte](256)
-    var start = 0
-    while (start <= m - n) {
-      var len = 0
-      var first = true
-      var j = 0
-      while (j < n) {
-        val t = tb(start + j)
-        if (t != null) {
-          val need = len + t.length + 1
-          if (need > buf.length)
-            buf = java.util.Arrays.copyOf(buf, math.max(need, buf.length * 2))
-          if (!first) { buf(len) = ' '.toByte; len += 1 }
-          System.arraycopy(t, 0, buf, len, t.length)
-          len += t.length
-          first = false
-        }
-        j += 1
-      }
-      val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-        buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len, 42L)
-      if (bloomContains(words, k, h)) return true
-      start += 1
-    }
-    false
-  }
-
-  /** Predicate column: any word-`n`-gram of the token ARRAY is in the set.
-    * The whole probe — gram assembly, xxhash64, binary search — is one
+  /** Predicate column: any word-`n`-gram of the token ARRAY is in `probe`.
+    * The whole probe — gram assembly, xxhash64, membership test — is one
     * native expression over the token array, evaluated in a tight early-exit
     * loop. The composed-Column formulation
-    * (`exists(shingles(toks), g => long_set_contains(set, xxhash64(g)))`)
+    * (`exists(shingles(toks), g => <probe contains xxhash64(g)>)`)
     * is semantically identical but catastrophically slower: higher-order
     * functions are CodegenFallback (interpreted), and predicate pushdown
     * inlines the tokenizing `split` into the shingle lambda, re-running the
     * regex once per element access — measured 16 s vs sub-second at sf0.1.
     */
-  def any_gram_in_set(set: Array[Byte], toks: Column, n: Int): Column =
-    ColumnShim.column(GramSetContains(ColumnShim.expression(toks), n, set))
+  def any_gram_in(probe: GramProbe, toks: Column, n: Int): Column =
+    ColumnShim.column(AnyGramIn(ColumnShim.expression(toks), n, probe))
 
   /** True iff any `n`-token window of `toks`, joined by single spaces
     * (`concat_ws` semantics: null elements skipped), xxhash64-hashes (seed
-    * 42 — the `xxhash64` SQL function's seed) into the sorted `set`. Bit-
-    * compatible with the composed-Column formulation by construction; the
-    * OpsSpec equivalence test and the d10 oracle both assert it.
+    * 42 — the `xxhash64` SQL function's seed) into `probe`. Bit-compatible
+    * with the composed-Column formulation by construction; the OpsSpec
+    * equivalence test and the d10 oracle both assert it.
     */
-  def anyGramInSet(toks: org.apache.spark.sql.catalyst.util.ArrayData,
-      n: Int, set: Array[Long]): Boolean = {
+  def anyGramIn(toks: org.apache.spark.sql.catalyst.util.ArrayData,
+      n: Int, probe: GramProbe): Boolean = {
     val m = toks.numElements()
-    if (m < n || set.length == 0) return false
+    if (m < n) return false
     val tb = new Array[Array[Byte]](m)
     var i = 0
     while (i < m) {
@@ -224,116 +161,43 @@ object MembershipFunctions {
       }
       val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
         buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len, 42L)
-      if (java.util.Arrays.binarySearch(set, h) >= 0) return true
+      if (probe.contains(h)) return true
       start += 1
     }
     false
   }
 }
 
-/** any_gram_in_set(tokens) against a plan-constant sorted long set: true iff
-  * any word-`n`-gram of the token array is a member. The hot loop lives in
-  * [[MembershipFunctions.anyGramInSet]] (JIT-compiled Scala), entered once
-  * per row from whole-stage codegen — one call per ROW, not per gram.
+/** `probe.sqlName`(tokens) — `any_gram_in_set` or `any_gram_in_bloom` in
+  * plans: true iff any word-`n`-gram of the token array is a member of the
+  * plan-constant [[GramProbe]]. The hot loop lives in
+  * [[MembershipFunctions.anyGramIn]] (JIT-compiled Scala), entered once per
+  * row from whole-stage codegen — one call per ROW, not per gram.
   */
-case class GramSetContains(child: Expression, n: Int, setBytes: Array[Byte])
+case class AnyGramIn(child: Expression, n: Int, probe: GramProbe)
     extends UnaryExpression {
   require(n >= 1, s"gram length must be >= 1, got $n")
   override def dataType: DataType = BooleanType
   override def nullIntolerant: Boolean = true
-  override def prettyName: String = "any_gram_in_set"
+  override def prettyName: String = probe.sqlName
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"any_gram_in_set expects ARRAY<STRING>, got ${other.catalogString}")
+      s"$prettyName expects ARRAY<STRING>, got ${other.catalogString}")
   }
 
-  @transient private lazy val set: Array[Long] =
-    MembershipFunctions.decodeLongSet(setBytes)
-
   override def nullSafeEval(toks: Any): Any =
-    MembershipFunctions.anyGramInSet(
-      toks.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], n, set)
+    MembershipFunctions.anyGramIn(
+      toks.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], n, probe)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val fns = MembershipFunctions.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val arr = ctx.addReferenceObj("gramSet", set, "long[]")
+    val p = ctx.addReferenceObj("gramProbe", probe, classOf[GramProbe].getName)
     nullSafeCodeGen(ctx, ev, toks =>
-      s"${ev.value} = $fns.anyGramInSet($toks, $n, $arr);")
+      s"${ev.value} = $fns.anyGramIn($toks, $n, $p);")
   }
 
-  override protected def withNewChildInternal(newChild: Expression): GramSetContains =
-    copy(child = newChild)
-}
-
-/** any_gram_in_bloom(tokens) against a plan-constant bloom filter: true iff
-  * any word-`n`-gram of the token array hits the bloom. No false negatives
-  * by construction — callers compose this as a PRE-screen before an exact
-  * verify ([[graft.ops.Decontamination.decontaminateBloomVerified]]), so
-  * bloom false positives cost a re-check, never a wrong result.
-  */
-case class GramBloomContains(child: Expression, n: Int, bloomBytes: Array[Byte])
-    extends UnaryExpression {
-  require(n >= 1, s"gram length must be >= 1, got $n")
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "any_gram_in_bloom"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"any_gram_in_bloom expects ARRAY<STRING>, got ${other.catalogString}")
-  }
-
-  @transient private lazy val decoded: (Int, Array[Long]) =
-    MembershipFunctions.decodeBloom(bloomBytes)
-
-  override def nullSafeEval(toks: Any): Any =
-    MembershipFunctions.anyGramInBloom(
-      toks.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      n, decoded._2, decoded._1)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fns = MembershipFunctions.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val words = ctx.addReferenceObj("bloomWords", decoded._2, "long[]")
-    val k = decoded._1
-    nullSafeCodeGen(ctx, ev, toks =>
-      s"${ev.value} = $fns.anyGramInBloom($toks, $n, $words, $k);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): GramBloomContains =
-    copy(child = newChild)
-}
-
-/** long_set_contains(h) against a plan-constant sorted long set. */
-case class LongSetContains(child: Expression, setBytes: Array[Byte])
-    extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "long_set_contains"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"long_set_contains expects BIGINT, got ${other.catalogString}")
-  }
-
-  /** Decoded once per expression instance (per task in codegen, via the
-    * reference object) — probes only pay the binary search.
-    */
-  @transient private lazy val set: Array[Long] =
-    MembershipFunctions.decodeLongSet(setBytes)
-
-  override def nullSafeEval(h: Any): Any =
-    java.util.Arrays.binarySearch(set, h.asInstanceOf[Long]) >= 0
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val arr = ctx.addReferenceObj("longSet", set, "long[]")
-    nullSafeCodeGen(ctx, ev, h =>
-      s"${ev.value} = java.util.Arrays.binarySearch($arr, $h) >= 0;")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LongSetContains =
+  override protected def withNewChildInternal(newChild: Expression): AnyGramIn =
     copy(child = newChild)
 }

@@ -3,6 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.GraftUnsupportedException
+import graft.functions.{GramProbe, MembershipFunctions}
+
 /** Benchmark decontamination — the training-data pipeline stage that removes
   * corpus documents overlapping an evaluation set, by long word-n-gram
   * collision (the standard n-gram screen described in public LLM training
@@ -14,6 +17,11 @@ import org.apache.spark.sql.functions._
   * its distinct n-gram set is broadcast — the corpus side streams through a
   * broadcast-hash semi-join keyed on the n-gram with NO shuffle of corpus
   * data at all; output is per-doc hit counts, aggregated map-side.
+  *
+  * Two formulations: the gram join ([[decontaminate]], d09) and the
+  * membership probe ([[decontaminateByProbe]]: d10, d18 and st03 with the
+  * exact set, d24 with a bloom pre-screen), which is a pure filter on the
+  * corpus side.
   */
 object Decontamination {
 
@@ -47,126 +55,121 @@ object Decontamination {
       .agg(count(lit(1)).as("n_hits")) // grams are distinct per doc already
   }
 
-  /** The removal filter a pipeline composes: `df` minus contaminated docs. */
+  /** The removal filter a pipeline composes: `df` minus contaminated docs.
+    * Hits are removed by a left-anti join on `idCol`, so `idCol` must be a
+    * unique, non-NULL document id: a contaminated document with a NULL id
+    * fails the query with an error naming `idCol` (a clean one is kept).
+    */
   def decontaminate(df: DataFrame, idCol: String, textCol: String,
       benchmarkPred: Column, n: Int = 8): DataFrame =
     df.filter(!coalesce(benchmarkPred, lit(false)))
       .join(contaminationHits(df, idCol, textCol, benchmarkPred, n)
-        .select(col(idCol)), Seq(idCol), "left_anti")
+        .select(nonNullId(idCol)), Seq(idCol), "left_anti")
 
-  // ----------------------------------------------- membership-set variant --
-
-  /** The benchmark split's distinct gram xxhash64 set, serialized sorted —
-    * the plan-constant behind [[decontaminateBySet]]. The eval side is
-    * SMALL by definition (same argument as the broadcast in
-    * [[contaminationHits]]), so collecting its distinct hashes is bounded;
-    * `maxGrams` makes an oversized benchmark loud instead of a silent
-    * driver OOM. 64 bits/gram — the same footprint as a 1e-9-target bloom,
-    * but EXACT: Spark's sketch bloom has a measured ~6e-6 false-positive
-    * floor that over-dropped one clean demo doc per run (see
-    * [[graft.functions.MembershipFunctions]]), while a 64-bit hash set
-    * misfires only on a hash collision (~1e-11 at 10⁶×10¹⁰ gram pairs).
+  /** `idCol` of a contaminated row, or a query error naming it when NULL:
+    * an anti join on NULL matches nothing and would keep the document. The
+    * check is nondeterministic (`spark_partition_id`) so that filters the
+    * optimizer infers from the anti join stay above it: pushed below the
+    * hit join, they would run the check, error included, on clean rows.
     */
-  def benchmarkGramSet(df: DataFrame, idCol: String, textCol: String,
-      benchmarkPred: Column, n: Int = 8, maxGrams: Long = 1L << 24): Array[Byte] =
-    graft.functions.MembershipFunctions.encodeLongSet(
-      collectGramHashes(df, idCol, textCol, benchmarkPred, n, maxGrams,
-        "8 bytes per gram"))
+  private def nonNullId(idCol: String): Column =
+    when(col(idCol).isNull && spark_partition_id() >= 0, raise_error(lit(
+      s"decontamination: a contaminated document has a NULL $idCol; hits " +
+        s"are removed by $idCol, which must be a unique, non-NULL id")))
+      .otherwise(col(idCol)).as(idCol)
 
-  /** The benchmark split's distinct gram xxhash64es, collected bounded.
-    * ONE job: collect limited at maxGrams+1 so an oversized benchmark is
-    * loud (the require below) without a separate count() pass re-shingling
+  /** Which [[GramProbe]] [[benchmarkProbe]] builds. */
+  sealed trait ProbeKind
+
+  object ProbeKind {
+    /** [[GramProbe.ExactSet]]: 64 bits per gram, up to 2^24 grams. */
+    case object Exact extends ProbeKind
+
+    /** [[GramProbe.Bloom]] at ~`bitsPerKey` bits per gram, up to 2^27 grams
+      * — a higher cap than the exact set's precisely because smaller-per-key
+      * is the point.
+      */
+    final case class Bloom(bitsPerKey: Int) extends ProbeKind
+  }
+
+  /** The benchmark split's distinct gram xxhash64es as a `kind` probe — the
+    * plan-constant behind [[decontaminateByProbe]]. The eval side is SMALL
+    * by definition (same argument as the broadcast in
+    * [[contaminationHits]]), so collecting its distinct hashes is bounded;
+    * `maxGrams` (default: the kind's cap) makes an oversized benchmark loud
+    * instead of a silent driver OOM. ONE job: collect limited at
+    * maxGrams+1, so the bound needs no separate count() pass re-shingling
     * the whole eval split.
     */
-  private def collectGramHashes(df: DataFrame, idCol: String, textCol: String,
-      benchmarkPred: Column, n: Int, maxGrams: Long, costNote: String): Array[Long] = {
+  def benchmarkProbe(df: DataFrame, idCol: String, textCol: String,
+      benchmarkPred: Column, n: Int, kind: ProbeKind,
+      maxGrams: Option[Long] = None): GramProbe = {
+    val (kindCap, costNote) = kind match {
+      case ProbeKind.Exact => (1L << 24, "8 bytes per gram")
+      case ProbeKind.Bloom(bitsPerKey) => (1L << 27, s"$bitsPerKey bits per gram")
+    }
+    val cap = maxGrams.getOrElse(kindCap)
     val pred = coalesce(benchmarkPred, lit(false))
-    val hashes = grams(df.filter(pred), idCol, textCol, n)
+    val collected = grams(df.filter(pred), idCol, textCol, n)
       .select(xxhash64(col("shingle")).as("h")).distinct()
-    val collected = hashes.limit(
-      math.min(maxGrams + 1, Int.MaxValue.toLong).toInt).collect()
-    require(collected.length <= maxGrams,
-      s"benchmark gram set exceeds $maxGrams distinct grams: " +
+      .limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
+    require(collected.length <= cap,
+      s"benchmark gram set exceeds $cap distinct grams: " +
         "this side must stay eval-suite-sized; raise maxGrams only with " +
         s"driver/task memory to hold $costNote")
-    collected.map(_.getLong(0))
+    val hashes = collected.map(_.getLong(0))
+    kind match {
+      case ProbeKind.Exact => new GramProbe.ExactSet(hashes)
+      case ProbeKind.Bloom(bitsPerKey) => new GramProbe.Bloom(hashes, bitsPerKey)
+    }
   }
 
-  /** Contamination filter as a stateless membership probe: keep corpus docs
-    * none of whose n-gram hashes are in the benchmark set. No join, no
-    * shuffle, no state — the corpus side is a pure filter, which is what
-    * makes the same predicate usable on an unbounded STREAM
-    * ([[graft.streaming.StreamOps.decontaminateStream]]).
+  /** `df` minus the benchmark split (`benchmarkPred`) and minus every
+    * corpus doc sharing an n-gram with it, by membership probe.
     *
     * The probe is ONE native expression over the token array
-    * ([[graft.functions.GramSetContains]]): gram assembly (concat_ws-" "
-    * semantics), xxhash64 (seed 42) and sorted-set binary search in a tight
-    * early-exit loop. The composed-Column spelling
-    * (`exists(shingles(toks), g => long_set_contains(set, xxhash64(g)))`)
-    * computes the same thing but HOFs are CodegenFallback AND predicate
-    * pushdown inlines the tokenizer `split` into the shingle lambda — one
-    * regex re-run per element access, measured 16 s vs sub-second at sf0.1.
-    * Gram construction matches [[Dedup.shingleSet]] bit-for-bit, so results
-    * equal [[decontaminate]] — the d10 oracle and the OpsSpec equivalence
-    * test assert exactly that.
+    * ([[graft.functions.AnyGramIn]]): gram assembly (concat_ws-" "
+    * semantics), xxhash64 (seed 42) and the membership test in a tight
+    * early-exit loop. Gram construction matches [[Dedup.shingleSet]]
+    * bit-for-bit, so results equal [[decontaminate]] — the d10 and d24
+    * oracles and the OpsSpec equivalence tests assert exactly that.
+    *
+    * An exact probe is the whole filter: no join, no shuffle, no state, so
+    * the same predicate runs on an unbounded STREAM (st03) and drops
+    * contaminated docs in flight. It reads no id.
+    *
+    * An inexact probe (bloom) is a pre-screen: corpus docs whose grams all
+    * miss it are provably clean (no false negatives) and never touch a
+    * join; the suspicious remainder — true hits plus the ~fpp sliver of
+    * bloom false positives — is verified EXACTLY against the broadcast
+    * benchmark gram table, so the expensive exact machinery re-shingles
+    * only `fpp·corpus + contaminated` docs. Confirmed hits are removed by a
+    * left-anti join on `idCol`, which must then be a unique, non-NULL id (a
+    * contaminated document with a NULL id fails the query, as in
+    * [[decontaminate]]), and the input must be a batch: over a stream the
+    * verify would be a stream-stream anti join.
     */
-  def decontaminateBySet(df: DataFrame, gramSet: Array[Byte], textCol: String,
-      benchmarkPred: Column, n: Int = 8): DataFrame = {
-    import graft.functions.MembershipFunctions
-    // the probe is per-row heavy (re-shingle + binary search per gram) and
+  def decontaminateByProbe(df: DataFrame, probe: GramProbe, idCol: String,
+      textCol: String, benchmarkPred: Column, n: Int = 8): DataFrame = {
+    if (df.isStreaming && !probe.exact)
+      throw new GraftUnsupportedException(s"decontaminateByProbe: a " +
+        s"${probe.sqlName} probe is inexact, and verifying its hits over a " +
+        "streaming input would be a stream-stream anti join; stream with " +
+        "an exact probe (ProbeKind.Exact)")
+    val pred = coalesce(benchmarkPred, lit(false))
+    // the probe is per-row heavy (re-shingle + membership test per gram) and
     // fuses into the scan stage — spread a near-singleton split count first
     // (no-op on streams and many-file tables; see TextOps.spreadCompute)
-    TextOps.spreadCompute(df)
-      .filter(!coalesce(benchmarkPred, lit(false)))
-      .filter(!MembershipFunctions.any_gram_in_set(
-        gramSet, TextOps.tokens(col(textCol)), n))
-  }
-
-  // --------------------------------------------- bloom-pre-screened variant --
-
-  /** Bloom over the benchmark split's distinct gram hashes, ~`bitsPerKey`
-    * bits per gram. This is the bounded-memory path for when the exact
-    * 64-bit set of [[benchmarkGramSet]] outgrows the broadcast budget (a
-    * union of many eval suites): at 10 bits/key the filter is 6× smaller
-    * than the exact set and still has NO false negatives, so composing it
-    * with an exact verify join ([[decontaminateBloomVerified]]) keeps the
-    * result identical to [[decontaminate]]. `maxGrams` defaults higher than
-    * the exact set's precisely because smaller-per-key is the point.
-    */
-  def benchmarkGramBloom(df: DataFrame, idCol: String, textCol: String,
-      benchmarkPred: Column, n: Int = 8, bitsPerKey: Int = 10,
-      maxGrams: Long = 1L << 27): Array[Byte] =
-    graft.functions.MembershipFunctions.encodeBloom(
-      collectGramHashes(df, idCol, textCol, benchmarkPred, n, maxGrams,
-        s"$bitsPerKey bits per gram"), bitsPerKey)
-
-  /** Exact decontamination with a bloom pre-screen: corpus docs whose grams
-    * all MISS the bloom are provably clean (no false negatives) and never
-    * touch a join; the suspicious remainder — true hits plus the ~fpp
-    * sliver of bloom false positives — is verified EXACTLY against the
-    * benchmark gram table. Result-identical to [[decontaminate]] (the d24
-    * oracle and the OpsSpec equivalence test assert it).
-    *
-    * Scale shape: the probe is the same stateless codegen'd projection as
-    * [[decontaminateBySet]] (streams, no shuffle of the clean mass); the
-    * verify join re-shingles only `fpp·corpus + contaminated` docs, so the
-    * expensive exact machinery runs on a vanishingly small slice.
-    */
-  def decontaminateBloomVerified(df: DataFrame, bloom: Array[Byte],
-      idCol: String, textCol: String, benchmarkPred: Column,
-      n: Int = 8): DataFrame = {
-    import graft.functions.MembershipFunctions
-    val pred = coalesce(benchmarkPred, lit(false))
-    // spread the per-row bloom probe off a near-singleton split count
-    // (see decontaminateBySet)
     val corpus = TextOps.spreadCompute(df).filter(!pred)
-    val suspicious = corpus.filter(MembershipFunctions.any_gram_in_bloom(
-      bloom, TextOps.tokens(col(textCol)), n))
-    val benchGrams = grams(df.filter(pred), idCol, textCol, n)
-      .select(col("shingle")).distinct()
-    val confirmed = grams(suspicious, idCol, textCol, n)
-      .join(broadcast(benchGrams), "shingle")
-      .select(col(idCol)).distinct()
-    corpus.join(confirmed, Seq(idCol), "left_anti")
+    val hit = MembershipFunctions.any_gram_in(probe, TextOps.tokens(col(textCol)), n)
+    if (probe.exact) corpus.filter(!hit)
+    else {
+      val benchGrams = grams(df.filter(pred), idCol, textCol, n)
+        .select(col("shingle")).distinct()
+      val confirmed = grams(corpus.filter(hit), idCol, textCol, n)
+        .join(broadcast(benchGrams), "shingle")
+        .select(nonNullId(idCol)).distinct()
+      corpus.join(confirmed, Seq(idCol), "left_anti")
+    }
   }
 }

@@ -105,7 +105,10 @@ object Sketches {
     * digest = md5(key); register = first 3 hex chars mod 1024 (uniform —
     * 1024 divides 4096); rank = leading-zero count of the next 48 bits + 1
     * (= 49 − MSB position, 49 when all 48 bits are zero) — integer smear +
-    * bit_count, so DuckDB reproduces every cell exactly.
+    * bit_count, so DuckDB reproduces every cell exactly. Over a stream
+    * (st08) it is a complete-mode aggregation whose state is bounded a
+    * priori at m = 1024 rows per group, cell-identical under any
+    * micro-batching because MAX is commutative and associative.
     */
   def hllRegisters(df: DataFrame, keyCol: String,
       groupCols: Seq[String] = Nil): DataFrame = {
@@ -212,7 +215,11 @@ object Sketches {
   // read off the cumulative histogram is within binWidth of the true
   // value a priori. domain/binWidth cells regardless of corpus size.
 
-  /** Fixed-bin histogram cells of a non-negative integer column. */
+  /** Fixed-bin histogram cells of a non-negative integer column. Over a
+    * stream (st09) the cells are plain sums, so the table is deterministic
+    * under any micro-batching and state is bounded a priori at
+    * domain/binWidth rows per group.
+    */
   def histogram(df: DataFrame, valueCol: Column, binWidth: Long,
       groupCols: Seq[String] = Nil): DataFrame = {
     require(binWidth >= 1, s"binWidth must be >= 1, got $binWidth")

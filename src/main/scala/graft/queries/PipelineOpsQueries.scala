@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.CryptoCodec
 import graft.functions.{TokenHash, protect}
+import graft.ops.Decontamination.ProbeKind
 import graft.ops.{CacheScope, ConnectedComponents, Decontamination, Dedup, FromCorpus, Multimodal, Packing, SignPlanes, Similarity, TextOps}
 import graft.operators.AsofJoin
 import graft.pipeline.{ColumnPolicy, PerValue, ProtectionPipeline}
@@ -254,16 +255,16 @@ object PipelineOpsQueries {
     // gram xxhash64es ride the plan as a sorted long set, probed by a
     // codegen'd binary-search expression. Result-identical to the exact
     // join (the oracle asserts it); the corpus side is a stateless
-    // projection, which is why StreamOps.decontaminateStream can run the
-    // identical predicate over an unbounded stream. (Spark's own bloom
-    // pair was measured at a ~6e-6 FP floor — wrong tool for an
-    // exactness-gated contract; see MembershipFunctions.)
+    // projection, which is why st03 can run the identical predicate over an
+    // unbounded stream. (Spark's own bloom pair was measured at a ~6e-6 FP
+    // floor — wrong tool for an exactness-gated contract; see GramProbe.)
     ("d10_decontamination_hashset", (s: SparkSession, dir: String) => {
       val docs = rd(s, dir, "documents")
       val benchPred = col("doc_id") % 10 === 0
-      val gramSet = Decontamination.benchmarkGramSet(docs, "doc_id", "text",
-        benchPred, n = 8)
-      Decontamination.decontaminateBySet(docs, gramSet, "text", benchPred, n = 8)
+      val probe = Decontamination.benchmarkProbe(docs, "doc_id", "text",
+        benchPred, n = 8, ProbeKind.Exact)
+      Decontamination.decontaminateByProbe(docs, probe, "doc_id", "text",
+          benchPred, n = 8)
         .select(col("doc_id"), col("lang"))
         .orderBy("doc_id")
     }, Some("""
@@ -475,10 +476,10 @@ object PipelineOpsQueries {
       import graft.ops.Sampling
       val docs = rd(s, dir, "documents")
       val benchPred = col("doc_id") % 10 === 0
-      val gramSet = Decontamination.benchmarkGramSet(docs, "doc_id", "text",
-        benchPred, n = 8)
-      val clean = Decontamination.decontaminateBySet(docs, gramSet, "text",
-        benchPred, n = 8)
+      val probe = Decontamination.benchmarkProbe(docs, "doc_id", "text",
+        benchPred, n = 8, ProbeKind.Exact)
+      val clean = Decontamination.decontaminateByProbe(docs, probe, "doc_id",
+        "text", benchPred, n = 8)
       val quality = clean.filter(TextOps.qualityLogit(col("text")) >= 0L)
       val survivors = Dedup.exactSurvivors(quality, "doc_id",
         TextOps.fingerprint(col("text"))).select(col("doc_id"))
@@ -794,10 +795,10 @@ object PipelineOpsQueries {
     ("d24_decontamination_bloom", (s: SparkSession, dir: String) => {
       val docs = rd(s, dir, "documents")
       val benchPred = col("doc_id") % 10 === 0
-      val bloom = Decontamination.benchmarkGramBloom(docs, "doc_id", "text",
-        benchPred, n = 8)
-      Decontamination.decontaminateBloomVerified(docs, bloom, "doc_id",
-          "text", benchPred, n = 8)
+      val probe = Decontamination.benchmarkProbe(docs, "doc_id", "text",
+        benchPred, n = 8, ProbeKind.Bloom(bitsPerKey = 10))
+      Decontamination.decontaminateByProbe(docs, probe, "doc_id", "text",
+          benchPred, n = 8)
         .select(col("doc_id"), col("lang"))
         .orderBy("doc_id")
     }, Some("""
@@ -2584,8 +2585,8 @@ $prRounds
       import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
       val docs = rd(s, dir, "documents")
-      val gramSet = Decontamination.benchmarkGramSet(docs, "doc_id", "text",
-        col("doc_id") % 10 === 0, n = 8)
+      val probe = Decontamination.benchmarkProbe(docs, "doc_id", "text",
+        col("doc_id") % 10 === 0, n = 8, ProbeKind.Exact)
       val tmp = QueryUtil.scratchDir("graft_st03_")
       docs.filter(col("doc_id") % 10 =!= 0).write.parquet(s"$tmp/src")
       val stream = s.readStream
@@ -2596,7 +2597,8 @@ $prRounds
         .parquet(s"$tmp/src")
       // stateless projection: no state, no watermark — width floor suffices
       graft.streaming.StreamOps.runAtStateWidth(s)(
-        graft.streaming.StreamOps.decontaminateStream(stream, gramSet, "text", n = 8)
+        Decontamination.decontaminateByProbe(stream, probe, "doc_id", "text",
+          lit(false), n = 8)
         .writeStream.format("parquet")
         .option("path", s"$tmp/sink")
         .option("checkpointLocation", s"$tmp/chk")
@@ -2828,7 +2830,7 @@ $prRounds
       // HLL state is bounded a priori at m = 1024 register rows
       graft.streaming.StreamOps.runAtStateWidth(s,
         expectedStateRows = 1024L)(
-        graft.streaming.StreamOps.hllRegisterStream(
+        graft.ops.Sketches.hllRegisters(
           stream.withColumn("fp", TextOps.fingerprint(col("text"))), "fp")
         .writeStream.outputMode("complete")
         .format("memory").queryName("st08_hll_out")
@@ -2878,7 +2880,7 @@ $prRounds
       graft.streaming.StreamOps.runAtStateWidth(s,
         expectedStateRows =
           graft.streaming.StreamOps.parquetRowCount(s, s"$tmp/src"))(
-        graft.streaming.StreamOps.histogramStream(
+        graft.ops.Sketches.histogram(
           stream, col("pc"), 4096L, Seq("l_returnflag"))
         .writeStream.outputMode("complete")
         .format("memory").queryName("st09_hist_out")
@@ -2922,7 +2924,7 @@ $prRounds
         .select(graft.ops.Sketches.kmvHash(col("shingle")).as("h"))
       // KMV state is ONE ≤ k-long buffer row however long the stream runs
       graft.streaming.StreamOps.runAtStateWidth(s, expectedStateRows = 256L)(
-        graft.streaming.StreamOps.kmvSketchStream(hashed, "h", 256)
+        hashed.agg(graft.functions.KmvAgg.kmv_agg(col("h"), 256).as("sketch"))
           .writeStream.outputMode("complete")
           .format("memory").queryName("st10_kmv_out")
           .trigger(Trigger.AvailableNow())

@@ -353,19 +353,6 @@ object StreamOps {
     dedupDocumentStream(docs, textCol, tsCol, withinWatermark)
       .join(historyKeys, Seq("fp"), "left_anti")
 
-  /** Streaming benchmark decontamination: the exact membership form
-    * ([[graft.ops.Decontamination.decontaminateBySet]]) is a stateless
-    * projection — no join, no watermark, NO state — so contaminated docs
-    * drop in-flight at ingest speed. Build the gram-hash set once from the
-    * static benchmark corpus (a batch job), probe every arriving doc. This
-    * is the formulation that survives an unbounded ingest: the exact-join
-    * form would be a stream-static join re-shuffling every micro-batch.
-    */
-  def decontaminateStream(docs: DataFrame, benchmarkGramSet: Array[Byte],
-      textCol: String = "text", n: Int = 8): DataFrame =
-    graft.ops.Decontamination.decontaminateBySet(
-      docs, benchmarkGramSet, textCol, lit(false), n)
-
   /** Streaming count-min sketch: the groupBy-aggregation form of
     * [[graft.ops.Sketches.countMinSketch]] over an unbounded document
     * stream. The state IS the sketch — the rare stateful streaming
@@ -383,52 +370,4 @@ object StreamOps {
       docs.select(explode(graft.ops.TextOps.tokens(col(textCol))).as("tok"))
         .filter(length(col("tok")) > 0),
       "tok", depth, width)
-
-  /** Streaming HLL register table of `keyCol` — the distinct-count sibling
-    * of [[sketchDocumentStream]]. Cells are (register, max rank): MAX is
-    * commutative/associative, so like the CMS the full table is
-    * deterministic under ANY micro-batching, state is bounded a priori at
-    * m = 1024 rows however long the stream runs, and per-day streamed
-    * tables still fold into a global count via
-    * [[graft.ops.Sketches.hllMerge]]. Complete/update-mode aggregation;
-    * cell-identical to the batch register table over the same rows
-    * (the st08 oracle recomputes every cell in DuckDB).
-    */
-  def hllRegisterStream(rows: DataFrame, keyCol: String): DataFrame =
-    graft.ops.Sketches.hllRegisters(rows, keyCol)
-
-  /** Streaming fixed-bin histogram — the quantile sibling: cells are
-    * (group, bin, count), plain sums, so the table is deterministic under
-    * any micro-batching and state is bounded a priori at domain/binWidth
-    * rows per group. Quantiles read off the live table via
-    * [[graft.ops.Sketches.histogramQuantile]] stay within binWidth of
-    * exact, and shard/stream tables fold via
-    * [[graft.ops.Sketches.histogramMerge]].
-    */
-  def histogramStream(rows: DataFrame, valueCol: org.apache.spark.sql.Column,
-      binWidth: Long, groupCols: Seq[String] = Nil): DataFrame =
-    graft.ops.Sketches.histogram(rows, valueCol, binWidth, groupCols)
-
-  /** Streaming KMV (bottom-k distinct, theta) sketch — the set-operation
-    * sketch's stream mode: state is the single ≤ k-long
-    * [[graft.functions.KmvAgg]] buffer however long the stream runs, and
-    * because the sketch is order-free (k smallest distinct of a union),
-    * the streamed array is identical to the batch one under any
-    * micro-batching — DuckDB recomputes every retained hash (st10).
-    * Shard/stream sketches fold via [[graft.ops.Sketches.kmvMergeArr]];
-    * estimators read off the live array via kmvEstimate/thetaIntersection.
-    */
-  def kmvSketchStream(rows: DataFrame, hashCol: String, k: Int): DataFrame =
-    rows.agg(graft.functions.KmvAgg.kmv_agg(col(hashCol), k).as("sketch"))
-
-  /** Batch reference computation for the streaming agg (same expressions,
-    * same results — used by the equivalence spec).
-    */
-  def hourlyBatchReference(events: DataFrame): DataFrame =
-    events
-      .groupBy(date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss")
-        .as("hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(round(col("value") * 100).cast("long")).as("value_cents"),
-        sum(length(col("props")).cast("long")).as("payload_chars"))
 }

@@ -154,6 +154,16 @@ class ExplainSpec extends SparkSpec {
     assertNoQuadraticJoins("d22", plan)
   }
 
+  test("d10 hash-set decontamination: one stateless probe filter, no join") {
+    // the exact probe is the whole corpus-side operator: one codegen'd
+    // any_gram_in_set Filter over the scan, no join of any kind
+    val plan = executedPlan("d10_decontamination_hashset")
+    assert(plan.linesIterator.exists(l =>
+        l.contains("Filter") && l.contains("any_gram_in_set")),
+      s"d10 must filter the corpus with the native exact-set probe:\n$plan")
+    assert(!plan.contains("Join"), s"d10 must not join:\n$plan")
+  }
+
   test("d24 bloom decontamination: stateless probe filter, broadcast verify join") {
     // the d24 scale claim (VERDICT r8 #6): the clean corpus mass passes
     // through ONE stateless codegen'd bloom-probe Filter (streams, no

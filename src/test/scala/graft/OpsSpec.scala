@@ -741,11 +741,62 @@ class OpsSpec extends SparkSpec {
     assert(kept == Set(None, Some(3L)), s"null-pred row lost: $kept")
   }
 
-  test("membership primitives: scalar probe and gram probe edge cases") {
+  test("decontamination: a contaminated NULL-id document is dropped by the exact probe, an error on the id-joined forms") {
     import graft.functions.MembershipFunctions
-    val set = MembershipFunctions.encodeLongSet(Array(42L, -7L, 999L))
+    import graft.ops.{Decontamination, TextOps}
+    import graft.ops.Decontamination.ProbeKind
+    // parquet inputs: an in-memory frame folds its filters into the data,
+    // hiding any filter the optimizer would infer from the anti join
+    val dir = java.nio.file.Files.createTempDirectory("graft_null_id").toString
+    def docs(name: String, nullText: String) = {
+      Seq[(java.lang.Long, String)](
+        (100L, (0 until 42).map(i => s"b$i").mkString(" ")), // the benchmark
+        (null, nullText),
+        (3L, "completely different tokens here now"))
+        .toDF("id", "text").write.parquet(s"$dir/$name")
+      spark.read.parquet(s"$dir/$name")
+    }
+    val dirty = docs("dirty", "a b1 b2 b3 sleeps") // shares "b1 b2 b3"
+    val clean = docs("clean", (0 until 25).map(i => s"c$i").mkString(" "))
+    val pred = col("id") >= 100L
+    // 2 bits/key: the clean NULL-id document is a bloom false positive, so
+    // it reaches the verify join
+    val bloom = ProbeKind.Bloom(bitsPerKey = 2)
+    def probe(df: org.apache.spark.sql.DataFrame, kind: ProbeKind) =
+      Decontamination.benchmarkProbe(df, "id", "text", pred, n = 3, kind)
+    def byProbe(df: org.apache.spark.sql.DataFrame, kind: ProbeKind) =
+      Decontamination.decontaminateByProbe(df, probe(df, kind), "id", "text",
+        pred, n = 3)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").collect().map(r => Option(r.get(0))).toSet
+    assert(clean.filter(col("id").isNull && MembershipFunctions.any_gram_in(
+      probe(clean, bloom), TextOps.tokens(col("text")), 3)).count() == 1)
+    // a clean NULL-id document is kept by every form
+    Seq(byProbe(clean, ProbeKind.Exact), byProbe(clean, bloom),
+      Decontamination.decontaminate(clean, "id", "text", pred, n = 3))
+      .foreach(df => assert(ids(df) == Set(None, Some(3L))))
+    // the probe filter needs no id: a contaminated one is dropped
+    assert(ids(byProbe(dirty, ProbeKind.Exact)) == Set(Some(3L)))
+    // the id-joined forms cannot remove it by id: they fail, naming the id
+    def causes(t: Throwable): Iterator[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+    Seq(
+      "bloom verify" -> (() => byProbe(dirty, bloom)),
+      "gram join" -> (() => Decontamination.decontaminate(dirty, "id", "text",
+        pred, n = 3))).foreach { case (form, run) =>
+      val e = intercept[Exception](ids(run()))
+      assert(causes(e).exists(c => Option(c.getMessage)
+        .exists(_.contains("a contaminated document has a NULL id"))),
+        s"$form: unexpected error $e")
+    }
+  }
+
+  test("membership primitives: scalar probe and gram probe edge cases") {
+    import graft.functions.{GramProbe, MembershipFunctions}
+    import graft.functions.LongSetContains.long_set_contains
+    val set = new GramProbe.ExactSet(Array(42L, -7L, 999L))
     val scalar = Seq(42L, 5L, -7L).toDF("h")
-      .withColumn("hit", MembershipFunctions.long_set_contains(set, col("h")))
+      .withColumn("hit", long_set_contains(set, col("h")))
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(scalar == Map(42L -> true, 5L -> false, -7L -> true))
 
@@ -754,14 +805,14 @@ class OpsSpec extends SparkSpec {
     // skipped exactly like concat_ws ("a",null,"c" grams as "a c")
     val planted = Seq("b c d", "a c").toDF("g")
       .select(xxhash64(col("g"))).collect().map(_.getLong(0))
-    val gset = MembershipFunctions.encodeLongSet(planted)
+    val gset = new GramProbe.ExactSet(planted)
     val docs = Seq(
       (1L, Seq("a", "b")),                    // shorter than n → false
       (2L, Seq("x", "b", "c", "d")),          // window "b c d" → true
       (3L, Seq("a", null, "c")),              // concat_ws null skip → "a c" → true
       (4L, Seq("c", "b", "a"))).toDF("id", "toks") // no planted gram → false
     val got = docs
-      .withColumn("hit", MembershipFunctions.any_gram_in_set(gset, col("toks"), 3))
+      .withColumn("hit", MembershipFunctions.any_gram_in(gset, col("toks"), 3))
       .select("id", "hit")
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(got == Map(1L -> false, 2L -> true, 3L -> true, 4L -> false), s"got $got")
@@ -784,7 +835,8 @@ class OpsSpec extends SparkSpec {
   }
 
   test("gram probe fuzz: native expression equals the composed HOF spelling") {
-    import graft.functions.MembershipFunctions
+    import graft.functions.{GramProbe, MembershipFunctions}
+    import graft.functions.LongSetContains.long_set_contains
     import graft.ops.{Dedup, TextOps}
     val rnd = new scala.util.Random(20260812L)
     val vocab = Vector("aa", "b", "ccc", "dd", "e", "ff", "ggg", "hh")
@@ -796,55 +848,63 @@ class OpsSpec extends SparkSpec {
     // plant roughly half the real gram space plus never-hit decoys
     val grams = Dedup.shingleSet(df, "id", "text", 3)
       .select(xxhash64(col("shingle"))).distinct().collect().map(_.getLong(0))
-    val set = MembershipFunctions.encodeLongSet(
-      grams.filter(_ => rnd.nextBoolean()) ++ Array(123L, -456L))
+    val planted = grams.filter(_ => rnd.nextBoolean()) ++ Array(123L, -456L)
+    val set = new GramProbe.ExactSet(planted)
     def hits(c: org.apache.spark.sql.DataFrame) =
       c.select("id", "hit").collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val native = hits(df.withColumn("hit",
-      MembershipFunctions.any_gram_in_set(set, TextOps.tokens(col("text")), 3)))
+    def probed(p: GramProbe) = hits(df.withColumn("hit",
+      MembershipFunctions.any_gram_in(p, TextOps.tokens(col("text")), 3)))
+    val native = probed(set)
     val composed = hits(df
       .withColumn("_toks", TextOps.tokens(col("text")))
       .withColumn("hit", exists(TextOps.shingles(col("_toks"), 3),
-        g => MembershipFunctions.long_set_contains(set, xxhash64(g)))))
+        g => long_set_contains(set, xxhash64(g)))))
     assert(native == composed)
     assert(native.values.count(identity) > 10, "fuzz corpus produced too few hits")
+    // a bloom over the same planted hashes, through the same expression, has
+    // no false negatives: its hits are a superset of the exact probe's
+    val bloom = probed(new GramProbe.Bloom(planted, bitsPerKey = 4))
+    val missed = native.filter(_._2).keySet -- bloom.filter(_._2).keySet
+    assert(missed.isEmpty, s"bloom probe missed exact hits $missed")
   }
 
   test("hash-set decontamination equals the exact join formulation") {
     import graft.ops.Decontamination
+    import graft.ops.Decontamination.ProbeKind
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val pred = col("doc_id") % 10 === 0
     val exact = Decontamination.decontaminate(docs, "doc_id", "text", pred, n = 8)
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val gramSet = Decontamination.benchmarkGramSet(docs, "doc_id", "text", pred, n = 8)
-    val got = Decontamination.decontaminateBySet(docs, gramSet, "text", pred, n = 8)
+    val probe = Decontamination.benchmarkProbe(docs, "doc_id", "text", pred,
+      n = 8, ProbeKind.Exact)
+    val got = Decontamination.decontaminateByProbe(docs, probe, "doc_id", "text",
+        pred, n = 8)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(exact.nonEmpty)
     assert(got == exact,
       s"set probe over-dropped ${exact -- got}, under-dropped ${got -- exact}")
     // the gram-set build enforces its eval-suite-size bound loudly
     val e = intercept[IllegalArgumentException] {
-      Decontamination.benchmarkGramSet(docs, "doc_id", "text", pred, n = 8,
-        maxGrams = 10)
+      Decontamination.benchmarkProbe(docs, "doc_id", "text", pred, n = 8,
+        ProbeKind.Exact, maxGrams = Some(10))
     }
     assert(e.getMessage.contains("benchmark gram set"))
   }
 
   test("bloom has no false negatives and a sane false-positive rate") {
-    import graft.functions.MembershipFunctions
+    import graft.functions.GramProbe
     val rnd = new scala.util.Random(7)
     val inserted = Array.fill(20000)(rnd.nextLong())
-    val bloom = MembershipFunctions.encodeBloom(inserted, bitsPerKey = 10)
-    assert(bloom.length <= 8 + (20000L * 10 / 8 + 8).toInt,
-      s"bloom bigger than its bits/key budget: ${bloom.length}")
-    val (k, words) = MembershipFunctions.decodeBloom(bloom)
+    val bloom = new GramProbe.Bloom(inserted, bitsPerKey = 10)
+    val bytes = 8L * bloom.words.length
+    assert(bytes <= 20000L * 10 / 8 + 8,
+      s"bloom bigger than its bits/key budget: $bytes")
+    assert(!bloom.exact)
     inserted.foreach(h =>
-      assert(MembershipFunctions.bloomContains(words, k, h),
+      assert(bloom.contains(h),
         s"false negative for $h — breaks the exactness contract"))
     val probes = 200000
-    val fps = (0 until probes).count { _ =>
-      MembershipFunctions.bloomContains(words, k, rnd.nextLong())
-    }
+    val fps = (0 until probes).count(_ => bloom.contains(rnd.nextLong()))
     // 10 bits/key, k=7 → theoretical fpp ~0.8%; allow generous slack
     assert(fps < probes * 0.03,
       s"false-positive rate ${fps.toDouble / probes} far above the 10-bit design point")
@@ -852,6 +912,7 @@ class OpsSpec extends SparkSpec {
 
   test("bloom-verified decontamination equals the exact join formulation") {
     import graft.ops.Decontamination
+    import graft.ops.Decontamination.ProbeKind
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val pred = col("doc_id") % 10 === 0
     val exact = Decontamination.decontaminate(docs, "doc_id", "text", pred, n = 8)
@@ -859,9 +920,9 @@ class OpsSpec extends SparkSpec {
     // 4 bits/key → fpp ~15%: a deliberately lossy pre-screen, so the test
     // proves the verify join absorbs bloom false positives, not that the
     // bloom was accidentally exact.
-    val bloom = Decontamination.benchmarkGramBloom(docs, "doc_id", "text",
-      pred, n = 8, bitsPerKey = 4)
-    val got = Decontamination.decontaminateBloomVerified(docs, bloom,
+    val bloom = Decontamination.benchmarkProbe(docs, "doc_id", "text",
+      pred, n = 8, ProbeKind.Bloom(bitsPerKey = 4))
+    val got = Decontamination.decontaminateByProbe(docs, bloom,
         "doc_id", "text", pred, n = 8)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(exact.nonEmpty)

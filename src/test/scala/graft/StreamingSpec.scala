@@ -14,6 +14,17 @@ import graft.streaming.StreamOps
   */
 class StreamingSpec extends SparkSpec {
 
+  /** Batch reference computation for the streaming hourly agg (same
+    * expressions, same results).
+    */
+  private def hourlyBatchReference(events: org.apache.spark.sql.DataFrame) =
+    events
+      .groupBy(date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss")
+        .as("hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(round(col("value") * 100).cast("long")).as("value_cents"),
+        sum(length(col("props")).cast("long")).as("payload_chars"))
+
   test("derivedStateWidth sizes from state volume with the configured floor") {
     // unknown / tiny state → the floor (8 by default)
     assert(StreamOps.derivedStateWidth(spark, -1L) === 8)
@@ -147,7 +158,7 @@ class StreamingSpec extends SparkSpec {
     val got = spark.table("hourly_out")
       .orderBy("hour", "event_type")
       .collect().map(_.toSeq).toSeq
-    val want = StreamOps.hourlyBatchReference(
+    val want = hourlyBatchReference(
         GraftTables.read(spark, "/root/testdata/sf0.001", "events"))
       .orderBy("hour", "event_type")
       .collect().map(_.toSeq).toSeq
@@ -407,33 +418,53 @@ class StreamingSpec extends SparkSpec {
       s"expected the near-dup (doc 2) dropped in-stream, survivors = $got")
   }
 
-  test("streaming decontamination equals the batch filter, statelessly") {
+  /** Documents of sf0.001 as a file stream, in a fresh directory. */
+  private def documentStream(prefix: String) = {
     import org.apache.spark.sql.types._
-    import graft.ops.Decontamination
-    val batch = GraftTables.read(spark, "/root/testdata/sf0.001", "documents")
-    val pred = col("doc_id") % 10 === 0
-    val gramSet = Decontamination.benchmarkGramSet(batch, "doc_id", "text", pred, n = 8)
-    val want = Decontamination.decontaminateBySet(batch, gramSet, "text", pred, n = 8)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-
-    val tmp = Files.createTempDirectory("graft-decon-stream").toString
+    val tmp = Files.createTempDirectory(prefix).toString
     Files.copy(Paths.get("/root/testdata/sf0.001/documents.parquet"),
       Paths.get(s"$tmp/docs.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
       StructField("n_chars", LongType)))
-    val stream = spark.readStream.schema(docSchema).parquet(tmp)
+    spark.readStream.schema(docSchema).parquet(tmp)
+  }
+
+  test("streaming decontamination equals the batch filter, statelessly") {
+    import graft.ops.Decontamination
+    import graft.ops.Decontamination.ProbeKind
+    val batch = GraftTables.read(spark, "/root/testdata/sf0.001", "documents")
+    val pred = col("doc_id") % 10 === 0
+    val probe = Decontamination.benchmarkProbe(batch, "doc_id", "text", pred,
+      n = 8, ProbeKind.Exact)
+    val want = Decontamination.decontaminateByProbe(batch, probe, "doc_id",
+        "text", pred, n = 8)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+
+    val stream = documentStream("graft-decon-stream")
       .filter(col("doc_id") % 10 =!= 0) // corpus side only, like the batch op
-    val q = StreamOps.decontaminateStream(stream, gramSet)
+    val q = Decontamination.decontaminateByProbe(stream, probe, "doc_id",
+        "text", lit(false))
       .select("doc_id")
       .writeStream.outputMode("append").format("memory").queryName("decon_out")
       .start()
     try q.processAllAvailable() finally q.stop()
     val got = spark.table("decon_out").collect().map(_.getLong(0)).toSet
-    assert(got == want, "stream survivors diverge from the batch bloom filter")
+    assert(got == want, "stream survivors diverge from the batch exact-set filter")
     // and the contract is real: contaminated docs existed and were dropped
     assert(batch.filter(!pred).count() > want.size)
+  }
+
+  test("streaming decontamination rejects an inexact probe up front") {
+    import graft.functions.GramProbe
+    import graft.ops.Decontamination
+    val bloom = new GramProbe.Bloom(Array(42L), bitsPerKey = 10)
+    val e = intercept[graft.core.GraftUnsupportedException] {
+      Decontamination.decontaminateByProbe(documentStream("graft-decon-bloom"),
+        bloom, "doc_id", "text", lit(false))
+    }
+    assert(e.getMessage.contains("stream-stream anti join"), e.getMessage)
   }
 
   test("stateful sessionization (flatMapGroupsWithState) equals batch q29") {
