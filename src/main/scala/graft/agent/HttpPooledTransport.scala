@@ -1,10 +1,10 @@
 package graft.agent
 
-import java.io.{BufferedInputStream, BufferedOutputStream, IOException}
+import java.io.{BufferedInputStream, BufferedOutputStream, IOException, InputStream}
 import java.net.{InetSocketAddress, Socket, SocketTimeoutException}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import scala.collection.mutable.ArrayDeque
+import scala.collection.mutable.{ArrayBuffer, ArrayDeque}
 
 /** Pool configuration — the reference's `HttplibPoolRegistry::PoolConfig`
   * with its default constants (`httplib_pool_registry.h:36-66`).
@@ -35,8 +35,9 @@ final case class PoolConfig(
   * Requests execute on the CALLER's thread: for blocking callers that is
   * what the reference's worker queue (`httplib_pooled_client.cpp:44-135`)
   * amounts to, without the hop; concurrency is bounded by the pool size.
-  * Connect, I/O and timeout failures come back as a status-0 response with
-  * a message, not as a throw.
+  * Connect, I/O and timeout failures, and a reply whose status or
+  * Content-Length is not a number, come back as a status-0 response with a
+  * message, not as a throw; a connection that failed is never re-pooled.
   *
   * The wire protocol is minimal HTTP/1.1 with Content-Length framing on
   * both sides — enough for [[graft.service.HttpProtectionServer]] and
@@ -57,13 +58,17 @@ final class HttpPooledTransport(host: String, port: Int,
   def connectionsCreated: Int = lock.synchronized(created)
 
   override def get(endpoint: String, headers: Map[String, String]): TransportResponse =
-    request("GET", endpoint, "", headers)
+    request("GET", endpoint, Array.emptyByteArray, headers)
 
   override def post(endpoint: String, body: String,
       headers: Map[String, String]): TransportResponse =
+    post(endpoint, body.getBytes(UTF_8), headers)
+
+  override def post(endpoint: String, body: Array[Byte],
+      headers: Map[String, String]): TransportResponse =
     request("POST", endpoint, body, headers)
 
-  private def request(method: String, endpoint: String, body: String,
+  private def request(method: String, endpoint: String, body: Array[Byte],
       headers: Map[String, String]): TransportResponse = {
     if (lock.synchronized(closed))
       return TransportResponse(0, "", "transport is shut down")
@@ -91,7 +96,7 @@ final class HttpPooledTransport(host: String, port: Int,
     * returned to the pool), None on transport failure (connection discarded).
     */
   private def runOn(conn: PooledConnection, method: String, endpoint: String,
-      body: String, headers: Map[String, String]): Option[TransportResponse] =
+      body: Array[Byte], headers: Map[String, String]): Option[TransportResponse] =
     try {
       val r = conn.roundTrip(method, endpoint, body, headers)
       give(conn)
@@ -101,6 +106,9 @@ final class HttpPooledTransport(host: String, port: Int,
         discard(conn)
         Some(TransportResponse(0, "",
           s"$method $endpoint timed out after ${config.readTimeoutMs} ms: ${e.getMessage}"))
+      case e: MalformedResponseException => // the server answered: no retry
+        discard(conn)
+        Some(TransportResponse(0, "", s"$method $endpoint: ${e.getMessage}"))
       case _: IOException =>
         discard(conn)
         None
@@ -166,6 +174,45 @@ final class HttpPooledTransport(host: String, port: Int,
 
 object HttpPooledTransport {
 
+  /** A reply the server sent whose framing cannot be read. */
+  private final class MalformedResponseException(message: String) extends IOException(message)
+
+  /** The most a Content-Length makes a reader allocate ahead of the bytes
+    * that have arrived.
+    */
+  private final val BodyChunk = 1 << 20
+
+  /** A Content-Length or status code: decimal digits only, at most
+    * `Int.MaxValue`; None for anything else.
+    */
+  private[graft] def decimal(s: String): Option[Int] =
+    if (s.isEmpty || s.length > 10 || !s.forall(c => c >= '0' && c <= '9')) None
+    else Some(s.toLong).filter(_ <= Int.MaxValue).map(_.toInt)
+
+  /** Read a `length`-byte body from `in`. The length is only the peer's
+    * word, so memory follows the bytes that arrive: a body over
+    * [[BodyChunk]] is read chunk by chunk and joined once it is all there.
+    * Throws an `IOException` if the stream ends first.
+    */
+  private[graft] def readBody(in: InputStream, length: Int): Array[Byte] = {
+    val chunks = ArrayBuffer.empty[Array[Byte]]
+    var got = 0
+    while (got < length || chunks.isEmpty) {
+      val chunk = new Array[Byte](math.min(length - got, BodyChunk))
+      if (in.readNBytes(chunk, 0, chunk.length) < chunk.length)
+        throw new IOException(s"connection closed mid-body ($length bytes announced)")
+      chunks += chunk
+      got += chunk.length
+    }
+    if (chunks.size == 1) chunks.head
+    else {
+      val body = new Array[Byte](length)
+      var off = 0
+      chunks.foreach { c => System.arraycopy(c, 0, body, off, c.length); off += c.length }
+      body
+    }
+  }
+
   /** One persistent keep-alive connection. The socket opens lazily on first
     * use so pool bookkeeping (which counts connections, not sockets) matches
     * the reference's create-outside-the-lock behavior.
@@ -186,18 +233,17 @@ object HttpPooledTransport {
       }
     }
 
-    def roundTrip(method: String, endpoint: String, body: String,
+    def roundTrip(method: String, endpoint: String, body: Array[Byte],
         headers: Map[String, String]): TransportResponse = {
       ensureOpen()
-      val bodyBytes = body.getBytes(UTF_8)
       val sb = new StringBuilder
       sb.append(method).append(' ').append(endpoint).append(" HTTP/1.1\r\n")
       sb.append("Host: ").append(host).append(':').append(port).append("\r\n")
       headers.foreach { case (k, v) => sb.append(k).append(": ").append(v).append("\r\n") }
-      if (method == "POST") sb.append("Content-Length: ").append(bodyBytes.length).append("\r\n")
+      if (method == "POST") sb.append("Content-Length: ").append(body.length).append("\r\n")
       sb.append("Connection: keep-alive\r\n\r\n")
       out.write(sb.toString.getBytes(UTF_8))
-      if (method == "POST") out.write(bodyBytes)
+      if (method == "POST") out.write(body)
       out.flush()
       readResponse()
     }
@@ -216,25 +262,22 @@ object HttpPooledTransport {
     private def readResponse(): TransportResponse = {
       val statusLine = readLine()
       val parts = statusLine.split(" ", 3)
-      if (parts.length < 2 || !parts(0).startsWith("HTTP/"))
-        throw new IOException(s"malformed status line: '$statusLine'")
-      val status = parts(1).toInt
+      val status =
+        if (parts.length < 2 || !parts(0).startsWith("HTTP/") || parts(1).length != 3) None
+        else decimal(parts(1))
+      if (status.isEmpty) throw new MalformedResponseException(s"malformed status line: '$statusLine'")
       var contentLength = 0
       var line = readLine()
       while (line.nonEmpty) {
         val idx = line.indexOf(':')
-        if (idx > 0 && line.substring(0, idx).equalsIgnoreCase("Content-Length"))
-          contentLength = line.substring(idx + 1).trim.toInt
+        if (idx > 0 && line.substring(0, idx).equalsIgnoreCase("Content-Length")) {
+          val value = line.substring(idx + 1).trim
+          contentLength = decimal(value).getOrElse(
+            throw new MalformedResponseException(s"malformed Content-Length: '$value'"))
+        }
         line = readLine()
       }
-      val body = new Array[Byte](contentLength)
-      var off = 0
-      while (off < contentLength) {
-        val n = in.read(body, off, contentLength - off)
-        if (n < 0) throw new IOException("connection closed mid-body")
-        off += n
-      }
-      TransportResponse(status, new String(body, UTF_8))
+      TransportResponse(status.get, readBody(in, contentLength))
     }
 
     def close(): Unit =

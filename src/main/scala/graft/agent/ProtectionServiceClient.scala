@@ -1,5 +1,7 @@
 package graft.agent
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.core.GraftInvalidInputException
@@ -15,11 +17,32 @@ import graft.core.GraftInvalidInputException
 trait ProtectionTransport {
   def get(endpoint: String, headers: Map[String, String]): TransportResponse
   def post(endpoint: String, body: String, headers: Map[String, String]): TransportResponse
+
+  /** The same POST with its body as UTF-8 bytes: the page path, which
+    * keeps a body in bytes from the socket to the envelope. The socket and
+    * service transports take bytes as they are; a transport that only
+    * handles `String` bodies gets them decoded here.
+    */
+  def post(endpoint: String, body: Array[Byte], headers: Map[String, String]): TransportResponse =
+    post(endpoint, new String(body, UTF_8), headers)
 }
 
-/** status_code / result / error_message triple (`http_client_base.h` HttpResponse). */
-final case class TransportResponse(status: Int, body: String, error: String = "") {
+/** status_code / result / error_message triple (`http_client_base.h`
+  * HttpResponse). The body travels as its UTF-8 `bytes`; `body` is the
+  * decoded text, made on first use.
+  */
+final class TransportResponse(val status: Int, val bytes: Array[Byte], val error: String) {
+  lazy val body: String = new String(bytes, UTF_8)
   def ok: Boolean = status == 200 && error.isEmpty
+  override def toString: String = s"TransportResponse($status, $body, $error)"
+}
+
+object TransportResponse {
+  def apply(status: Int, body: String, error: String = ""): TransportResponse =
+    new TransportResponse(status, body.getBytes(UTF_8), error)
+
+  def apply(status: Int, bytes: Array[Byte]): TransportResponse =
+    new TransportResponse(status, bytes, "")
 }
 
 /** Minimal JSON helpers over the Jackson shipped with Spark — flat
@@ -99,12 +122,12 @@ final class ProtectionServiceClient(
 
   /** Authenticated POST of a flat JSON object body. */
   def post(endpoint: String, fields: Map[String, String]): TransportResponse =
-    postRaw(endpoint, FlatJson.write(fields))
+    postRaw(endpoint, FlatJson.write(fields).getBytes(UTF_8))
 
-  /** Authenticated POST of a prebuilt body (the nested request envelopes),
-    * with the 401-invalidate-retry-once discipline.
+  /** Authenticated POST of a prebuilt UTF-8 body (the nested request
+    * envelopes), with the 401-invalidate-retry-once discipline.
     */
-  def postRaw(endpoint: String, body: String): TransportResponse = {
+  def postRaw(endpoint: String, body: Array[Byte]): TransportResponse = {
     def attempt(): TransportResponse = ensureValidToken() match {
       case Left(err) => TransportResponse(0, "", err)
       case Right(t) =>

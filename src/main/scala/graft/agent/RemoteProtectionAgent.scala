@@ -212,8 +212,8 @@ final class RemoteProtectionAgent(
       value = payload,
       encryptionMetadata = metadata)
 
-  private def call(endpoint: String, req: ProtectRequest): String = {
-    val resp = client.postRaw(endpoint, req.toJson)
+  private def call(endpoint: String, req: ProtectRequest): Array[Byte] = {
+    val resp = client.postRaw(endpoint, req.toBytes)
     if (!resp.ok)
       throw new GraftInvalidInputException(
         if (resp.error.nonEmpty) resp.error
@@ -225,7 +225,7 @@ final class RemoteProtectionAgent(
             catch { case _: Exception => None }
           serverMsg.getOrElse(s"$endpoint failed with status ${resp.status}: ${resp.body}")
         })
-    resp.body
+    resp.bytes
   }
 
   private def fieldMatch(responseValue: String, requestValue: String,

@@ -68,21 +68,22 @@ trait CryptoCodec extends Serializable {
 
 /** XOR-parity codec reproducing the reference `BasicXorEncryptor` keystream
   * (`basic_xor_encryptor.cpp:32-72`): dst[i] = src[i] ^ (h & 0xFF);
-  * h = (h<<1)|(h>>>31); keystream restarts per call. Symmetric.
+  * h = (h<<1)|(h>>>31); keystream restarts per call. Symmetric. The codec
+  * keeps the keystream as its 64-byte table ([[StableHash.keystream]]).
   * NOT secure — exists for wire-format parity + canonical-ciphertext tests,
   * exactly like the reference's "basic" encryptor is a stand-in.
   */
 final case class XorCodec(ctx: ProtectionContext) extends CryptoCodec {
-  private val seed: Long = StableHash.fnv1a64(ctx.seedString)
+  private val keystream = StableHash.keystream(StableHash.fnv1a64(ctx.seedString))
   override def name: String = CryptoCodec.Xor
   override def deterministic: Boolean = true
   override def overhead: Int = 0
   override def encryptInto(plain: Array[Byte], plainOff: Int, len: Int,
       out: Array[Byte], off: Int): Unit =
-    StableHash.xorKeystreamCopy(seed, plain, plainOff, out, off, len)
+    StableHash.xorKeystream(keystream, plain, plainOff, out, off, len)
   override def decryptInto(data: Array[Byte], off: Int, len: Int,
       out: Array[Byte], outOff: Int): Unit =
-    StableHash.xorKeystreamCopy(seed, data, off, out, outOff, len)
+    StableHash.xorKeystream(keystream, data, off, out, outOff, len)
 }
 
 /** Real cipher: AES-256-CTR + HMAC-SHA256, SIV-style (RFC 5297 shape with

@@ -32,20 +32,53 @@ object StableHash {
     */
   @inline def keystreamNext(h: Long): Long = (h << 1) | (h >>> 31)
 
-  /** XOR `src(srcOff until srcOff + len)` with the rotating keystream seeded
-    * at `seed` into `dst(dstOff ..)`. The keystream restarts at `seed` for
-    * every call, exactly like `XorEncryptInto` re-reading `key_id_hash_` per
-    * invocation (`basic_xor_encryptor.cpp:30-46`) — this is what makes
-    * per-element encryption deterministic and equality-preserving.
+  /** Bytes in a [[keystream]] table. */
+  final val KeystreamTableSize = 64
+  private final val Period = 32
+
+  /** The keystream seeded at `seed`, whole, as its first 64 bytes. The step
+    * is OR-linear (it maps `a | b` to the OR of the images of `a` and `b`),
+    * and each of the 64 single-bit states is back where it was at step 32
+    * by step 64, so every state from step 32 on repeats with period 32:
+    * keystream byte `i >= 64` is byte `32 + (i - 32) % 32`.
     */
-  def xorKeystreamCopy(seed: Long, src: Array[Byte], srcOff: Int,
-      dst: Array[Byte], dstOff: Int, len: Int): Unit = {
+  def keystream(seed: Long): Array[Byte] = {
+    val table = new Array[Byte](KeystreamTableSize)
     var h = seed
     var i = 0
-    while (i < len) {
-      dst(dstOff + i) = (src(srcOff + i) ^ (h & 0xffL)).toByte
+    while (i < KeystreamTableSize) {
+      table(i) = h.toByte
       h = keystreamNext(h)
       i += 1
+    }
+    table
+  }
+
+  /** XOR `src(srcOff until srcOff + len)` with the keystream `table` (see
+    * [[keystream]]) into `dst(dstOff ..)`. The keystream restarts at byte 0
+    * for every call, exactly like `XorEncryptInto` re-reading `key_id_hash_`
+    * per invocation (`basic_xor_encryptor.cpp:30-46`) — this is what makes
+    * per-element encryption deterministic and equality-preserving.
+    */
+  def xorKeystream(table: Array[Byte], src: Array[Byte], srcOff: Int,
+      dst: Array[Byte], dstOff: Int, len: Int): Unit = {
+    val head = math.min(len, KeystreamTableSize)
+    var i = 0
+    while (i < head) {
+      dst(dstOff + i) = (src(srcOff + i) ^ table(i)).toByte
+      i += 1
+    }
+    // from byte 64 on, one period at a time: i is a multiple of 32 here
+    while (i < len) {
+      val n = math.min(Period, len - i)
+      val s = srcOff + i
+      val d = dstOff + i
+      var j = 0
+      while (j < n) {
+        dst(d + j) = (src(s + j) ^ table(Period + j)).toByte
+        j += 1
+      }
+      i += n
     }
   }
 }

@@ -1,14 +1,13 @@
 package graft.service
 
 import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.Executors
 
 import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 
-import graft.agent.ProtectionTransport
+import graft.agent.{HttpPooledTransport, ProtectionTransport, TransportResponse}
 
 /** Real localhost HTTP listener for a [[ProtectionTransport]] — the socket
   * half the reference gets from Crow (`dbps_api_server.cpp:107-285`,
@@ -20,6 +19,8 @@ import graft.agent.ProtectionTransport
   * Routing is a straight delegation: the service half stays
   * [[ProtectionService]]; this class only moves bytes between the socket
   * and the transport interface, exactly like Crow's role in the reference.
+  * A request body goes to the transport's byte `post` as the bytes read,
+  * and a reply's bytes go out as they are.
   *
   * Replies go out with `TCP_NODELAY` (see the companion object): without it
   * every small reply waits ~40 ms for the client's delayed ACK.
@@ -39,12 +40,17 @@ final class HttpProtectionServer(transport: ProtectionTransport, port: Int = 0) 
         val resp = exchange.getRequestMethod match {
           case "GET" => transport.get(path, headers)
           case "POST" =>
-            val body = new String(exchange.getRequestBody.readAllBytes(), UTF_8)
-            transport.post(path, body, headers)
-          case other =>
-            graft.agent.TransportResponse(405, s"""{"error":"method $other not allowed"}""")
+            Option(exchange.getRequestHeaders.getFirst("Content-Length")) match {
+              case None => transport.post(path, exchange.getRequestBody.readAllBytes(), headers)
+              case Some(length) => HttpPooledTransport.decimal(length.trim) match {
+                case Some(n) =>
+                  transport.post(path, HttpPooledTransport.readBody(exchange.getRequestBody, n), headers)
+                case None => TransportResponse(400, s"""{"error":"invalid Content-Length"}""")
+              }
+            }
+          case other => TransportResponse(405, s"""{"error":"method $other not allowed"}""")
         }
-        val bytes = resp.body.getBytes(UTF_8)
+        val bytes = resp.bytes
         val contentType = if (path == "/healthz") "text/plain" else "application/json"
         exchange.getResponseHeaders.set("Content-Type", contentType)
         exchange.sendResponseHeaders(resp.status, if (bytes.isEmpty) -1 else bytes.length.toLong)

@@ -1,6 +1,6 @@
 package graft.service
 
-import java.io.StringWriter
+import java.io.{OutputStream, StringWriter}
 import java.nio.{ByteBuffer, CharBuffer}
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.util.Base64
@@ -23,12 +23,13 @@ import com.fasterxml.jackson.databind.node.ObjectNode
   * "missing" state, and validation reports the reference's exact
   * `Missing required fields: …` message.
   *
-  * Bodies are streamed, so a page value goes between the body text and its
-  * bytes without becoming a `String` or a tree node: [[readBody]] decodes it
-  * straight from the body's UTF-8 bytes, and [[BodyWriter]] writes the encoder's
-  * output with no escaping pass. Every other field goes through the same
-  * `JsonNode` and `JsonGenerator` calls a whole-tree parse and build make, so
-  * parse results and bodies are exactly those of the tree.
+  * Bodies are UTF-8 bytes, and a page value crosses them once without
+  * becoming a `String` or a tree node: a parse base64-decodes it straight
+  * from the body's bytes and lets Jackson read only the rest of the body, and
+  * [[BodyWriter]] encodes it into the body's one exact-size array. Every
+  * other field goes through the same `JsonNode` and `JsonGenerator` calls a
+  * whole-tree parse and build make, so parse results and bodies are exactly
+  * those of the tree. A body given as text parses as its characters read.
   */
 object JsonEnvelope {
 
@@ -103,12 +104,42 @@ object JsonEnvelope {
     */
   private final case class Body(root: ObjectNode, value: Option[Array[Byte]])
 
-  /** Stream `body`, whose page value sits at `container.value`, over its
-    * UTF-8 bytes. The value's string is base64-decoded straight from those
-    * bytes, or from the parser's characters when it holds an escape; any
-    * other scalar there is stringified first, as `asText` does, and a
-    * container or null is missing. Every other field is `readTree` of its
-    * own subtree, so a later duplicate key replaces the whole earlier
+  /** Read `body`, whose page value sits at `container.value`, from its
+    * UTF-8 bytes, exactly as the text they decode to is read, in one pass
+    * over the page value.
+    *
+    * Jackson reads up to the value's opening quote; one scan finds its
+    * closing quote; the value is base64-decoded from the bytes between, and
+    * Jackson reads the rest of the body with that value cut out of it, so it
+    * never walks the value. That holds for a body that is valid UTF-8 outside
+    * the value, with a value of printable ASCII and no escape, and with no
+    * byte-order mark or NUL in front, which covers every body the builders
+    * write. Any other body is read from its text.
+    */
+  private def readBody(body: Array[Byte], container: String): Option[Body] = {
+    val start = if (sniffed(body)) -1 else valueStart(body, container)
+    val end = if (start < 0) -1 else plainEnd(body, start)
+    if (end < 0) return readBody(new String(body, UTF_8), container)
+    // the body with the value cut out, so that it reads as ""
+    val envelope = new Array[Byte](body.length - (end - start))
+    System.arraycopy(body, 0, envelope, 0, start)
+    System.arraycopy(body, end, envelope, start, body.length - end)
+    if (!validUtf8(envelope)) return readBody(new String(body, UTF_8), container)
+    read(mapper.getFactory.createParser(envelope), container, p =>
+      if (p.currentToken != JsonToken.VALUE_STRING || byteOffset(p) != start)
+        pageValue(p, envelope)
+      else {
+        p.streamReadConstraints.validateStringLength(end - start) // as getText would
+        Some(decodeBase64(body, start, end - start))
+      })
+  }
+
+  /** Stream `body` over its UTF-8 bytes. The value's string is
+    * base64-decoded straight from those bytes, or from the parser's
+    * characters when it holds an escape or a byte that is not printable
+    * ASCII; any other scalar there is stringified first, as `asText` does,
+    * and a container or null is missing. Every other field is `readTree` of
+    * its own subtree, so a later duplicate key replaces the whole earlier
     * subtree, as in a tree. None for malformed JSON or a root that is not an
     * object.
     *
@@ -118,13 +149,21 @@ object JsonEnvelope {
     */
   private def readBody(body: String, container: String): Option[Body] = {
     val utf8 = body.getBytes(UTF_8)
-    val sniffed = utf8.iterator.take(4).contains(0.toByte) || body.startsWith("\uFEFF")
+    val sniff = sniffed(utf8)
     val fromBytes =
-      if (sniffed) None
-      else read(mapper.getFactory.createParser(utf8), container, utf8, body)
-    if (!sniffed && fromBytes.forall(b => !holds('?', b.root))) fromBytes
-    else read(mapper.getFactory.createParser(body), container, null, body)
+      if (sniff) None
+      else read(mapper.getFactory.createParser(utf8), container, pageValue(_, utf8))
+    if (!sniff && fromBytes.forall(b => !holds('?', b.root))) fromBytes
+    else read(mapper.getFactory.createParser(body), container, pageValue(_, null))
   }
+
+  /** A leading NUL or UTF-8 byte-order mark: a byte parser would take the
+    * body for another encoding.
+    */
+  private def sniffed(utf8: Array[Byte]): Boolean =
+    utf8.iterator.take(4).contains(0.toByte) ||
+      (utf8.length >= 3 && utf8(0) == 0xEF.toByte && utf8(1) == 0xBB.toByte &&
+        utf8(2) == 0xBF.toByte)
 
   /** Whether a key or a string in `node` contains `c`. */
   private def holds(c: Char, node: JsonNode): Boolean =
@@ -133,8 +172,60 @@ object JsonEnvelope {
       node.fields().asScala.exists(e => e.getKey.indexOf(c) >= 0 || holds(c, e.getValue))
     else node.elements().asScala.exists(holds(c, _)) // an array's; a scalar has none
 
-  private def read(p: JsonParser, container: String, utf8: Array[Byte],
-      body: String): Option[Body] =
+  /** Whether `bytes` decode as UTF-8 with nothing replaced, i.e. whether
+    * decoding and encoding them again gives the same bytes.
+    */
+  private def validUtf8(bytes: Array[Byte]): Boolean =
+    bytes.forall(_ >= 0) ||
+      (try { UTF_8.newDecoder().decode(ByteBuffer.wrap(bytes)); true }
+      catch { case _: java.nio.charset.CharacterCodingException => false })
+
+  /** The parser's byte offset, just past the opening quote of a string
+    * token it has not read further.
+    */
+  private def byteOffset(p: JsonParser): Long = p.currentLocation.getByteOffset
+
+  /** Offset just past the opening quote of the first page value of `body`
+    * that is a string, read no further than that quote; -1 if there is none
+    * or the JSON before it is malformed.
+    */
+  private def valueStart(body: Array[Byte], container: String): Int = {
+    val p = mapper.getFactory.createParser(body)
+    try {
+      if (p.nextToken() != JsonToken.START_OBJECT) return -1
+      while (p.nextToken() == JsonToken.FIELD_NAME) {
+        val name = p.currentName
+        if (p.nextToken() == JsonToken.START_OBJECT && name == container)
+          while (p.nextToken() == JsonToken.FIELD_NAME) {
+            val field = p.currentName
+            if (p.nextToken() == JsonToken.VALUE_STRING && field == "value")
+              return byteOffset(p).toInt
+            p.skipChildren()
+          }
+        else p.skipChildren()
+      }
+      -1
+    } catch { case _: Exception => -1 }
+    finally p.close()
+  }
+
+  /** The index of the quote that closes a string whose first char is at
+    * `start` in `utf8`, when every byte up to it is printable ASCII and none
+    * is a backslash; -1 otherwise.
+    */
+  private def plainEnd(utf8: Array[Byte], start: Int): Int = {
+    var i = start
+    while (i < utf8.length) {
+      val b = utf8(i)
+      if (b == '"') return i
+      if (b < 0x20 || b == '\\') return -1 // a byte >= 0x80 is negative
+      i += 1
+    }
+    -1
+  }
+
+  private def read(p: JsonParser, container: String,
+      pageValue: JsonParser => Option[Array[Byte]]): Option[Body] =
     try {
       if (p.nextToken() != JsonToken.START_OBJECT) return None
       val root = mapper.createObjectNode()
@@ -147,7 +238,7 @@ object JsonEnvelope {
           while (p.nextToken() == JsonToken.FIELD_NAME) {
             val field = p.currentName
             p.nextToken()
-            if (field == "value") value = pageValue(p, utf8, body)
+            if (field == "value") value = pageValue(p)
             else node.set[JsonNode](field, mapper.readTree[JsonNode](p))
           }
         } else {
@@ -159,32 +250,33 @@ object JsonEnvelope {
     } catch { case _: Exception => None }
     finally p.close()
 
-  private def pageValue(p: JsonParser, utf8: Array[Byte], body: String): Option[Array[Byte]] =
+  /** The page value at the parser's token; `utf8` is the parser's input,
+    * or null when it reads characters.
+    */
+  private def pageValue(p: JsonParser, utf8: Array[Byte]): Option[Array[Byte]] =
     if (p.currentToken != JsonToken.VALUE_STRING) {
       val node = mapper.readTree[JsonNode](p)
       if (node.isNull || node.isContainerNode) None else Some(decodeBase64(node.asText()))
     } else {
-      // the parser has read just past the opening quote and no further; when
-      // every char is one byte, the string runs to the next quote in `body`,
-      // unless an escape comes first
-      val start = if (utf8 == null) -1 else p.currentLocation.getByteOffset.toInt
-      val end =
-        if (start > 0 && utf8.length == body.length && utf8(start - 1) == '"')
-          body.indexOf('"', start)
-        else -1
-      val escaped = end < 0 || { val b = body.indexOf('\\', start); b >= 0 && b < end }
-      val len = if (escaped) p.getTextLength else end - start
+      // the parser has read just past the opening quote and no further
+      val start = if (utf8 == null) -1 else byteOffset(p).toInt
+      val end = if (start > 0 && utf8(start - 1) == '"') plainEnd(utf8, start) else -1
+      val len = if (end < 0) p.getTextLength else end - start
       p.streamReadConstraints.validateStringLength(len) // as getText would
-      Some(if (escaped) decodeBase64(p.getTextCharacters, p.getTextOffset, len)
+      Some(if (end < 0) decodeBase64(p.getTextCharacters, p.getTextOffset, len)
         else decodeBase64(utf8, start, len))
     }
 
   /** Builds one body with the generator `writeValueAsString` uses, field by
-    * field in the order the reference's tree builder adds them.
+    * field in the order the reference's tree builder adds them, into one
+    * array of its exact size.
     */
-  private final class BodyWriter(valueBytes: Int) {
-    private val out = new StringWriter(1024 + 4 * ((valueBytes + 2) / 3))
+  private final class BodyWriter {
+    private val out = new StringWriter(512)
     private val g: JsonGenerator = mapper.createGenerator(out)
+    // the page value, and where in `out` its base64 goes
+    private var value: Array[Byte] = _
+    private var valueAt = -1
     g.writeStartObject()
 
     def obj(name: String)(fields: => Unit): Unit = {
@@ -201,21 +293,43 @@ object JsonEnvelope {
     def strings(name: String, values: Map[String, String]): Unit =
       obj(name)(values.toSeq.sortBy(_._1).foreach { case (k, v) => str(k, v) })
 
-    /** A page value: base64 needs no escaping, so the encoder's output goes
-      * straight to the body between the quotes the generator writes.
+    /** A page value: base64 needs no escaping, so the generator writes only
+      * its quotes, and [[result]] encodes the bytes between them.
       */
     def value(bytes: Array[Byte]): Unit = {
       g.writeFieldName("value")
       g.writeRawValue("\"")
       g.flush()
-      out.write(Base64.getEncoder.encodeToString(bytes))
+      value = bytes
+      valueAt = out.getBuffer.length
       g.writeRaw('"')
     }
 
-    def result(): String = {
+    /** The body's UTF-8 bytes: the generator's text around the page value,
+      * and the value's base64 encoded once, in place.
+      */
+    def result(): Array[Byte] = {
       g.writeEndObject()
       g.close()
-      out.toString
+      val text = out.getBuffer
+      if (value == null) return text.toString.getBytes(UTF_8)
+      val head = text.substring(0, valueAt).getBytes(UTF_8)
+      val tail = text.substring(valueAt).getBytes(UTF_8)
+      val encoded = 4 * ((value.length + 2) / 3)
+      val body = new Array[Byte](head.length + encoded + tail.length)
+      System.arraycopy(head, 0, body, 0, head.length)
+      val base64 = Base64.getEncoder.wrap(new OutputStream {
+        private var at = head.length
+        override def write(b: Int): Unit = { body(at) = b.toByte; at += 1 }
+        override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+          System.arraycopy(b, off, body, at, len)
+          at += len
+        }
+      })
+      base64.write(value)
+      base64.close()
+      System.arraycopy(tail, 0, body, head.length + encoded, tail.length)
+      body
     }
   }
 
@@ -282,8 +396,8 @@ object JsonEnvelope {
     /** `ToJsonString` (`json_request.cpp:417-480,525-599`) — the client-side
       * builder; emits the exact nested shape the reference sends.
       */
-    def toJson: String = {
-      val w = new BodyWriter(value.length)
+    def toBytes: Array[Byte] = {
+      val w = new BodyWriter
       w.obj("column_reference")(w.str("name", columnName))
       w.obj("data_batch") {
         w.obj("datatype_info") {
@@ -315,8 +429,17 @@ object JsonEnvelope {
       * JSON yields an all-missing request, exactly like the reference's
       * stop-parsing-on-invalid behavior.
       */
-    def parse(body: String, encrypt: Boolean): ProtectRequest = {
-      val read = readBody(body, if (encrypt) "data_batch" else "data_batch_encrypted")
+    def parse(body: Array[Byte], encrypt: Boolean): ProtectRequest =
+      of(readBody(body, container(encrypt)), encrypt)
+
+    /** [[parse]] of a body's text, which may hold a lone surrogate. */
+    def parse(body: String, encrypt: Boolean): ProtectRequest =
+      of(readBody(body, container(encrypt)), encrypt)
+
+    private def container(encrypt: Boolean) =
+      if (encrypt) "data_batch" else "data_batch_encrypted"
+
+    private def of(read: Option[Body], encrypt: Boolean): ProtectRequest = {
       val root = read.map(_.root).orNull
 
       def get(path: String*): Option[String] =
@@ -367,8 +490,8 @@ object JsonEnvelope {
       referenceId: String,
       encryptionMetadata: Map[String, String]) {
 
-    def toJson: String = {
-      val w = new BodyWriter(encryptedValue.length)
+    def toBytes: Array[Byte] = {
+      val w = new BodyWriter
       w.obj("data_batch_encrypted") {
         w.obj("value_format")(w.str("compression", encryptedCompression))
         w.value(encryptedValue)
@@ -388,9 +511,14 @@ object JsonEnvelope {
     /** Client-side parse + `IsValid` (`json_request.cpp:724-728`): Left is
       * the api-client error the reference raises for an invalid body.
       */
-    def parse(body: String): Either[String, EncryptResponse] = {
-      val Body(root, value) = readBody(body, "data_batch_encrypted")
-        .getOrElse(return Left("Invalid JSON encrypt response"))
+    def parse(body: Array[Byte]): Either[String, EncryptResponse] =
+      of(readBody(body, "data_batch_encrypted"))
+
+    def parse(body: String): Either[String, EncryptResponse] =
+      of(readBody(body, "data_batch_encrypted"))
+
+    private def of(read: Option[Body]): Either[String, EncryptResponse] = {
+      val Body(root, value) = read.getOrElse(return Left("Invalid JSON encrypt response"))
       val r = EncryptResponse(
         encryptedCompression =
           safeGet(root, "data_batch_encrypted", "value_format", "compression")
@@ -422,8 +550,8 @@ object JsonEnvelope {
       accessControl: String,
       referenceId: String) {
 
-    def toJson: String = {
-      val w = new BodyWriter(value.length)
+    def toBytes: Array[Byte] = {
+      val w = new BodyWriter
       w.obj("data_batch") {
         w.obj("datatype_info") {
           w.str("datatype", datatype)
@@ -446,9 +574,14 @@ object JsonEnvelope {
   }
 
   object DecryptResponse {
-    def parse(body: String): Either[String, DecryptResponse] = {
-      val Body(root, value) = readBody(body, "data_batch")
-        .getOrElse(return Left("Invalid JSON decrypt response"))
+    def parse(body: Array[Byte]): Either[String, DecryptResponse] =
+      of(readBody(body, "data_batch"))
+
+    def parse(body: String): Either[String, DecryptResponse] =
+      of(readBody(body, "data_batch"))
+
+    private def of(read: Option[Body]): Either[String, DecryptResponse] = {
+      val Body(root, value) = read.getOrElse(return Left("Invalid JSON decrypt response"))
       val r = DecryptResponse(
         datatype = safeGet(root, "data_batch", "datatype_info", "datatype")
           .filter(Datatypes).getOrElse(""),

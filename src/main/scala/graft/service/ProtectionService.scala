@@ -1,5 +1,7 @@
 package graft.service
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.agent.{EncryptedBatch, LocalProtectionAgent, ProtectionTransport, TransportResponse}
@@ -53,9 +55,13 @@ final class ProtectionService(store: ClientCredentialStore,
     }
 
   override def post(endpoint: String, body: String,
+      headers: Map[String, String]): TransportResponse =
+    post(endpoint, body.getBytes(UTF_8), headers)
+
+  override def post(endpoint: String, body: Array[Byte],
       headers: Map[String, String]): TransportResponse = endpoint match {
     case "/token" =>
-      val resp = store.processTokenRequest(body)
+      val resp = store.processTokenRequest(new String(body, UTF_8))
       if (!resp.isValid) errorResponse(resp.validationError, resp.errorStatusCode)
       else TransportResponse(200, resp.toJson)
     case "/encrypt" | "/decrypt" =>
@@ -72,7 +78,7 @@ final class ProtectionService(store: ClientCredentialStore,
     * request's `encrypted_compression` and `reference_id` are echoed, role
     * and access-control are the reference's fixed stamps (`:199-204`).
     */
-  private def handleEncrypt(body: String): TransportResponse = {
+  private def handleEncrypt(body: Array[Byte]): TransportResponse = {
     val req = ProtectRequest.parse(body, encrypt = true)
     if (!req.isValid) {
       val msg = req.validationError
@@ -86,7 +92,7 @@ final class ProtectionService(store: ClientCredentialStore,
         encryptedValue = r.payload,
         userId = req.userId, role = Role, accessControl = AccessControl,
         referenceId = req.referenceId,
-        encryptionMetadata = r.metadata).toJson)
+        encryptionMetadata = r.metadata).toBytes)
     } catch {
       case e: GraftInvalidInputException =>
         errorResponse(s"Invalid input for encryption: ${e.getMessage}", 400)
@@ -99,7 +105,7 @@ final class ProtectionService(store: ClientCredentialStore,
     * request's datatype/compression/encoding echoed in the decrypted
     * `data_batch` (`:246-250`).
     */
-  private def handleDecrypt(body: String): TransportResponse = {
+  private def handleDecrypt(body: Array[Byte]): TransportResponse = {
     val req = ProtectRequest.parse(body, encrypt = false)
     if (!req.isValid) {
       val msg = req.validationError
@@ -116,7 +122,7 @@ final class ProtectionService(store: ClientCredentialStore,
         encoding = req.encoding.get,
         value = plain,
         userId = req.userId, role = Role, accessControl = AccessControl,
-        referenceId = req.referenceId).toJson)
+        referenceId = req.referenceId).toBytes)
     } catch {
       case e: Exception => // reference catches std::exception here (`:273`)
         errorResponse(s"Decryption failed: ${e.getMessage}", 400)

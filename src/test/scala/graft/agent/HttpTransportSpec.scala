@@ -40,6 +40,90 @@ class HttpTransportSpec extends AnyFunSuite {
     }
   }
 
+  /** A socket server that answers each request, on whatever connection it
+    * comes, with the next of `replies` (raw HTTP bytes) and then closes the
+    * connection if that reply is marked so.
+    */
+  private def withStub[A](replies: Seq[(String, Boolean)])(f: Int => A): A = {
+    val ss = new java.net.ServerSocket(0, 8, java.net.InetAddress.getLoopbackAddress)
+    val queue = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
+    replies.foreach(queue.add)
+    val acceptor = new Thread(() => {
+      try while (true) {
+        val socket = ss.accept()
+        val serve = new Thread(() => {
+          val in = new java.io.BufferedInputStream(socket.getInputStream)
+          val out = socket.getOutputStream
+          try {
+            var open = true
+            while (open) {
+              // request line and headers, then the Content-Length body
+              val head = new StringBuilder
+              while (!head.endsWith("\r\n\r\n")) {
+                val c = in.read()
+                if (c < 0) throw new java.io.EOFException
+                head.append(c.toChar)
+              }
+              val length = head.toString.split("\r\n")
+                .find(_.toLowerCase.startsWith("content-length:"))
+                .map(_.substring(15).trim.toInt).getOrElse(0)
+              in.readNBytes(length)
+              val (reply, close) = queue.poll()
+              out.write(reply.getBytes("UTF-8"))
+              out.flush()
+              open = !close
+            }
+          } catch { case _: Exception => }
+          finally socket.close()
+        })
+        serve.setDaemon(true)
+        serve.start()
+      } catch { case _: java.io.IOException => } // closed at the end of the test
+    })
+    acceptor.setDaemon(true)
+    acceptor.start()
+    try f(ss.getLocalPort) finally ss.close()
+  }
+
+  test("a malformed status or Content-Length returns the connection: the next call succeeds") {
+    val ok = "HTTP/1.1 200 OK\r\nContent-Length: 2\r\n\r\nOK"
+    val malformed = Seq(
+      "HTTP/1.1 2x0 OK\r\nContent-Length: 2\r\n\r\nOK",
+      "HTTP/1.1 abc\r\n\r\n",
+      "HTTP/1.1 200 OK\r\nContent-Length: abc\r\n\r\nOK",
+      "HTTP/1.1 200 OK\r\nContent-Length: -1\r\n\r\nOK",
+      "HTTP/1.1 200 OK\r\nContent-Length: 99999999999\r\n\r\nOK",
+      "HTTP/1.1 200 OK\r\nContent-Length: +2\r\n\r\nOK")
+    withStub(malformed.flatMap(m => Seq(m -> false, ok -> false))) { port =>
+      val transport = new HttpPooledTransport("127.0.0.1", port,
+        PoolConfig(maxPoolSize = 1, borrowTimeoutMs = 200))
+      try for (m <- malformed) {
+        val bad = transport.post("/encrypt", "{}", Map.empty)
+        assert(bad.status == 0 && bad.error.contains("malformed"), s"$m -> $bad")
+        val good = transport.post("/encrypt", "{}", Map.empty)
+        assert(good.status == 200 && good.body == "OK", s"after $m -> $good")
+      } finally transport.shutdown()
+    }
+  }
+
+  test("a Content-Length larger than the body that arrives allocates no more than a chunk") {
+    // 2 GB announced, 2 bytes sent, then the connection closes: the read
+    // fails, and the retry on a fresh connection gets the next reply
+    val huge = "HTTP/1.1 200 OK\r\nContent-Length: 2147483647\r\n\r\nOK"
+    val ok = "HTTP/1.1 200 OK\r\nContent-Length: 2\r\n\r\nOK"
+    withStub(Seq(huge -> true, ok -> false, huge -> true, huge -> true, ok -> false)) { port =>
+      val transport = new HttpPooledTransport("127.0.0.1", port, PoolConfig(maxPoolSize = 1))
+      try {
+        val r = transport.post("/encrypt", "{}", Map.empty)
+        assert(r.status == 200 && r.body == "OK", r)
+        val failed = transport.post("/encrypt", "{}", Map.empty)
+        assert(failed.status == 0 && failed.error.contains("failed after retry"), failed)
+        val again = transport.post("/encrypt", "{}", Map.empty)
+        assert(again.status == 200 && again.body == "OK", again)
+      } finally transport.shutdown()
+    }
+  }
+
   test("dead port: status-0 error response, never a throw") {
     // bind-then-close to get a port with nothing listening
     val ss = new java.net.ServerSocket(0)

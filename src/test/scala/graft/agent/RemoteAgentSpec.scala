@@ -75,7 +75,7 @@ final class FaultInjectingTransport(inner: ProtectionTransport) extends Protecti
       }
       case _ => None
     }
-    patched.map(b => resp.copy(body = b)).getOrElse(resp)
+    patched.map(b => TransportResponse(resp.status, b, resp.error)).getOrElse(resp)
   }
 }
 

@@ -50,6 +50,47 @@ class CryptoCoreSpec extends AnyFunSuite {
     assert(a.sameElements(b.take(3)))
   }
 
+  test("XOR keystream: every single-bit state at step 32 comes back at step 64") {
+    def step(h: Long, n: Int): Long = (0 until n).foldLeft(h)((s, _) => StableHash.keystreamNext(s))
+    for (bit <- 0 until 64) {
+      val seed = 1L << bit
+      assert(step(seed, 32) == step(seed, 64), s"bit $bit")
+    }
+    // the step is OR-linear, so every seed's state repeats the same way
+    forAll(Gen.zip(Gen.long, Gen.long)) { case (a, b) =>
+      assert(StableHash.keystreamNext(a | b) ==
+        (StableHash.keystreamNext(a) | StableHash.keystreamNext(b)))
+      assert(step(a, 32) == step(a, 64))
+    }
+  }
+
+  test("property: the table keystream matches the byte-stepped reference") {
+    val cases = for {
+      seed <- Gen.frequency(4 -> Gen.long, 1 -> Gen.choose(0, 63).map(1L << _),
+        1 -> Gen.oneOf(0L, -1L))
+      len <- Gen.frequency(3 -> Gen.choose(0, 130), 2 -> Gen.choose(0, 12 * 1024))
+      srcOff <- Gen.choose(0, 40)
+      dstOff <- Gen.choose(0, 40)
+      fill <- Gen.long
+    } yield (seed, len, srcOff, dstOff, fill)
+    forAll(cases, 2000) { case (seed, len, srcOff, dstOff, fill) =>
+      val rng = new java.util.SplittableRandom(fill)
+      val src = Array.fill[Byte](srcOff + len + 7)(rng.nextInt(256).toByte)
+      val init = Array.fill[Byte](dstOff + len + 7)(rng.nextInt(256).toByte)
+      val expected = init.clone()
+      KeystreamReference.xorKeystreamCopy(seed, src, srcOff, expected, dstOff, len)
+      val table = init.clone()
+      StableHash.xorKeystream(StableHash.keystream(seed), src, srcOff, table, dstOff, len)
+      assert(table.sameElements(expected), s"seed $seed len $len")
+    }
+    // through the codec, whose seed is the context's FNV-1a 64
+    val page = Array.tabulate[Byte](10000)(i => (i * 7).toByte)
+    val expected = new Array[Byte](page.length)
+    KeystreamReference.xorKeystreamCopy(StableHash.fnv1a64(ctx.seedString), page, 0,
+      expected, 0, page.length)
+    assert(xor.encrypt(page).sameElements(expected))
+  }
+
   test("different contexts give different keystreams") {
     val other = XorCodec(ProtectionContext("key-1", "col2"))
     val pt = "same plaintext".getBytes

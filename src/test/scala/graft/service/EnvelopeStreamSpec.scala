@@ -1,11 +1,12 @@
 package graft.service
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.Base64
 
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.service.HostileInputSpec.{bodyMutations, forAll}
+import graft.service.HostileInputSpec.{bodyByteMutations, bodyMutations, forAll}
 import graft.service.JsonEnvelope.{DecryptResponse, EncryptResponse, ProtectRequest}
 
 /** The streamed envelope against its tree form ([[EnvelopeReference]]):
@@ -14,6 +15,8 @@ import graft.service.JsonEnvelope.{DecryptResponse, EncryptResponse, ProtectRequ
   * the builders write, `HostileInputSpec`'s mutations of them, and edits
   * aimed at the page value: duplicate keys, escapes, non-string scalars and
   * containers where the value goes, and base64 that is not quite base64.
+  * A body's bytes parse exactly as the text they decode to, for each of
+  * those bodies and for bytes that are not valid UTF-8.
   */
 class EnvelopeStreamSpec extends AnyFunSuite {
   import EnvelopeStreamSpec._
@@ -29,46 +32,89 @@ class EnvelopeStreamSpec extends AnyFunSuite {
     case _ => false
   }
 
+  /** The bytes the tree's `writeValueAsString` text is sent as. */
+  private def utf8(json: String): Array[Byte] = json.getBytes(UTF_8)
+
   /** Every parse of `body` equals the reference's, and what it parsed to
-    * builds the reference's bytes.
+    * builds the reference's bytes; so does every parse of its bytes.
     */
   private def checkParses(body: String): Unit = {
     for (encrypt <- Seq(true, false)) {
       val streamed = ProtectRequest.parse(body, encrypt)
       assert(sameRequest(streamed, EnvelopeReference.parseRequest(body, encrypt)),
         s"request parse (encrypt = $encrypt) differs on\n$body")
-      assert(streamed.toJson == EnvelopeReference.requestJson(streamed), body)
+      assert(streamed.toBytes.sameElements(utf8(EnvelopeReference.requestJson(streamed))), body)
     }
     val enc = EncryptResponse.parse(body)
     assert(sameEither(enc, EnvelopeReference.parseEncrypt(body))(
       _.encryptedValue, _.copy(encryptedValue = Array.emptyByteArray)),
       s"encrypt response parse differs on\n$body")
-    enc.foreach(r => assert(r.toJson == EnvelopeReference.encryptJson(r), body))
+    enc.foreach(r => assert(r.toBytes.sameElements(utf8(EnvelopeReference.encryptJson(r))), body))
     val dec = DecryptResponse.parse(body)
     assert(sameEither(dec, EnvelopeReference.parseDecrypt(body))(
       _.value, _.copy(value = Array.emptyByteArray)),
       s"decrypt response parse differs on\n$body")
-    dec.foreach(r => assert(r.toJson == EnvelopeReference.decryptJson(r), body))
+    dec.foreach(r => assert(r.toBytes.sameElements(utf8(EnvelopeReference.decryptJson(r))), body))
+    checkBytes(utf8(body))
+  }
+
+  /** Every parse of `bytes` equals the parse of the text they decode to. */
+  private def checkBytes(bytes: Array[Byte]): Unit = {
+    val text = new String(bytes, UTF_8)
+    def where = s"bytes ${bytes.map("%02x".format(_)).mkString}\nread as\n$text"
+    for (encrypt <- Seq(true, false))
+      assert(sameRequest(ProtectRequest.parse(bytes, encrypt), ProtectRequest.parse(text, encrypt)),
+        s"request parse (encrypt = $encrypt) of $where")
+    assert(sameEither(EncryptResponse.parse(bytes), EncryptResponse.parse(text))(
+      _.encryptedValue, _.copy(encryptedValue = Array.emptyByteArray)),
+      s"encrypt response parse of $where")
+    assert(sameEither(DecryptResponse.parse(bytes), DecryptResponse.parse(text))(
+      _.value, _.copy(value = Array.emptyByteArray)), s"decrypt response parse of $where")
   }
 
   test("property: every envelope builds the tree's bytes and parses back to itself") {
     forAll(envelopes, 300) { case (request, encrypted, decrypted) =>
-      val body = request.toJson
-      assert(body == EnvelopeReference.requestJson(request))
-      assert(sameRequest(ProtectRequest.parse(body, request.encrypt), request.copy(
-        datatypeLengthStr = "", encryptionMetadata =
-          if (request.encrypt) Map.empty else request.encryptionMetadata)))
-      assert(encrypted.toJson == EnvelopeReference.encryptJson(encrypted))
-      assert(decrypted.toJson == EnvelopeReference.decryptJson(decrypted))
-      Seq(body, encrypted.toJson, decrypted.toJson).foreach(checkParses)
+      val body = request.toBytes
+      assert(body.sameElements(utf8(EnvelopeReference.requestJson(request))))
+      val parsedBack = request.copy(datatypeLengthStr = "", encryptionMetadata =
+        if (request.encrypt) Map.empty else request.encryptionMetadata)
+      // the text, which may hold a lone surrogate that UTF-8 writes as '?'
+      assert(sameRequest(ProtectRequest.parse(EnvelopeReference.requestJson(request),
+        request.encrypt), parsedBack))
+      assert(encrypted.toBytes.sameElements(utf8(EnvelopeReference.encryptJson(encrypted))))
+      assert(decrypted.toBytes.sameElements(utf8(EnvelopeReference.decryptJson(decrypted))))
+      Seq(body, encrypted.toBytes, decrypted.toBytes)
+        .foreach(b => checkParses(new String(b, UTF_8)))
+      Seq(EnvelopeReference.requestJson(request), EnvelopeReference.encryptJson(encrypted),
+        EnvelopeReference.decryptJson(decrypted)).foreach(checkParses)
     }
   }
 
   test("property: mutated bodies parse exactly as the tree parses them") {
     forAll(envelopes, 20) { case (request, encrypted, decrypted) =>
-      for (body <- Seq(request.toJson, encrypted.toJson, decrypted.toJson))
-        forAll(bodyMutations(body), 40) { case (_, mutated) => checkParses(mutated) }
+      for (body <- Seq(request.toBytes, encrypted.toBytes, decrypted.toBytes)) {
+        val text = new String(body, UTF_8)
+        forAll(bodyMutations(text), 40) { case (_, mutated) => checkParses(mutated) }
+        forAll(bodyByteMutations(text), 40) { case (_, mutated) => checkBytes(mutated) }
+      }
     }
+  }
+
+  test("bytes that are not valid UTF-8 parse as the text they decode to") {
+    val request = EnvelopeReference.requestJson(ProtectRequest(encrypt = true, "c",
+      Some("BYTE_ARRAY"), None, "", Some("UNCOMPRESSED"), Some("PLAIN"), Map("k" -> "v"),
+      Some("UNCOMPRESSED"), "k", "u", "{}", "1", "ABC".getBytes(UTF_8), Map.empty))
+    val body = utf8(request)
+    val odd = Seq("80", "ff", "c3", "e6a0", "c0af", "e080af", "eda080", "eda0bdedb880",
+      "f4908080", "efbbbf", "00").map(h => h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray)
+    // before each quote (a multibyte sequence cut short there), and at the front
+    val at = 0 +: body.indices.filter(body(_) == '"')
+    for (seq <- odd; i <- at) checkBytes(body.take(i) ++ seq ++ body.drop(i))
+    assert(ProtectRequest.parse(body, encrypt = true).value.sameElements("ABC".getBytes(UTF_8)))
+    // a value byte above 0x7F fails the value, as its replacement char does
+    val inValue = request.replace("QUJD", "QU\u00e9JD")
+    checkBytes(utf8(inValue))
+    assert(ProtectRequest.parse(utf8(inValue), encrypt = true).value.isEmpty)
   }
 
   test("property: odd page values and duplicate keys parse exactly as the tree parses them") {

@@ -81,13 +81,13 @@ class HostileInputSpec extends AnyFunSuite {
     "dict_page_num_values" -> n.toString, "page_encoding" -> "PLAIN")
 
   private def request(encrypt: Boolean, value: Array[Byte],
-      attrs: Map[String, String], metadata: Map[String, String] = Map.empty): String =
+      attrs: Map[String, String], metadata: Map[String, String] = Map.empty): Array[Byte] =
     ProtectRequest(encrypt = encrypt, columnName = "email", datatype = Some("BYTE_ARRAY"),
       datatypeLength = None, datatypeLengthStr = "", compression = Some("UNCOMPRESSED"),
       encoding = Some("PLAIN"), encodingAttributes = attrs,
       encryptedCompression = Some("UNCOMPRESSED"), keyId = "k1", userId = "user456",
       applicationContext = """{"user_id": "user456"}""", referenceId = "1",
-      value = value, encryptionMetadata = metadata).toJson
+      value = value, encryptionMetadata = metadata).toBytes
 
   private val tokenBody =
     FlatJson.write(Map("client_id" -> "graft", "api_key" -> "graft-api-key"))
@@ -192,7 +192,8 @@ class HostileInputSpec extends AnyFunSuite {
       "/encrypt" -> (b => EncryptResponse.parse(b).isRight),
       "/decrypt" -> (b => DecryptResponse.parse(b).isRight),
       "/token" -> (b => FlatJson.parse(b).get("token").exists(_.nonEmpty)))
-    val bodies = Seq("/encrypt" -> encryptBody, "/decrypt" -> decryptBody, "/token" -> tokenBody)
+    val bodies = Seq("/encrypt" -> new String(encryptBody, UTF_8),
+      "/decrypt" -> new String(decryptBody, UTF_8), "/token" -> tokenBody)
     for ((endpoint, body) <- bodies) {
       val headers = if (endpoint == "/token") Map.empty[String, String] else auth
       val rejected = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
@@ -300,5 +301,34 @@ object HostileInputSpec {
           path.init.foldLeft(root)(_.get(_)).asInstanceOf[ObjectNode].set[JsonNode](path.last, v)
           "type-swapped" -> bodyMapper.writeValueAsString(root)
         })
+  }
+
+  /** Bytes that are not valid UTF-8, or that a byte parser may take for
+    * another encoding: a stray continuation or 0xFF byte, a multibyte
+    * sequence cut short, overlong and CESU-8 surrogate forms, a code point
+    * past U+10FFFF, a byte-order mark and a NUL.
+    */
+  private val oddSequences: Seq[Array[Byte]] = Seq("80", "ff", "c3", "e6a0", "f09f9a",
+    "c0af", "e080af", "eda080", "edb080", "eda0bdedb880", "f4908080", "efbbbf", "00")
+    .map(h => h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray)
+
+  /** [[bodyMutations]] over the body's UTF-8 bytes, kept as bytes: cut at
+    * any byte, one bit flipped, a field's type swapped, or one of the
+    * [[oddSequences]] put anywhere or just before a quote.
+    */
+  private[service] def bodyByteMutations(body: String): Gen[(String, Array[Byte])] = {
+    val bytes = body.getBytes(UTF_8)
+    val quotes = bytes.indices.filter(bytes(_) == '"')
+    Gen.oneOf(
+      Gen.choose(0, bytes.length - 1).map(n => "truncated" -> bytes.take(n)),
+      for (i <- Gen.choose(0, bytes.length - 1); b <- Gen.choose(0, 7)) yield {
+        val m = bytes.clone(); m(i) = (m(i) ^ (1 << b)).toByte
+        "flipped" -> m
+      },
+      bodyMutations(body).suchThat(_._1 == "type-swapped").map { case (k, m) => k -> m.getBytes(UTF_8) },
+      for {
+        seq <- Gen.oneOf(oddSequences)
+        i <- Gen.oneOf(Gen.choose(0, bytes.length), Gen.oneOf(quotes))
+      } yield "odd-utf8" -> (bytes.take(i) ++ seq ++ bytes.drop(i)))
   }
 }
