@@ -1,6 +1,6 @@
 package graft.service
 
-import java.io.{OutputStream, StringWriter}
+import java.io.StringWriter
 import java.nio.{ByteBuffer, CharBuffer}
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.util.Base64
@@ -306,7 +306,7 @@ object JsonEnvelope {
     }
 
     /** The body's UTF-8 bytes: the generator's text around the page value,
-      * and the value's base64 encoded once, in place.
+      * and the value's base64 (the JDK encoder's vectorised block loop).
       */
     def result(): Array[Byte] = {
       g.writeEndObject()
@@ -315,20 +315,11 @@ object JsonEnvelope {
       if (value == null) return text.toString.getBytes(UTF_8)
       val head = text.substring(0, valueAt).getBytes(UTF_8)
       val tail = text.substring(valueAt).getBytes(UTF_8)
-      val encoded = 4 * ((value.length + 2) / 3)
-      val body = new Array[Byte](head.length + encoded + tail.length)
+      val encoded = Base64.getEncoder.encode(value)
+      val body = new Array[Byte](head.length + encoded.length + tail.length)
       System.arraycopy(head, 0, body, 0, head.length)
-      val base64 = Base64.getEncoder.wrap(new OutputStream {
-        private var at = head.length
-        override def write(b: Int): Unit = { body(at) = b.toByte; at += 1 }
-        override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-          System.arraycopy(b, off, body, at, len)
-          at += len
-        }
-      })
-      base64.write(value)
-      base64.close()
-      System.arraycopy(tail, 0, body, head.length + encoded, tail.length)
+      System.arraycopy(encoded, 0, body, head.length, encoded.length)
+      System.arraycopy(tail, 0, body, head.length + encoded.length, tail.length)
       body
     }
   }
