@@ -185,7 +185,7 @@ object HttpPooledTransport {
   /** A Content-Length or status code: decimal digits only, at most
     * `Int.MaxValue`; None for anything else.
     */
-  private[graft] def decimal(s: String): Option[Int] =
+  private def decimal(s: String): Option[Int] =
     if (s.isEmpty || s.length > 10 || !s.forall(c => c >= '0' && c <= '9')) None
     else Some(s.toLong).filter(_ <= Int.MaxValue).map(_.toInt)
 
@@ -194,7 +194,7 @@ object HttpPooledTransport {
     * [[BodyChunk]] is read chunk by chunk and joined once it is all there.
     * Throws an `IOException` if the stream ends first.
     */
-  private[graft] def readBody(in: InputStream, length: Int): Array[Byte] = {
+  private def readBody(in: InputStream, length: Int): Array[Byte] = {
     val chunks = ArrayBuffer.empty[Array[Byte]]
     var got = 0
     while (got < length || chunks.isEmpty) {

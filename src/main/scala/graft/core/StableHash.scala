@@ -34,7 +34,6 @@ object StableHash {
 
   /** Bytes in a [[keystream]] table. */
   final val KeystreamTableSize = 64
-  private final val Period = 32
 
   /** The keystream seeded at `seed`, whole, as its first 64 bytes. The step
     * is OR-linear (it maps `a | b` to the OR of the images of `a` and `b`),
@@ -62,23 +61,11 @@ object StableHash {
     */
   def xorKeystream(table: Array[Byte], src: Array[Byte], srcOff: Int,
       dst: Array[Byte], dstOff: Int, len: Int): Unit = {
-    val head = math.min(len, KeystreamTableSize)
     var i = 0
-    while (i < head) {
-      dst(dstOff + i) = (src(srcOff + i) ^ table(i)).toByte
-      i += 1
-    }
-    // from byte 64 on, one period at a time: i is a multiple of 32 here
     while (i < len) {
-      val n = math.min(Period, len - i)
-      val s = srcOff + i
-      val d = dstOff + i
-      var j = 0
-      while (j < n) {
-        dst(d + j) = (src(s + j) ^ table(Period + j)).toByte
-        j += 1
-      }
-      i += n
+      val k = if (i < KeystreamTableSize) i else 32 + (i & 31)
+      dst(dstOff + i) = (src(srcOff + i) ^ table(k)).toByte
+      i += 1
     }
   }
 }

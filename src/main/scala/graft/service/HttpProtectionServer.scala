@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 
-import graft.agent.{HttpPooledTransport, ProtectionTransport, TransportResponse}
+import graft.agent.{ProtectionTransport, TransportResponse}
 
 /** Real localhost HTTP listener for a [[ProtectionTransport]] — the socket
   * half the reference gets from Crow (`dbps_api_server.cpp:107-285`,
@@ -39,15 +39,7 @@ final class HttpProtectionServer(transport: ProtectionTransport, port: Int = 0) 
           .map(e => e.getKey -> e.getValue.asScala.mkString(",")).toMap
         val resp = exchange.getRequestMethod match {
           case "GET" => transport.get(path, headers)
-          case "POST" =>
-            Option(exchange.getRequestHeaders.getFirst("Content-Length")) match {
-              case None => transport.post(path, exchange.getRequestBody.readAllBytes(), headers)
-              case Some(length) => HttpPooledTransport.decimal(length.trim) match {
-                case Some(n) =>
-                  transport.post(path, HttpPooledTransport.readBody(exchange.getRequestBody, n), headers)
-                case None => TransportResponse(400, s"""{"error":"invalid Content-Length"}""")
-              }
-            }
+          case "POST" => transport.post(path, exchange.getRequestBody.readAllBytes(), headers)
           case other => TransportResponse(405, s"""{"error":"method $other not allowed"}""")
         }
         val bytes = resp.bytes

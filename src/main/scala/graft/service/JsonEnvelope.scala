@@ -127,35 +127,22 @@ object JsonEnvelope {
     if (!validUtf8(envelope)) return readBody(new String(body, UTF_8), container)
     read(mapper.getFactory.createParser(envelope), container, p =>
       if (p.currentToken != JsonToken.VALUE_STRING || byteOffset(p) != start)
-        pageValue(p, envelope)
+        pageValue(p)
       else {
         p.streamReadConstraints.validateStringLength(end - start) // as getText would
         Some(decodeBase64(body, start, end - start))
       })
   }
 
-  /** Stream `body` over its UTF-8 bytes. The value's string is
-    * base64-decoded straight from those bytes, or from the parser's
-    * characters when it holds an escape or a byte that is not printable
-    * ASCII; any other scalar there is stringified first, as `asText` does,
-    * and a container or null is missing. Every other field is `readTree` of
-    * its own subtree, so a later duplicate key replaces the whole earlier
-    * subtree, as in a tree. None for malformed JSON or a root that is not an
-    * object.
-    *
-    * UTF-8 cannot carry a lone surrogate (it writes '?'), and the parser
-    * reads a leading NUL or byte-order mark as a sign of another encoding:
-    * such bodies are read from their characters instead.
+  /** Read `body` from its characters: the page value's string is
+    * base64-decoded from the parser's characters; any other scalar there is
+    * stringified first, as `asText` does, and a container or null is
+    * missing. Every other field is `readTree` of its own subtree, so a later
+    * duplicate key replaces the whole earlier subtree, as in a tree. None for
+    * malformed JSON or a root that is not an object.
     */
-  private def readBody(body: String, container: String): Option[Body] = {
-    val utf8 = body.getBytes(UTF_8)
-    val sniff = sniffed(utf8)
-    val fromBytes =
-      if (sniff) None
-      else read(mapper.getFactory.createParser(utf8), container, pageValue(_, utf8))
-    if (!sniff && fromBytes.forall(b => !holds('?', b.root))) fromBytes
-    else read(mapper.getFactory.createParser(body), container, pageValue(_, null))
-  }
+  private def readBody(body: String, container: String): Option[Body] =
+    read(mapper.getFactory.createParser(body), container, pageValue)
 
   /** A leading NUL or UTF-8 byte-order mark: a byte parser would take the
     * body for another encoding.
@@ -164,13 +151,6 @@ object JsonEnvelope {
     utf8.iterator.take(4).contains(0.toByte) ||
       (utf8.length >= 3 && utf8(0) == 0xEF.toByte && utf8(1) == 0xBB.toByte &&
         utf8(2) == 0xBF.toByte)
-
-  /** Whether a key or a string in `node` contains `c`. */
-  private def holds(c: Char, node: JsonNode): Boolean =
-    if (node.isTextual) node.textValue.indexOf(c) >= 0
-    else if (node.isObject)
-      node.fields().asScala.exists(e => e.getKey.indexOf(c) >= 0 || holds(c, e.getValue))
-    else node.elements().asScala.exists(holds(c, _)) // an array's; a scalar has none
 
   /** Whether `bytes` decode as UTF-8 with nothing replaced, i.e. whether
     * decoding and encoding them again gives the same bytes.
@@ -250,21 +230,15 @@ object JsonEnvelope {
     } catch { case _: Exception => None }
     finally p.close()
 
-  /** The page value at the parser's token; `utf8` is the parser's input,
-    * or null when it reads characters.
-    */
-  private def pageValue(p: JsonParser, utf8: Array[Byte]): Option[Array[Byte]] =
+  /** The page value at the parser's token. */
+  private def pageValue(p: JsonParser): Option[Array[Byte]] =
     if (p.currentToken != JsonToken.VALUE_STRING) {
       val node = mapper.readTree[JsonNode](p)
       if (node.isNull || node.isContainerNode) None else Some(decodeBase64(node.asText()))
     } else {
-      // the parser has read just past the opening quote and no further
-      val start = if (utf8 == null) -1 else byteOffset(p).toInt
-      val end = if (start > 0 && utf8(start - 1) == '"') plainEnd(utf8, start) else -1
-      val len = if (end < 0) p.getTextLength else end - start
+      val len = p.getTextLength
       p.streamReadConstraints.validateStringLength(len) // as getText would
-      Some(if (end < 0) decodeBase64(p.getTextCharacters, p.getTextOffset, len)
-        else decodeBase64(utf8, start, len))
+      Some(decodeBase64(p.getTextCharacters, p.getTextOffset, len))
     }
 
   /** Builds one body with the generator `writeValueAsString` uses, field by
