@@ -83,15 +83,17 @@ object JsonEnvelope {
     val latin1 = new Array[Byte](len)
     val narrowed = ISO_8859_1.newEncoder()
       .encode(CharBuffer.wrap(chars, off, len), ByteBuffer.wrap(latin1), true)
-    if (narrowed.isError) Array.emptyByteArray else decodeBase64(latin1, 0, len)
+    if (narrowed.isError) Array.emptyByteArray
+    else base64(latin1, 0, len).getOrElse(Array.emptyByteArray)
   }
 
-  private def decodeBase64(bytes: Array[Byte], off: Int, len: Int): Array[Byte] =
+  /** `bytes(off until off + len)` base64-decoded; None if they are not base64. */
+  private def base64(bytes: Array[Byte], off: Int, len: Int): Option[Array[Byte]] =
     try {
       val out = Base64.getDecoder.decode(ByteBuffer.wrap(bytes, off, len))
-      if (out.remaining == out.capacity) out.array()
-      else java.util.Arrays.copyOfRange(out.array(), out.position(), out.limit())
-    } catch { case _: IllegalArgumentException => Array.emptyByteArray }
+      Some(if (out.remaining == out.capacity) out.array()
+        else java.util.Arrays.copyOfRange(out.array(), out.position(), out.limit()))
+    } catch { case _: IllegalArgumentException => None }
 
   private[service] def stringMap(node: JsonNode): Map[String, String] =
     if (node == null || !node.isObject) Map.empty
@@ -108,18 +110,20 @@ object JsonEnvelope {
     * UTF-8 bytes, exactly as the text they decode to is read, in one pass
     * over the page value.
     *
-    * Jackson reads up to the value's opening quote; one scan finds its
-    * closing quote; the value is base64-decoded from the bytes between, and
-    * Jackson reads the rest of the body with that value cut out of it, so it
-    * never walks the value. That holds for a body that is valid UTF-8 outside
-    * the value, with a value of printable ASCII and no escape, and with no
+    * Jackson reads up to the value's opening quote; one scan finds the next
+    * quote; the bytes between are base64-decoded, and Jackson reads the rest
+    * of the body with them cut out, so it never walks the value. Base64 has
+    * no quote, backslash, control or non-ASCII byte, so a value that decodes
+    * ends at that quote and reads as these bytes. That holds for a body that
+    * is valid UTF-8 outside the value, with a base64 value, and with no
     * byte-order mark or NUL in front, which covers every body the builders
     * write. Any other body is read from its text.
     */
   private def readBody(body: Array[Byte], container: String): Option[Body] = {
     val start = if (sniffed(body)) -1 else valueStart(body, container)
-    val end = if (start < 0) -1 else plainEnd(body, start)
-    if (end < 0) return readBody(new String(body, UTF_8), container)
+    val end = if (start < 0) -1 else quoteAt(body, start)
+    val value = if (end < 0) None else base64(body, start, end - start)
+    if (value.isEmpty) return readBody(new String(body, UTF_8), container)
     // the body with the value cut out, so that it reads as ""
     val envelope = new Array[Byte](body.length - (end - start))
     System.arraycopy(body, 0, envelope, 0, start)
@@ -130,7 +134,7 @@ object JsonEnvelope {
         pageValue(p)
       else {
         p.streamReadConstraints.validateStringLength(end - start) // as getText would
-        Some(decodeBase64(body, start, end - start))
+        value
       })
   }
 
@@ -148,17 +152,20 @@ object JsonEnvelope {
     * body for another encoding.
     */
   private def sniffed(utf8: Array[Byte]): Boolean =
-    utf8.iterator.take(4).contains(0.toByte) ||
+    (0 until math.min(4, utf8.length)).exists(utf8(_) == 0) ||
       (utf8.length >= 3 && utf8(0) == 0xEF.toByte && utf8(1) == 0xBB.toByte &&
         utf8(2) == 0xBF.toByte)
 
   /** Whether `bytes` decode as UTF-8 with nothing replaced, i.e. whether
     * decoding and encoding them again gives the same bytes.
     */
-  private def validUtf8(bytes: Array[Byte]): Boolean =
-    bytes.forall(_ >= 0) ||
+  private def validUtf8(bytes: Array[Byte]): Boolean = {
+    var ascii = 0
+    while (ascii < bytes.length && bytes(ascii) >= 0) ascii += 1
+    ascii == bytes.length ||
       (try { UTF_8.newDecoder().decode(ByteBuffer.wrap(bytes)); true }
       catch { case _: java.nio.charset.CharacterCodingException => false })
+  }
 
   /** The parser's byte offset, just past the opening quote of a string
     * token it has not read further.
@@ -189,19 +196,11 @@ object JsonEnvelope {
     finally p.close()
   }
 
-  /** The index of the quote that closes a string whose first char is at
-    * `start` in `utf8`, when every byte up to it is printable ASCII and none
-    * is a backslash; -1 otherwise.
-    */
-  private def plainEnd(utf8: Array[Byte], start: Int): Int = {
+  /** The index of the first quote in `utf8` from `start`; -1 if there is none. */
+  private def quoteAt(utf8: Array[Byte], start: Int): Int = {
     var i = start
-    while (i < utf8.length) {
-      val b = utf8(i)
-      if (b == '"') return i
-      if (b < 0x20 || b == '\\') return -1 // a byte >= 0x80 is negative
-      i += 1
-    }
-    -1
+    while (i < utf8.length && utf8(i) != '"') i += 1
+    if (i < utf8.length) i else -1
   }
 
   private def read(p: JsonParser, container: String,

@@ -131,6 +131,12 @@ class EnvelopeStreamSpec extends AnyFunSuite {
     val abc = "ABC".getBytes("UTF-8").toSeq
     assert(valueOf("\"QUJD\"") == abc)
     assert(valueOf("\"QUJ\\u0044\"") == abc) // an escaped char decodes like any other
+    // the byte parse reads up to the first quote; an escaped one there sends
+    // the body to the text parse, as any value that is not base64 does
+    for (v <- Seq("\"QUJ\\u0044\"", "\"QU\\\"JD\"", "\"QU\\\"\"", "\"QUJ\\\\\""))
+      checkBytes(utf8(body.replace(Placeholder, v)))
+    assert(ProtectRequest.parse(utf8(body.replace(Placeholder, "\"QUJ\\u0044\"")), encrypt = true)
+      .value.toSeq == abc)
     assert(valueOf("1234") == Base64.getDecoder.decode("1234").toSeq) // stringified
     assert(valueOf("\"QUI\"") == "AB".getBytes("UTF-8").toSeq) // padding may be left out
     for (bad <- Seq("\"QU JD\"", "\"QUJÉ\"", "\"QUJ\ud800\"", "null", "[\"QUJD\"]", "{}"))
