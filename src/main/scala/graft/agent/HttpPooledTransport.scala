@@ -1,10 +1,10 @@
 package graft.agent
 
-import java.io.{BufferedInputStream, BufferedOutputStream, IOException, InputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, IOException}
 import java.net.{InetSocketAddress, Socket, SocketTimeoutException}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import scala.collection.mutable.{ArrayBuffer, ArrayDeque}
+import scala.collection.mutable.ArrayDeque
 
 /** Pool configuration — the reference's `HttplibPoolRegistry::PoolConfig`
   * with its default constants (`httplib_pool_registry.h:36-66`).
@@ -46,6 +46,7 @@ final case class PoolConfig(
 final class HttpPooledTransport(host: String, port: Int,
     config: PoolConfig = PoolConfig()) extends ProtectionTransport {
 
+  import HttpFraming.MalformedHttpException
   import HttpPooledTransport._
 
   private val idle = new ArrayDeque[(PooledConnection, Long)]()
@@ -106,7 +107,7 @@ final class HttpPooledTransport(host: String, port: Int,
         discard(conn)
         Some(TransportResponse(0, "",
           s"$method $endpoint timed out after ${config.readTimeoutMs} ms: ${e.getMessage}"))
-      case e: MalformedResponseException => // the server answered: no retry
+      case e: MalformedHttpException => // the server answered: no retry
         discard(conn)
         Some(TransportResponse(0, "", s"$method $endpoint: ${e.getMessage}"))
       case _: IOException =>
@@ -173,45 +174,7 @@ final class HttpPooledTransport(host: String, port: Int,
 }
 
 object HttpPooledTransport {
-
-  /** A reply the server sent whose framing cannot be read. */
-  private final class MalformedResponseException(message: String) extends IOException(message)
-
-  /** The most a Content-Length makes a reader allocate ahead of the bytes
-    * that have arrived.
-    */
-  private final val BodyChunk = 1 << 20
-
-  /** A Content-Length or status code: decimal digits only, at most
-    * `Int.MaxValue`; None for anything else.
-    */
-  private def decimal(s: String): Option[Int] =
-    if (s.isEmpty || s.length > 10 || !s.forall(c => c >= '0' && c <= '9')) None
-    else Some(s.toLong).filter(_ <= Int.MaxValue).map(_.toInt)
-
-  /** Read a `length`-byte body from `in`. The length is only the peer's
-    * word, so memory follows the bytes that arrive: a body over
-    * [[BodyChunk]] is read chunk by chunk and joined once it is all there.
-    * Throws an `IOException` if the stream ends first.
-    */
-  private def readBody(in: InputStream, length: Int): Array[Byte] = {
-    val chunks = ArrayBuffer.empty[Array[Byte]]
-    var got = 0
-    while (got < length || chunks.isEmpty) {
-      val chunk = new Array[Byte](math.min(length - got, BodyChunk))
-      if (in.readNBytes(chunk, 0, chunk.length) < chunk.length)
-        throw new IOException(s"connection closed mid-body ($length bytes announced)")
-      chunks += chunk
-      got += chunk.length
-    }
-    if (chunks.size == 1) chunks.head
-    else {
-      val body = new Array[Byte](length)
-      var off = 0
-      chunks.foreach { c => System.arraycopy(c, 0, body, off, c.length); off += c.length }
-      body
-    }
-  }
+  import HttpFraming._
 
   /** One persistent keep-alive connection. The socket opens lazily on first
     * use so pool bookkeeping (which counts connections, not sockets) matches
@@ -248,36 +211,14 @@ object HttpPooledTransport {
       readResponse()
     }
 
-    private def readLine(): String = {
-      val buf = new StringBuilder
-      var c = in.read()
-      while (c != -1 && c != '\n') {
-        if (c != '\r') buf.append(c.toChar)
-        c = in.read()
-      }
-      if (c == -1 && buf.isEmpty) throw new IOException("connection closed by peer")
-      buf.toString
-    }
-
     private def readResponse(): TransportResponse = {
-      val statusLine = readLine()
+      val statusLine = readLine(in)
       val parts = statusLine.split(" ", 3)
       val status =
         if (parts.length < 2 || !parts(0).startsWith("HTTP/") || parts(1).length != 3) None
         else decimal(parts(1))
-      if (status.isEmpty) throw new MalformedResponseException(s"malformed status line: '$statusLine'")
-      var contentLength = 0
-      var line = readLine()
-      while (line.nonEmpty) {
-        val idx = line.indexOf(':')
-        if (idx > 0 && line.substring(0, idx).equalsIgnoreCase("Content-Length")) {
-          val value = line.substring(idx + 1).trim
-          contentLength = decimal(value).getOrElse(
-            throw new MalformedResponseException(s"malformed Content-Length: '$value'"))
-        }
-        line = readLine()
-      }
-      TransportResponse(status.get, readBody(in, contentLength))
+      if (status.isEmpty) throw new MalformedHttpException(s"malformed status line: '$statusLine'")
+      TransportResponse(status.get, readBody(in, contentLength(readHeaders(in))))
     }
 
     def close(): Unit =

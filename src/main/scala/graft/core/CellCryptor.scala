@@ -50,10 +50,7 @@ final case class CellCryptor(
     * `dbpa_remote.cpp:286-296`). The codec reads the ciphertext in place.
     */
   def decryptCell(cell: Array[Byte]): Any = {
-    val (mode, plen) = WireFormat.validateCellHeader(cell)
-    if (mode != modeByte)
-      throw new GraftInvalidInputException(
-        f"mode mismatch: cell has 0x$mode%02x, column policy expects 0x$modeByte%02x")
+    val plen = WireFormat.validateCellHeader(cell, modeByte)
     val plain = codec.decryptFrom(cell, WireFormat.CellHeaderLen)
     if (plain.length != plen)
       throw new GraftInvalidInputException(

@@ -44,11 +44,12 @@ object WireFormat {
     out(6) = ((plaintextLen >>> 24) & 0xff).toByte
   }
 
-  /** Validate a framed cell header in place → (mode, plaintextLen); the
-    * ciphertext is `cell(CellHeaderLen ..)`, never copied here. Fails cleanly
-    * on malformed input (FIXTURES.md §2 discipline).
+  /** Validate a framed cell header in place against the column's `mode`
+    * → the plaintext length; the ciphertext is `cell(CellHeaderLen ..)`,
+    * never copied here. Fails cleanly on malformed input (FIXTURES.md §2
+    * discipline).
     */
-  def validateCellHeader(cell: Array[Byte]): (Byte, Int) = {
+  def validateCellHeader(cell: Array[Byte], mode: Byte): Int = {
     if (cell.length < CellHeaderLen)
       throw new GraftInvalidInputException(
         s"ciphertext too short: ${cell.length} < header $CellHeaderLen")
@@ -56,14 +57,18 @@ object WireFormat {
       throw new GraftInvalidInputException(f"bad magic 0x${cell(0)}%02x, expected 0xd8")
     if (cell(1) != CellVersion)
       throw new GraftInvalidInputException(s"unsupported cell version ${cell(1)}")
-    val mode = cell(2)
-    if (mode != ModePerValueFixed && mode != ModePerValueVariable && mode != ModePerBlock)
-      throw new GraftInvalidInputException(f"unknown mode byte 0x$mode%02x")
+    val cellMode = cell(2)
+    if (cellMode != ModePerValueFixed && cellMode != ModePerValueVariable &&
+        cellMode != ModePerBlock)
+      throw new GraftInvalidInputException(f"unknown mode byte 0x$cellMode%02x")
     val plen = (cell(3) & 0xff) | ((cell(4) & 0xff) << 8) |
       ((cell(5) & 0xff) << 16) | ((cell(6) & 0xff) << 24)
     if (plen < 0)
       throw new GraftInvalidInputException(s"negative plaintext length $plen")
-    (mode, plen)
+    if (cellMode != mode)
+      throw new GraftInvalidInputException(
+        f"mode mismatch: cell has 0x$cellMode%02x, column policy expects 0x$mode%02x")
+    plen
   }
 
   // ------------------------------------------------- batch value list ----

@@ -151,10 +151,13 @@ object JsonEnvelope {
   /** A leading NUL or UTF-8 byte-order mark: a byte parser would take the
     * body for another encoding.
     */
-  private def sniffed(utf8: Array[Byte]): Boolean =
-    (0 until math.min(4, utf8.length)).exists(utf8(_) == 0) ||
-      (utf8.length >= 3 && utf8(0) == 0xEF.toByte && utf8(1) == 0xBB.toByte &&
-        utf8(2) == 0xBF.toByte)
+  private def sniffed(utf8: Array[Byte]): Boolean = {
+    val n = math.min(4, utf8.length)
+    var i = 0
+    while (i < n && utf8(i) != 0) i += 1
+    i < n || (utf8.length >= 3 && utf8(0) == 0xEF.toByte && utf8(1) == 0xBB.toByte &&
+      utf8(2) == 0xBF.toByte)
+  }
 
   /** Whether `bytes` decode as UTF-8 with nothing replaced, i.e. whether
     * decoding and encoding them again gives the same bytes.

@@ -150,7 +150,7 @@ object ProtectionService {
   final val Role = "EmailReader"
   final val AccessControl = "granted"
 
-  private def errorResponse(message: String, status: Int): TransportResponse = {
+  private[service] def errorResponse(message: String, status: Int): TransportResponse = {
     val node = mapper.createObjectNode()
     node.put("error", message)
     TransportResponse(status, mapper.writeValueAsString(node))

@@ -198,15 +198,18 @@ class CryptoCoreSpec extends AnyFunSuite {
     val cell = new Array[Byte](WireFormat.CellHeaderLen + ct.length)
     WireFormat.writeCellHeader(cell, WireFormat.ModePerValueFixed, 4)
     System.arraycopy(ct, 0, cell, WireFormat.CellHeaderLen, ct.length)
-    val (mode, plen) = WireFormat.validateCellHeader(cell)
-    assert(mode == WireFormat.ModePerValueFixed && plen == 4)
+    val fixed = WireFormat.ModePerValueFixed
+    assert(WireFormat.validateCellHeader(cell, fixed) == 4)
     assert(cell.drop(WireFormat.CellHeaderLen).sameElements(Array[Byte](9, 9, 9, 9)))
-    intercept[GraftInvalidInputException](WireFormat.validateCellHeader(Array[Byte](1)))
+    intercept[GraftInvalidInputException](WireFormat.validateCellHeader(Array[Byte](1), fixed))
     val badMagic = cell.clone(); badMagic(0) = 0x00
-    intercept[GraftInvalidInputException](WireFormat.validateCellHeader(badMagic))
+    intercept[GraftInvalidInputException](WireFormat.validateCellHeader(badMagic, fixed))
     val badVersion = cell.clone(); badVersion(1) = 0x7f
-    intercept[GraftInvalidInputException](WireFormat.validateCellHeader(badVersion))
+    intercept[GraftInvalidInputException](WireFormat.validateCellHeader(badVersion, fixed))
     val badMode = cell.clone(); badMode(2) = 0x55
-    intercept[GraftInvalidInputException](WireFormat.validateCellHeader(badMode))
+    intercept[GraftInvalidInputException](WireFormat.validateCellHeader(badMode, fixed))
+    val mismatch = intercept[GraftInvalidInputException](
+      WireFormat.validateCellHeader(cell, WireFormat.ModePerValueVariable))
+    assert(mismatch.getMessage == "mode mismatch: cell has 0x11, column policy expects 0x10")
   }
 }
